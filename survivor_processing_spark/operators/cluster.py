@@ -3,17 +3,16 @@ iterative-algorithm surface of the LLM-pipeline extensions (IVF
 coarse quantizers, corpus clustering for mix curation).
 
 Spark-first shape: each iteration is ONE distributed pass —
-assignment is a JVM expression over a broadcast centroid literal
-(k·dim doubles, trivially driver-held), the centroid update is
-posexplode + hash aggregate (map-side partial sums).  Nothing but
-the k·dim centroid matrix ever reaches the driver; the loop is
-driver-side control flow over lazy plans, which is exactly how
-MLlib's own KMeans iterates.  At 100 TB you'd persist the assigned
-DataFrame between iterations (here each pass re-reads parquet,
-which is fine at bench scale and keeps the lineage short).
+assignment is a numpy Arrow batch kernel with the centroid matrix
+(k·dim numbers, trivially driver-held) in its closure, the centroid
+update is posexplode + hash aggregate (map-side partial sums).
+Nothing but the k·dim centroid matrix ever reaches the driver; the
+loop is driver-side control flow over lazy plans, which is exactly
+how MLlib's own KMeans iterates.
 
-Determinism: init is the first k vectors by id (no RNG), distances
-are exact doubles, ties break toward the lowest cluster id.
+Determinism: seeds are chosen without RNG, distances are exact
+(int64, or float64 summed in lane order), ties break toward the
+lowest cluster id.
 """
 
 from __future__ import annotations
@@ -21,69 +20,35 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from ..functions.sql_literals import sql_int_array, sql_long_array
-
 
 def _np_assign_udf(cents: list[tuple[int, list]], int_lanes: bool):
-    """Vectorized argmin-of-squared-L2 assignment kernel (guide
-    §4.2: hand whole Arrow batches to numpy instead of evaluating
-    k×dim interpreted higher-order-function lambdas per row — the
-    zip_with/aggregate fold never enters whole-stage codegen, and a
-    flat codegen'd expansion measured 2× WORSE than the HOF at
-    k=8·dim=64 because the 512-term projection blows past the
-    codegen method limits; the numpy batch kernel measured 3.4×
-    better on the same pass, bit-identical output).
-
-    Exactness contract:
-    - ``int_lanes=True``: int64 arithmetic — exact in any order, the
-      same BIGINT headroom the portable-Lloyd docstring documents.
-    - ``int_lanes=False``: float64 with LANE-ORDERED accumulation —
-      ``acc = ((0+t1)+t2)+...`` per (row, centroid), the identical
-      left fold (and IEEE result) of the ``aggregate(zip_with(...))``
-      expression it replaces; squared terms are non-negative so the
-      0.0 seed is absorption-exact.  NaN distances are ranked last
-      (masked to +inf), matching Spark's array_min NaN-is-largest
-      ordering; an all-NaN row takes the first centroid's label
-      exactly as ``array_position`` matching NaN would.
-
-    Ties: ``np.argmin`` returns the FIRST minimum — the same
-    lowest-surviving-idx rule as ``array_position(d, array_min(d))``.
-    Rows that are NULL or not ``dim`` long label as NULL (callers in
-    this module pre-filter those; the guard keeps the kernel total).
-    """
+    """Arrow batch kernel labeling each vector with the ``cents``
+    label of its nearest centroid by squared L2 distance
+    (``vecbatch.argmin_l2``: exact int64 with ``int_lanes``, else the
+    float64 lane-ordered fold of the ``aggregate(zip_with(...))``
+    expression; first-minimum ties).  A numpy batch replaces k×dim
+    interpreted higher-order-function lambdas per row, which never
+    enter whole-stage codegen.  Rows that are NULL, have a NULL lane
+    or are not ``dim`` long label NULL."""
     import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.functions import arrow_udf
 
-    labels = np.asarray([i for i, _ in cents], dtype="int64")
+    from .vecbatch import argmin_l2, as_matrix, expand
+
+    labels = np.asarray([i for i, _ in cents], dtype="int32")
     cmat = np.asarray(
         [lanes for _, lanes in cents],
         dtype="int64" if int_lanes else "float64",
     )
-    k, dim = cmat.shape
+    dim = cmat.shape[1]
 
     def fn(v):
-        import pandas as pd
+        ok, m = as_matrix(v, dim, cmat.dtype)
+        idx, _ = argmin_l2(m, cmat)
+        return expand(ok, pa.array(labels[idx]))
 
-        vals = v.to_numpy()
-        ok = np.fromiter(
-            (x is not None and len(x) == dim for x in vals),
-            dtype=bool,
-            count=len(vals),
-        )
-        out = np.full(len(vals), None, dtype=object)
-        if ok.any():
-            m = np.stack(vals[ok]).astype(cmat.dtype)
-            acc = np.zeros((m.shape[0], k), dtype=cmat.dtype)
-            for i in range(dim):
-                d = m[:, i, None] - cmat[None, :, i]
-                acc += d * d
-            if not int_lanes:
-                acc = np.where(np.isnan(acc), np.inf, acc)
-            out[ok] = labels[np.argmin(acc, axis=1)]
-        return pd.Series(out)
-
-    from pyspark.sql.functions import pandas_udf
-
-    return pandas_udf(fn, "int")
+    return arrow_udf(fn, "int")
 
 
 def _sq_dist(vec_col: str, centroid: list[float]):
@@ -104,34 +69,12 @@ def _sq_dist(vec_col: str, centroid: list[float]):
     )
 
 
-def assign_clusters(
-    df: DataFrame, vec_col: str, centroids: list[list[float]]
-) -> DataFrame:
-    """Adds ``cluster``: argmin over the centroid list (k small —
-    the distance array is a JVM expression, no UDF).
-
-    The distance array is materialized as a REAL COLUMN in its own
-    Project so the k aggregate-lambda distances evaluate ONCE per
-    row — the argmin references the array twice, and higher-order-
-    function lambdas are interpreted, so textual inlining re-runs
-    every distance per reference (measured ~3-10× on the portable
-    siblings; CollapseProject keeps the projection separate because
-    the alias is non-cheap and multiply-referenced)."""
-    dists = F.array(*[_sq_dist(vec_col, c) for c in centroids])
-    staged = df.withColumn("_dists", dists)
-    # array_position returns the FIRST index of the min → lowest
-    # cluster id wins ties deterministically
-    cluster = (
-        F.array_position(F.col("_dists"), F.array_min(F.col("_dists"))) - 1
-    ).cast("int")
-    return staged.withColumn("cluster", cluster).drop("_dists")
-
-
 def update_centroids(
     assigned: DataFrame, vec_col: str, k: int, dim: int
 ) -> list[list[float]]:
     """Mean vector per cluster via posexplode + one hash aggregate;
-    only the k×dim result is collected."""
+    only the k×dim result is collected.  Rows the kernel could not
+    label (NULL cluster) take no part."""
     means = (
         assigned.select("cluster", F.posexplode(F.col(vec_col)).alias("pos", "x"))
         .groupBy("cluster", "pos")
@@ -139,10 +82,9 @@ def update_centroids(
         .collect()
     )
     out: list[list[float]] = [[0.0] * dim for _ in range(k)]
-    seen = set()
     for r in means:
-        out[r["cluster"]][r["pos"]] = float(r["m"])
-        seen.add(r["cluster"])
+        if r["cluster"] is not None:
+            out[r["cluster"]][r["pos"]] = float(r["m"])
     return out
 
 
@@ -223,12 +165,8 @@ def kmeans_lloyd(
         centroids = [list(map(float, c)) for c in init_centroids]
     dim = len(centroids[0])
 
-    # assignment via the vectorized numpy kernel (guide §4.2) — the
-    # float64 lane-ordered fold is bit-identical to assign_clusters'
-    # zip_with/aggregate expression (see _np_assign_udf), so labels,
-    # centroid descent, and the final output are unchanged; the
-    # public assign_clusters stays the expression form for callers
-    # that need a UDF-free plan
+    # the float64 lane-ordered fold labels exactly as the
+    # zip_with/aggregate distance expression would (see _np_assign_udf)
     def _assigned(cents: list[list[float]]) -> DataFrame:
         u = _np_assign_udf(list(enumerate(cents)), int_lanes=False)
         return df.withColumn("cluster", u(F.col(vec_col)))
@@ -248,10 +186,8 @@ def kmeans_lloyd_portable(
 ) -> DataFrame:
     """ENGINE-PORTABLE full Lloyd's k-means: ``iters`` complete
     assignment/update rounds whose every step a DuckDB oracle can
-    replay bit-for-bit, closing the one hash-gating gap the portable
-    single-step assignment (``assign_clusters_portable``, r5) left
-    open — float centroid MEANS are not portable, so this variant
-    runs Lloyd entirely in INTEGER arithmetic:
+    replay bit-for-bit.  Float centroid MEANS are not portable, so
+    this variant runs Lloyd entirely in INTEGER arithmetic:
 
     - vectors are quantized once: ``floor(x*1e6+0.5)`` per lane to
       int64 (exact, order-free);
@@ -270,7 +206,7 @@ def kmeans_lloyd_portable(
       set (their label is never reassigned) — same rule both sides.
 
     Driver traffic is bounded: k seed vectors + k·dim lane sums per
-    iteration; assignment stays a codegen'd JVM expression.  The
+    iteration; assignment is the numpy batch kernel.  The
     quantized working set is pinned with localCheckpoint so the
     2·iters passes don't re-read parquet (at 100 TB: persist to
     MEMORY_AND_DISK instead).
@@ -289,8 +225,7 @@ def kmeans_lloyd_portable(
     # overruns the [0]*n_lanes sum list driver-side; the oracle's
     # generate_series(1, dim) truncates).  When ``dim`` is None it is
     # DERIVED from the md5-smallest clean vector (the first seed) so
-    # the size filter applies unconditionally — ragged input with
-    # dim=None crashed here before (ADVICE r06).
+    # the size filter applies unconditionally.
     clean = F.col(vec_col).isNotNull() & ~F.exists(
         F.col(vec_col), lambda x: x.isNull()
     )
@@ -335,12 +270,9 @@ def kmeans_lloyd_portable(
     n_lanes = len(centroids[0][1])
 
     def assigned(cents: list[tuple[int, list[int]]]) -> DataFrame:
-        # vectorized exact-int64 numpy batch kernel (guide §4.2; see
-        # _np_assign_udf) — bit-identical to the previous interpreted
-        # aggregate(zip_with(...)) argmin (exact integers, first-min
-        # ties), measured 3.4× faster per assignment pass at the sf1
-        # corpus; qdf rows are pre-filtered to clean dim-length
-        # vectors so the kernel's NULL guard never fires here
+        # exact int64 argmin, first-min ties (see _np_assign_udf);
+        # qdf rows are pre-filtered to clean dim-length vectors, so
+        # every row gets a label
         u = _np_assign_udf(cents, int_lanes=True)
         return qdf.select(
             F.col(id_col), u(F.col("_q")).alias("cluster_idx"), "_q"
@@ -362,73 +294,3 @@ def kmeans_lloyd_portable(
         centroids = sorted(by_idx.items())
     return assigned(centroids).select(id_col, "cluster_idx")
 
-
-def assign_clusters_portable(
-    df: DataFrame, vec_col: str, id_col: str, k: int = 8
-) -> DataFrame:
-    """ENGINE-PORTABLE nearest-seed assignment — the argmax half of a
-    Lloyd iteration, built so a DuckDB oracle can replay it bit-for-
-    bit and hash-gate the clustering machinery (float centroid MEANS
-    are not portable, exact integer DOTS are; since r6 the FULL loop
-    is gated too via :func:`kmeans_lloyd_portable`'s floor-division
-    means):
-
-    - seeds are the k vectors with the smallest md5 of their id
-      string (portable ordering; no RNG, no engine-private hash);
-    - similarity is the INTEGER-LANE dot product: every component is
-      scaled ``floor(x*1e6+0.5)`` to int64 on both sides, so the sum
-      is exact and order-free — the argmax cannot flip on an ulp;
-    - ties break toward the lowest seed rank (array_position takes
-      the first maximum).
-
-    Only the k seed vectors cross the driver (bounded k·dim)."""
-    # NULL-vector hygiene (same class as the Lloyd fix): a NULL
-    # embedding whose md5(id) ranks in the top k would TypeError the
-    # seed-lane build driver-side
-    rows = (
-        df.where(F.col(vec_col).isNotNull())
-        .select(
-            F.col(id_col).alias("_id"),
-            F.col(vec_col).alias("_v"),
-            F.md5(F.col(id_col).cast("string")).alias("_m"),
-        )
-        .orderBy("_m")
-        .limit(k)
-        .collect()
-    )
-    import math
-
-    seed_lanes = [
-        [int(math.floor(float(x) * 1e6 + 0.5)) for x in r["_v"]] for r in rows
-    ]
-    q = (
-        f"transform({vec_col},"
-        " x -> cast(floor(cast(x as double) * 1000000.0 + 0.5) as bigint))"
-    )
-
-    # ONE parsed SQL string, not k*dim F.lit() py4j round trips (the
-    # bloom lesson; same rewrite as kmeans_lloyd_portable's loop)
-    def int_dot(lanes: list[int]) -> str:
-        arr = sql_long_array(lanes)
-        return (
-            f"aggregate(zip_with({q}, {arr}, (a, b) -> a * b),"
-            " 0L, (acc, x) -> acc + x)"
-        )
-
-    dots = "array(" + ",".join(int_dot(lanes) for lanes in seed_lanes) + ")"
-    # NULL vectors drop from the labeled output too (the oracle's
-    # lane expansion emits no rows for them — keeping them here would
-    # emit a NULL-label row the oracle doesn't have).  The dot array
-    # materializes as its own column: it is referenced three times
-    # (argmax position + max twice), and inlining re-evaluates all k
-    # interpreted aggregate-lambdas per reference.
-    return (
-        df.where(F.col(vec_col).isNotNull())
-        .select(F.col(id_col), F.expr(dots).alias("_dots"))
-        .select(
-            F.col(id_col),
-            F.expr("cast(array_position(_dots, array_max(_dots)) - 1 as int)")
-            .alias("cluster_idx"),
-            F.expr("array_max(_dots)").alias("best_dot"),
-        )
-    )

@@ -151,6 +151,58 @@ def _quantized(
     )
 
 
+def _hits_udf(bench_rows: list, eid_type, dim: int, num: int, den: int):
+    """Arrow batch kernel over train rows ``(_q lanes, _n2 norm)``:
+    the list of ``(eid, dot)`` for every bench row (``_eid, _qb,
+    _n2b``) whose cosine clears ``sqrt(num/den)``, in bench order
+    (``vecbatch.cosine_hits`` on one int64 matmul per batch).  A row
+    with no hit, or one that is NULL, has a NULL lane or is not
+    ``dim`` long, yields NULL.
+
+    Marked non-deterministic: otherwise the explode's implicit
+    ``size(_h) > 0`` pruning filter pushes below the spread
+    repartition and DUPLICATES the kernel (two ArrowEvalPython nodes,
+    every row paying the matmul twice; plan-pinned by
+    test_semantic_decontam_kernel_train_never_shuffles).  The function
+    is pure; the marker only pins its evaluation site."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.functions import arrow_udf
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    from .vecbatch import as_matrix, cosine_hits, expand
+
+    eids = pa.array(
+        [r["_eid"] for r in bench_rows], type=to_arrow_type(eid_type)
+    )
+    # shape-pinned so an EMPTY bench still flows through the same
+    # plan (the train-side headroom guards keep evaluating)
+    bmat = np.asarray(
+        [r["_qb"] for r in bench_rows], dtype="int64"
+    ).reshape(-1, dim)
+    bn2 = np.asarray([r["_n2b"] for r in bench_rows], dtype="int64")
+
+    def fn(q, n2):
+        ok, Q = as_matrix(q, dim, "int64")
+        dots = Q @ bmat.T
+        hit = cosine_hits(dots, n2.fill_null(0).to_numpy()[ok], bn2, num, den)
+        i, j = np.nonzero(hit)
+        counts = hit.sum(axis=1)
+        offsets = np.concatenate([[0], np.cumsum(counts)]).astype("int32")
+        pairs = pa.StructArray.from_arrays(
+            [eids.take(pa.array(j)), pa.array(dots[i, j])],
+            names=["eid", "dot"],
+        )
+        hits = pa.ListArray.from_arrays(
+            pa.array(offsets), pairs, mask=pa.array(counts == 0)
+        )
+        return expand(ok, hits)
+
+    return arrow_udf(
+        fn, f"array<struct<eid: {eid_type.simpleString()}, dot: bigint>>"
+    ).asNondeterministic()
+
+
 def semantic_decontaminate(
     train: DataFrame,
     bench: DataFrame,
@@ -186,16 +238,15 @@ def semantic_decontaminate(
     integers, hash-friendly.
 
     Scale shape (100 TB): the benchmark side is SMALL by nature
-    (eval sets are MBs) — it rides the kernel closure (the same rows
-    the former broadcast relation materialized), the train side
-    NEVER shuffles: at ``kernel_min_bench`` or more bench rows the
-    pairing is one int64 numpy matmul per Arrow batch inside the
-    train scan (O(n*m*dim) multiply-adds, the same arithmetic an
-    exact-decontamination pass costs anywhere — but vectorized
-    instead of the interpreted per-pair lambda of the small-bench
-    BroadcastNestedLoopJoin lane, which stays the cheaper shape when
-    m is tiny), and only the rare contaminated hits flow into the
-    per-id min aggregate.  For very large eval sets, pre-cluster the
+    (eval sets are MBs) — it is broadcast, or rides the kernel
+    closure; the train side NEVER shuffles: at ``kernel_min_bench``
+    or more bench rows the pairing is one int64 numpy matmul per
+    Arrow batch inside the train scan (O(n*m*dim) multiply-adds, the
+    same arithmetic an exact-decontamination pass costs anywhere —
+    but vectorized instead of the interpreted per-pair lambda of the
+    small-bench BroadcastNestedLoopJoin lane, which stays the cheaper
+    shape when m is tiny), and only the rare contaminated hits flow
+    into the per-id min aggregate.  For very large eval sets, pre-cluster the
     bench side with IVF (operators/similarity.py) and probe per
     centroid — same plan per probe."""
     bid = bench_id_col or id_col
@@ -255,24 +306,23 @@ def semantic_decontaminate(
         )
     )
     # Two pairing lanes, picked by bench size (A/B-measured
-    # crossover, OPTIMIZATION_r14.md):
-    # - SMALL bench (< kernel_min_bench rows): the original
-    #   BroadcastNestedLoopJoin with the dot as one materialized
-    #   interpreted expression — at tiny m the per-task Python
-    #   worker/Arrow fixed costs of the kernel exceed the lambda
-    #   work it saves (sf0.1 gate: 0.60 join vs 0.75 kernel).
-    # - LARGE bench: a vectorized numpy batch kernel (guide §4.2 —
-    #   the cluster.py/pq.py recipe): one int64 matmul per Arrow
-    #   batch computes the identical exact dots (Cauchy-Schwarz
-    #   keeps every product inside the guarded headroom, so numpy
-    #   int64 and JVM long agree bit-for-bit), O(m·dim) vectorized
-    #   instead of interpreted per train row (sf1 gate m=200:
-    #   1.82 → 1.05; the gap grows with m).  The kernel emits the
-    #   per-row HIT LIST in bench order; the explode + per-id
-    #   aggregate are unchanged, so min/min_by semantics (NULL ids
-    #   included) are exactly the join form's.  The bench side
+    # crossover; on 4 cores at sf0.01 the join lane took 0.64 s vs
+    # 0.78 s for the kernel at 5 bench rows, 0.54 s vs 0.71 s at 20):
+    # - SMALL bench (< kernel_min_bench rows): a BroadcastNestedLoopJoin
+    #   with the dot as one materialized interpreted expression — at
+    #   tiny m the per-task Python worker/Arrow fixed costs of the
+    #   kernel exceed the lambda work it saves.
+    # - LARGE bench: the numpy batch kernel (_hits_udf): one int64
+    #   matmul per Arrow batch computes the identical exact dots
+    #   (Cauchy-Schwarz keeps every product inside the guarded
+    #   headroom, so numpy int64 and JVM long agree bit-for-bit),
+    #   O(m·dim) vectorized instead of interpreted per train row (sf1
+    #   gate m=200: 1.82 → 1.05 s; the gap grows with m).  The kernel
+    #   emits the per-row HIT LIST in bench order; the explode +
+    #   per-id aggregate are the join lane's, so min/min_by semantics
+    #   (NULL ids included) are exactly the same.  The bench side
     #   collects driver-side — the same rows the broadcast relation
-    #   materialized — and rides the UDF closure.
+    #   materializes — and rides the UDF closure.
     bench_rows = bq.collect()
     if len(bench_rows) < int(kernel_min_bench):
         dot = F.expr(
@@ -296,47 +346,13 @@ def semantic_decontaminate(
             F.min("_eid").alias("eval_id"),
             F.min_by(F.col("_dot"), F.col("_eid")).alias("dot"),
         )
-    eid_t = bq.schema["_eid"].dataType.simpleString()
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    eids = [r["_eid"] for r in bench_rows]
-    # shape-pinned so an EMPTY bench still flows through the same
-    # plan (train-side headroom guards keep evaluating, as they did
-    # upstream of the former join)
-    bmat = np.zeros((len(bench_rows), int(dim)), dtype="int64")
-    for j, r in enumerate(bench_rows):
-        bmat[j, :] = r["_qb"]
-    bn2 = np.asarray([r["_n2b"] for r in bench_rows], dtype="int64")
-    num, den = int(threshold_num), int(threshold_den)
-
-    def fn(q, n2):
-        import pandas as pd
-
-        if not len(q):
-            return pd.Series([], dtype=object)
-        Q = np.stack(q.to_numpy()).astype("int64")
-        n2v = n2.to_numpy(dtype="int64")
-        dots = Q @ bmat.T
-        ok = (dots > 0) & (
-            den * dots * dots >= num * n2v[:, None] * bn2[None, :]
-        )
-        out = np.full(len(q), None, dtype=object)
-        for i in np.nonzero(ok.any(axis=1))[0]:
-            out[i] = [
-                (eids[j], int(dots[i, j])) for j in np.nonzero(ok[i])[0]
-            ]
-        return pd.Series(out)
-
-    # asNondeterministic: the explode's implicit size(_h)>0 pruning
-    # filter otherwise pushes below the spread repartition and
-    # DUPLICATES the kernel (guide §4.4 — two ArrowEvalPython nodes,
-    # every row paying the matmul twice; plan-pinned by
-    # test_semantic_decontam_kernel_train_never_shuffles).  The
-    # function is pure; the marker only pins its evaluation site.
-    u = pandas_udf(
-        fn, f"array<struct<eid: {eid_t}, dot: bigint>>"
-    ).asNondeterministic()
+    u = _hits_udf(
+        bench_rows,
+        bq.schema["_eid"].dataType,
+        int(dim),
+        int(threshold_num),
+        int(threshold_den),
+    )
     hits = (
         tq.select(F.col(id_col), u(F.col("_q"), F.col("_n2")).alias("_h"))
         .select(F.col(id_col), F.explode("_h").alias("_hit"))

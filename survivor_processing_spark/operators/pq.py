@@ -16,7 +16,7 @@ pipeline); this is part of the beyond-reference training-data
 mandate.
 
 ENGINE-PORTABLE by the kmeans_lloyd_portable recipe
-(operators/cluster.py:127 — integer lanes, md5 seed order, integer
+(operators/cluster.py — integer lanes, md5 seed order, integer
 argmin with lowest-idx ties, floor-division centroid means), so a
 DuckDB oracle replays training AND encoding bit-for-bit.
 
@@ -46,9 +46,8 @@ distributed passes.
 the same parameters — one (dist, assign, cent) CTE block per
 iteration with ``(i-1)//sub`` as the subspace key, the same
 generated-iterative-oracle technique as queries/llm_ann.py
-:_lloyd_portable_oracle.  Registration is queued behind the r7
-freeze (ROTATION_r07.md); until then tests/test_pq.py pins
-Spark == DuckDB on fixed, randomized, and sf0.001 inputs.
+:_lloyd_portable_oracle.  tests/test_pq.py pins Spark == DuckDB on
+fixed, randomized, and sf0.001 inputs.
 """
 
 from __future__ import annotations
@@ -136,35 +135,27 @@ def _np_pq_udf(
     sub: int,
     adc_tbls: list[list[int]] | None = None,
 ):
-    """Vectorized per-subspace argmin kernel (guide §4.2, the
-    cluster.py `_np_assign_udf` recipe): ONE Arrow batch crossing
-    computes every subspace's code and min squared distance in exact
-    int64 numpy, replacing the m×k interpreted
-    ``aggregate(zip_with(slice(...)))`` lambdas the expression form
-    evaluated per row (higher-order functions never enter
-    whole-stage codegen; this module's own docstring records the
-    inline-vs-materialized HOF measurements the kernel supersedes).
-
-    Exactness contract (all replayed bit-for-bit by the DuckDB
-    oracles): int64 arithmetic is order-free-exact; ``np.argmin``
-    takes the FIRST minimum — identical to
-    ``array_position(_d, array_min(_d))`` over the same
-    ``cents[sp]`` enumeration order, so ties break to the lowest
-    SURVIVING cluster idx exactly as before.  With ``adc_tbls``
-    (one table per subspace, ordered like ``cents[sp]``) the struct
-    adds the summed asymmetric distance — the same
-    ``element_at(tbl, argmin_pos)`` lookup, done at the argmin.
+    """Arrow batch kernel computing every subspace's PQ code and min
+    squared distance in one crossing, with ``vecbatch.argmin_l2`` per
+    subspace: exact int64, first-minimum ties, so a tie goes to the
+    lowest SURVIVING cluster idx of ``cents[sp]`` exactly as the
+    DuckDB oracles rank it.  It replaces m×k interpreted
+    ``aggregate(zip_with(slice(...)))`` lambdas per row.  With
+    ``adc_tbls`` (one table per subspace, ordered like ``cents[sp]``)
+    the struct adds the summed asymmetric distance, looked up at the
+    argmin.
 
     Returns ``struct<codes array<int>, mind array<bigint>[, adc
-    bigint]>``; rows that are NULL or not m·sub long yield a NULL
-    struct fields row (callers pre-filter — the guard keeps the
-    kernel total)."""
+    bigint]>``; rows that are NULL, have a NULL lane or are not m·sub
+    long yield a NULL struct."""
     import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.functions import arrow_udf
 
-    from pyspark.sql.functions import pandas_udf
+    from .vecbatch import argmin_l2, as_matrix, expand
 
     labels = [
-        np.asarray([i for i, _ in cents[sp]], dtype="int64")
+        np.asarray([i for i, _ in cents[sp]], dtype="int32")
         for sp in range(m)
     ]
     cmats = [
@@ -176,56 +167,34 @@ def _np_pq_udf(
         if adc_tbls is not None
         else None
     )
-    dim = m * sub
     fields = "codes: array<int>, mind: array<bigint>"
     if tbls is not None:
         fields += ", adc: bigint"
 
     def fn(v):
-        import pandas as pd
-
-        vals = v.to_numpy()
-        n = len(vals)
-        ok = np.fromiter(
-            (x is not None and len(x) == dim for x in vals),
-            dtype=bool,
-            count=n,
-        )
-        codes_out = np.full(n, None, dtype=object)
-        mind_out = np.full(n, None, dtype=object)
-        adc_out = np.full(n, None, dtype=object)
-        if ok.any():
-            M = np.stack(vals[ok]).astype("int64")
-            codes_cols, mind_cols = [], []
-            adc_sum = np.zeros(M.shape[0], dtype="int64")
-            for sp in range(m):
-                S = M[:, sp * sub : (sp + 1) * sub]
-                C = cmats[sp]
-                acc = np.zeros((S.shape[0], C.shape[0]), dtype="int64")
-                for i in range(sub):
-                    d = S[:, i, None] - C[None, :, i]
-                    acc += d * d
-                am = np.argmin(acc, axis=1)
-                codes_cols.append(labels[sp][am].astype("int32"))
-                mind_cols.append(acc[np.arange(len(am)), am])
-                if tbls is not None:
-                    adc_sum += tbls[sp][am]
-            # .tolist() rows -> a 1-d object array of lists (a 2-d
-            # ndarray would be broadcast, not element-assigned)
-            codes_out[ok] = pd.Series(
-                np.column_stack(codes_cols).tolist()
-            ).to_numpy()
-            mind_out[ok] = pd.Series(
-                np.column_stack(mind_cols).tolist()
-            ).to_numpy()
+        ok, M = as_matrix(v, m * sub, "int64")
+        n = M.shape[0]
+        codes = np.empty((n, m), dtype="int32")
+        mind = np.empty((n, m), dtype="int64")
+        adc = np.zeros(n, dtype="int64")
+        for sp in range(m):
+            idx, dist = argmin_l2(M[:, sp * sub : (sp + 1) * sub], cmats[sp])
+            codes[:, sp] = labels[sp][idx]
+            mind[:, sp] = dist
             if tbls is not None:
-                adc_out[ok] = adc_sum
-        out = {"codes": pd.Series(codes_out), "mind": pd.Series(mind_out)}
+                adc += tbls[sp][idx]
+        offsets = pa.array(np.arange(0, n * m + 1, m, dtype="int32"))
+        cols = [
+            pa.ListArray.from_arrays(offsets, pa.array(codes.ravel())),
+            pa.ListArray.from_arrays(offsets, pa.array(mind.ravel())),
+        ]
+        names = ["codes", "mind"]
         if tbls is not None:
-            out["adc"] = pd.Series(adc_out)
-        return pd.DataFrame(out)
+            cols.append(pa.array(adc))
+            names.append("adc")
+        return expand(ok, pa.StructArray.from_arrays(cols, names=names))
 
-    return pandas_udf(fn, f"struct<{fields}>")
+    return arrow_udf(fn, f"struct<{fields}>")
 
 
 def _fit(

@@ -392,16 +392,6 @@ def semantic_dedup_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _semdedup(base.unionByName(planted), k=8, max_cluster=128, dim=64)
 
 
-# RETIRED r8 (VERDICT r07 #2 growth discipline): q:cluster_assign_
-# portable — the single assignment step is performed (and therefore
-# gated) inside EVERY iteration of the two hash-green full-Lloyd
-# twins, q:kmeans_lloyd_portable (identical integer-lane argmin +
-# md5 seeds) and q:kmeans_clusters (same-seed float parity gate);
-# the standalone step added no oracle coverage the loop gates lack.
-# assign_clusters_portable itself stays unit-tested
-# (tests/test_operators.py).  Accounting: ROTATION_r08.md.
-
-
 @register(
     "incremental_dedup_new_docs",
     doc="rolling-crawl dedup: does a NEW batch (doc_id % 10 = 0) "

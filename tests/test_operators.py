@@ -434,22 +434,6 @@ def test_simhash_pigeonhole_recall_to_hamming7(spark):
     assert all(bin((sigs[a] ^ sigs[b]) & MASK64).count("1") <= 7 for a, b in got)
 
 
-def test_all_pairs_cosine_string_ids(spark):
-    """Output id schema derives from the id column dtype — string ids
-    must survive the pandas kernel (previously hardcoded bigint)."""
-    from survivor_processing_spark.operators.similarity import all_pairs_above
-
-    rows = [
-        ("docA", [1.0, 0.0, 0.0]),
-        ("docB", [1.0, 0.0, 0.0]),     # identical to docA
-        ("docC", [0.0, 1.0, 0.0]),     # orthogonal
-    ]
-    emb = spark.createDataFrame(rows, "vec_id string, embedding array<double>")
-    out = all_pairs_above(emb, threshold=0.9)
-    assert dict(out.dtypes) == {"id1": "string", "id2": "string"}
-    assert {(r.id1, r.id2) for r in out.collect()} == {("docA", "docB")}
-
-
 def test_ngram_prefix_filter_exact_vs_bruteforce(spark):
     """Prefix-filtered Jaccard join == brute-force all-pairs at the
     threshold (exact recall claim), across threshold boundaries."""
@@ -754,48 +738,3 @@ def test_merge_tiebreak_handles_nested_maps(spark, tmp_path):
     assert _row_tiebreak(allmap) is not None
 
 
-def test_lsh_xxhash_planted_recall(spark):
-    """Pins the xxhash64 hyperplane-LSH path after its driver gate
-    retired into the portable twin (r10): plant exact and perturbed
-    copies of the 50 md5-smallest vectors and assert the recall
-    contract the retired q:embedding_lsh_pairs row asserted —
-    exact copies recovered totally, perturbed (lane 0 +0.01,
-    cosine ~0.9999) at >= 80%."""
-    from survivor_processing_spark.operators.similarity import (
-        lsh_pairs_above,
-    )
-
-    e = (
-        spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-        .select(
-            "vec_id",
-            F.col("embedding").cast("array<double>").alias("embedding"),
-        )
-    )
-    base = (
-        e.withColumn("_m", F.md5(F.col("vec_id").cast("string")))
-        .orderBy("_m")
-        .limit(50)
-        .drop("_m")
-    )
-    exact = base.select(
-        (F.col("vec_id") + F.lit(10_000_000)).alias("vec_id"), "embedding"
-    )
-    pert = base.select(
-        (F.col("vec_id") + F.lit(20_000_000)).alias("vec_id"),
-        F.expr(
-            "transform(embedding,"
-            " (x, i) -> CASE WHEN i = 0 THEN x + 0.01d ELSE x END)"
-        ).alias("embedding"),
-    )
-    aug = e.unionByName(exact).unionByName(pert)
-    pairs = {
-        (r.id1, r.id2)
-        for r in lsh_pairs_above(
-            aug, threshold=0.5, n_planes=4, n_tables=16
-        ).select("id1", "id2").collect()
-    }
-    ids = [r.vec_id for r in base.collect()]
-    assert all((i, i + 10_000_000) in pairs for i in ids)
-    n_pert = sum((i, i + 20_000_000) in pairs for i in ids)
-    assert n_pert * 5 >= len(ids) * 4

@@ -1,7 +1,7 @@
 """Round-14 optimization internals: pinned behaviors.
 
 The r14 changes are plan/driver-side with bit-identical outputs
-(oracle-verified); these tests pin the three internals a future
+(oracle-verified); these tests pin the internals a future
 refactor could silently regress:
 
 1. the parsed `_powers()` literal is element-for-element the bit
@@ -16,15 +16,7 @@ refactor could silently regress:
 4. `explode_posting_pairs` (the two-Generate posting-pair emission
    that replaced the interpreted flatten(transform(transform)) HOF)
    emits exactly the (i, j>i) pair multiset — every unordered pair
-   once, none mirrored, none dropped, size-1 postings silent;
-5. `_np_assign_udf` (the vectorized numpy assignment kernel that
-   replaced the interpreted aggregate(zip_with) argmin inside both
-   Lloyd loops) labels identically to the expression form it
-   replaced: same float64 left-fold arithmetic, same exact-int64
-   arithmetic, first-minimum tie rule, NULL/wrong-length → NULL;
-6. the PQ training pass keeps its kernel below the posexplode — a
-   generator and a UDF in ONE select evaluates the UDF per output
-   row (dim× per vector), the split evaluates it once per vector.
+   once, none mirrored, none dropped, size-1 postings silent.
 """
 
 from __future__ import annotations
@@ -97,112 +89,3 @@ def test_explode_posting_pairs_matches_hof_enumeration(spark):
         F.least("x", "y").alias("id1"), F.greatest("x", "y").alias("id2")
     )
     assert all(r["id1"] < r["id2"] for r in norm.collect())
-
-
-def test_np_assign_kernel_matches_expression_assignment(spark):
-    """Float lane: the numpy kernel must agree with assign_clusters
-    (the kept expression form) row-for-row, including an exact tie
-    (first centroid wins) and float32 inputs widened to float64."""
-    import pyspark.sql.functions as F
-
-    from survivor_processing_spark.operators.cluster import (
-        _np_assign_udf,
-        assign_clusters,
-    )
-
-    rows = [
-        (1, [0.1, 0.2, 0.3]),
-        (2, [5.0, 5.0, 5.0]),
-        (3, [1.0, 0.0, 0.0]),  # exact tie between c0 and c1
-        (4, [0.30000000000000004, 1e-17, -0.0]),
-        (5, [2.6, 2.4, 2.5]),
-    ]
-    df = spark.createDataFrame(rows, "vec_id: long, v: array<double>")
-    cents = [[0.0, 0.0, 0.0], [2.0, 0.0, 0.0], [5.0, 5.0, 5.0]]
-    expr_labels = {
-        r["vec_id"]: r["cluster"]
-        for r in assign_clusters(df, "v", cents).collect()
-    }
-    u = _np_assign_udf(list(enumerate(cents)), int_lanes=False)
-    np_labels = {
-        r["vec_id"]: r["c"]
-        for r in df.select("vec_id", u("v").alias("c")).collect()
-    }
-    assert np_labels == expr_labels
-    assert np_labels[3] == 0  # tie -> first minimum
-    # float32 storage widens exactly like cast(array<float> as double)
-    df32 = df.select("vec_id", F.col("v").cast("array<float>").alias("v"))
-    np32 = {
-        r["vec_id"]: r["c"]
-        for r in df32.select("vec_id", u("v").alias("c")).collect()
-    }
-    assert np32 == {
-        r["vec_id"]: r["cluster"]
-        for r in assign_clusters(df32, "v", cents).collect()
-    }
-
-
-def test_np_assign_kernel_int_lanes_exact_and_total(spark):
-    """Integer lane: exact int64 squared-L2 argmin vs a pure-Python
-    reference, first-min ties, and the totality guard (NULL or
-    wrong-length vectors label NULL instead of raising)."""
-    from survivor_processing_spark.operators.cluster import _np_assign_udf
-
-    cents = [(0, [0, 0]), (1, [1_000_000, 0]), (2, [3_000_000, 4_000_000])]
-    rows = [
-        (1, [0, 0]),
-        (2, [500_000, 0]),  # exact tie c0/c1 -> 0
-        (3, [2_900_000, 4_100_000]),
-        (4, None),
-        (5, [1, 2, 3]),  # wrong length
-    ]
-    df = spark.createDataFrame(rows, "vec_id: long, q: array<bigint>")
-    u = _np_assign_udf(cents, int_lanes=True)
-    got = {
-        r["vec_id"]: r["c"]
-        for r in df.select("vec_id", u("q").alias("c")).collect()
-    }
-
-    def ref(v):
-        d = [sum((a - b) ** 2 for a, b in zip(v, lanes)) for _, lanes in cents]
-        return d.index(min(d))
-
-    for vid, v in rows:
-        if v is None or len(v) != 2:
-            assert got[vid] is None
-        else:
-            assert got[vid] == ref(v)
-    assert got[2] == 0
-
-
-def test_pq_fit_pass_evaluates_kernel_below_explode(spark):
-    """The PQ training pass mirrors this exact shape (pq._fit): the
-    kernel projection FIRST, the posexplode in a separate select.
-    Putting a generator and a UDF in one select evaluates the UDF per
-    OUTPUT row — dim x per vector (measured 2.4x slower end-to-end
-    than the HOF form it replaced); the split keeps ArrowEvalPython
-    strictly below the Generate, once per vector."""
-    import pyspark.sql.functions as F
-
-    from survivor_processing_spark.operators.pq import _np_pq_udf
-
-    qdf = spark.createDataFrame(
-        [(1, list(range(8))), (2, list(range(8, 16)))],
-        "vec_id: long, _q: array<bigint>",
-    )
-    cents = {sp: [(i, [0] * 4) for i in range(2)] for sp in range(2)}
-    u = _np_pq_udf(cents, 2, 4)
-    staged = qdf.select(u(F.col("_q")).getField("codes").alias("_labs"), "_q")
-    df = staged.select("_labs", F.posexplode("_q").alias("pos", "x"))
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("ArrowEvalPython") == 1
-    # the plan string prints top-down: the python eval must appear
-    # AFTER (= deeper than) the Generate
-    assert plan.index("ArrowEvalPython") > plan.index("Generate")
-    # and the fused form this guards against would flip that order
-    fused = qdf.select(
-        u(F.col("_q")).getField("codes").alias("_labs"),
-        F.posexplode("_q").alias("pos", "x"),
-    )
-    fplan = fused._jdf.queryExecution().executedPlan().toString()
-    assert fplan.index("ArrowEvalPython") < fplan.index("Generate")

@@ -194,50 +194,6 @@ def test_simhash_planted_recall_gate(spark, sf_dir):
     assert n_edit * 2 >= len(ids)
 
 
-def test_embedding_lsh_planted_recall_gate(spark, sf_dir):
-    """Operator-level survivor of the retired q:embedding_lsh_pairs
-    driver row (r10); the sf0.01 twin lives in
-    tests/test_operators.py::test_lsh_xxhash_planted_recall."""
-    import pyspark.sql.functions as F
-
-    from survivor_processing_spark.catalog import load_table
-    from survivor_processing_spark.operators.similarity import (
-        lsh_pairs_above,
-    )
-
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    base = (
-        e.withColumn("_m", F.md5(F.col("vec_id").cast("string")))
-        .orderBy("_m")
-        .limit(50)
-        .drop("_m")
-    )
-    exact = base.select(
-        (F.col("vec_id") + F.lit(10_000_000)).alias("vec_id"), "embedding"
-    )
-    pert = base.select(
-        (F.col("vec_id") + F.lit(20_000_000)).alias("vec_id"),
-        F.expr(
-            "transform(embedding,"
-            " (x, i) -> CASE WHEN i = 0 THEN x + 0.01d ELSE x END)"
-        ).alias("embedding"),
-    )
-    aug = e.unionByName(exact).unionByName(pert)
-    pairs = {
-        (r.id1, r.id2)
-        for r in lsh_pairs_above(
-            aug, threshold=0.5, n_planes=4, n_tables=16
-        ).select("id1", "id2").collect()
-    }
-    ids = [r.vec_id for r in base.collect()]
-    assert len(ids) == 50
-    assert all((i, i + 10_000_000) in pairs for i in ids)
-    n_pert = sum((i, i + 20_000_000) in pairs for i in ids)
-    assert n_pert * 5 >= len(ids) * 4
-
-
 # --- stdlib GIF frame codec (r7: the animation real-codec path) --------------
 
 

@@ -11,8 +11,7 @@ mechanically generated oracles:
   near-dups;
 - portable SimHash: synthetic word corpora with planted one-word
   edits;
-- nearest-seed cluster assignment, paragraph dedup, SemDeDup
-  semantic dedup;
+- paragraph dedup, SemDeDup semantic dedup;
 - BPE tokenizer training and encode/token budgets, integer-lane
   PageRank, multi-source BFS;
 - substring-span dedup (+ cleaned text), product quantization incl.
@@ -137,84 +136,6 @@ def _run_registered(spark, name: str, table: str, pdf: pd.DataFrame):
     con.register(table, pdf)
     want = sorted(map(tuple, con.execute(REGISTRY[name].oracle).fetchall()))
     return got, want
-
-
-# the assignment-replay oracle formerly registered as
-# q:cluster_assign_portable (RETIRED r8 — the full-Lloyd twins gate
-# the step inside every iteration); the fuzz family keeps exercising
-# the OPERATOR against the same SQL so retirement loses no coverage
-_CLUSTER_ASSIGN_ORACLE = """
-WITH seeds AS (
-    SELECT embedding,
-           ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR))) - 1
-               AS cluster_idx
-    FROM embeddings WHERE embedding IS NOT NULL
-    ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT 8
-), dims AS (SELECT unnest(generate_series(1, 64)) AS i),
-seed_lanes AS (
-    SELECT s.cluster_idx, d.i,
-           CAST(floor(CAST(s.embedding[d.i] AS DOUBLE) * 1000000.0 + 0.5)
-                AS BIGINT) AS sq
-    FROM seeds s, dims d
-), vec_lanes AS (
-    SELECT e.vec_id, d.i,
-           CAST(floor(CAST(e.embedding[d.i] AS DOUBLE) * 1000000.0 + 0.5)
-                AS BIGINT) AS q
-    FROM embeddings e, dims d
-    WHERE e.embedding IS NOT NULL
-), dots AS (
-    SELECT v.vec_id, s.cluster_idx, CAST(SUM(v.q * s.sq) AS BIGINT) AS dot
-    FROM vec_lanes v JOIN seed_lanes s ON s.i = v.i
-    GROUP BY v.vec_id, s.cluster_idx
-)
-SELECT vec_id, CAST(cluster_idx AS INTEGER) AS cluster_idx,
-       dot AS best_dot
-FROM (SELECT vec_id, cluster_idx, dot,
-             ROW_NUMBER() OVER (PARTITION BY vec_id
-                                ORDER BY dot DESC, cluster_idx ASC) AS r
-      FROM dots)
-WHERE r = 1
-"""
-
-
-def fuzz_cluster_assign(spark, rng, trials: int) -> int:
-    """operators/cluster.py assign_clusters_portable (its registered
-    twin was RETIRED r8 in favor of the full-Lloyd gates): random
-    64-dim corpora incl. planted exact-duplicate vectors (argmax tie
-    goes to the lowest seed rank in BOTH engines) and NULL vectors
-    (filtered on both sides), replayed through the retained oracle
-    SQL above."""
-    from survivor_processing_spark.operators.cluster import (
-        assign_clusters_portable,
-    )
-
-    fails = 0
-    for _ in range(trials):
-        n = rng.randint(2, 30)
-        vecs = [[rng.uniform(-1, 1) for _ in range(64)] for _ in range(n)]
-        if n > 4:
-            vecs[2] = list(vecs[0])  # duplicate -> equal dots -> tiebreak
-            vecs[3] = None  # NULL vector: quarantined, not crashed
-        pdf = pd.DataFrame({"vec_id": range(n), "embedding": vecs})
-        df = spark.createDataFrame(pdf)
-        got = sorted(
-            map(
-                tuple,
-                assign_clusters_portable(
-                    df, "embedding", "vec_id", k=8
-                ).collect(),
-            )
-        )
-        con = duckdb.connect()
-        con.register("embeddings", pdf)
-        want = sorted(
-            map(tuple, con.execute(_CLUSTER_ASSIGN_ORACLE).fetchall())
-        )
-        if got != want:
-            fails += 1
-            print(f"CLUSTER-ASSIGN MISMATCH n={n} got={len(got)} "
-                  f"want={len(want)}")
-    return fails
 
 
 def fuzz_paragraph_dedup(spark, rng, trials: int) -> int:
@@ -2728,11 +2649,72 @@ def fuzz_time_travel(spark, rng, trials: int) -> int:
     return fails
 
 
+FAMILIES = (
+    ("lloyd", fuzz_lloyd),
+    ("lsh", fuzz_lsh),
+    ("simhash", fuzz_simhash),
+    ("paragraph", fuzz_paragraph_dedup),
+    ("semantic_dedup", fuzz_semantic_dedup),
+    ("bpe", fuzz_bpe),
+    ("pagerank", fuzz_pagerank),
+    ("substring", fuzz_substring),
+    ("bpe_encode", fuzz_bpe_encode),
+    ("pq", fuzz_pq),
+    ("bfs", fuzz_bfs),
+    ("stratified_split", fuzz_stratified_split),
+    ("ngram_coverage", fuzz_ngram_coverage),
+    ("containment", fuzz_containment),
+    ("ols", fuzz_ols),
+    ("retrieval", fuzz_retrieval),
+    ("interpolate", fuzz_interpolate),
+    ("winsorize", fuzz_winsorize),
+    ("textnorm", fuzz_textnorm),
+    ("collocation", fuzz_collocation),
+    ("mad", fuzz_mad),
+    ("funnel", fuzz_funnel),
+    ("kanon", fuzz_kanon),
+    ("urlnorm", fuzz_urlnorm),
+    ("fingerprint", fuzz_fingerprint),
+    ("crawlplan", fuzz_crawlplan),
+    ("bigram_fluency", fuzz_bigram_fluency),
+    ("graphstats", fuzz_graphstats),
+    ("sharding", fuzz_sharding),
+    ("zonemap", fuzz_zonemap),
+    ("snapshot", fuzz_snapshot),
+    ("stream_join", fuzz_stream_join),
+    ("sq8", fuzz_sq8),
+    ("cow_merge", fuzz_cow_merge),
+    ("cow_delete", fuzz_cow_delete),
+    ("semantic_decontam", fuzz_semantic_decontam),
+    ("mor_dv", fuzz_mor_dv),
+    ("time_travel", fuzz_time_travel),
+    ("dsir", fuzz_dsir),
+    ("boilerplate", fuzz_boilerplate),
+    ("script_mix", fuzz_script_mix),
+    ("mojibake", fuzz_mojibake),
+)
+
+
+def run(spark, seed: int, trials: int, only: set[str] | None = None) -> int:
+    """Run the families (all, or those named in ``only``) with one
+    shared rng seeded ``seed``; returns the total mismatch count."""
+    # with ``only``, skipped families advance nothing — the rng is
+    # shared, so a filtered run is NOT the same stream as the
+    # corresponding slice of a full run; quote the filter used
+    rng = random.Random(seed)
+    fails = 0
+    for name, fn in FAMILIES:
+        if only is not None and name not in only:
+            continue
+        f = fn(spark, rng, trials)
+        fails += f
+        print(f"{name}: {trials - f}/{trials} clean")
+    print(f"total mismatches: {fails}")
+    return fails
+
+
 def main() -> int:
     # usage: fuzz_portables.py [seed] [trials] [--only fam1,fam2]
-    # NOTE with --only, skipped families still advance nothing — the
-    # rng is shared, so a filtered run is NOT the same stream as the
-    # corresponding slice of a full run; quote the filter used.
     args = list(sys.argv[1:])
     only = None
     if "--only" in args:
@@ -2741,62 +2723,9 @@ def main() -> int:
         del args[i : i + 2]
     seed = int(args[0]) if len(args) > 0 else 20260814
     trials = int(args[1]) if len(args) > 1 else 10
-    rng = random.Random(seed)
     spark = get_spark("fuzz-portables")
     spark.sparkContext.setLogLevel("ERROR")
-    fails = 0
-    for name, fn in (
-        ("lloyd", fuzz_lloyd),
-        ("lsh", fuzz_lsh),
-        ("simhash", fuzz_simhash),
-        ("cluster_assign", fuzz_cluster_assign),
-        ("paragraph", fuzz_paragraph_dedup),
-        ("semantic_dedup", fuzz_semantic_dedup),
-        ("bpe", fuzz_bpe),
-        ("pagerank", fuzz_pagerank),
-        ("substring", fuzz_substring),
-        ("bpe_encode", fuzz_bpe_encode),
-        ("pq", fuzz_pq),
-        ("bfs", fuzz_bfs),
-        ("stratified_split", fuzz_stratified_split),
-        ("ngram_coverage", fuzz_ngram_coverage),
-        ("containment", fuzz_containment),
-        ("ols", fuzz_ols),
-        ("retrieval", fuzz_retrieval),
-        ("interpolate", fuzz_interpolate),
-        ("winsorize", fuzz_winsorize),
-        ("textnorm", fuzz_textnorm),
-        ("collocation", fuzz_collocation),
-        ("mad", fuzz_mad),
-        ("funnel", fuzz_funnel),
-        ("kanon", fuzz_kanon),
-        ("urlnorm", fuzz_urlnorm),
-        ("fingerprint", fuzz_fingerprint),
-        ("crawlplan", fuzz_crawlplan),
-        ("bigram_fluency", fuzz_bigram_fluency),
-        ("graphstats", fuzz_graphstats),
-        ("sharding", fuzz_sharding),
-        ("zonemap", fuzz_zonemap),
-        ("snapshot", fuzz_snapshot),
-        ("stream_join", fuzz_stream_join),
-        ("sq8", fuzz_sq8),
-        ("cow_merge", fuzz_cow_merge),
-        ("cow_delete", fuzz_cow_delete),
-        ("semantic_decontam", fuzz_semantic_decontam),
-        ("mor_dv", fuzz_mor_dv),
-        ("time_travel", fuzz_time_travel),
-        ("dsir", fuzz_dsir),
-        ("boilerplate", fuzz_boilerplate),
-        ("script_mix", fuzz_script_mix),
-        ("mojibake", fuzz_mojibake),
-    ):
-        if only is not None and name not in only:
-            continue
-        f = fn(spark, rng, trials)
-        fails += f
-        print(f"{name}: {trials - f}/{trials} clean")
-    print(f"total mismatches: {fails}")
-    return 1 if fails else 0
+    return 1 if run(spark, seed, trials, only) else 0
 
 
 if __name__ == "__main__":
