@@ -2,7 +2,8 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
 Prints ONE JSON line:
-  {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+  {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...,
+   "cpus": ...}
 
 Each query is executed to completion (count() forces the full plan —
 results stay on executors; nothing but the count crosses to the
@@ -38,70 +39,46 @@ HEADLINE = [
     "text_quality_scores",
     "session_window_agg",
     "grouping_sets_agg",
-    # round 3
     "cumulative_window_sums",
     "pivot_event_type_wide",
     "range_join_binned",
     "scd2_order_history",
     "domain_rebalance_sample",
     "asof_join_nearest_broadcast",
-    # round 3b
     "cdc_apply_changelog",
     "funnel_stage_counts",
     "incremental_agg_merge",
-    # round 4
     "bloom_prefilter_join",
     "interval_merge_islands",
     "doc_chunk_overlap",
     "fuzzy_name_match_dist2",
     "multimodal_header_parse",
-    # round 5
     "ivf_topk_exact",
     "entity_match_quarantine",
-    # round 6
     "kmeans_lloyd_portable",
     "multimodal_wav_slice",
-    # round 7 (ivf_recall_bound left the set with its r13 retirement —
-    # carrier q:ivf_topk_exact above; the sf1 stretch tier still
-    # measures the exact-Jaccard operator directly)
     "kmeans_clusters",
     "multimodal_gif_frames",
     "semantic_dedup_portable",
     "compaction_plan_binpack",
     "heavy_hitters_mg",
-    # round 8 (queue registrations; bpe_train_portable left the set
-    # with its r11 retirement into bpe_token_budget's slot below)
     "pagerank_portable",
     "substring_dedup_spans",
     "bfs_levels",
-    # round 9 (queue registrations; vocab_top_terms left the set
-    # with its r9 retirement; substring_dedup_clean /
-    # content_fingerprint / snapshot_summary / zorder_morton_keys
-    # left with their r12 retirements — carriers in the RETIRED
-    # comments; BENCH_QUEUED still measures the operators)
     "bpe_token_budget",
     "sq8_summary",
     "stream_interval_join",
-    # round 10 (queue registrations; retired names left the set with
-    # their r10 retirements: asof_join_broadcast_dim -> forward_keyed
-    # slot, simhash_near_pairs -> simhash_portable_pairs slot,
-    # rollup_multilevel_agg -> grouping_sets_agg slot,
-    # fuzzy_name_match dropped)
-    # (pq_train_encode left with its r13 retirement — q:pq_adc_topk
-    # executes the identical train+encode inside)
     "pq_adc_topk",
     "semantic_decontaminate",
     "stratified_exact_split",
     "triangle_counts",
     "build_zonemap",
     "ols_trend_exact",
-    # round 11 (queue registrations — VERDICT r10 #1/#3)
     "snapshot_dml",
     "snapshot_mor",
     "stream_snapshot_ingest",
     "inverted_postings",
     "bm25_doc_term_scores",
-    # round 12 (queue registrations — VERDICT r11 #1/#2)
     "ngram_containment_pairs",
     "ngram_coverage_score",
     "interpolate_linear",
@@ -109,10 +86,6 @@ HEADLINE = [
     "dice_collocations",
     "bigram_fluency",
     "url_canonicalize",
-    # round 13 (queue registrations — VERDICT r12 #2/#3/#6; the five
-    # r13 retirements above — ngram_jaccard_pairs, exact_dedup_docs,
-    # embedding_near_dup_pairs, ivf_recall_bound, pq_train_encode —
-    # left the set with carriers named in their RETIRED comments)
     "snapshot_mor_upsert",
     "snapshot_time_travel",
     "dsir_weights",
@@ -121,25 +94,6 @@ HEADLINE = [
     "mad_outlier_stats",
     "k_anonymity_stats",
 ]
-
-
-# Exact-by-contract gates whose cost is the ORACLE-REPLAYABLE
-# configuration, not the engine's production path (VERDICT r08 #8):
-# ngram_jaccard_pairs is exact threshold Jaccard, inherently
-# ~quadratic on the synthetic fixture's saturated vocabulary (26 s of
-# the 127 s r8 sf1 run — 20% of the total for one contract gate).  At
-# the STRETCH tier these move out of the headline total into an
-# `exact_gates` section, measured alongside the documented
-# production-shaped configuration (posting cap 256 — boilerplate
-# shingles dropped, the same cap class SimHash ships with; the 100 TB
-# near-dup default remains MinHash-LSH, operators/dedup.py).  The
-# sf0.1 driver-shape tier keeps them in the headline: they are cheap
-# there and the round-over-round series stays unbroken.
-# r13: the q:ngram_jaccard_pairs registration retired (carrier
-# q:ngram_containment_pairs); the stretch tier keeps measuring the
-# OPERATOR directly under the same keys so the sf1 series stays
-# unbroken.
-STRETCH_EXACT_GATES: list[str] = []
 
 
 def _execute(df) -> None:
@@ -160,10 +114,8 @@ def run_one(spark, name: str, sf_dir: str, reps: int = 3) -> float:
     persists an intermediate (dsir_weights' bucket counts) would
     otherwise hand reps 2..N the materialized cache via CacheManager
     plan substitution, and min-over-reps would report a cache read
-    as the query's cost (r13 self-review finding — the r13 idle/
-    stretch artifacts were re-measured under this rule).  JVM/codegen
-    warmth legitimately carries across reps; materialized data does
-    not."""
+    as the query's cost.  JVM/codegen warmth legitimately carries
+    across reps; materialized data does not."""
     best = float("inf")
     for _ in range(reps):
         spark.catalog.clearCache()
@@ -177,9 +129,8 @@ def _calibration(spark) -> float:
     """Fixed pure-compute probe (no I/O, no SF dependence): 50M-row
     xxhash64 fold.  Its wall time moves only with host conditions
     (CPU contention, thermal state), so the artifact self-normalizes:
-    comparing calibration_sec across rounds separates real query
-    regressions from scheduler noise — the adjudication VERDICT r04
-    had to do by hand."""
+    comparing calibration_sec across artifacts separates real query
+    regressions from scheduler noise."""
     import pyspark.sql.functions as F
 
     best = float("inf")
@@ -195,14 +146,12 @@ def _calibration(spark) -> float:
 
 
 def _job_overhead(spark) -> float:
-    """Second calibration probe (VERDICT r12 "What's wrong" #2): the
-    xxhash64 probe is pure compute and blind to PER-JOB scheduling/IO
-    drift — the exact class that moved sub-second multi-job gates
-    6-8x in the r12 idle artifact while the compute probe read
-    identical.  This one measures orchestration: best-of-3 wall for
-    50 trivial single-task jobs, so a bench artifact now separates
+    """Second calibration probe: the xxhash64 probe is pure compute
+    and blind to PER-JOB scheduling/IO drift, which moves sub-second
+    multi-job gates.  This one measures orchestration: best-of-3 wall
+    for 50 trivial single-task jobs, so a bench artifact separates
     CPU-bound movement (calibration_sec) from per-job-overhead
-    movement (job_overhead_sec) mechanically."""
+    movement (job_overhead_sec)."""
     best = float("inf")
     for _ in range(3):
         t0 = time.perf_counter()
@@ -214,54 +163,34 @@ def _job_overhead(spark) -> float:
     return round(best, 3)
 
 
-def _queries_from_tail(tail: str) -> dict | None:
-    """Recover the per-query timing dict from a DRIVER-wrapped bench
-    artifact (``{"tail": "<truncated stdout>", "parsed": null}``) —
-    the driver truncates our JSON line from the FRONT, so the tail
-    starts mid-document but the ``"queries": {...}`` object survives
-    intact in every committed artifact (VERDICT r11 "What's wrong"
-    #2).  Finds the (possibly key-truncated) ``ueries": {`` marker
-    and raw_decodes ONE JSON value from the first ``{`` after it —
-    string-context-aware, so a brace inside any key or value cannot
-    unbalance the parse the way the old hand-rolled brace matcher
-    could (ADVICE r12).  None when the marker is missing or the span
-    doesn't parse as a dict."""
-    i = tail.find('ueries"')
-    if i < 0:
+def _ratio(prior_round, prior: dict, queries: dict[str, float]) -> dict | None:
+    """Sum both runs over the queries they share."""
+    common = sorted(set(prior) & set(queries))
+    if not common:
         return None
-    j = tail.find("{", i)
-    if j < 0:
-        return None
-    try:
-        d, _ = json.JSONDecoder().raw_decode(tail, j)
-    except json.JSONDecodeError:
-        return None
-    if not isinstance(d, dict):
-        return None
-    try:
-        return {str(q): float(v) for q, v in d.items()}
-    except (TypeError, ValueError):
-        return None
+    p = round(sum(float(prior[q]) for q in common), 3)
+    t = round(sum(queries[q] for q in common), 3)
+    return {
+        "prior_round": prior_round,
+        "n_common": len(common),
+        "prior_sec": p,
+        "this_sec": t,
+        "ratio": round(t / p, 3) if p else None,
+    }
 
 
-def _prior_common(queries: dict[str, float], sf: float) -> dict | None:
-    """Common-subset comparison against the most recent committed
-    BENCH_r{N}.json, computed in-harness so the round-over-round
-    ratio ships inside the artifact.  Skipped (None) when the prior
-    artifact was recorded at a different scale factor — a cross-sf
-    ratio would read as a 10x regression.
-
-    ``SPARK_GRAFT_ROUND`` (when set) names the round being generated:
-    artifacts from that round or later are excluded, so re-running
-    the bench after this round's artifact landed compares against the
-    true PRIOR round instead of itself (ratio≈1, ADVICE r05)."""
+def _prior_common(
+    queries: dict[str, float], sf: float, cpus: int
+) -> dict | None:
+    """Common-subset comparison against the newest committed
+    BENCH_r{N}.json.  None unless the prior ran at the same scale
+    factor and records the same core count: a ratio across either
+    reads as a regression or a speedup that is not one."""
     root = os.path.dirname(os.path.abspath(__file__))
-    this_round = int(os.environ.get("SPARK_GRAFT_ROUND", "0") or 0)
     rounds = sorted(
         (int(m.group(1)), fn)
         for fn in os.listdir(root)
         if (m := re.fullmatch(r"BENCH_r(\d+)\.json", fn))
-        and not (this_round and int(m.group(1)) >= this_round)
     )
     if not rounds:
         return None
@@ -271,97 +200,48 @@ def _prior_common(queries: dict[str, float], sf: float) -> dict | None:
             doc = json.load(f)
         # driver artifacts wrap the bench line under "parsed"
         parsed = doc.get("parsed") or doc
-        prior = parsed.get("queries", {})
         prior_sf = parsed.get("sf", doc.get("sf"))
-        if not prior and isinstance(doc.get("tail"), str):
-            # driver artifacts ship parsed=null with the bench stdout
-            # truncated into "tail" — recover the queries dict from
-            # the tail string so the round-over-round ratio doesn't
-            # silently vanish (VERDICT r11 #2); the wrapper's own
-            # top-level "sf" is the scale the driver ran at
-            prior = _queries_from_tail(doc["tail"]) or {}
-            prior_sf = doc.get("sf")
-        if not prior:
-            # r12's driver artifact truncated PAST the queries object
-            # (nothing any parser can recover); the committed
-            # same-round idle artifact carries the full dict — a
-            # same-harness same-sf stand-in, flagged via prior_round
-            # so the ratio is read as idle-vs-driver, not like-for-like
-            idle = os.path.join(root, f"BENCH_IDLE_r{n:02d}.json")
-            if not os.path.exists(idle):
-                idle = os.path.join(root, f"BENCH_IDLE_r{n}.json")
-            if os.path.exists(idle):
-                with open(idle) as f:
-                    idoc = json.load(f)
-                prior = idoc.get("queries", {})
-                prior_sf = idoc.get("sf")
-                n = f"{n} (idle artifact; driver tail unrecoverable)"
+        prior_cpus = doc.get("cpus", parsed.get("cpus"))
+        if prior_cpus is None or int(prior_cpus) != cpus:
+            return None
         if prior_sf is not None and float(prior_sf) != float(sf):
             return None
-        common = sorted(set(prior) & set(queries))
-        if not common:
-            return None
-        p = round(sum(float(prior[q]) for q in common), 3)
-        t = round(sum(queries[q] for q in common), 3)
-        return {
-            "prior_round": n,
-            "n_common": len(common),
-            "prior_sec": p,
-            "this_sec": t,
-            "ratio": round(t / p, 3) if p else None,
-        }
+        return _ratio(n, parsed.get("queries", {}), queries)
     except (OSError, json.JSONDecodeError, AttributeError, TypeError,
             ValueError):
         return None
 
 
-def _prior_stretch(queries: dict[str, float]) -> dict | None:
-    """Round-over-round comparison for the sf1 tier against the
-    committed BENCH_STRETCH.json (either this harness's flat format
-    or the r5 wrapper with the bench line under "sf1").  Same
-    SPARK_GRAFT_ROUND guard as _prior_common: an artifact from the
-    round being generated is not a prior."""
+def _prior_stretch(queries: dict[str, float], cpus: int) -> dict | None:
+    """Comparison for the sf1 tier against the committed
+    BENCH_STRETCH.json (this harness's flat format or a wrapper with
+    the bench line under "sf1").  None unless the prior ran on the
+    same fixture and records the same core count."""
     root = os.path.dirname(os.path.abspath(__file__))
-    this_round = int(os.environ.get("SPARK_GRAFT_ROUND", "0") or 0)
     try:
         with open(os.path.join(root, "BENCH_STRETCH.json")) as f:
             doc = json.load(f)
-        if this_round and int(doc.get("round") or 0) >= this_round:
+        parsed = doc.get("sf1") or doc
+        prior_cpus = doc.get("cpus", parsed.get("cpus"))
+        if prior_cpus is None or int(prior_cpus) != cpus:
             return None
-        # cross-fixture guard (mirror of _prior_common's sf check):
-        # a ratio against a different-scale fixture reads as a fake
-        # 10x swing
         prior_dir = doc.get("sf_dir")
         cur_dir = os.environ.get("SPARK_GRAFT_SF1_DIR", "/tmp/sps_scaled")
         if prior_dir is not None and prior_dir != cur_dir:
             return None
-        parsed = doc.get("sf1") or doc
-        prior = parsed.get("queries", {})
-        common = sorted(set(prior) & set(queries))
-        if not common:
-            return None
-        p = round(sum(float(prior[q]) for q in common), 3)
-        t = round(sum(queries[q] for q in common), 3)
-        return {
-            "prior_round": doc.get("round"),
-            "n_common": len(common),
-            "prior_sec": p,
-            "this_sec": t,
-            "ratio": round(t / p, 3) if p else None,
-        }
+        return _ratio(doc.get("round"), parsed.get("queries", {}), queries)
     except (OSError, json.JSONDecodeError, AttributeError, TypeError,
             ValueError):
         return None
 
 
 def _stretch_incremental(spark, sf_dir: str) -> dict:
-    """The 100 TB rolling-crawl shape, measured not asserted
-    (VERDICT r06 #5): build + persist the corpus LSH band index and
-    shingle table ONCE, then probe it with two successive "crawl
-    batches" — the per-batch cost the steady-state pipeline pays.
-    Index residency is what makes probe cost batch-bound; without it
-    every batch re-signs the corpus (the index_build number is that
-    avoided cost)."""
+    """The 100 TB rolling-crawl shape, measured not asserted: build +
+    persist the corpus LSH band index and shingle table ONCE, then
+    probe it with two successive "crawl batches" — the per-batch cost
+    the steady-state pipeline pays.  Index residency is what makes
+    probe cost batch-bound; without it every batch re-signs the corpus
+    (the index_build number is that avoided cost)."""
     import pyspark.sql.functions as F
 
     from survivor_processing_spark.catalog import load_table
@@ -410,10 +290,8 @@ def _stretch_incremental(spark, sf_dir: str) -> dict:
 def main() -> None:
     stretch = "--stretch" in sys.argv
     if stretch:
-        # second scale point (VERDICT r05 #8): same harness, same
-        # self-normalizing fields, over the gen_scale.py ~sf1 fixture;
-        # committed as BENCH_STRETCH.json per round so regressions at
-        # 10x data are machine-comparable round-over-round
+        # second scale point: same harness, same self-normalizing
+        # fields, over the gen_scale.py ~sf1 fixture (BENCH_STRETCH.json)
         sf_dir = os.environ.get("SPARK_GRAFT_SF1_DIR", "/tmp/sps_scaled")
         sf = 1.0
     else:
@@ -422,6 +300,7 @@ def main() -> None:
         sf = float(sf_match.group(1)) if sf_match else -1.0
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
+    cpus = spark.sparkContext.defaultParallelism
 
     load_start = os.getloadavg()
     for name in HEADLINE:  # warm-up: JVM, codegen, file listing
@@ -429,13 +308,8 @@ def main() -> None:
     cal = _calibration(spark)
     job_ovh = _job_overhead(spark)
 
-    measured = (
-        [n for n in HEADLINE if n not in STRETCH_EXACT_GATES]
-        if stretch
-        else HEADLINE
-    )
     queries: dict[str, float] = {}
-    for name in measured:
+    for name in HEADLINE:
         queries[name] = round(run_one(spark, name, sf_dir), 3)
     total = round(sum(queries.values()), 3)
     exact_gates: dict[str, float] = {}
@@ -446,9 +320,8 @@ def main() -> None:
         )
 
         docs = load_table(spark, sf_dir, "documents")
-        # the retired gate's exact configuration AND the documented
-        # production-shaped cap, both through the operator (keys
-        # unchanged from the pre-r13 series)
+        # the exact-Jaccard operator at its oracle-replayable cap and
+        # at the production-shaped posting cap 256
         for key, cap in (
             ("ngram_jaccard_pairs_gate", 1000),
             ("ngram_jaccard_pairs_cap256", 256),
@@ -475,12 +348,15 @@ def main() -> None:
         "unit": "sec",
         "queries": queries,
         "sf": sf,
+        "cpus": cpus,
         "calibration_sec": cal,
         "job_overhead_sec": job_ovh,
         "loadavg_start": [round(x, 2) for x in load_start],
         "loadavg_end": [round(x, 2) for x in os.getloadavg()],
         "prior_common": (
-            _prior_stretch(queries) if stretch else _prior_common(queries, sf)
+            _prior_stretch(queries, cpus)
+            if stretch
+            else _prior_common(queries, sf, cpus)
         ),
         **({"exact_gates": exact_gates} if stretch else {}),
         **(
@@ -489,9 +365,6 @@ def main() -> None:
             else {}
         ),
     }
-    rnd = os.environ.get("SPARK_GRAFT_ROUND")
-    if rnd:
-        out["round"] = int(rnd)
     print(json.dumps(out))
 
 

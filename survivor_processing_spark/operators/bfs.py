@@ -73,7 +73,9 @@ def bfs_levels(
         F.col(dst).cast("long").alias("dst"),
     )
     if bucket_table is not None:
-        n_buckets = spark.sparkContext.defaultParallelism
+        # one bucket per shuffle partition, so the other join side's
+        # exchange lines up with the buckets at any core count
+        n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
         (
             canonical.write.bucketBy(n_buckets, "src")
             .sortBy("src")

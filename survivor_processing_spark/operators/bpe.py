@@ -51,9 +51,8 @@ injection-safe, and ``bpe_portable_oracle`` mechanically GENERATES
 the equivalent DuckDB SQL from the same loop parameters — one CTE
 block per iteration, the same technique as
 queries/llm_ann.py:_lloyd_portable_oracle — so the oracle cannot drift
-from the code.  Registration is queued (r7 registration freeze,
-ROTATION_r07.md); until then tests/test_bpe.py pins Spark == DuckDB
-on fixed and randomized corpora.
+from the code.  tests/test_bpe.py pins Spark == DuckDB on fixed and
+randomized corpora.
 """
 
 from __future__ import annotations

@@ -845,9 +845,9 @@ def mor_summary_oracle(
     hi2: int,
     table: str = "orders",
 ) -> str:
-    """Closed-form DuckDB oracle for the queued merge-on-read gate
-    (q:snapshot_mor, r11 registration — mirrors q:snapshot_dml's
-    closed-form style): the gate stages a snapshot table from
+    """Closed-form DuckDB oracle for the merge-on-read gate
+    (q:snapshot_mor — mirrors q:snapshot_dml's closed-form style):
+    the gate stages a snapshot table from
     ``table``, commits v2 = MOR DELETE of ``[lo1, hi1]`` and v3 =
     MOR DELETE of ``[lo2, hi2]`` (both sidecar-only — zero files
     rewritten), then v4 = ``purge_dvs`` (physical fold,
@@ -910,9 +910,8 @@ def mor_upsert_summary_oracle(
     d_hi: int,
     table: str = "orders",
 ) -> str:
-    """Closed-form DuckDB oracle for the queued MOR-UPSERT gate
-    (q:snapshot_mor_upsert — queued r12 per VERDICT r11 #4, the one
-    lakehouse DML writer without driver visibility; register r13).
+    """Closed-form DuckDB oracle for the MOR-UPSERT gate
+    (q:snapshot_mor_upsert).
     The gate stages ``table`` as a snapshot table (v1), commits v2 =
     ``upsert_into_snapshot_mor`` of a source holding (a) UPDATES —
     every row with ``key_col`` in ``[u_lo, u_hi]`` re-valued to

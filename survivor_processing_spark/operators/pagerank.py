@@ -102,7 +102,9 @@ def pagerank_portable(
     )
     if bucket_table is not None:
         spark = edges.sparkSession
-        n_buckets = spark.sparkContext.defaultParallelism
+        # one bucket per shuffle partition, so the other join side's
+        # exchange lines up with the buckets at any core count
+        n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
         (
             fanout_raw.write.bucketBy(n_buckets, "src")
             .sortBy("src")

@@ -51,8 +51,7 @@ Portability: tokenization is the engine-wide convention
 lists serialize as a deterministic sorted string (struct-array
 hashing differs across engine→pandas paths), ordering keys are exact
 integers/strings only, and the ``*_oracle`` functions mechanically
-generate the DuckDB replay from the same parameters.  Registration
-is queued behind the r7 freeze (ROTATION_r07.md); until then
+generate the DuckDB replay from the same parameters.
 tests/test_retrieval.py pins Spark == DuckDB on fixed, sf0.001, and
 randomized corpora.
 """

@@ -1418,9 +1418,8 @@ def time_travel_summary_oracle(
     probes: tuple[int, ...] = (8, 12, 18, 24, 26),
     table: str = "orders",
 ) -> str:
-    """Closed-form DuckDB oracle for the queued checkpoint +
-    TIMESTAMP AS OF gate (q:snapshot_time_travel — queued r12 per
-    VERDICT r11 #5; register r13).  The gate stages ``table`` as
+    """Closed-form DuckDB oracle for the checkpoint + TIMESTAMP AS OF
+    gate (q:snapshot_time_travel).  The gate stages ``table`` as
     ``m`` single-slice commits (commit v adds the rows with
     ``key_col % m == v-1``), writes a LOG CHECKPOINT mid-stream (at
     v = m/2), then commits v=m+1 removing slices {0,1} and v=m+2

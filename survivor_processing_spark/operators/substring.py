@@ -54,10 +54,9 @@ is the standard running-max window with total ordering (positions
 are distinct per doc after the hash join), and
 :func:`substring_spans_oracle` / :func:`substring_clean_oracle`
 mechanically generate the DuckDB replay from the same parameters.
-Registration is queued behind the r7 freeze (ROTATION_r07.md);
-until then tests/test_substring.py pins Spark == DuckDB on fixed,
-sf0.001, and randomized corpora, and tools/fuzz_portables.py carries
-a planted-boilerplate fuzz family.
+tests/test_substring.py pins Spark == DuckDB on fixed, sf0.001, and
+randomized corpora, and tools/fuzz_portables.py carries a
+planted-boilerplate fuzz family.
 
 Removal semantics: EVERY occurrence of a duplicated n-gram is
 removed (the paper notes dropping all copies of duplicated spans is

@@ -22,7 +22,6 @@ Portability: Python's ``unicodedata``/pandas NFC and DuckDB's
 the gate can hash-compare full normalized text across engines
 (verified on combining marks, Hangul jamo, compatibility-exempt
 ligatures, and random mark soups in tests/test_textnorm.py).
-Registration queued behind the r7 freeze (ROTATION_r07.md).
 """
 
 from __future__ import annotations

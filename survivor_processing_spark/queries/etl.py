@@ -631,8 +631,7 @@ def compaction_plan_binpack(spark: SparkSession, sf_dir: str) -> DataFrame:
 # `fingerprint` fuzz family (tools/fuzz_portables.py — randomized
 # tables against a pure-Python model of the mod-(2^61-1) multiset
 # sum, every round), and the content_fingerprint_oracle cross-engine
-# unit tests (tests/test_fingerprint.py).  BENCH_QUEUED still
-# measures the operator at both scales.  Two driver gates on one
+# unit tests (tests/test_fingerprint.py).  Two driver gates on one
 # hash-lane family added no oracle coverage.  Accounting:
 # ROTATION_r12.md.
 
@@ -901,22 +900,18 @@ def snapshot_mor_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _detach_and_cleanup(out, d)
 
 
-# --- Queued r12, REGISTERED r13 (VERDICT r11 #4/#5 -> VERDICT r12
-# "Next round" #2): registration = the @register block, nothing more —
-# both gate bodies, closed-form oracles (operators/mor.py
-# mor_upsert_summary_oracle, operators/snapshot.py
+# --- MOR upsert and time-travel gates: closed-form oracles
+# (operators/mor.py mor_upsert_summary_oracle, operators/snapshot.py
 # time_travel_summary_oracle), cross-engine tests (tests/test_mor.py,
 # tests/test_asof_timestamp.py), fuzz families `mor_dv` /
-# `time_travel` (tools/fuzz_portables.py), BENCH_QUEUED rows at both
-# sf dirs, and plan audits (tests/test_plans_queued.py) landed in r12.
+# `time_travel` (tools/fuzz_portables.py) and plan audits
+# (tests/test_plans_queued.py).
 
 
 @register(
     "snapshot_mor_upsert",
-    doc="MERGE-ON-READ keyed UPSERT under driver gating (queued r12, "
-    "registered r13 per VERDICT r11 #4 / r12 #2 — the one lakehouse "
-    "DML writer that was driver-invisible; operators/mor.py "
-    "upsert_into_snapshot_mor): v2 = one atomic commit of tombstone "
+    doc="MERGE-ON-READ keyed UPSERT under driver gating "
+    "(operators/mor.py upsert_into_snapshot_mor): v2 = one atomic commit of tombstone "
     "sidecars for matched keys + appended update/insert files; v3 = "
     "an OVERLAPPING copy-on-write DELETE whose rewrite must apply "
     "v2's deletion vectors (ignoring them would resurrect pre-update "

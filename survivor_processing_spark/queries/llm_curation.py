@@ -581,15 +581,14 @@ def _para_src(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="document-frequency boilerplate paragraph stripping — the "
     "CCNet/RefinedWeb curation pass and the complement of the "
     "keep-first q:paragraph_dedup (operators/dedup.py "
-    "strip_boilerplate_paragraphs — queued r12, registered r13 per "
-    "VERDICT r12 #3): a paragraph in >= 3 DISTINCT docs is dropped "
+    "strip_boilerplate_paragraphs): a paragraph in >= 3 DISTINCT docs is dropped "
     "from EVERY document including its first.  The df count is a "
     "map-side-combinable two-phase distinct aggregate on the "
     "paragraph key (a billion-copy banner costs one partial per "
     "task); the flag-back join's build side carries ONLY paragraphs "
     "past the cut; NULL-text docs (the 1/37 slice) emit (0, 0, NULL) "
-    "via inner explode + left-join-back.  BENCH_QUEUED: sub-linear "
-    "cost-per-row at the 10x corpus (0.32x).  (fuzz family "
+    "via inner explode + left-join-back.  Sub-linear cost-per-row "
+    "at the 10x corpus (0.32x).  (fuzz family "
     "`boilerplate`; cross-engine tests tests/test_boilerplate.py; "
     "no-window/map-side plan audit tests/test_plans_queued.py)",
     oracle=boilerplate_strip_oracle(min_docs=3, table=_PARA_SRC_SQL),
@@ -605,8 +604,7 @@ def boilerplate_strip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="DSIR-style hashed n-gram importance weighting (Xie et al. "
     "2023) — the data-SELECTION pass that tilts a web-scale crawl "
     "toward a target distribution before pretraining "
-    "(operators/dsir.py dsir_importance_weights — queued r12, "
-    "registered r13 per VERDICT r12 #3): raw = documents, target = "
+    "(operators/dsir.py dsir_importance_weights): raw = documents, target = "
     "the deterministic 1/17 doc slice; exact integer ratio lanes "
     "(md5-bucketed bigram features, add-1 smoothing, BIGINT-headroom "
     "ratio cap) both engines replay bit-for-bit.  Scale shape: two "
@@ -615,10 +613,10 @@ def boilerplate_strip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "hashed features work at 100 TB where raw vocabularies do not; "
     "the raw corpus is tokenized ONCE (corpus totals derive from the "
     "per-doc bucket counts, single-scan pinned by the plan audit).  "
-    "BENCH_QUEUED: sub-linear cost-per-row at the 10x corpus "
-    "(0.67x).  (fuzz family `dsir`; cross-engine + monotone-tilt + "
-    "cap-binds tests tests/test_dsir.py; broadcast-lane/map-side/"
-    "no-Python plan audit tests/test_plans_queued.py)",
+    "Sub-linear cost-per-row at the 10x corpus (0.67x).  (fuzz "
+    "family `dsir`; cross-engine + monotone-tilt + cap-binds tests "
+    "tests/test_dsir.py; broadcast-lane/map-side/no-Python plan "
+    "audit tests/test_plans_queued.py)",
     oracle=dsir_importance_oracle(
         "SELECT doc_id, text FROM documents",
         "SELECT doc_id, text FROM documents WHERE doc_id % 17 = 0",

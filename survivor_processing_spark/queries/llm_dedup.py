@@ -496,17 +496,16 @@ def substring_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 # unit tests (tests/test_substring.py).  A second driver gate on the
 # same span machinery added no oracle coverage beyond the cut
 # projection, which the fuzz family pins tighter.  The fuzz family
-# and BENCH_QUEUED rows still drive the operator directly.
+# still drives the operator directly.
 # Accounting: ROTATION_r12.md.
 
 
 @register(
     "ngram_containment_pairs",
     doc="exact ASYMMETRIC word-3-gram near-CONTAINMENT pairs at "
-    ">=0.5 (operators/dedup.py ngram_containment_pairs — queued r11, "
-    "registered r12 after the idle-host scale adjudication VERDICT "
-    "r11 'What's wrong' #1 demanded: cost-per-row at the 10x scaled "
-    "corpus matches sf0.1, i.e. linear — BENCH_QUEUED.json): "
+    ">=0.5 (operators/dedup.py ngram_containment_pairs; "
+    "cost-per-row at the 10x scaled corpus matches sf0.1, i.e. "
+    "linear): "
     "C(src→dst) = |S(src) ∩ S(dst)| / |S(src)| flags SUBSET "
     "duplication the symmetric Jaccard structurally misses — a short "
     "doc quoted wholesale inside a long one is a containment-dup at "

@@ -929,9 +929,8 @@ def dml_summary_oracle(
     hi: int,
     table: str = "orders",
 ) -> str:
-    """Closed-form DuckDB oracle for the queued snapshot-DML gate
-    (the r11 registration this generator pre-stages, mirroring
-    q:snapshot_summary's closed-form style): the gate stages a
+    """Closed-form DuckDB oracle for the snapshot-DML gate
+    (q:snapshot_dml): the gate stages a
     snapshot-logged table from ``table``, commits v2 = COPY-ON-WRITE
     DELETE of ``key_col`` in ``[lo, hi]`` (:func:`delete_from_snapshot`)
     and v3 = OPTIMIZE ZORDER (operators/snapshot.py

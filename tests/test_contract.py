@@ -69,3 +69,18 @@ def test_priority_window_is_exactly_fifty_registered_names():
     missing = [n for n in entrymod._PRIORITY if n not in REGISTRY]
     assert missing == []
     assert len(set(entrymod._PRIORITY)) == 50
+
+
+def test_committed_sweep_covers_registry():
+    """SWEEP_SF1.json lists exactly the registered queries
+    (``tools/sweep.py --check``)."""
+    import importlib.util
+    import os
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "sweep", os.path.join(repo, "tools", "sweep.py")
+    )
+    sweep = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(sweep)
+    assert sweep.check_committed(repo) == 0

@@ -1,13 +1,11 @@
-"""Hypothesis property tests for the final-r7 queued operators whose
-correctness IS an algebraic invariant — shapes randomized search
-finds that fixed fixtures miss:
+"""Hypothesis property tests for operators whose correctness IS an
+algebraic invariant — shapes randomized search finds that fixed
+fixtures miss:
 
 - content_fingerprint: a multiset invariant — ANY permutation and
   ANY partitioning of the same rows fingerprint identically, and any
   single-row multiset change does not (modulo the documented 2^-60
   lane collision, which hypothesis will not find).
-- rendezvous sharding: adding a shard moves keys ONLY to the new
-  shard; removing one moves only its keys — exact, not statistical.
 - mad_outlier_stats: inlier/outlier counts partition the group, and
   the output is invariant to input row order (tie-invariance of the
   nearest-rank statistics)."""
@@ -23,7 +21,6 @@ from survivor_processing_spark.operators.curation import mad_outlier_stats
 from survivor_processing_spark.operators.fingerprint import (
     content_fingerprint,
 )
-from survivor_processing_spark.operators.sharding import rendezvous_assign
 
 SETTINGS = dict(
     max_examples=8,
@@ -65,33 +62,6 @@ def test_fingerprint_detects_single_row_change(spark, rows, data):
     df2 = spark.createDataFrame(mutated, "k long, s string")
     assert tuple(content_fingerprint(df2, ["k", "s"]).collect()[0]) != base
 
-
-@settings(**SETTINGS)
-@given(
-    n=st.integers(min_value=1, max_value=80),
-    k=st.integers(min_value=1, max_value=5),
-    data=st.data(),
-)
-def test_rendezvous_disruption_exact(spark, n, k, data):
-    shards = [f"s{i}" for i in range(k)]
-    new = "s-new"
-    df = spark.range(n).withColumnRenamed("id", "key")
-    before = {
-        r["key"]: r["shard"]
-        for r in rendezvous_assign(df, "key", shards).collect()
-    }
-    after = {
-        r["key"]: r["shard"]
-        for r in rendezvous_assign(df, "key", shards + [new]).collect()
-    }
-    for key in before:
-        assert after[key] in (before[key], new)
-    # removal symmetry: dropping the new shard restores exactly
-    restored = {
-        r["key"]: r["shard"]
-        for r in rendezvous_assign(df, "key", shards).collect()
-    }
-    assert restored == before
 
 
 MADROWS = st.lists(

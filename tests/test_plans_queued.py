@@ -1,7 +1,6 @@
-"""Physical-plan audits for the r7 queued (unit-gated) operators —
-the same discipline tests/test_plans.py applies to registered
-queries: the plan must be the one that survives 100× scale before
-the operator earns a registry slot.
+"""Physical-plan audits called on the operators directly — the same
+discipline tests/test_plans.py applies to registered queries: the
+plan must be the one that survives 100× scale.
 
 All hot paths must stay JVM-side (no Python eval nodes), nothing may
 cartesian, the substring gram count must partial-aggregate map-side,
@@ -214,41 +213,6 @@ def test_fingerprint_partial_aggregates_no_hash_exchange(spark):
         assert node not in plan
 
 
-def test_crawlplan_single_ranking_exchange(spark):
-    from survivor_processing_spark.operators.crawlplan import (
-        crawl_schedule_slots,
-    )
-
-    df = crawl_schedule_slots(
-        _docs(spark).selectExpr(
-            "source AS host", "cast(doc_id as string) AS url"
-        )
-    )
-    plan = _plan(df)
-    assert plan.count("Exchange") == 1
-    for node in PY_NODES:
-        assert node not in plan
-
-
-def test_funnel_no_cartesian_no_python(spark):
-    from survivor_processing_spark.operators.funnel import funnel_steps
-
-    ev = spark.createDataFrame(
-        [(1, 10, "view"), (1, 20, "click")],
-        "user_id long, ts long, event_type string",
-    )
-    plan = _plan(
-        funnel_steps(
-            ev,
-            "user_id",
-            "ts",
-            [("view", "event_type = 'view'"), ("click", "event_type = 'click'")],
-        )
-    )
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    for node in PY_NODES:
-        assert node not in plan
 
 
 def test_pagerank_iteration_mapside_no_cartesian(spark):
@@ -360,20 +324,6 @@ def test_triangles_no_cartesian_mapside_no_python(spark):
         assert node not in plan
     assert "partial_count" in plan
 
-
-def test_rendezvous_is_pure_projection(spark):
-    from survivor_processing_spark.operators.sharding import (
-        rendezvous_assign,
-    )
-
-    df = rendezvous_assign(
-        _docs(spark).select("doc_id"), "doc_id", ["s-a", "s-b", "s-c"]
-    )
-    plan = _plan(df)
-    # routing must compose into a scan: no shuffle, no Python
-    assert "Exchange" not in plan
-    for node in PY_NODES:
-        assert node not in plan
 
 
 def test_zonemap_pruned_scan_pushes_residual_filter(spark, tmp_path):
@@ -859,38 +809,5 @@ def test_boilerplate_strip_mapside_df_small_build_side(spark):
     assert "BroadcastNestedLoopJoin" not in plan
     assert "Window" not in plan  # min-struct/df aggregates, no window
     assert "partial_count" in plan
-    for node in PY_NODES:
-        assert node not in plan
-
-
-def test_script_mix_pure_projection_no_shuffle_no_python(spark):
-    """operators/scripts.py script_mix_stats (queued r13): a pure
-    per-row projection — the 11 regexp class counts, the CASE
-    dominant, and the integer mixed flag must all fuse into the scan:
-    no Exchange, no Sort, no Python eval node."""
-    from survivor_processing_spark.operators.scripts import (
-        script_mix_stats,
-    )
-
-    out = script_mix_stats(_docs(spark).select("doc_id", "text"))
-    plan = _plan(out)
-    assert "Exchange" not in plan
-    assert "Sort" not in plan
-    for node in PY_NODES:
-        assert node not in plan
-
-
-def test_mojibake_pure_projection_no_shuffle_no_python(spark):
-    """operators/mojibake.py mojibake_stats (queued r13): the three
-    regexp counts, the integer lane, and the suspect flag fuse into
-    the scan — no Exchange, no Sort, no Python eval node."""
-    from survivor_processing_spark.operators.mojibake import (
-        mojibake_stats,
-    )
-
-    out = mojibake_stats(_docs(spark).select("doc_id", "text"))
-    plan = _plan(out)
-    assert "Exchange" not in plan
-    assert "Sort" not in plan
     for node in PY_NODES:
         assert node not in plan

@@ -268,98 +268,60 @@ def test_bloom_subquery_view_evicted_on_rebuild(spark):
     assert mid < two and not (mid & three)
 
 
-# --- bench prior-round guards (ADVICE r05 + r6 review) ----------------------
+# --- bench prior-artifact guards --------------------------------------------
 
 
-def test_bench_prior_guards(tmp_path, monkeypatch):
-    import json
-    import sys
-
-    sys.path.insert(0, "/root/repo")
-    import bench
-
-    # same-round artifact must not be its own prior
-    monkeypatch.setattr(
-        bench.os, "listdir", lambda _: ["BENCH_r05.json", "BENCH_r06.json"]
-    )
-    monkeypatch.setenv("SPARK_GRAFT_ROUND", "6")
-    real_open = open
-
-    def fake_doc(path, *a, **kw):
-        if "BENCH_r" in str(path):
-            import io
-
-            return io.StringIO(
-                json.dumps({"queries": {"q": 2.0}, "sf": 0.1})
-            )
-        return real_open(path, *a, **kw)
-
-    monkeypatch.setattr("builtins.open", fake_doc)
-    out = bench._prior_common({"q": 1.0}, 0.1)
-    assert out is not None and out["prior_round"] == 5
-
-    # stretch: a prior from a different fixture dir is rejected
-    monkeypatch.setattr("builtins.open", real_open)
-    stretch_doc = {
-        "round": 5,
-        "sf_dir": "/some/other/fixture",
-        "queries": {"q": 2.0},
-    }
-    monkeypatch.setattr(
-        "builtins.open",
-        lambda p, *a, **kw: __import__("io").StringIO(json.dumps(stretch_doc))
-        if "BENCH_STRETCH" in str(p)
-        else real_open(p, *a, **kw),
-    )
-    assert bench._prior_stretch({"q": 1.0}) is None
-
-
-def test_bench_prior_reads_driver_tail_wrapper(monkeypatch):
-    """VERDICT r11 #2: the driver commits BENCH_r{N}.json as
-    {"tail": "<front-truncated stdout>", "parsed": null} — the prior
-    ratio must be recovered from the tail string instead of silently
-    shipping prior_common=null."""
+def test_bench_prior_guards(monkeypatch):
+    """A prior ratio is computed only against an artifact from the
+    same core count and scale (or sf1 fixture); one that does not
+    record its core count is never a prior."""
     import io
     import json
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import bench
 
-    inner = json.dumps(
-        {"metric": "x", "queries": {"q": 2.0, "r": 4.0}, "sf": 0.1}
-    )
-    wrapper = {
-        "n": 11,
-        "sf": 0.1,
-        # front-truncated mid-key, exactly the driver's shape
-        "tail": inner[inner.find("ueries") - 2 :],
-        "parsed": None,
-    }
-    monkeypatch.setattr(bench.os, "listdir", lambda _: ["BENCH_r11.json"])
-    monkeypatch.setenv("SPARK_GRAFT_ROUND", "12")
+    served: dict = {}
     real_open = open
+    monkeypatch.setattr(bench.os, "listdir", lambda _: ["BENCH_r05.json"])
     monkeypatch.setattr(
         "builtins.open",
-        lambda p, *a, **kw: io.StringIO(json.dumps(wrapper))
-        if "BENCH_r" in str(p)
+        lambda p, *a, **kw: io.StringIO(json.dumps(served["doc"]))
+        if "BENCH_" in str(p)
         else real_open(p, *a, **kw),
     )
-    out = bench._prior_common({"q": 1.0, "r": 1.0}, 0.1)
-    assert out == {
-        "prior_round": 11,
-        "n_common": 2,
-        "prior_sec": 6.0,
-        "this_sec": 2.0,
-        "ratio": 0.333,
+    want = {
+        "prior_round": 5,
+        "n_common": 1,
+        "prior_sec": 2.0,
+        "this_sec": 1.0,
+        "ratio": 0.5,
     }
-    # cross-sf wrapper is still rejected (the wrapper's own sf)
-    wrapper["sf"] = 0.01
-    assert bench._prior_common({"q": 1.0}, 0.1) is None
-    # a tail without a recoverable queries object degrades to None
-    wrapper["sf"] = 0.1
-    wrapper["tail"] = '{"truncated": true'
-    assert bench._prior_common({"q": 1.0}, 0.1) is None
+    q = {"q": 2.0}
+    for doc, expect in [
+        ({"queries": q, "sf": 0.1, "cpus": 4}, want),
+        # driver wrapper: cpus and sf at the top, bench line in "parsed"
+        ({"cpus": 4, "sf": 0.1, "parsed": {"queries": q}}, want),
+        ({"queries": q, "sf": 0.1, "cpus": 32}, None),
+        ({"cpus": 32, "sf": 0.1, "parsed": {"queries": q}}, None),
+        ({"queries": q, "sf": 0.1}, None),
+        ({"queries": q, "sf": 0.01, "cpus": 4}, None),
+    ]:
+        served["doc"] = doc
+        assert bench._prior_common({"q": 1.0, "r": 5.0}, 0.1, 4) == expect, doc
+
+    monkeypatch.setenv("SPARK_GRAFT_SF1_DIR", "/tmp/sps_scaled")
+    for doc, ok in [
+        ({"sf_dir": "/tmp/sps_scaled", "cpus": 4, "queries": q}, True),
+        ({"sf_dir": "/tmp/sps_scaled", "cpus": 8, "queries": q}, False),
+        ({"sf_dir": "/tmp/sps_scaled", "queries": q}, False),
+        ({"sf_dir": "/some/other/fixture", "cpus": 4, "queries": q}, False),
+    ]:
+        served["doc"] = doc
+        out = bench._prior_stretch({"q": 1.0}, 4)
+        assert (out is not None and out["ratio"] == 0.5) if ok else out is None, doc
 
 
 # --- quarantine MERGE replay ------------------------------------------------

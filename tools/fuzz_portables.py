@@ -3,7 +3,7 @@ oracles — the reproducible form of the SCALE.md round-6 fuzz claim.
 
 Covers the portable families on randomized inputs beyond the
 committed hypothesis tests' budget — registered gates replay their
-REGISTERED oracle SQL, queued (unit-gated) operators replay their
+REGISTERED oracle SQL, operator-level families replay their
 mechanically generated oracles:
 - full-Lloyd k-means: random (n, dim, k, iters) with planted
   duplicates and zero vectors (tie stress);
@@ -203,11 +203,10 @@ def fuzz_semantic_dedup(spark, rng, trials: int) -> int:
 
 
 def fuzz_bpe(spark, rng, trials: int) -> int:
-    """operators/bpe.py (unit-gated, queued r9): random corpora over
-    tiny alphabets (pair-count ties everywhere), words up to the
-    max_word_len boundary, self-overlap chains ('aaaa'), and a
-    random max_vocab cap — Spark loop vs the generated DuckDB CTE
-    oracle."""
+    """operators/bpe.py: random corpora over tiny alphabets
+    (pair-count ties everywhere), words up to the max_word_len
+    boundary, self-overlap chains ('aaaa'), and a random max_vocab cap
+    — Spark loop vs the generated DuckDB CTE oracle."""
     from survivor_processing_spark.operators.bpe import (
         bpe_portable_oracle,
         bpe_train,
@@ -247,9 +246,9 @@ def fuzz_bpe(spark, rng, trials: int) -> int:
 
 
 def fuzz_pagerank(spark, rng, trials: int) -> int:
-    """operators/pagerank.py (unit-gated, queued r9): random digraphs
-    with self-loops, parallel edges, dangling nodes, and disconnected
-    components — integer-lane iteration vs the generated oracle."""
+    """operators/pagerank.py: random digraphs with self-loops,
+    parallel edges, dangling nodes, and disconnected components —
+    integer-lane iteration vs the generated oracle."""
     from survivor_processing_spark.operators.pagerank import (
         pagerank_portable,
         pagerank_portable_oracle,
@@ -334,10 +333,9 @@ def fuzz_simhash(spark, rng, trials: int) -> int:
 
 
 def fuzz_substring(spark, rng, trials: int) -> int:
-    """operators/substring.py (unit-gated, queued): random corpora
-    with planted shared boilerplate, within-doc repeats, short docs,
-    and random (n, min_count) — spans AND cleaned text vs the
-    generated oracles."""
+    """operators/substring.py: random corpora with planted shared
+    boilerplate, within-doc repeats, short docs, and random (n,
+    min_count) — spans AND cleaned text vs the generated oracles."""
     from survivor_processing_spark.operators.substring import (
         substring_clean_oracle,
         substring_dedup_clean,
@@ -405,10 +403,10 @@ def fuzz_substring(spark, rng, trials: int) -> int:
 
 
 def fuzz_bpe_encode(spark, rng, trials: int) -> int:
-    """operators/bpe.py token budgets (unit-gated, queued): random
-    corpora mixing alpha/OOV/empty docs with random (n_merges,
-    max_vocab, encode_max_len) — Spark train+encode vs the guarded
-    generated oracle (early-stop corpora included)."""
+    """operators/bpe.py token budgets: random corpora mixing
+    alpha/OOV/empty docs with random (n_merges, max_vocab,
+    encode_max_len) — Spark train+encode vs the guarded generated
+    oracle (early-stop corpora included)."""
     from survivor_processing_spark.operators.bpe import (
         bpe_token_budget,
         bpe_token_budget_oracle,
@@ -456,11 +454,10 @@ def fuzz_bpe_encode(spark, rng, trials: int) -> int:
 
 
 def fuzz_pq(spark, rng, trials: int) -> int:
-    """operators/pq.py (unit-gated, queued): random (n, m, k, iters,
-    dim) with planted duplicates, zero vectors, and hygiene poison
-    (NULL vector / NULL lane / ragged) — codes+recon AND the ADC
-    top-k (query = a perturbed corpus vector) vs the generated
-    oracles."""
+    """operators/pq.py: random (n, m, k, iters, dim) with planted
+    duplicates, zero vectors, and hygiene poison (NULL vector / NULL
+    lane / ragged) — codes+recon AND the ADC top-k (query = a
+    perturbed corpus vector) vs the generated oracles."""
     from survivor_processing_spark.operators.pq import (
         pq_adc_topk,
         pq_adc_topk_oracle,
@@ -531,10 +528,9 @@ def fuzz_pq(spark, rng, trials: int) -> int:
 
 
 def fuzz_bfs(spark, rng, trials: int) -> int:
-    """operators/bfs.py (unit-gated, queued): random digraphs with
-    self-loops, parallel edges, unreachable components, and random
-    source sets/horizons — frontier BFS vs the generated per-hop
-    oracle."""
+    """operators/bfs.py: random digraphs with self-loops, parallel
+    edges, unreachable components, and random source sets/horizons —
+    frontier BFS vs the generated per-hop oracle."""
     from survivor_processing_spark.operators.bfs import (
         bfs_levels,
         bfs_levels_oracle,
@@ -569,10 +565,10 @@ def fuzz_bfs(spark, rng, trials: int) -> int:
 
 
 def fuzz_stratified_split(spark, rng, trials: int) -> int:
-    """operators/curation.py stratified_exact_split (unit-gated,
-    queued): random strata distributions (incl. 1-row and hot
-    strata) and random weight vectors — per-(stratum, split) counts
-    vs the generated oracle plus the exact floor-count property."""
+    """operators/curation.py stratified_exact_split: random strata
+    distributions (incl. 1-row and hot strata) and random weight
+    vectors — per-(stratum, split) counts vs the generated oracle plus
+    the exact floor-count property."""
     from survivor_processing_spark.operators.curation import (
         stratified_exact_split,
         stratified_exact_split_oracle,
@@ -631,10 +627,9 @@ def fuzz_stratified_split(spark, rng, trials: int) -> int:
 
 
 def fuzz_ngram_coverage(spark, rng, trials: int) -> int:
-    """operators/curation.py ngram_coverage_score (unit-gated,
-    queued): random corpora with planted gibberish and heavy
-    repetition, random (n, min_ref_count) — counts vs the generated
-    oracle."""
+    """operators/curation.py ngram_coverage_score: random corpora with
+    planted gibberish and heavy repetition, random (n, min_ref_count)
+    — counts vs the generated oracle."""
     from survivor_processing_spark.operators.curation import (
         ngram_coverage_oracle,
         ngram_coverage_score,
@@ -682,12 +677,12 @@ def fuzz_ngram_coverage(spark, rng, trials: int) -> int:
 
 
 def fuzz_containment(spark, rng, trials: int) -> int:
-    """operators/dedup.py ngram_containment_pairs (unit-gated, queued
-    r11): random small corpora with planted subset-duplication
-    (a short doc embedded verbatim in a long one), random thresholds
-    and shingle widths — the ordered pair set and every containment
-    value vs the generated oracle, plus the planted subset must
-    surface at containment 1.0 in the short->long direction."""
+    """operators/dedup.py ngram_containment_pairs: random small
+    corpora with planted subset-duplication (a short doc embedded
+    verbatim in a long one), random thresholds and shingle widths —
+    the ordered pair set and every containment value vs the generated
+    oracle, plus the planted subset must surface at containment 1.0 in
+    the short->long direction."""
     from survivor_processing_spark.operators.dedup import (
         ngram_containment_oracle,
         ngram_containment_pairs,
@@ -753,10 +748,10 @@ def fuzz_containment(spark, rng, trials: int) -> int:
 
 
 def fuzz_ols(spark, rng, trials: int) -> int:
-    """operators/regression.py ols_trend_exact (unit-gated, queued):
-    random grouped point clouds with planted perfect lines,
-    degenerate single-point/constant-x groups, NULLs, and random
-    scales — rational outputs vs the generated oracle."""
+    """operators/regression.py ols_trend_exact: random grouped point
+    clouds with planted perfect lines, degenerate
+    single-point/constant-x groups, NULLs, and random scales —
+    rational outputs vs the generated oracle."""
     from survivor_processing_spark.operators.regression import (
         ols_trend_exact,
         ols_trend_oracle,
@@ -809,8 +804,8 @@ def fuzz_ols(spark, rng, trials: int) -> int:
 
 
 def fuzz_retrieval(spark, rng, trials: int) -> int:
-    """operators/retrieval.py inverted_postings + bm25_doc_term_scores
-    (unit-gated, queued): random corpora with stopword-class hot
+    """operators/retrieval.py inverted_postings +
+    bm25_doc_term_scores: random corpora with stopword-class hot
     tokens, empty docs, and random min_df/max_df cuts and k1/b
     rationals — posting strings and exact/float score columns vs the
     generated oracles."""
@@ -871,10 +866,10 @@ def fuzz_retrieval(spark, rng, trials: int) -> int:
 
 
 def fuzz_interpolate(spark, rng, trials: int) -> int:
-    """operators/timeseries.py interpolate_linear (unit-gated,
-    queued): random multi-key integer series with NULL runs,
-    leading/trailing NULLs, all-NULL keys, and negative values —
-    rational lanes vs the generated oracle."""
+    """operators/timeseries.py interpolate_linear: random multi-key
+    integer series with NULL runs, leading/trailing NULLs, all-NULL
+    keys, and negative values — rational lanes vs the generated
+    oracle."""
     from survivor_processing_spark.operators.timeseries import (
         interpolate_linear,
         interpolate_linear_oracle,
@@ -926,10 +921,9 @@ def fuzz_interpolate(spark, rng, trials: int) -> int:
 
 
 def fuzz_winsorize(spark, rng, trials: int) -> int:
-    """operators/curation.py winsorize_group_stats (unit-gated,
-    queued): random groups with heavy ties, NULLs, 1-row groups, and
-    random rational percentiles — bounds/clip counts/winsorized sums
-    vs the generated oracle."""
+    """operators/curation.py winsorize_group_stats: random groups with
+    heavy ties, NULLs, 1-row groups, and random rational percentiles —
+    bounds/clip counts/winsorized sums vs the generated oracle."""
     from survivor_processing_spark.operators.curation import (
         winsorize_group_stats,
         winsorize_oracle,
@@ -986,9 +980,9 @@ def fuzz_winsorize(spark, rng, trials: int) -> int:
 
 
 def fuzz_textnorm(spark, rng, trials: int) -> int:
-    """operators/textnorm.py nfc_normalize_text (unit-gated, queued):
-    random combining-mark soups over latin/greek/hangul bases with
-    NULL and empty docs — pandas NFC vs DuckDB nfc_normalize."""
+    """operators/textnorm.py nfc_normalize_text: random combining-mark
+    soups over latin/greek/hangul bases with NULL and empty docs —
+    pandas NFC vs DuckDB nfc_normalize."""
     from survivor_processing_spark.operators.textnorm import (
         nfc_normalize_oracle,
         nfc_normalize_text,
@@ -1035,9 +1029,9 @@ def fuzz_textnorm(spark, rng, trials: int) -> int:
 
 
 def fuzz_collocation(spark, rng, trials: int) -> int:
-    """operators/collocation.py dice_collocations (unit-gated,
-    queued): random short-vocab corpora with punctuation, case, and
-    empty docs — Spark vs the generated DuckDB oracle."""
+    """operators/collocation.py dice_collocations: random short-vocab
+    corpora with punctuation, case, and empty docs — Spark vs the
+    generated DuckDB oracle."""
     from survivor_processing_spark.operators.collocation import (
         dice_collocations,
         dice_collocations_oracle,
@@ -1076,9 +1070,9 @@ def fuzz_collocation(spark, rng, trials: int) -> int:
 
 
 def fuzz_mad(spark, rng, trials: int) -> int:
-    """operators/curation.py mad_outlier_stats (unit-gated, queued):
-    random tie-heavy groups with NULLs and negative values — Spark
-    vs the generated DuckDB oracle."""
+    """operators/curation.py mad_outlier_stats: random tie-heavy
+    groups with NULLs and negative values — Spark vs the generated
+    DuckDB oracle."""
     from survivor_processing_spark.operators.curation import (
         mad_outlier_oracle,
         mad_outlier_stats,
@@ -1119,59 +1113,11 @@ def fuzz_mad(spark, rng, trials: int) -> int:
     return fails
 
 
-def fuzz_funnel(spark, rng, trials: int) -> int:
-    """operators/funnel.py funnel_steps (unit-gated, queued): random
-    event logs with heavy timestamp ties — Spark vs the generated
-    DuckDB CTE chain."""
-    from survivor_processing_spark.operators.funnel import (
-        funnel_oracle,
-        funnel_steps,
-    )
-
-    types = ["view", "click", "buy", "other"]
-    steps = [
-        ("view", "event_type = 'view'"),
-        ("click", "event_type = 'click'"),
-        ("buy", "event_type = 'buy'"),
-    ]
-    fails = 0
-    for _ in range(trials):
-        rows = [
-            (
-                rng.randrange(1, 10),
-                rng.randrange(0, 25),
-                rng.choice(types),
-            )
-            for _ in range(rng.randrange(1, 120))
-        ]
-        df = spark.createDataFrame(rows, "user_id long, ts long, event_type string")
-        got = sorted(
-            map(tuple, funnel_steps(df, "user_id", "ts", steps).collect())
-        )
-        con = duckdb.connect()
-        con.register(
-            "ev", pd.DataFrame(rows, columns=["user_id", "ts", "event_type"])
-        )
-        want = sorted(
-            map(
-                tuple,
-                con.execute(
-                    funnel_oracle(
-                        "user_id", "ts", steps, "SELECT * FROM ev"
-                    )
-                ).fetchall(),
-            )
-        )
-        if got != want:
-            fails += 1
-            print("FUNNEL MISMATCH")
-    return fails
-
 
 def fuzz_kanon(spark, rng, trials: int) -> int:
-    """operators/curation.py k_anonymity_stats (unit-gated, queued):
-    random quasi-identifier tables — Spark vs the generated oracle,
-    plus the row-level/summary consistency invariant."""
+    """operators/curation.py k_anonymity_stats: random
+    quasi-identifier tables — Spark vs the generated oracle, plus the
+    row-level/summary consistency invariant."""
     from survivor_processing_spark.operators.curation import (
         k_anonymity_oracle,
         k_anonymity_stats,
@@ -1201,165 +1147,13 @@ def fuzz_kanon(spark, rng, trials: int) -> int:
     return fails
 
 
-def fuzz_script_mix(spark, rng, trials: int) -> int:
-    """operators/scripts.py script_mix_stats (unit-gated, queued r13):
-    random multi-script soup (incl. NULLs, excluded x/division signs,
-    threshold-straddling mixes) — Spark vs the generated DuckDB
-    oracle vs a pure-Python replay of the same range table."""
-    from survivor_processing_spark.operators.scripts import (
-        _EXTRA_CLASSES,
-        LETTER_SCRIPTS,
-        MIN_LETTERS,
-        MIX_DEN,
-        SCRIPT_RANGES,
-        script_mix_oracle,
-        script_mix_stats,
-    )
-
-    classes = (*SCRIPT_RANGES, *_EXTRA_CLASSES)
-    pools = [
-        "abcdef ", "\u0430\u0431\u0432\u0433 ", "\u03b1\u03b2\u03b3 ",
-        "\u6c49\u5b57\u6587 ", "\u30a2\u30a4\u30a6 ", "01234 ",
-        "\u00e9\u00e8\u00ea ", "\u00d7\u00f7 ", "\u05d0\u05d1 ",
-        "\u0627\u0628 ", "\u0915\u0916 ", "\uac00\uac01 ",
-    ]
-    fails = 0
-    for _ in range(trials):
-        texts = {
-            d: None
-            if rng.random() < 0.1
-            else "".join(
-                rng.choice(rng.choice(pools))
-                for _ in range(rng.randrange(0, 50))
-            )
-            for d in range(rng.randrange(2, 30))
-        }
-        df = spark.createDataFrame(
-            sorted(texts.items()), "doc_id long, text string"
-        )
-        got = {
-            r["doc_id"]: tuple(r)[1:]
-            for r in script_mix_stats(df).collect()
-        }
-        con = duckdb.connect()
-        con.register(
-            "src_t",
-            pd.DataFrame(
-                {"doc_id": list(texts), "text": list(texts.values())}
-            ),
-        )
-        want = {
-            int(r[0]): tuple(r)[1:]
-            for r in con.execute(
-                script_mix_oracle("SELECT doc_id, text FROM src_t")
-            ).fetchall()
-        }
-        # pure-Python model from the same table
-        model = {}
-        for d, t in texts.items():
-            t = t or ""
-            cnt = [
-                sum(
-                    1 for ch in t
-                    if any(lo <= ord(ch) <= hi for lo, hi in ranges)
-                )
-                for _, ranges in classes
-            ]
-            letters = sum(cnt[: len(LETTER_SCRIPTS)])
-            dom, best = "none", 0
-            for i, n in enumerate(LETTER_SCRIPTS):
-                if cnt[i] > best:
-                    best, dom = cnt[i], n
-            mixed = (
-                letters >= MIN_LETTERS
-                and (letters - best) * MIX_DEN >= letters
-            )
-            model[d] = (len(t), *cnt, letters, dom, mixed)
-        if got != want or got != model:
-            fails += 1
-            print("SCRIPT_MIX MISMATCH")
-    return fails
-
-
-def fuzz_mojibake(spark, rng, trials: int) -> int:
-    """operators/mojibake.py mojibake_stats (unit-gated, queued r13):
-    random damage soup (digraphs, replacement chars, C1 controls,
-    near-miss single bytes, NULLs) — Spark vs the generated DuckDB
-    oracle vs a pure-Python non-overlapping scan."""
-    from survivor_processing_spark.operators.mojibake import (
-        LANE_DEN,
-        LANE_THRESHOLD,
-        UTF8_DIGRAPHS,
-        mojibake_oracle,
-        mojibake_stats,
-    )
-
-    repl = chr(0xFFFD)
-    frags = [
-        "text ", "a", " ", repl, chr(0x85), chr(0x92), "\u00c3\u00a9",
-        "\u00c3\u00bc", "\u00e2\u20ac", "\u00c3", "\u00c2", "\u00e2", "\u20ac", "\u00e9",
-        "\u00c2\u00b0",
-    ]
-    fails = 0
-    for _ in range(trials):
-        texts = {
-            d: None
-            if rng.random() < 0.1
-            else "".join(
-                rng.choice(frags) for _ in range(rng.randrange(0, 40))
-            )
-            for d in range(rng.randrange(2, 25))
-        }
-        df = spark.createDataFrame(
-            sorted(texts.items()), "doc_id long, text string"
-        )
-        got = {
-            r["doc_id"]: tuple(r)[1:] for r in mojibake_stats(df).collect()
-        }
-        con = duckdb.connect()
-        con.register(
-            "src_t",
-            pd.DataFrame(
-                {"doc_id": list(texts), "text": list(texts.values())}
-            ),
-        )
-        want = {
-            int(r[0]): tuple(r)[1:]
-            for r in con.execute(
-                mojibake_oracle("SELECT doc_id, text FROM src_t")
-            ).fetchall()
-        }
-        model = {}
-        for d, t in texts.items():
-            t = t or ""
-            n_repl = t.count(repl)
-            n_c1 = sum(1 for ch in t if 0x80 <= ord(ch) <= 0x9F)
-            n_dig, j = 0, 0
-            while j < len(t) - 1:
-                if t[j:j + 2] in UTF8_DIGRAPHS:
-                    n_dig += 1
-                    j += 2
-                else:
-                    j += 1
-            lane = (
-                0 if not t
-                else (n_repl + n_c1 + n_dig) * LANE_DEN // len(t)
-            )
-            model[d] = (
-                len(t), n_repl, n_c1, n_dig, lane,
-                n_repl > 0 or lane >= LANE_THRESHOLD,
-            )
-        if got != want or got != model:
-            fails += 1
-            print("MOJIBAKE MISMATCH")
-    return fails
 
 
 def fuzz_urlnorm(spark, rng, trials: int) -> int:
-    """operators/urlnorm.py url_canonicalize (unit-gated, queued):
-    adversarial fragment-soup URLs (metachars, stray separators,
-    NULLs) — the Spark expression vs the DuckDB expression, both
-    emitted by the same generator."""
+    """operators/urlnorm.py url_canonicalize: adversarial
+    fragment-soup URLs (metachars, stray separators, NULLs) — the
+    Spark expression vs the DuckDB expression, both emitted by the
+    same generator."""
     from survivor_processing_spark.operators.urlnorm import (
         url_canonicalize,
         url_canonicalize_oracle,
@@ -1406,9 +1200,9 @@ def fuzz_urlnorm(spark, rng, trials: int) -> int:
 
 
 def fuzz_fingerprint(spark, rng, trials: int) -> int:
-    """operators/fingerprint.py content_fingerprint (unit-gated,
-    queued): random NULL-heavy tables — Spark vs the generated
-    oracle, plus the order/partitioning-invariance property."""
+    """operators/fingerprint.py content_fingerprint: random NULL-heavy
+    tables — Spark vs the generated oracle, plus the
+    order/partitioning-invariance property."""
     from survivor_processing_spark.operators.fingerprint import (
         content_fingerprint,
         content_fingerprint_oracle,
@@ -1445,57 +1239,10 @@ def fuzz_fingerprint(spark, rng, trials: int) -> int:
     return fails
 
 
-def fuzz_crawlplan(spark, rng, trials: int) -> int:
-    """operators/crawlplan.py crawl_schedule_summary (unit-gated,
-    queued): random skewed frontiers — summary vs the generated
-    oracle, plus the per-host wave bound on the row-level form."""
-    from collections import Counter
-
-    from survivor_processing_spark.operators.crawlplan import (
-        crawl_schedule_oracle,
-        crawl_schedule_slots,
-        crawl_schedule_summary,
-    )
-
-    fails = 0
-    for _ in range(trials):
-        rows = list(
-            {
-                (
-                    f"h{rng.randrange(1, rng.choice([2, 4, 9]))}",
-                    f"u{rng.randrange(200)}",
-                )
-                for _ in range(rng.randrange(1, 150))
-            }
-        )
-        per_slot = rng.choice([1, 2, 3, 8])
-        df = spark.createDataFrame(rows, "host string, url string")
-        got = sorted(
-            map(
-                tuple,
-                crawl_schedule_summary(df, per_slot=per_slot).collect(),
-            )
-        )
-        con = duckdb.connect()
-        con.register("src_t", pd.DataFrame(rows, columns=["host", "url"]))
-        want = sorted(
-            con.execute(
-                crawl_schedule_oracle(
-                    "SELECT * FROM src_t", per_slot=per_slot
-                )
-            ).fetchall()
-        )
-        sched = crawl_schedule_slots(df, per_slot=per_slot).collect()
-        bound = Counter((r["host"], r["slot"]) for r in sched)
-        if got != want or (bound and max(bound.values()) > per_slot):
-            fails += 1
-            print("CRAWLPLAN MISMATCH", per_slot)
-    return fails
-
 
 def fuzz_bigram_fluency(spark, rng, trials: int) -> int:
-    """operators/collocation.py bigram_fluency (unit-gated, queued):
-    random short-vocab corpora — Spark vs the generated oracle."""
+    """operators/collocation.py bigram_fluency: random short-vocab
+    corpora — Spark vs the generated oracle."""
     from survivor_processing_spark.operators.collocation import (
         bigram_fluency,
         bigram_fluency_oracle,
@@ -1534,9 +1281,9 @@ def fuzz_bigram_fluency(spark, rng, trials: int) -> int:
 
 
 def fuzz_graphstats(spark, rng, trials: int) -> int:
-    """operators/graphstats.py triangle_counts (unit-gated, queued):
-    random multigraphs with self-loops and flips — Spark vs the
-    generated oracle vs a brute-force itertools reference."""
+    """operators/graphstats.py triangle_counts: random multigraphs
+    with self-loops and flips — Spark vs the generated oracle vs a
+    brute-force itertools reference."""
     import itertools
 
     from survivor_processing_spark.operators.graphstats import (
@@ -1584,57 +1331,11 @@ def fuzz_graphstats(spark, rng, trials: int) -> int:
     return fails
 
 
-def fuzz_sharding(spark, rng, trials: int) -> int:
-    """operators/sharding.py rendezvous (unit-gated, queued): random
-    key counts and shard sets — cross-engine summary equality plus
-    the exact minimal-disruption invariant on a shard add."""
-    from survivor_processing_spark.operators.sharding import (
-        rendezvous_assign,
-        rendezvous_oracle,
-        rendezvous_summary,
-    )
-
-    fails = 0
-    for _ in range(trials):
-        n = rng.randrange(20, 300)
-        k = rng.randrange(2, 7)
-        shards = [f"s{rng.randrange(1000)}-{i}" for i in range(k)]
-        new = f"s{rng.randrange(1000)}-new"
-        df = spark.range(n).withColumnRenamed("id", "k")
-        got = sorted(
-            map(tuple, rendezvous_summary(df, "k", shards).collect())
-        )
-        con = duckdb.connect()
-        want = sorted(
-            con.execute(
-                rendezvous_oracle(
-                    f"SELECT range AS k FROM range({n})", "k", shards
-                )
-            ).fetchall()
-        )
-        before = {
-            r["k"]: r["shard"]
-            for r in rendezvous_assign(df, "k", shards).collect()
-        }
-        after = {
-            r["k"]: r["shard"]
-            for r in rendezvous_assign(df, "k", shards + [new]).collect()
-        }
-        disrupted_ok = all(
-            after[key] == new
-            for key in before
-            if before[key] != after[key]
-        )
-        if got != want or not disrupted_ok or sum(c for _, c in got) != n:
-            fails += 1
-            print("SHARDING MISMATCH", k)
-    return fails
-
 
 def fuzz_zonemap(spark, rng, trials: int) -> int:
-    """operators/zonemap.py (unit-gated, queued): random file layouts
-    and row-group sizes — manifest == DuckDB parquet_metadata oracle,
-    and every random range probe satisfies pruned ≡ full+filter."""
+    """operators/zonemap.py: random file layouts and row-group sizes —
+    manifest == DuckDB parquet_metadata oracle, and every random range
+    probe satisfies pruned ≡ full+filter."""
     import os
     import shutil
     import tempfile
@@ -1704,10 +1405,10 @@ def fuzz_zonemap(spark, rng, trials: int) -> int:
 
 
 def fuzz_snapshot(spark, rng, trials: int) -> int:
-    """operators/snapshot.py (unit-gated, queued): random commit
-    sequences (adds/removes over random parquet files) — log replay
-    == a pure-Python reference set, and the per-version Spark
-    summary == the DuckDB read of the same replayed file lists."""
+    """operators/snapshot.py: random commit sequences (adds/removes
+    over random parquet files) — log replay == a pure-Python reference
+    set, and the per-version Spark summary == the DuckDB read of the
+    same replayed file lists."""
     import os as _os
     import shutil as _shutil
     import tempfile as _tempfile
@@ -1794,10 +1495,10 @@ def fuzz_snapshot(spark, rng, trials: int) -> int:
 
 
 def fuzz_stream_join(spark, rng, trials: int) -> int:
-    """streaming/joins.py (unit-gated, queued): random two-sided
-    event sets — the interval join in static mode == the generated
-    DuckDB oracle (the availableNow replay ≡ static equivalence is
-    pinned separately in tests/test_stream_join.py)."""
+    """streaming/joins.py: random two-sided event sets — the interval
+    join in static mode == the generated DuckDB oracle (the
+    availableNow replay ≡ static equivalence is pinned separately in
+    tests/test_stream_join.py)."""
     from survivor_processing_spark.streaming.joins import (
         stream_interval_join,
         stream_interval_join_oracle,
@@ -1872,9 +1573,9 @@ def fuzz_stream_join(spark, rng, trials: int) -> int:
 
 
 def fuzz_sq8(spark, rng, trials: int) -> int:
-    """operators/quantize.py (unit-gated, queued): random vector
-    tables (incl. constant dims and rail values) — Spark SQ8 summary
-    == DuckDB oracle, and the integer error bound always holds."""
+    """operators/quantize.py: random vector tables (incl. constant
+    dims and rail values) — Spark SQ8 summary == DuckDB oracle, and
+    the integer error bound always holds."""
     from survivor_processing_spark.operators.quantize import (
         sq8_summary,
         sq8_summary_oracle,
@@ -1917,10 +1618,10 @@ def fuzz_sq8(spark, rng, trials: int) -> int:
 
 
 def fuzz_semantic_decontam(spark, rng, trials: int) -> int:
-    """operators/decontam.py semantic_decontaminate (unit-gated,
-    queued): random train/bench vector sets with PLANTED copies and
-    scaled copies — Spark == DuckDB oracle exactly, and every
-    planted copy is flagged against its source."""
+    """operators/decontam.py semantic_decontaminate: random
+    train/bench vector sets with PLANTED copies and scaled copies —
+    Spark == DuckDB oracle exactly, and every planted copy is flagged
+    against its source."""
     from survivor_processing_spark.operators.decontam import (
         semantic_decontaminate,
         semantic_decontaminate_oracle,
@@ -2390,12 +2091,12 @@ def fuzz_mor_dv(spark, rng, trials: int) -> int:
 
 
 def fuzz_dsir(spark, rng, trials: int) -> int:
-    """operators/dsir.py dsir_importance_weights (queued r12):
-    random raw/target corpora with a planted target-heavy doc,
-    random (n, n_buckets, scale, ratio_cap) — lanes vs the generated
-    oracle, plus the monotone-tilt property (a doc drawn from the
-    target vocabulary never scores below a doc drawn from the
-    disjoint noise vocabulary)."""
+    """operators/dsir.py dsir_importance_weights: random raw/target
+    corpora with a planted target-heavy doc, random (n, n_buckets,
+    scale, ratio_cap) — lanes vs the generated oracle, plus the
+    monotone-tilt property (a doc drawn from the target vocabulary
+    never scores below a doc drawn from the disjoint noise
+    vocabulary)."""
     from survivor_processing_spark.operators.dsir import (
         dsir_importance_oracle,
         dsir_importance_weights,
@@ -2482,12 +2183,12 @@ def fuzz_dsir(spark, rng, trials: int) -> int:
 
 
 def fuzz_boilerplate(spark, rng, trials: int) -> int:
-    """operators/dedup.py strip_boilerplate_paragraphs (queued r12):
-    random corpora from a shared paragraph pool with planted banners,
-    random min_docs — full output vs the generated oracle, plus the
-    df-contract property (a paragraph's survival depends ONLY on its
-    distinct-doc count vs the cut, checked against a pure-Python
-    document-frequency model)."""
+    """operators/dedup.py strip_boilerplate_paragraphs: random corpora
+    from a shared paragraph pool with planted banners, random min_docs
+    — full output vs the generated oracle, plus the df-contract
+    property (a paragraph's survival depends ONLY on its distinct-doc
+    count vs the cut, checked against a pure-Python document-frequency
+    model)."""
     from survivor_processing_spark.operators.dedup import (
         boilerplate_strip_oracle,
         strip_boilerplate_paragraphs,
@@ -2557,14 +2258,14 @@ def fuzz_boilerplate(spark, rng, trials: int) -> int:
 
 def fuzz_time_travel(spark, rng, trials: int) -> int:
     """operators/snapshot.py TIMESTAMP AS OF + checkpoint resolution
-    (queued r12 — q:snapshot_time_travel): random commit sequences
-    (adds/removes) with randomly-placed checkpoints and a randomly
-    SKEWED writer clock (time.time monkey-patched to jitter backwards
-    — the clamp must keep entry ts monotone), then for EVERY version:
-    (a) ``version_at_timestamp(entry_ts(v))`` resolves to the latest
-    version sharing that clamped ts (Delta's rule under ties), and
-    (b) the as-of read's ACTIVE SET equals the pure-Python model at
-    the resolved version, checkpoint present or not."""
+    (q:snapshot_time_travel): random commit sequences (adds/removes)
+    with randomly-placed checkpoints and a randomly SKEWED writer
+    clock (time.time monkey-patched to jitter backwards — the clamp
+    must keep entry ts monotone), then for EVERY version: (a)
+    ``version_at_timestamp(entry_ts(v))`` resolves to the latest
+    version sharing that clamped ts (Delta's rule under ties), and (b)
+    the as-of read's ACTIVE SET equals the pure-Python model at the
+    resolved version, checkpoint present or not."""
     import json as _json
     import os as _os
     import shutil as _shutil
@@ -2671,14 +2372,11 @@ FAMILIES = (
     ("textnorm", fuzz_textnorm),
     ("collocation", fuzz_collocation),
     ("mad", fuzz_mad),
-    ("funnel", fuzz_funnel),
     ("kanon", fuzz_kanon),
     ("urlnorm", fuzz_urlnorm),
     ("fingerprint", fuzz_fingerprint),
-    ("crawlplan", fuzz_crawlplan),
     ("bigram_fluency", fuzz_bigram_fluency),
     ("graphstats", fuzz_graphstats),
-    ("sharding", fuzz_sharding),
     ("zonemap", fuzz_zonemap),
     ("snapshot", fuzz_snapshot),
     ("stream_join", fuzz_stream_join),
@@ -2690,8 +2388,6 @@ FAMILIES = (
     ("time_travel", fuzz_time_travel),
     ("dsir", fuzz_dsir),
     ("boilerplate", fuzz_boilerplate),
-    ("script_mix", fuzz_script_mix),
-    ("mojibake", fuzz_mojibake),
 )
 
 

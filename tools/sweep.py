@@ -8,15 +8,12 @@ cost at 10x data, not a best-of-N benchmark (that's bench.py
 
 Completeness is ASSERTED at the point that matters: `--check`
 compares the COMMITTED SWEEP_SF1.json's keys against the CURRENT
-registry and exits 1 on any mismatch — that is the guard against the
-r5 failure mode (a query registered after the final regeneration
-shipped a 139/140 sweep, VERDICT r05 "What's wrong" #2 / next-round
-#4).  Run `python tools/sweep.py --check` as the end-of-round
-assertion; regenerate if it fails.  (A generation-time self-check
-would be tautological — the sweep iterates the registry itself.)
+registry and exits 1 on any mismatch, so a query registered after
+the last regeneration fails tier-1 (tests/test_contract.py) until
+the sweep is rerun.  (A generation-time self-check would be
+tautological — the sweep iterates the registry itself.)
 
 Usage: python tools/sweep.py [sf01_dir] [sf1_dir] | --check
-  SPARK_GRAFT_ROUND stamps the round number into the artifact.
 """
 
 from __future__ import annotations
@@ -59,7 +56,6 @@ def main() -> int:
         return check_committed(repo_root)
     sf01 = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     sf1 = sys.argv[2] if len(sys.argv) > 2 else "/tmp/sps_scaled"
-    rnd = int(os.environ.get("SPARK_GRAFT_ROUND", "0") or 0)
     spark = get_spark("sweep")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -82,7 +78,6 @@ def main() -> int:
 
     doc = {
         "metric": "full_registry_single_rep_sweep",
-        "round": rnd,
         "n_queries": len(results),
         "n_errors": len(errors),
         "rep_semantics": (
