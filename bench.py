@@ -3,7 +3,7 @@
 
 Prints ONE JSON line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...,
-   "cpus": ...}
+   "sf_dir": ..., "cpus": ..., "git_head": ...}
 
 Each query is executed to completion (count() forces the full plan —
 results stay on executors; nothing but the count crosses to the
@@ -16,6 +16,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import subprocess
 import sys
 import time
 
@@ -161,6 +162,19 @@ def _job_overhead(spark) -> float:
             ).save()
         best = min(best, time.perf_counter() - t0)
     return round(best, 3)
+
+
+def _git_head() -> str | None:
+    """The checkout's commit, or None outside a git checkout."""
+    try:
+        r = subprocess.run(
+            ["git", "-C", os.path.dirname(os.path.abspath(__file__)),
+             "rev-parse", "HEAD"],
+            capture_output=True, text=True, timeout=30,
+        )
+    except (OSError, subprocess.SubprocessError):
+        return None
+    return r.stdout.strip() or None
 
 
 def _ratio(prior_round, prior: dict, queries: dict[str, float]) -> dict | None:
@@ -343,12 +357,13 @@ def main() -> None:
             if stretch
             else "headline_queries_total_wall"
         ),
-        **({"sf_dir": sf_dir} if stretch else {}),
         "value": total,
         "unit": "sec",
         "queries": queries,
         "sf": sf,
+        "sf_dir": sf_dir,
         "cpus": cpus,
+        "git_head": _git_head(),
         "calibration_sec": cal,
         "job_overhead_sec": job_ovh,
         "loadavg_start": [round(x, 2) for x in load_start],

@@ -34,7 +34,7 @@ def _np_assign_udf(cents: list[tuple[int, list]], int_lanes: bool):
     import pyarrow as pa
     from pyspark.sql.functions import arrow_udf
 
-    from .vecbatch import argmin_l2, as_matrix, expand
+    from .vecbatch import argmin_l2, as_matrix, expand, skip_unchanged_zip_rereads
 
     labels = np.asarray([i for i, _ in cents], dtype="int32")
     cmat = np.asarray(
@@ -44,6 +44,7 @@ def _np_assign_udf(cents: list[tuple[int, list]], int_lanes: bool):
     dim = cmat.shape[1]
 
     def fn(v):
+        skip_unchanged_zip_rereads()
         ok, m = as_matrix(v, dim, cmat.dtype)
         idx, _ = argmin_l2(m, cmat)
         return expand(ok, pa.array(labels[idx]))

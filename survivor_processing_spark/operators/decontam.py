@@ -170,7 +170,7 @@ def _hits_udf(bench_rows: list, eid_type, dim: int, num: int, den: int):
     from pyspark.sql.functions import arrow_udf
     from pyspark.sql.pandas.types import to_arrow_type
 
-    from .vecbatch import as_matrix, cosine_hits, expand
+    from .vecbatch import as_matrix, cosine_hits, expand, skip_unchanged_zip_rereads
 
     eids = pa.array(
         [r["_eid"] for r in bench_rows], type=to_arrow_type(eid_type)
@@ -183,6 +183,7 @@ def _hits_udf(bench_rows: list, eid_type, dim: int, num: int, den: int):
     bn2 = np.asarray([r["_n2b"] for r in bench_rows], dtype="int64")
 
     def fn(q, n2):
+        skip_unchanged_zip_rereads()
         ok, Q = as_matrix(q, dim, "int64")
         dots = Q @ bmat.T
         hit = cosine_hits(dots, n2.fill_null(0).to_numpy()[ok], bn2, num, den)

@@ -152,7 +152,7 @@ def _np_pq_udf(
     import pyarrow as pa
     from pyspark.sql.functions import arrow_udf
 
-    from .vecbatch import argmin_l2, as_matrix, expand
+    from .vecbatch import argmin_l2, as_matrix, expand, skip_unchanged_zip_rereads
 
     labels = [
         np.asarray([i for i, _ in cents[sp]], dtype="int32")
@@ -172,6 +172,7 @@ def _np_pq_udf(
         fields += ", adc: bigint"
 
     def fn(v):
+        skip_unchanged_zip_rereads()
         ok, M = as_matrix(v, m * sub, "int64")
         n = M.shape[0]
         codes = np.empty((n, m), dtype="int32")

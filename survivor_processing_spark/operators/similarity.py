@@ -90,11 +90,12 @@ def _ivf_assign_udf(cent):
     import pyarrow as pa
     from pyspark.sql.functions import arrow_udf
 
-    from .vecbatch import as_matrix, expand
+    from .vecbatch import as_matrix, expand, skip_unchanged_zip_rereads
 
     unit = cent / np.linalg.norm(cent, axis=1, keepdims=True)
 
     def fn(v):
+        skip_unchanged_zip_rereads()
         ok, m = as_matrix(v, unit.shape[1], "float64")
         m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
         return expand(ok, pa.array(np.argmax(m @ unit.T, axis=1).astype("int32")))
@@ -435,9 +436,10 @@ def _dup_pairs_fn(id_col: str, dim: int, num: int, den: int):
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    from .vecbatch import as_matrix, cosine_hits
+    from .vecbatch import as_matrix, cosine_hits, skip_unchanged_zip_rereads
 
     def fn(tbl):
+        skip_unchanged_zip_rereads()
         # (md5, id) ascending = the a-before-b orientation AND the
         # keeper rank in one order; the sort is stable
         tbl = tbl.filter(pc.is_valid(tbl["_m"])).sort_by(

@@ -128,7 +128,9 @@ def kmeans_lloyd_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "cosine_topk",
     doc="brute-force cosine top-10 against a fixed query vector "
-    "(vec_id=0's embedding); ranks are ints so the hash is fp-safe",
+    "(vec_id=0's embedding, one parsed literal in the plan): a JVM "
+    "cosine projection, then a TakeOrdered top-k, no Python worker; "
+    "ranks are ints so the hash is fp-safe",
     oracle="""
 WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
 SELECT CAST(ROW_NUMBER() OVER (
@@ -158,15 +160,16 @@ def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ivf_topk_exact",
-    doc="the SAME IVF-Flat code path (coarse quantizer, cluster "
-    "assignment, isin-pushdown probe filter, per-list brute force) in "
-    "its degraded-to-exact configuration n_probe = n_centroids: every "
-    "inverted list is probed, so the result is bit-identical to exact "
-    "brute-force top-10 and the full value-hash oracle applies.  This "
-    "hash-gates the IVF machinery itself; the approximate n_probe=4 "
-    "configuration is adjudicated by the ivf_recall_bound unit "
-    "test (its gate RETIRED r13, the contract pinned in pytest).  The "
-    "degrades-to-exact property is also pinned in "
+    doc="the SAME IVF-Flat code path (coarse quantizer trained with "
+    "driver-launched jobs, cluster assignment by the numpy Arrow "
+    "kernel _ivf_assign_udf, isin-pushdown probe filter, per-list "
+    "brute force) in its degraded-to-exact configuration n_probe = "
+    "n_centroids: every inverted list is probed, so the result is "
+    "bit-identical to exact brute-force top-10 and the full "
+    "value-hash oracle applies.  This hash-gates the IVF machinery "
+    "itself; the approximate n_probe=4 configuration is adjudicated "
+    "by the ivf_recall_bound unit test (tests/test_round6_ops.py).  "
+    "The degrades-to-exact property is also pinned in "
     "tests/test_operators.py",
     oracle="""
 WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
@@ -264,14 +267,16 @@ def _codes_str_oracle(inner: str) -> str:
 @register(
     "pq_adc_topk",
     doc="asymmetric-distance PQ top-10 under driver gating "
-    "(operators/pq.py:365 — the query-time half of IVF-PQ, "
+    "(operators/pq.py pq_adc_topk — the query-time half of IVF-PQ, "
     "completing the ANN-compression family's search side beside the "
-    "q:sq8_summary storage side): the fixed query [0.1]*64 stays "
+    "q:sq8_summary storage side): the m=4 codebooks train with "
+    "driver-launched Lloyd jobs; the fixed query [0.1]*64 stays "
     "unquantized-by-codebook; each subspace contributes the exact "
     "integer distance from the query's sub-lanes to the ASSIGNED "
     "centroid via a k-entry ADC lookup table computed driver-side "
-    "and embedded as ONE parsed literal per subspace (py4j literal "
-    "lesson), then a TakeOrdered top-k — never a full sort.  At "
+    "and riding the closure of the numpy Arrow kernel _np_pq_udf, "
+    "which picks each code and sums its table entry in one pass, "
+    "then a TakeOrdered top-k — never a full sort.  At "
     "100 TB this is the RAM-resident re-rank: 4 bytes of codes + a "
     "32-entry table replace re-reading 256-byte vectors.  Oracle "
     "EMITTED by pq_adc_topk_oracle from the same query lanes "
@@ -304,17 +309,18 @@ _DECON_BENCH_SQL = (
     "semantic_decontaminate",
     doc="EMBEDDING-space benchmark decontamination under driver "
     "gating (operators/decontam.py — the paraphrase-aware sibling of "
-    "q:decontaminate_ngram; queued r9 with the full artifact set, "
-    "registered r10 after the interpreted-HOF audit: the dot "
-    "materializes ONCE as a column and the int64 headroom guard "
-    "rides the ALREADY-COMPUTED norms, ADVICE r09).  Eval set = the "
+    "q:decontaminate_ngram; the int64 headroom guard rides the "
+    "ALREADY-COMPUTED norms).  Eval set = the "
     "1%% of vectors with vec_id%%100=0 (broadcast); train = the rest "
     "PLUS planted exact copies of every eval vector at vec_id+1e6, "
     "so the gate provably recovers each planted leak against ITS "
     "source while every value stays integer-portable (threshold "
     "cosine 0.9 as the sqrt-free exact test den*dot^2 >= "
-    "num*|a|^2*|b|^2).  Train side never shuffles: "
-    "BroadcastNestedLoopJoin inside the scan, hits-only aggregation. "
+    "num*|a|^2*|b|^2).  The eval side is collected to the driver; "
+    "below 48 eval rows the pairing is a BroadcastNestedLoopJoin with "
+    "the dot materialized ONCE as a column, otherwise the numpy "
+    "Arrow kernel _hits_udf (one int64 matmul per batch) inside the "
+    "train scan; either way only hits reach the per-id aggregation. "
     " Oracle EMITTED by semantic_decontaminate_oracle from the same "
     "SQL sources",
     oracle=_decon_oracle(

@@ -280,7 +280,8 @@ def embedding_lsh_portable_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="ENGINE-PORTABLE SemDeDup (Abbas et al. 2023, public "
     "method): coarse-cluster the embeddings to the 8 md5-smallest "
     "seeds (exact integer squared-L2 argmin, the hash-green Lloyd "
-    "assignment rule), then inside each cluster drop every vector "
+    "assignment rule, in the numpy Arrow kernel _np_assign_udf), "
+    "then inside each cluster drop every vector "
     "with a lower-(md5,id)-ranked neighbor at cosine >= 0.9 — the "
     "semantic-redundancy pruning a training pipeline runs where "
     "lexical MinHash/SimHash cannot see the duplication.  The "
@@ -289,8 +290,10 @@ def embedding_lsh_portable_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "— the 1e3 grid keeps den*dot^2 inside int64; 1e6 would "
     "overflow the squared-squared term) and clusters are capped at "
     "the 128 (md5,id)-smallest members before pairing (the "
-    "oracle-replayed truncation from the capped-LSH fix, r6), so "
-    "candidates are bounded by k*cap^2, never sum-of-cluster^2.  "
+    "oracle-replayed truncation of the capped LSH), so candidates "
+    "are bounded by k*cap^2, never sum-of-cluster^2; each capped "
+    "cluster pairs in one grouped applyInArrow kernel "
+    "(_dup_pairs_fn, an int64 numpy matmul).  "
     "The synthetic corpus has no natural cosine>=0.9 structure "
     "(max pairwise 0.51 at sf0.01), so the gate PLANTS semantic "
     "duplicates the way the simhash/LSH recall gates do: every "

@@ -218,26 +218,26 @@ def value_histogram_equiwidth(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- clustering: deterministic Lloyd's k-means (rows-only) -------------------
+# --- clustering: deterministic Lloyd's k-means (error-bound gate) -----------
 
 
 @register(
     "kmeans_clusters",
     doc="float Lloyd k-means (operators/cluster.py kmeans_lloyd: 3 "
-    "iterations, assignment a codegen'd JVM expression over broadcast "
-    "centroid literals) as an ERROR-BOUND GATE (VERDICT r06 #2 — its "
-    "rows-only registration recorded nothing): fp centroid means are "
-    "engine-specific, so the contract is emitted as oracle-checkable "
-    "facts instead — n_points (every clean vector labeled, count the "
-    "oracle computes itself), all_labeled, and inertia parity within "
-    "5% against the hash-green integer-arithmetic twin "
-    "q:kmeans_lloyd_portable, both inertias measured in the SAME "
-    "float space.  Both twins start from the SAME md5-smallest-id "
-    "seeds (the portable seed rule), making parity a pure same-start "
-    "same-descent arithmetic-difference claim (float vs 1e-6 "
-    "fixed-point); kmeans_lloyd's default farthest-point init stays "
-    "unit-tested (tests/test_operators.py planted-cluster recovery) "
-    "and in service elsewhere.  The twins are independent until the "
+    "iterations; every assignment runs the numpy Arrow kernel "
+    "_np_assign_udf, the float64 lane-ordered squared-L2 argmin with "
+    "first-minimum ties) as an ERROR-BOUND GATE: fp centroid means "
+    "are engine-specific, so the contract is emitted as "
+    "oracle-checkable facts instead — n_points (every clean vector "
+    "labeled, count the oracle computes itself), all_labeled, and "
+    "inertia parity within 5% against the hash-green "
+    "integer-arithmetic twin q:kmeans_lloyd_portable, both inertias "
+    "measured in the SAME float space.  Both twins start from the "
+    "SAME md5-smallest-id seeds (the portable seed rule), making "
+    "parity a pure same-start same-descent arithmetic-difference "
+    "claim (float vs 1e-6 fixed-point); kmeans_lloyd's default "
+    "farthest-point init stays unit-tested (tests/test_round3_ops.py "
+    "planted-cluster recovery).  The twins are independent until the "
     "parity check, so their driver loops are submitted from two "
     "scheduler threads — wall time is max(twins), not sum",
     oracle="""
@@ -251,11 +251,9 @@ SELECT CAST((SELECT COUNT(*) FROM embeddings
 """,
 )
 def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Gate-cost shape (VERDICT r07 #5): ONE cleaned, checkpointed
-    # input shared by both Lloyd twins (the portable twin used to
-    # re-derive its own cleaning from the raw table plus a join
-    # back); BOTH twins seeded from one md5 scan (drops the float
-    # twin's 7-job farthest-point init from the gate); the two
+    # Gate-cost shape: ONE cleaned, checkpointed input shared by
+    # both Lloyd twins; BOTH twins seeded from one md5 scan (no
+    # farthest-point init jobs in the gate); the two
     # iterative driver loops submitted CONCURRENTLY (independent
     # until the parity check — Spark schedules jobs from separate
     # threads side by side, so the gate pays max(twins) wall time);
@@ -263,7 +261,6 @@ def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregates via the identity Σ(x−m)² = Σx² − (Σx)²/n per
     # (side, cluster, lane) — a single map-side-combined aggregation,
     # no join-back, instead of two full explode+join pipelines.
-    # Measured 13.2 s (r7) -> ~5 s at sf1.
     from concurrent.futures import ThreadPoolExecutor
 
     from ..operators.cluster import kmeans_lloyd_portable

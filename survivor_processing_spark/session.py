@@ -42,13 +42,10 @@ def get_spark(
         # real cluster 100 TB splits naturally; the floor is a no-op there.
         .config("spark.sql.files.minPartitionNum", str(cpus))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        # UI off for bench/test runs (its listener + HTTP server cost is
-        # measurable on sub-second gates); SPARK_GRAFT_UI=1 turns it on
-        # for diagnostics (tools/job_trace.py reads the REST API).
-        .config(
-            "spark.ui.enabled",
-            "true" if os.environ.get("SPARK_GRAFT_UI") == "1" else "false",
-        )
+        # UI off: its listener and HTTP server cost is measurable on
+        # sub-second gates, and the event log gives the same jobs,
+        # stages and gaps.
+        .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -8,6 +8,9 @@ import hashlib
 import importlib.util
 import math
 import os
+import subprocess
+import sys
+import zipimport
 
 import numpy as np
 import pyarrow as pa
@@ -23,6 +26,7 @@ from survivor_processing_spark.operators.similarity import (
     _ivf_assign_udf,
     build_ivf_index,
 )
+from survivor_processing_spark.operators.vecbatch import skip_unchanged_zip_rereads
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -319,3 +323,109 @@ def test_vector_fuzz_families_match_oracles(spark):
     spec.loader.exec_module(fuzz)
     only = {"lloyd", "pq", "semantic_dedup", "semantic_decontam"}
     assert fuzz.run(spark, 20260814, 3, only) == 0
+
+
+_PATCHED_VERSION = (3, 10) <= sys.version_info[:2] <= (3, 12)
+_PATCHED = "skip_unchanged_zip_rereads.<locals>.invalidate_caches"
+
+# Run in a fresh interpreter: the patch lasts for the life of the
+# process, and the test process is the driver, which must stay
+# unpatched.
+_ZIP_PROBE = r"""
+import importlib, sys, zipfile, zipimport
+from pyspark import TaskContext
+from survivor_processing_spark.operators.vecbatch import (
+    skip_unchanged_zip_rereads,
+)
+
+archive = sys.argv[1]
+
+
+def write(value):
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("zprobe_mod.py", f"VALUE = {value!r}\n")
+
+
+write("old")
+sys.path.insert(0, archive)
+import zprobe_mod
+
+assert zprobe_mod.VALUE == "old"
+reads = []
+stdlib_read = zipimport._read_directory
+
+
+def counting_read(path):
+    reads.append(path)
+    return stdlib_read(path)
+
+
+zipimport._read_directory = counting_read
+importlib.invalidate_caches()
+assert reads.count(archive) == 1, reads  # the stdlib re-reads every call
+
+TaskContext._getOrCreate()  # act as a task
+skip_unchanged_zip_rereads()
+patched = zipimport.zipimporter.invalidate_caches
+skip_unchanged_zip_rereads()
+assert zipimport.zipimporter.invalidate_caches is patched  # idempotent
+importlib.invalidate_caches()  # keys the archive: at most one re-read
+reads.clear()
+importlib.invalidate_caches()
+importlib.invalidate_caches()
+assert archive not in reads, reads
+
+write("new, and longer")
+importlib.invalidate_caches()
+assert reads.count(archive) == 1, reads
+del sys.modules["zprobe_mod"]
+import zprobe_mod
+
+assert zprobe_mod.VALUE == "new, and longer"
+print("OK")
+"""
+
+
+@pytest.mark.skipif(not _PATCHED_VERSION, reason="stdlib defers re-reads")
+def test_zip_directory_reread_only_when_archive_changes(tmp_path):
+    """In a fresh interpreter acting as a task: ``invalidate_caches``
+    reads an unchanged zip's directory no more, and a zip rewritten
+    with a changed module is re-read and its new module imports."""
+    env = dict(os.environ, PYTHONPATH=REPO)
+    r = subprocess.run(
+        [sys.executable, "-c", _ZIP_PROBE, str(tmp_path / "probe.zip")],
+        capture_output=True, text=True, env=env, timeout=120,
+    )
+    assert r.returncode == 0 and r.stdout.strip() == "OK", r.stderr
+
+
+@pytest.mark.skipif(not _PATCHED_VERSION, reason="stdlib defers re-reads")
+def test_kernel_task_patches_its_worker_not_the_driver(spark):
+    """A kernel task installs the patch inside its Python worker (a
+    chained probe UDF, run in the same worker right after the kernel,
+    reports the method); the driver keeps the stdlib method."""
+    from pyspark.sql.functions import arrow_udf
+
+    def probe(labels):
+        import zipimport as zi
+
+        name = zi.zipimporter.invalidate_caches.__qualname__
+        return pa.array([name] * len(labels))
+
+    df = spark.createDataFrame(
+        [(i, [float(i), 0.0]) for i in range(4)], "vec_id long, v array<double>"
+    )
+    kernel = _np_assign_udf([(0, [0.0, 0.0]), (1, [2.0, 0.0])], int_lanes=False)
+    got = {r[0] for r in df.select(arrow_udf(probe, "string")(kernel("v"))).collect()}
+    assert got == {_PATCHED}
+    assert zipimport.zipimporter.invalidate_caches.__qualname__ == (
+        "zipimporter.invalidate_caches"
+    )
+
+
+def test_zip_patch_is_a_noop_outside_a_task():
+    """Called on the driver (no TaskContext) it patches nothing."""
+    before = zipimport.zipimporter.invalidate_caches
+    skip_unchanged_zip_rereads()
+    assert zipimport.zipimporter.invalidate_caches is before
+    assert before.__qualname__ == "zipimporter.invalidate_caches"
