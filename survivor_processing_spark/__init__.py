@@ -19,19 +19,18 @@ Arrow-batched).  Every operator is written for a 1000-executor /
   (reference anti-pattern: helpers/db_funcs.py:137-228);
 * aggregations rely on partial+final hash agg, no driver collects;
 * as-of joins avoid a global sort via a broadcast interval rewrite;
-* surrogate ids offer a hash-based mode because ``MAX(id)+1``
-  sequences do not scale (reference: contestant_extract.py:296-317).
+* surrogate-id minting confines the reference's ``MAX(id)+1``
+  sequence (contestant_extract.py:296-317) to the null-id rows.
 """
 
 __version__ = "0.1.0"
 
 from .session import get_spark
-from .catalog import load_table, load_tables, register_views, TABLES
+from .catalog import load_table, register_views, TABLES
 
 __all__ = [
     "get_spark",
     "load_table",
-    "load_tables",
     "register_views",
     "TABLES",
 ]

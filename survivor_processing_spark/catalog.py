@@ -102,10 +102,6 @@ def table_rows(sf_dir: str, name: str) -> int:
     )
 
 
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}
-
-
 def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> None:
     """Register temp views so queries can also be written in pure SQL
     (`spark.sql`), mirroring the reference's SQL surface

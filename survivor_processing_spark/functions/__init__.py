@@ -6,7 +6,6 @@ from .textstats import (
     token_count_expr,
     quality_score_exprs,
     lang_id_expr,
-    fingerprint_expr,
 )
 
 __all__ = [
@@ -15,5 +14,4 @@ __all__ = [
     "token_count_expr",
     "quality_score_exprs",
     "lang_id_expr",
-    "fingerprint_expr",
 ]

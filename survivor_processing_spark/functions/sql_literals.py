@@ -49,8 +49,3 @@ def sql_string_lit(s: str) -> str:
     """One string literal, single-quoted with backslash/quote
     escaping (Spark's default parser honors backslash escapes)."""
     return "'" + str(s).replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
-def sql_string_array(values) -> str:
-    """``array('a','b',...)`` — string elements, escaped."""
-    return "array(" + ",".join(sql_string_lit(s) for s in values) + ")"

@@ -85,14 +85,6 @@ def lang_id_expr(col):
     )
 
 
-def fingerprint_expr(col):
-    """Locale-stable document fingerprint: md5 of the sorted distinct
-    token set (the classic key-collision fingerprint)."""
-    return F.md5(
-        F.concat_ws(" ", F.array_sort(F.array_distinct(_tokens(col))))
-    )
-
-
 def rolling_hash_expr(col, window: int = 8, algo: str = "xxhash64"):
     """Content-defined rolling fingerprint: min hash over character
     n-gram windows (winnowing-style document sketch).

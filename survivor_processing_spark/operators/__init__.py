@@ -7,7 +7,7 @@ logical plan per pipeline.
 """
 
 from .asof import asof_join, containment_join
-from .ids import mint_ids_sequential, mint_ids_hashed
+from .ids import mint_ids_sequential
 from .resolve import resolve_cascade
 from .schema_sync import sync_with_target
 from .skew import bucketed_join, salted_join, write_bucketed
@@ -16,7 +16,6 @@ __all__ = [
     "asof_join",
     "containment_join",
     "mint_ids_sequential",
-    "mint_ids_hashed",
     "resolve_cascade",
     "sync_with_target",
     "salted_join",

@@ -7,7 +7,7 @@ these are the operators a 100 TB training-data pipeline needs:
 * exact dedup — normalized-text hash groupBy;
 * MinHash + LSH near-dup — shingle → k minhashes → b bands →
   band-bucket join → exact-Jaccard verification;
-* SimHash — 64-bit signature, bucketed by 16-bit chunks;
+* SimHash — md5-token signature, bucketed by equal-width chunks;
 * n-gram Jaccard — exact pairwise on a shingle-inverted index.
 
 Everything is built-in SQL expressions (xxhash64, transform,
@@ -548,40 +548,6 @@ def lsh_band_index(
     )
 
 
-def persist_lsh_index(
-    spark,
-    sig_df: DataFrame,
-    table_name: str,
-    bands: int = 16,
-    rows: int = 4,
-    n_buckets: int | None = None,
-) -> DataFrame:
-    """Materialize the corpus band index ONCE as a bucketed+sorted
-    table on (band_idx, band_hash) — the at-rest layout the
-    :func:`lsh_band_index` docstring promises, now executable.  A
-    bucketed SMJ against it exchanges ONLY the incoming batch's
-    postings, never the corpus index, so steady-state probe cost is
-    batch-bound no matter how large the history grows (the same
-    bucketed-layout design as pagerank/bfs — a checkpointed or
-    re-read index loses its partitioning to the planner; a bucketed
-    table keeps it across sessions AND across probe batches).
-    Returns the bucketed scan with ``doc_id`` renamed to
-    ``corpus_id``, ready to pass as ``corpus_index=`` to
-    :func:`minhash_match_against_corpus` (the rename is a Project
-    alias — output partitioning propagates through it).  The caller
-    owns dropping the table."""
-    n_buckets = n_buckets or spark.sparkContext.defaultParallelism
-    (
-        lsh_band_index(sig_df, bands, rows)
-        .write.bucketBy(n_buckets, "band_idx", "band_hash")
-        .sortBy("band_idx", "band_hash")
-        .mode("overwrite")
-        .format("parquet")
-        .saveAsTable(table_name)
-    )
-    return spark.table(table_name).withColumnRenamed("doc_id", "corpus_id")
-
-
 def minhash_match_against_corpus(
     new_df: DataFrame,
     corpus_df: DataFrame,
@@ -609,8 +575,8 @@ def minhash_match_against_corpus(
     the LSH banding curve, same as :func:`minhash_dedup_pairs`.
 
     ``corpus_index`` / ``corpus_shingles`` make the index-at-rest
-    story literal (r7, VERDICT r06 #5): pass a previously built
-    (and persisted/bucketed) :func:`lsh_band_index` result with
+    story literal: pass a previously built (and persisted)
+    :func:`lsh_band_index` result with
     ``doc_id`` renamed to ``corpus_id`` — and the matching shingle
     table ``(corpus_id, sh2)`` — and the corpus is neither re-signed
     nor re-shingled per batch; the stretch bench times exactly this
@@ -932,9 +898,7 @@ def connected_components(
     near-clique), so this converges in 2-4 rounds in practice.  If
     the graph has NOT converged after ``max_iters`` (adversarial
     chain, diameter > max_iters), this RAISES rather than silently
-    returning partial labels — use
-    ``connected_components_star`` (O(log n) rounds, same output
-    contract) for such graphs.
+    returning partial labels.
 
     Scale: each round is one shuffle of E edges on the node key plus
     a label join; ``localCheckpoint`` truncates the lineage per round
@@ -1002,174 +966,28 @@ def connected_components(
     raise RuntimeError(
         f"connected_components did not converge in {max_iters} rounds "
         "(graph diameter exceeds max_iters) — partial labels would be "
-        "WRONG; use connected_components_star (O(log n) rounds) for "
-        "long-chain graphs"
+        "WRONG; raise max_iters to at least the graph's diameter"
     )
-
-
-def connected_components_star(
-    pairs: DataFrame,
-    id1: str = "id1",
-    id2: str = "id2",
-    max_iters: int = 50,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond" —
-    public algorithm, re-expressed as DataFrame ops).  Same output
-    contract as ``connected_components``: (node, component_id = min
-    reachable node), nodes only (callers coalesce isolated ids).
-
-    Why it exists: min-label propagation needs diameter rounds — a
-    10^6-node chain needs 10^6 shuffles.  The star operations contract
-    paths, converging in O(log n) rounds on ANY graph:
-
-    * large-star: per node u, connect every LARGER neighbor to the
-      minimum m of u's neighborhood (emit (v, m) for v > u);
-    * small-star: orient edges toward smaller ids, then per node u
-      connect u and all its (smaller) neighbors to the neighborhood
-      minimum.
-
-    Each phase is one window-min over the edge list plus a distinct —
-    shuffles on the node key, no joins.  Fixpoint detection compares
-    (count, xxhash64-sum) edge-set checksums between rounds;
-    ``localCheckpoint`` truncates lineage per round as in the
-    label-prop variant."""
-    e = (
-        pairs.select(F.col(id1).alias("a"), F.col(id2).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-
-    def min_nbr(df):
-        w = Window.partitionBy("a")
-        return df.withColumn(
-            "m", F.least(F.col("a"), F.min("b").over(w))
-        )
-
-    def large_star(edges):
-        sym = edges.union(
-            edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        )
-        g = min_nbr(sym)
-        return (
-            g.filter(F.col("b") > F.col("a"))
-            .select(F.col("b").alias("a"), F.col("m").alias("b"))
-            .distinct()
-        )
-
-    def small_star(edges):
-        orient = edges.select(
-            F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b")
-        ).filter(F.col("a") != F.col("b"))
-        g = min_nbr(orient)
-        out = g.select(F.col("b").alias("a"), F.col("m").alias("b")).union(
-            g.select("a", F.col("m").alias("b"))
-        )
-        return out.filter(F.col("a") != F.col("b")).distinct()
-
-    def checksum(edges):
-        # bit_xor: order-independent, overflow-free (ANSI-safe); edge
-        # rows are distinct so no xor-cancellation of duplicates
-        row = edges.agg(
-            F.count("*").alias("n"),
-            F.expr("bit_xor(xxhash64(a, b))").alias("h"),
-        ).first()
-        return (row["n"], row["h"])
-
-    prev = None
-    for _ in range(max_iters):
-        e = small_star(large_star(e)).localCheckpoint(eager=True)
-        cur = checksum(e)
-        if cur == prev:
-            break
-        prev = cur
-    else:
-        raise RuntimeError(
-            f"connected_components_star did not converge in {max_iters} "
-            "rounds (expected O(log n)) — graph or checksum anomaly"
-        )
-    # Fixpoint edges are stars (v -> component min); min nodes label
-    # themselves.
-    return (
-        e.select(F.col("a").alias("node"), F.col("b").alias("label"))
-        .union(e.select(F.col("b").alias("node"), F.col("b").alias("label")))
-        .groupBy("node")
-        .agg(F.min("label").alias("component_id"))
-    )
-
-
-def near_dedup_components(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    threshold: float = 0.5,
-    **minhash_kwargs,
-) -> DataFrame:
-    """Full near-dup dedup: MinHash-LSH pairs → connected components
-    → every document labeled with its cluster representative (min id;
-    docs with no near-dup keep their own id).  Downstream dedup is
-    then ``filter(doc_id == component_id)``."""
-    pairs = minhash_dedup_pairs(df, text_col, id_col, threshold=threshold,
-                                **minhash_kwargs)
-    comps = connected_components(pairs.select("id1", "id2"))
-    return (
-        df.select(F.col(id_col).alias("doc_id"))
-        .join(comps, F.col("doc_id") == comps.node, "left")
-        .select(
-            "doc_id",
-            F.coalesce("component_id", "doc_id").alias("component_id"),
-        )
-    )
-
-
-def simhash(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """64-bit SimHash per document: per-bit ±1 votes over token
-    hashes, sign of the vote sum → bit.
-
-    Same codegen-friendly shape as MinHash: explode tokens, hash each
-    string once, 64 flat aggregates (map-side partial → shuffle is
-    O(#docs x 64 x 8B)), then assemble the 64-bit word.  The ±1 vote
-    sum is folded to ``sum(bit_get)`` + one shared count:
-    ``sum(±1) > 0  ⇔  2·Σbit > n`` — branch-free per-row work and a
-    ~3x smaller expression tree (codegen compile measured 5s → <1s
-    for the 64-lane plan)."""
-    # lanes as ONE parsed expression each for agg and assembly (the
-    # py4j lesson — 64 per-lane F.sum(F.expr()).alias() calls cost
-    # ~0.18 s of driver time per build); sums land in one array and
-    # the assembly indexes it, values bit-identical.
-    lanes = ",".join(f"sum(bit_get(_h, {b}))" for b in range(64))
-    votes = (
-        spread(df)
-        .select(F.col(id_col).alias("doc_id"), tokens_expr(text_col).alias("_t"))
-        .select("doc_id", F.explode_outer("_t").alias("_tok"))
-        .select("doc_id", F.xxhash64("_tok").alias("_h"))
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("_n"),
-            F.expr(f"array({lanes})").alias("_v"),
-        )
-    )
-    bit_terms = " + ".join(
-        f"if(_v[{b}] * 2 > _n, shiftleft(cast(1 as bigint), {b}), 0L)"
-        for b in range(64)
-    )
-    return votes.select("doc_id", F.expr(bit_terms).alias("simhash64"))
 
 
 def simhash_portable(
     df: DataFrame, text_col: str, id_col: str, n_bits: int = 48
 ) -> DataFrame:
-    """ENGINE-PORTABLE SimHash: identical to :func:`simhash` except
-    the token hash is the first 15 hex chars of md5 (a 60-bit value
-    every engine computes identically) instead of Spark-specific
-    xxhash64 — so the signatures, and therefore the near-pair set,
+    """ENGINE-PORTABLE SimHash per document: per-bit ±1 votes over
+    token hashes, sign of the vote sum → bit.  The token hash is the
+    first 15 hex chars of md5 (a 60-bit value every engine computes
+    identically), so the signatures, and therefore the near-pair set,
     are bit-reproducible in DuckDB/Postgres/anything with md5, and
     the q:simhash_portable_pairs oracle can be a full value-hash
     gate rather than rows-only.  ``n_bits`` ≤ 60 lanes of the md5
-    value are voted; same flat-aggregate shape and cost profile as
-    the xxhash64 variant (which stays the scale default — one
-    xxhash64 beats an md5 + hex-parse per token)."""
+    value are voted.
+
+    Codegen-friendly shape, as MinHash: explode tokens, hash each
+    string once, ``n_bits`` flat aggregates (map-side partial →
+    shuffle is O(#docs x n_bits x 8B)), then assemble the word.  The
+    ±1 vote sum is folded to ``sum(bit_get)`` + one shared count:
+    ``sum(±1) > 0  ⇔  2·Σbit > n`` — branch-free per-row work and a
+    ~3x smaller expression tree than per-lane ±1 sums."""
     if not 1 <= n_bits <= 60:
         raise ValueError("n_bits must be in [1, 60]")
     # NULL text -> '' on BOTH sides (same pin as chunk_documents):
@@ -1190,7 +1008,9 @@ def simhash_portable(
         .groupBy("doc_id")
         .agg(
             F.count("*").alias("_n"),
-            # one parsed array of lane sums (see simhash)
+            # lanes as ONE parsed expression (64 per-lane
+            # F.sum(F.expr()).alias() py4j calls cost ~0.18 s of
+            # driver time per build); values are bit-identical
             F.expr(
                 "array("
                 + ",".join(f"sum(bit_get(_h, {b}))" for b in range(n_bits))
@@ -1217,7 +1037,12 @@ def simhash_portable_pairs(
     signature, with exact pigeonhole recall (``n_chunks`` >
     ``max_hamming`` and no posting cap): the output equals a full
     O(n²) hamming scan, which is what the DuckDB oracle computes.
-    Same posting-list bucketing as :func:`simhash_near_pairs`."""
+
+    The signature splits into ``n_chunks`` equal-width chunks, and
+    candidates are pairs that agree on some (chunk_idx, chunk_val),
+    verified with popcount of XOR.  Pigeonhole: a pair at hamming
+    distance d differs in at most d chunks, so with ``n_chunks > d``
+    at least one chunk agrees and the pair is generated."""
     if n_bits % n_chunks:
         raise ValueError(f"n_chunks must divide n_bits")
     if max_hamming >= n_chunks:
@@ -1226,12 +1051,12 @@ def simhash_portable_pairs(
     mask = (1 << width) - 1
     # cache the (tiny: one row per doc) signature table, then expand
     # candidate pairs as a SELF-JOIN on the chunk key rather than a
-    # per-bucket pair array.  The posting-array expansion the capped
-    # xxhash64 variant uses materializes m(m-1)/2 structs in ONE row
-    # per bucket — with no posting cap (required for exact recall) a
-    # hot bucket OOMs the executor (observed at ~sf1: the clone-10x
-    # generator preserves token MULTISETS, SimHash is order-blind, so
-    # every clone family shares a signature and buckets run hot).
+    # per-bucket pair array.  A posting-array expansion materializes
+    # m(m-1)/2 structs in ONE row per bucket — with no posting cap
+    # (required for exact recall) a hot bucket OOMs the executor
+    # (observed at ~sf1: the clone-10x generator preserves token
+    # MULTISETS, SimHash is order-blind, so every clone family shares
+    # a signature and buckets run hot).
     # The join streams the same pairs through AQE's skew handling,
     # and caching keeps the signature pipeline from running twice.
     sh = cache_bounded("simhash_portable_sigs",
@@ -1265,84 +1090,6 @@ def simhash_portable_pairs(
             "id1",
             "id2",
             F.expr("bit_count(_s1 ^ _s2)").cast("long").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
-
-
-def simhash_near_pairs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    max_hamming: int = 7,
-    max_posting: int | None = 1000,
-    n_chunks: int = 8,
-) -> DataFrame:
-    """SimHash near-dup candidates: split the 64-bit signature into
-    ``n_chunks`` equal-width chunks, bucket on each (chunk_idx,
-    chunk_val), verify candidates with popcount of XOR.
-
-    Pigeonhole recall guarantee: a pair at hamming distance d has at
-    most d touched chunks, so with ``n_chunks > d`` at least one
-    chunk agrees and the pair is generated — **recall is exact for
-    max_hamming <= n_chunks - 1** (the defaults, 7 and 8, match).
-    Chunk width trades recall against candidate volume: 8-bit chunks
-    have only 256 values per chunk index, so buckets run hot and
-    candidate pairs grow ~n²·chunks/2^width (measured 28x the 16-bit
-    candidate count on the sf0.1 corpus) — that is what
-    ``max_posting`` bounds (see below) — while 16-bit chunks
-    (``n_chunks=4``, 65536 values) stay cool but only guarantee
-    d <= 3.  Pick the widest filter you can afford: at 100 TB use
-    ``n_chunks=4, max_hamming=3`` (guarantee still matches filter),
-    or MinHash-LSH (the scale default), whose bucket keys are
-    full-band hashes and cannot be hot for non-dup text."""
-    if 64 % n_chunks:
-        raise ValueError(f"n_chunks must divide 64, got {n_chunks}")
-    width = 64 // n_chunks
-    mask = (1 << width) - 1
-    sh = simhash(df, text_col, id_col)
-    chunks = sh.select(
-        "doc_id",
-        "simhash64",
-        F.posexplode_outer(
-            F.expr(
-                f"transform(sequence(0, {n_chunks - 1}),"
-                f" c -> cast(shiftright(simhash64, c * {width}) & {mask} as int))"
-            )
-        ).alias("chunk_idx", "chunk_val"),
-    )
-    # Posting-list bucketing, not a self-join (see lsh_candidate_pairs):
-    # one shuffle on the chunk key, signature pipeline runs once.  The
-    # signature rides inside the posting struct so hamming verification
-    # needs no join back.  Chunk buckets CAN be hot (only 2^width
-    # values per chunk index) — real corpora cluster SimHash chunks —
-    # so ``max_posting`` (default 1000) drops buckets above the cap:
-    # the m(m-1)/2 pair blow-up caps at m=max_posting, and a pair lost
-    # with a dropped bucket still has n_chunks-1 other chunks to
-    # collide on, so effective recall loss is small; struct ordering
-    # is by doc_id (first field), keeping id1 < id2.
-    posting = chunks.groupBy("chunk_idx", "chunk_val").agg(
-        F.collect_list(F.struct("doc_id", "simhash64")).alias("ids")
-    )
-    if max_posting is not None:
-        posting = posting.filter(F.size("ids") <= max_posting)
-    # Hamming-verify BEFORE the distinct: candidate expansion is cheap
-    # codegen'd struct math, but distinct is a shuffle — filtering
-    # first means only true near-pairs (a tiny fraction with small
-    # chunks) ever hit the exchange.  Measured 3.1x on the registered
-    # 8-chunk query at sf0.1.
-    return (
-        explode_posting_pairs(posting.filter(F.size("ids") >= 2))
-        .select(
-            F.expr("if(x.doc_id < y.doc_id, x.doc_id, y.doc_id)").alias(
-                "id1"
-            ),
-            F.expr("if(x.doc_id < y.doc_id, y.doc_id, x.doc_id)").alias(
-                "id2"
-            ),
-            # XOR is symmetric, so the hamming distance needs no swap
-            F.expr("bit_count(x.simhash64 ^ y.simhash64)").alias("hamming"),
         )
         .filter(F.col("hamming") <= max_hamming)
         .distinct()

@@ -115,20 +115,3 @@ def fuzzy_join(
         .filter(F.col("dist") >= 0)
         .dropDuplicates(left.columns + right.columns)
     )
-
-
-def fuzzy_join_dist1(
-    left: DataFrame,
-    right: DataFrame,
-    left_col: str,
-    right_col: str,
-    max_dist: int = 1,
-) -> DataFrame:
-    """Distance-1 entry point (kept for callers); rejects
-    ``max_dist > 1`` — use :func:`fuzzy_join` for distance 2."""
-    if max_dist > 1:
-        raise ValueError(
-            "fuzzy_join_dist1 is complete only for max_dist <= 1; "
-            "call fuzzy_join(..., max_dist=2) for the two-round variant"
-        )
-    return fuzzy_join(left, right, left_col, right_col, max_dist)

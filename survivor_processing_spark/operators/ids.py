@@ -3,16 +3,10 @@
 The reference mints ids with ``SELECT MAX(x_id)+1`` then
 ``np.arange`` over the null-id rows (reference:
 contestant_extract.py:296-317, 350-358; episodes_extract.py:199-226).
-Two modes:
-
-* ``mint_ids_sequential`` — exact reference semantics: new ids are
-  ``max_existing + row_number`` in deterministic key order.  Fine for
-  dimension tables (thousands of rows); the single-partition window
-  is confined to the *null-id subset*, never the full table.
-* ``mint_ids_hashed`` — the scale path: ``xxhash64`` of the natural
-  key.  Deterministic, collision-checked nowhere near likely at 64
-  bits for dimension cardinalities, no global coordination — this is
-  what a 1000-executor pipeline should use.
+``mint_ids_sequential`` keeps the reference semantics exactly: new
+ids are ``max_existing + row_number`` in deterministic key order.
+Fine for dimension tables (thousands of rows); the single-partition
+window is confined to the *null-id subset*, never the full table.
 """
 
 from __future__ import annotations
@@ -42,15 +36,3 @@ def mint_ids_sequential(
     )
     keep = with_max.filter(F.col(id_col).isNotNull())
     return keep.unionByName(nulls).drop("_max_id")
-
-
-def mint_ids_hashed(df: DataFrame, id_col: str, natural_key: list[str]) -> DataFrame:
-    """Fill NULL ``id_col`` with a deterministic 64-bit hash of the
-    natural key — order-free, shuffle-free, scale-safe."""
-    return df.withColumn(
-        id_col,
-        F.coalesce(
-            F.col(id_col),
-            F.abs(F.xxhash64(*[F.col(c) for c in natural_key])),
-        ).cast(df.schema[id_col].dataType),
-    )

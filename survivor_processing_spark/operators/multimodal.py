@@ -1,84 +1,28 @@
-"""Multimodal column conventions + Arrow-batched processing plumbing.
+"""Stdlib media codecs for the multimodal queries.
 
-Convention: media is an opaque ``binary`` column plus a typed
-metadata struct — the same shape the reference used for its binary
-file staging (xlsx/docx downloads, episode_stats_extract.py:55-59 /
-confessional_extract.py:156-166), generalized:
+Convention: media is an opaque ``binary`` blob plus typed metadata
+(mime, width, height, duration_s) — the same shape the reference used
+for its binary file staging (xlsx/docx downloads,
+episode_stats_extract.py:55-59 / confessional_extract.py:156-166),
+generalized.  The queries (queries/llm_multimodal.py) call these
+byte-level functions inside one fused ``mapInPandas`` per query, so
+blobs never pass through the driver.
 
-    asset_id   bigint
-    media      binary
-    media_meta struct<mime: string, width: int, height: int,
-                      duration_s: double>
+The engine depends on no pixel/sample-level codec library
+(PIL/ffmpeg), so everything here is pure stdlib:
 
-Processing runs through ``mapInPandas`` — Arrow batches in, Arrow
-batches out, parallel per partition; binary blobs never pass through
-the driver.  Pixel/sample-level codecs (PIL/ffmpeg) are NOT in this
-container, but CONTAINER-level decode is pure stdlib: ``decode_media``
-with ``fake=False`` sniffs the magic bytes and parses real format
-headers — PNG IHDR width/height, GIF logical-screen descriptor,
-JPEG SOF frame dimensions, BMP info header, WAV fmt/data chunk walk
-for duration — alongside byte length + md5.  ``fake=True``
-additionally fills the 8-dim feature vector from the digest (the
-stand-in for pixel-level features, which genuinely need the absent
-codec libs); real mode leaves ``features`` NULL rather than faking
-it.  ``resize_media`` runs REAL pixel resampling in both codec
-environments: Pillow when importable (guarded import, like the
-optional delta-spark branch), else a pure-stdlib PNG codec
-(``png_decode``/``png_encode`` — zlib IDAT, all five scanline
-filters, nearest-neighbor resample) with non-PNG blobs quarantined
-per row.  ``frame_sample`` genuinely needs ffmpeg, so its stub
-stays behind ``fake=True`` and ``fake=False`` raises rather than
-silently degrading.
+* ``parse_media_header`` sniffs the magic bytes and parses real
+  format headers — PNG IHDR, GIF logical-screen descriptor, JPEG SOF
+  frame dimensions, BMP info header, WAV fmt/data chunk walk for
+  duration;
+* ``png_decode``/``png_encode``/``png_resize_nn`` — zlib IDAT, all
+  five scanline filters, nearest-neighbor resample;
+* ``sample_frames_real`` splits WAV audio, GIF / APNG animation and
+  MJPEG AVI into standalone per-frame blobs; compressed video codecs
+  genuinely need ffmpeg, so any other blob raises rather than
+  silently degrading.
 """
-
 from __future__ import annotations
-
-import hashlib
-from collections.abc import Iterator
-
-import pandas as pd
-import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
-from pyspark.sql.types import (
-    ArrayType,
-    BinaryType,
-    DoubleType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
-
-MEDIA_META = StructType(
-    [
-        StructField("mime", StringType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("duration_s", DoubleType()),
-    ]
-)
-
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType()),
-        StructField("media", BinaryType()),
-        StructField("media_meta", MEDIA_META),
-    ]
-)
-
-DECODED_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType()),
-        StructField("n_bytes", LongType()),
-        StructField("digest", StringType()),
-        StructField("mime", StringType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("duration_s", DoubleType()),
-        StructField("features", ArrayType(DoubleType())),
-    ]
-)
 
 
 def parse_media_header(b: bytes) -> tuple[str | None, int | None, int | None, float | None]:
@@ -141,21 +85,6 @@ def parse_media_header(b: bytes) -> tuple[str | None, int | None, int | None, fl
     return None, None, None, None
 
 
-def text_as_media(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Adapter: treat a text column as a binary asset (utf-8), for
-    exercising the media plumbing on the documents table."""
-    return df.select(
-        F.col(id_col).cast("long").alias("asset_id"),
-        F.encode(F.col(text_col), "utf-8").alias("media"),
-        F.struct(
-            F.lit("text/plain").alias("mime"),
-            F.lit(None).cast("int").alias("width"),
-            F.lit(None).cast("int").alias("height"),
-            F.lit(None).cast("double").alias("duration_s"),
-        ).alias("media_meta"),
-    )
-
-
 _PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
 
 
@@ -193,8 +122,7 @@ def png_decode(b: bytes) -> tuple[int, int, int, bytes]:
     gray / gray+alpha / RGB / RGBA color types, non-interlaced, all
     five scanline filters (None/Sub/Up/Average/Paeth per the PNG
     spec §9).  Pure-Python per-byte unfiltering — right for fixtures
-    and thumbnails; a production cluster installs Pillow and takes
-    the guarded fast path instead."""
+    and thumbnails; a production cluster would decode with Pillow."""
     import struct
     import zlib
 
@@ -301,9 +229,7 @@ def synth_gif(width: int, height: int) -> bytes:
 
 # --- GIF frame codec (stdlib, real) ------------------------------------------
 #
-# The r7 step of shrinking the "video decode needs ffmpeg" env limit
-# to real codecs only (r5: PNG via zlib, r6: WAV via RIFF walk): GIF
-# is the one animation container fully decodable with pure stdlib
+# GIF is the one animation container fully decodable with pure stdlib
 # arithmetic.  The LZW here is the real variable-width GIF dialect —
 # code width grows with the table (encoder one emission later than
 # the decoder, the classic early-change off-by-one), CLEAR resets,
@@ -514,7 +440,7 @@ def gif_slice_frames(
     cadence is the caller's ``every_s``, matching the WAV contract).
     Returns None when the blob is not a parseable GIF (a valid GIF
     with zero image blocks is [], NOT None — the distinction drives
-    frame_sample's real-codec dispatch)."""
+    the codec dispatch in :func:`sample_frames_real`)."""
     doc = gif_frames(b)
     if doc is None:
         return None
@@ -672,61 +598,6 @@ def apng_slice_frames(
     return out
 
 
-def synth_apng(width: int, height: int, n_frames: int) -> bytes:
-    """A fully valid 8-bit grayscale APNG (CRCs, acTL/fcTL/fdAT
-    sequence numbers, one zlib stream per frame) — frame k's pixel
-    (x, y) holds ``(31 * k + x + y) % 256``, so tests get a
-    closed-form per-frame pixel sum.  Frame delays are k/10 s."""
-    import struct
-    import zlib
-
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, 0, 0, 0, 0)
-    out = bytearray(_PNG_MAGIC + _png_chunk(b"IHDR", ihdr))
-    out += _png_chunk(b"acTL", struct.pack(">II", n_frames, 0))
-    seq = 0
-    for k in range(n_frames):
-        fctl = struct.pack(
-            ">IIIIIHHBB", seq, width, height, 0, 0, k, 10, 0, 0
-        )
-        out += _png_chunk(b"fcTL", fctl)
-        seq += 1
-        scan = b"".join(
-            b"\x00"
-            + bytes((31 * k + x + y) % 256 for x in range(width))
-            for y in range(height)
-        )
-        z = zlib.compress(scan)
-        if k == 0:
-            out += _png_chunk(b"IDAT", z)
-        else:
-            out += _png_chunk(b"fdAT", struct.pack(">I", seq) + z)
-            seq += 1
-    out += _png_chunk(b"IEND", b"")
-    return bytes(out)
-
-
-def synth_jpeg(width: int, height: int) -> bytes:
-    """Minimal JPEG segment stream: SOI + JFIF APP0 + SOF0 carrying
-    the frame dimensions + EOI."""
-    import struct
-
-    app0 = (
-        b"\xff\xe0"
-        + struct.pack(">H", 16)
-        + b"JFIF\x00\x01\x01\x00"
-        + struct.pack(">HH", 1, 1)
-        + b"\x00\x00"
-    )
-    sof0 = (
-        b"\xff\xc0"
-        + struct.pack(">H", 11)
-        + b"\x08"
-        + struct.pack(">HH", height, width)
-        + b"\x01\x01\x11\x00"
-    )
-    return b"\xff\xd8" + app0 + sof0 + b"\xff\xd9"
-
-
 def _jpeg_sof_size(b: bytes) -> tuple[int, int] | None:
     """(width, height) from the first JPEG SOF marker, or None."""
     import struct
@@ -827,44 +698,6 @@ def avi_slice_frames(
     return [(k, k * step, f) for k, f in enumerate(doc["frames"])]
 
 
-def synth_mjpeg_avi(
-    width: int, height: int, n_frames: int, fps: int = 4
-) -> bytes:
-    """A structurally valid MJPEG AVI (RIFF/hdrl/strl/movi, strh
-    timing, even-padded chunks): frame k is a JPEG segment stream
-    whose COM payload byte i is ``(31*k + i) % 256`` over 64 bytes —
-    a closed-form per-frame checksum for tests/oracles."""
-    import struct
-
-    def chunk(cid: bytes, data: bytes) -> bytes:
-        pad = b"\x00" if len(data) % 2 else b""
-        return cid + struct.pack("<I", len(data)) + data + pad
-
-    def lst(ltype: bytes, data: bytes) -> bytes:
-        return chunk(b"LIST", ltype + data)
-
-    jpegs = []
-    base = synth_jpeg(width, height)[:-2]  # strip EOI
-    for k in range(n_frames):
-        payload = bytes((31 * k + i) % 256 for i in range(64))
-        com = b"\xff\xfe" + struct.pack(">H", 2 + len(payload)) + payload
-        jpegs.append(base + com + b"\xff\xd9")
-    avih = struct.pack("<I", 1_000_000 // fps) + bytes(28) + struct.pack(
-        "<II", width, height
-    ) + bytes(16)
-    strh = (
-        b"vids"
-        + b"MJPG"
-        + bytes(12)
-        + struct.pack("<II", 1, fps)
-        + bytes(8)
-    )
-    hdrl = lst(b"hdrl", chunk(b"avih", avih) + lst(b"strl", chunk(b"strh", strh)))
-    movi = lst(b"movi", b"".join(chunk(b"00dc", j) for j in jpegs))
-    body = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
 def wav_info(b: bytes) -> dict | None:
     """RIFF chunk walk for SLICING (the header parser at
     :func:`parse_media_header` only derives duration): returns fmt
@@ -960,213 +793,17 @@ def synth_wav(n_samples: int, sample_rate: int = 8000) -> bytes:
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
-def _decode_batch(pdf: pd.DataFrame, fake: bool) -> pd.DataFrame:
-    out = []
-    for asset_id, blob in zip(pdf["asset_id"], pdf["media"]):
-        b = bytes(blob) if blob is not None else b""
-        raw = hashlib.md5(b)
-        mime, w, h, dur = parse_media_header(b)
-        # fake: 8-dim digest-derived pseudo-features (stand-in for the
-        # pixel-level features that need absent codec libs); real
-        # mode leaves features NULL rather than inventing them
-        feats = [x / 255.0 for x in raw.digest()[:8]] if fake else None
-        out.append((asset_id, len(b), raw.hexdigest(), mime, w, h, dur, feats))
-    return pd.DataFrame(
-        out,
-        columns=[
-            "asset_id", "n_bytes", "digest",
-            "mime", "width", "height", "duration_s", "features",
-        ],
-    )
-
-
-def decode_media(df: DataFrame, fake: bool = False) -> DataFrame:
-    """Decode media blobs via mapInPandas: byte length, md5 digest,
-    and REAL container-header metadata (``parse_media_header`` —
-    PNG/GIF/BMP/JPEG dimensions, WAV duration, stdlib-only) in both
-    modes.  ``fake=True`` additionally fills the 8-dim digest-derived
-    feature vector; pixel/sample-level features need PIL/ffmpeg,
-    which this container lacks, so real mode reports them as NULL."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _decode_batch(pdf, fake)
-
-    return df.mapInPandas(run, schema=DECODED_SCHEMA)
-
-
-RESIZED_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType()),
-        StructField("media", BinaryType()),
-        StructField("media_meta", MEDIA_META),
-    ]
-)
-
-FRAME_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType()),
-        StructField("frame_idx", IntegerType()),
-        StructField("ts_s", DoubleType()),
-        StructField("frame", BinaryType()),
-    ]
-)
-
-
-def pil_available() -> bool:
-    """True when Pillow is importable — the guarded-dependency gate
-    for the real pixel-resampling path (same pattern as the optional
-    delta-spark branch in sinks/merge.py)."""
-    try:
-        import PIL  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def _resize_with_dims(
-    df: DataFrame, make_codec, width: int, height: int
-) -> DataFrame:
-    """Shared mapInPandas scaffold for every resize codec: per blob,
-    the codec returns ``(resized_bytes, mime | None)``; an
-    undecodable blob (codec raises) quarantines as ``media NULL``
-    with its meta intact — never a task crash at row 10^11.
-    ``make_codec`` is a zero-arg factory invoked INSIDE the worker,
-    so codec imports (Pillow) happen executor-side while the
-    driver-side guard runs before any job."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        codec = make_codec()
-        for pdf in batches:
-            rows = []
-            for asset_id, blob, meta in zip(
-                pdf["asset_id"], pdf["media"], pdf["media_meta"]
-            ):
-                b = bytes(blob) if blob is not None else b""
-                mime = meta["mime"] if meta is not None else None
-                dur = meta["duration_s"] if meta is not None else None
-                try:
-                    resized, out_mime = codec(b)
-                    mime = out_mime or mime
-                except Exception:
-                    resized = None  # undecodable: quarantine, don't crash
-                rows.append(
-                    (
-                        asset_id,
-                        resized,
-                        {
-                            "mime": mime,
-                            "width": width if resized is not None else None,
-                            "height": height if resized is not None else None,
-                            "duration_s": dur,
-                        },
-                    )
-                )
-            yield pd.DataFrame(rows, columns=["asset_id", "media", "media_meta"])
-
-    return df.mapInPandas(run, schema=RESIZED_SCHEMA)
-
-
-def _resize_media_pil(df: DataFrame, width: int, height: int) -> DataFrame:
-    """REAL pixel resampling via Pillow: decode, BILINEAR-resize to
-    (width, height) — pinned explicitly; Pillow's default is bicubic
-    — re-encode in the source container format."""
-
-    def make_codec():
-        import io
-
-        from PIL import Image
-
-        resampling = getattr(Image, "Resampling", Image)
-
-        def codec(b: bytes):
-            img = Image.open(io.BytesIO(b))
-            fmt = img.format or "PNG"
-            out = io.BytesIO()
-            img.resize((width, height), resampling.BILINEAR).save(
-                out, format=fmt
-            )
-            return out.getvalue(), Image.MIME.get(fmt)
-
-        return codec
-
-    return _resize_with_dims(df, make_codec, width, height)
-
-
-def _resize_media_stdlib(df: DataFrame, width: int, height: int) -> DataFrame:
-    """Pillow-free real path: REAL nearest-neighbor resampling for
-    PNG blobs through the module's stdlib codec
-    (:func:`png_resize_nn`); every other format quarantines (media
-    NULL, meta intact) — the same per-blob contract the Pillow path
-    applies to undecodable inputs, with a narrower decodable set."""
-
-    def make_codec():
-        def codec(b: bytes):
-            return png_resize_nn(b, width, height), "image/png"
-
-        return codec
-
-    return _resize_with_dims(df, make_codec, width, height)
-
-
-def resize_media_nn(df: DataFrame, width: int, height: int) -> DataFrame:
-    """The deterministic nearest-neighbor PNG resize as a public
-    operator: byte-identical output on every host (no codec-library
-    variance), which is what an oracle-gated pipeline needs.  Alias
-    of the stdlib path ``resize_media`` falls back to."""
-    return _resize_media_stdlib(df, width, height)
-
-
-def resize_media(df: DataFrame, width: int, height: int, fake: bool = False) -> DataFrame:
-    """Resize image media to (width, height): binary→binary through
-    mapInPandas, metadata struct updated in the same pass.  Real-mode
-    codec chain: Pillow when importable (every format PIL reads,
-    bilinear), else the stdlib PNG codec (8-bit PNG, nearest
-    neighbor) with non-PNG blobs quarantined as ``media NULL`` rows.
-    ``fake=True`` keeps the deterministic byte-stub (truncate/cycle
-    to w*h bytes) for plumbing tests that must not depend on any
-    codec's output bytes."""
-    if not fake:
-        if pil_available():
-            return _resize_media_pil(df, width, height)
-        return _resize_media_stdlib(df, width, height)
-    target = width * height
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for asset_id, blob, meta in zip(
-                pdf["asset_id"], pdf["media"], pdf["media_meta"]
-            ):
-                b = bytes(blob) if blob is not None else b""
-                resized = (b * (target // max(len(b), 1) + 1))[:target]
-                mime = meta["mime"] if meta is not None else None
-                rows.append(
-                    (
-                        asset_id,
-                        resized,
-                        {
-                            "mime": mime,
-                            "width": width,
-                            "height": height,
-                            "duration_s": meta["duration_s"]
-                            if meta is not None
-                            else None,
-                        },
-                    )
-                )
-            yield pd.DataFrame(rows, columns=["asset_id", "media", "media_meta"])
-
-    return df.mapInPandas(run, schema=RESIZED_SCHEMA)
-
-
 def sample_frames_real(b: bytes, every_s: float) -> list:
-    """Row core of real-mode :func:`frame_sample`: one media blob →
-    ``[(frame_idx, ts_s, frame_bytes), ...]`` through the same codec
-    dispatch order (WAV slice, then GIF / APNG / MJPEG-AVI; anything
-    else raises).  Shared by the DataFrame operator and the fused
-    single-stage query paths so the two can never diverge."""
+    """Frame sampling for one media blob →
+    ``[(frame_idx, ts_s, frame_bytes), ...]``.  Codec dispatch order:
+    WAV audio is sliced into [t, t+every_s) sample segments, each a
+    standalone valid WAV (:func:`wav_slice_frames`); animated GIF
+    splits into standalone single-frame GIFs through the full stdlib
+    parse + LZW decode (:func:`gif_slice_frames`); (A)PNG frames
+    re-wrap their own zlib streams (:func:`apng_slice_frames`); MJPEG
+    AVI demuxes into its standalone JPEG frames
+    (:func:`avi_slice_frames`).  Anything else raises
+    NotImplementedError."""
     if wav_info(b) is not None:
         return wav_slice_frames(b, every_s)
     frames = gif_slice_frames(b, every_s)
@@ -1179,66 +816,6 @@ def sample_frames_real(b: bytes, every_s: float) -> list:
             "real frame sampling decodes WAV audio, "
             "GIF/(A)PNG animation, and MJPEG AVI "
             "containers; compressed video codecs "
-            "need ffmpeg (absent here) — pass "
-            "fake=True for the deterministic stub "
-            "sampler"
+            "need ffmpeg, which the engine does not use"
         )
     return frames
-
-
-def frame_sample(df: DataFrame, every_s: float = 1.0, fake: bool = False) -> DataFrame:
-    """Media frame sampling: ONE media row → N frame rows (UDTF-style
-    1→N emit through mapInPandas, SURVEY §2 M3).  Frames at t = 0,
-    every_s, 2*every_s, … while t < media_meta.duration_s.
-
-    Real mode (``fake=False``) decodes natively where stdlib
-    arithmetic suffices: WAV audio is sliced into [t, t+every_s)
-    sample segments, each re-encoded as a standalone valid WAV
-    (:func:`wav_slice_frames`, r6); animated GIF is split into
-    standalone single-frame GIFs through the full stdlib parse + LZW
-    decode (:func:`gif_slice_frames`, r7); (A)PNG frames re-wrap
-    their own zlib streams (:func:`apng_slice_frames`, r7); MJPEG
-    AVI demuxes into its standalone JPEG frames — frame extraction
-    is pure chunk arithmetic (:func:`avi_slice_frames`, r8).
-    Compressed video codecs (h264/mp4 et al.) genuinely need ffmpeg,
-    so any other blob in real mode raises NotImplementedError; the
-    fake codec derives each frame's bytes deterministically from
-    (digest of the blob, frame_idx), so row multiplicity, ordering,
-    and batch shape stay testable for those too."""
-    if not fake:
-
-        def run_real(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                rows = []
-                for asset_id, blob in zip(pdf["asset_id"], pdf["media"]):
-                    b = bytes(blob) if blob is not None else b""
-                    for idx, ts, seg in sample_frames_real(b, every_s):
-                        rows.append((asset_id, idx, ts, seg))
-                yield pd.DataFrame(
-                    rows, columns=["asset_id", "frame_idx", "ts_s", "frame"]
-                )
-
-        return df.mapInPandas(run_real, schema=FRAME_SCHEMA)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for asset_id, blob, meta in zip(
-                pdf["asset_id"], pdf["media"], pdf["media_meta"]
-            ):
-                dur = meta["duration_s"] if meta is not None else None
-                if dur is None or dur <= 0:
-                    continue
-                b = bytes(blob) if blob is not None else b""
-                base = hashlib.md5(b).digest()
-                idx, t = 0, 0.0
-                while t < dur:
-                    frame = hashlib.md5(base + idx.to_bytes(4, "big")).digest()
-                    rows.append((asset_id, idx, t, frame))
-                    idx += 1
-                    t = idx * every_s
-            yield pd.DataFrame(
-                rows, columns=["asset_id", "frame_idx", "ts_s", "frame"]
-            )
-
-    return df.mapInPandas(run, schema=FRAME_SCHEMA)

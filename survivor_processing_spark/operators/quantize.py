@@ -74,31 +74,6 @@ def sq8_bounds(
     return mn, mx
 
 
-def sq8_encode(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    dim: int = 64,
-) -> DataFrame:
-    """int8 codes per vector: ``id_col, codes array<int>`` with
-    ``codes[d] = round(255·(xq_d − mn_d)/span_d)`` (0 when the
-    dimension is constant).  Codes are exact integers — the same
-    arithmetic replays in DuckDB bit-for-bit."""
-    mn, mx = sq8_bounds(df, vec_col, dim)
-    mn_arr = sql_long_array(mn)
-    span_arr = sql_long_array([b - a for a, b in zip(mn, mx)])
-    codes = (
-        f"zip_with(zip_with({_QEXPR.format(vec=vec_col)}, {mn_arr},"
-        " (x, m) -> x - m),"
-        f" {span_arr},"
-        " (d, s) -> cast(CASE WHEN s = 0 THEN 0"
-        " ELSE (d * 510 + s) DIV (2 * s) END as int))"
-    )
-    return df.where(_clean(vec_col, dim)).select(
-        F.col(id_col), F.expr(codes).alias("codes")
-    )
-
-
 def sq8_summary(
     df: DataFrame,
     vec_col: str = "embedding",

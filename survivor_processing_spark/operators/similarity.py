@@ -225,49 +225,6 @@ def ivf_topk(
     )
 
 
-def ivf_recall_bound(
-    emb: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    min_recall: float = 0.5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The IVF accuracy CONTRACT as a checkable one-row output: run
-    the approximate IVF top-k AND the exact brute-force top-k in the
-    same pipeline, semi-join the id sets, and emit
-    ``(k, n_matches >= ceil(min_recall * k))`` — the same
-    error-bound-gating technique that made the sketch row hash-green
-    in r6 (an oracle asserts the boolean TRUE; ANN result SETS are
-    never bit-comparable across engines, their recall floor is).
-
-    Both arms share the corpus scan; the join is k-vs-k row counts —
-    driver-free, output-bounded.  Intended as the r7 gating query for
-    the ivf_topk family (ROTATION_r06.md)."""
-    import math
-
-    approx = ivf_topk(
-        emb,
-        query_vec,
-        k=k,
-        n_centroids=n_centroids,
-        n_probe=n_probe,
-        id_col=id_col,
-        vec_col=vec_col,
-    ).select(F.col(id_col))
-    exact = brute_force_topk(
-        emb, query_vec, k=k, id_col=id_col, vec_col=vec_col
-    ).select(F.col(id_col))
-    matches = approx.join(exact, id_col, "left_semi")
-    need = math.ceil(min_recall * k)
-    return matches.agg(
-        F.lit(k).alias("k"),
-        (F.count(F.lit(1)) >= F.lit(need)).alias("recall_above_floor"),
-    )
-
-
 def lsh_portable_pairs(
     emb: DataFrame,
     threshold: float,

@@ -557,12 +557,24 @@ def snapshot_zonemap_rows(
     version: int | None = None,
     recorded: dict[str, dict] | None = None,
 ) -> list[tuple]:
-    """Driver-side rows of :func:`snapshot_zonemap` — ``(file, col,
-    n_rows, vmin, vmax, ord)`` tuples.  Split out so callers that
-    need a DRIVER-side look at the manifest (the writers' ordering
-    guards — a string-equality check over a file-count-sized list)
-    can read it without minting a Spark job; the manifest is
-    file-count-sized driver data either way."""
+    """Zone-map manifest rows for a snapshot — ``(file, col, n_rows,
+    vmin, vmax, ord)`` tuples, the ``build_zonemap`` schema — read
+    LOG-FIRST: files whose commit recorded stats for every requested
+    column are served from the log (zero footer reads — the 100 TB
+    fast path); the rest fall back to
+    :func:`operators.zonemap.file_column_stats` footer walks, so
+    mixed logs (pre-stats commits, foreign writers) stay exactly
+    correct, just slower for those files.  Driver-side so the
+    writers' ordering guards (a string-equality check over a
+    file-count-sized list) mint no Spark job.
+
+    SCHEMA EVOLUTION interaction: a file written BEFORE a widening
+    has no footer entry for the evolved column — its rows hold NULL
+    there, which matches no range predicate and no join key, so the
+    file gets a NULL-stat manifest row (unprunable-by-envelope,
+    never skipped blind; the read side sees the NULLs).  Raising
+    here instead would make every merge/delete on an evolved column
+    crash against pre-widening files."""
     from .zonemap import file_column_stats
 
     # ``recorded`` lets a caller that already replayed the log (the
@@ -606,37 +618,6 @@ def snapshot_zonemap_rows(
                     # never wrong
                     rows.append((name, c, int(n), None, None, None))
     return rows
-
-
-def snapshot_zonemap(
-    spark: SparkSession,
-    table_dir: str,
-    cols: list[str],
-    version: int | None = None,
-    recorded: dict[str, dict] | None = None,
-) -> DataFrame:
-    """Zone-map manifest for a snapshot, LOG-FIRST: files whose
-    commit recorded stats for every requested column are served from
-    the log (zero footer reads — the 100 TB fast path); the rest
-    fall back to :func:`operators.zonemap.file_column_stats` footer
-    walks, so mixed logs (pre-stats commits, foreign writers) stay
-    exactly correct, just slower for those files.  Output schema is
-    identical to ``build_zonemap`` and feeds the same
-    ``prune_files``/``pruned_scan``.
-
-    SCHEMA EVOLUTION interaction: a file written BEFORE a widening
-    has no footer entry for the evolved column — its rows hold NULL
-    there, which matches no range predicate and no join key, so the
-    file gets a NULL-stat manifest row (unprunable-by-envelope,
-    never skipped blind; the read side sees the NULLs).  Raising
-    here instead would make every merge/delete on an evolved column
-    crash against pre-widening files."""
-    return local_rows_df(
-        spark,
-        snapshot_zonemap_rows(table_dir, cols, version, recorded),
-        "file string, col string, n_rows long, "
-        "vmin string, vmax string, ord string",
-    )
 
 
 def guard_zonemap_ordering(
@@ -856,49 +837,6 @@ def attach_key_blooms(
     ).items():
         new_stats[fname][key_col]["bloom"] = b
     return new_stats
-
-
-def pruned_snapshot_scan(
-    spark: SparkSession,
-    table_dir: str,
-    col: str,
-    lo,
-    hi,
-    cast: str = "bigint",
-    version: int | None = None,
-) -> DataFrame:
-    """Range scan of a snapshot that schedules ONLY the files whose
-    recorded (or footer-read, for stats-less adds) envelope
-    intersects [lo, hi] — time travel and manifest pruning composed:
-    the log says which files ARE the table at ``version``, the
-    log-first zone map says which of those can match, and the exact
-    predicate still applies (and pushes down) inside the survivors.
-    Live deletion vectors apply exactly as in :func:`read_snapshot`
-    (merge-on-read — a pruned scan must never resurrect MOR-deleted
-    rows); the no-DV plan is the bare pruned scan, unchanged."""
-    from .zonemap import prune_files
-
-    zm = snapshot_zonemap(spark, table_dir, [col], version)
-    keep = set(prune_files(zm, col, lo, hi, cast))
-    files = [f for f in snapshot_files(table_dir, version) if f in keep]
-    if not files:
-        return read_snapshot(spark, table_dir, version).filter(F.lit(False))
-    # schema-aware like every reader: on an evolved table a surviving
-    # pre-widening file must serve the new columns as NULL, not let a
-    # narrow footer win the inference and silently drop them
-    reader = spark.read
-    logged = table_schema(table_dir, version)
-    if logged:
-        reader = reader.schema(_schema_ddl(logged))
-    scan = reader.parquet(
-        *[os.path.join(table_dir, f) for f in files]
-    )
-    dvs = snapshot_dvs(table_dir, version)
-    if dvs:
-        scan = strip_deleted_rows(spark, scan, table_dir, dvs, files)
-    return scan.filter(
-        (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi))
-    )
 
 
 def range_candidate_files(

@@ -1,70 +1,17 @@
-"""Time-series regularization: calendar densification (gap fill)
-with forward fill — the resample/ffill shape of the reference's
-episode timeline handling, distributed.
+"""Time-series regularization over keyed series: interval merging
+(gaps-and-islands) and exact linear interpolation of NULL gaps.
 
-Scale shape: the dense calendar is generated PER KEY with
-``sequence()`` + ``explode`` (no driver-side date loop, no cross
-join against a materialized calendar table); the forward fill is
-``last(ignorenulls)`` over one (key × date) window — a single
-shuffle on the key, and every key's series is independent so the
-window never crosses keys.  Spark evaluates the ROWS UNBOUNDED
-PRECEDING frame incrementally (running state, not a per-row rescan).
+Scale shape: every operator windows over ONE partitioning by the
+series key — a single shuffle, and every key's series is independent
+so no window ever crosses keys.  Spark evaluates the ROWS UNBOUNDED
+PRECEDING frames used here incrementally (running state, not a
+per-row rescan).
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
-
-
-def resample_daily_ffill(
-    daily: DataFrame,
-    keys: list[str],
-    date_col: str,
-    value_cols: list[str],
-    span_lo,
-    span_hi,
-) -> DataFrame:
-    """Densify ``daily`` (one row per key per PRESENT day) to one row
-    per key per day in [span_lo, span_hi], forward-filling
-    ``value_cols`` from each key's last present day.  Adds
-    ``was_gap`` (true for synthesized rows — derived from a presence
-    marker tagged on the daily side BEFORE the join, so a genuinely
-    present day whose value columns happen to be NULL is still
-    ``was_gap = false``).  Days before a key's first observation stay
-    NULL (nothing to carry)."""
-    skeleton = (
-        daily.select(*keys)
-        .distinct()
-        .select(
-            *keys,
-            F.explode(
-                F.sequence(
-                    F.lit(span_lo).cast("date"),
-                    F.lit(span_hi).cast("date"),
-                    F.expr("interval 1 day"),
-                )
-            ).alias(date_col),
-        )
-    )
-    joined = skeleton.join(
-        daily.withColumn("_present", F.lit(True)), keys + [date_col], "left"
-    )
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy(date_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    filled = joined.select(
-        *keys,
-        date_col,
-        F.col("_present").isNull().alias("was_gap"),
-        *[
-            F.last(F.col(c), ignorenulls=True).over(w).alias(c)
-            for c in value_cols
-        ],
-    )
-    return filled
 
 
 def merge_intervals(
@@ -122,9 +69,8 @@ def interpolate_linear(
     t_col: str,
     yq_col: str,
 ) -> DataFrame:
-    """Linear interpolation of NULL gaps in an integer-lane series —
-    the resample companion to :func:`resample_daily_ffill` for
-    measurements where carrying the last value forward is a lie
+    """Linear interpolation of NULL gaps in an integer-lane series,
+    for measurements where carrying the last value forward is a lie
     (sensor readings, prices, rates).
 
     Exactness contract: ``t_col`` (BIGINT, unique per key) and

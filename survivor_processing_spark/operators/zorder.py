@@ -10,17 +10,15 @@ file.  This is the layout trick behind Delta/Iceberg OPTIMIZE
 ZORDER, built here from pure Spark expressions.
 
 Scale shape: the z-value is a codegen'd bit expression (no UDF);
-the layout pass is ``repartitionByRange`` on the z-key (range
-partitioner → balanced files) + ``sortWithinPartitions`` — one
-shuffle to rewrite a table into a form that makes every later
-2-d-filtered scan cheaper.  tests/test_round3_ops.py measures the
-row-group stats tightening directly.
+the layout pass (operators/snapshot.py ``zorder_snapshot``) is
+``repartitionByRange`` on the z-key (range partitioner → balanced
+files) + ``sortWithinPartitions`` — one shuffle to rewrite a table
+into a form that makes every later 2-d-filtered scan cheaper.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
 
 
 def zvalue(col_a: str, col_b: str, bits: int = 16):
@@ -32,26 +30,4 @@ def zvalue(col_a: str, col_b: str, bits: int = 16):
         f"aggregate(sequence(0, {bits - 1}), 0L, (acc, i) -> acc"
         f" + shiftleft(bigint(shiftright(bigint({col_a}), i) & 1), 2 * i)"
         f" + shiftleft(bigint(shiftright(bigint({col_b}), i) & 1), 2 * i + 1))"
-    )
-
-
-def zorder_write(
-    df: DataFrame,
-    path: str,
-    col_a: str,
-    col_b: str,
-    bits: int = 16,
-    n_files: int = 8,
-) -> None:
-    """Rewrite ``df`` z-ordered on (col_a, col_b): range-partition by
-    the Morton key (balanced output files), sort within partitions,
-    drop the key, land parquet.  Readers filtering on either column
-    now skip most row groups on min/max stats."""
-    (
-        df.withColumn("_z", zvalue(col_a, col_b, bits))
-        .repartitionByRange(n_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode("overwrite")
-        .parquet(path)
     )

@@ -558,19 +558,6 @@ def geo_mean_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# RETIRED r9 (VERDICT r08 #2 pairing discipline): q:cube_agg — CUBE
-# over (status, priority).  CUBE, ROLLUP and GROUPING SETS all lower
-# to the SAME Expand + single hash-aggregate physical plan; the grain
-# family keeps two hash-green gates: q:grouping_sets_agg (explicit
-# set list incl. the grand total, grouping() subtotal flags — the
-# identical measures over the identical table this row computed) and
-# q:rollup_multilevel_agg (the hierarchical grain chain; itself
-# RETIRED r10 into q:grouping_sets_agg by the same same-Expand-plan
-# argument — see queries/relational.py).  A third gate on the same
-# Expand operator added no oracle coverage.
-# Accounting: ROTATION_r09.md.
-
-
 @register(
     "sliding_range_window",
     doc="trailing 1-hour event count and value sum per user at every "

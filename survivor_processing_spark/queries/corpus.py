@@ -132,21 +132,6 @@ def domain_rebalance_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return capped.select("doc_id", "source")
 
 
-# RETIRED r13 (VERDICT r12 #3 pairing discipline, paired with the
-# q:dsir_weights registration — the data-selection gate replacing
-# it): q:token_budget_mix — per-language token budgets via an
-# md5-ordered cumulative window.  Carried by
-# q:domain_rebalance_sample (r12-green — the SAME deterministic
-# md5(doc_id)-order per-group draw, through the skew-proof salted
-# top-k), by q:cumulative_window_sums (r12-green — the
-# key-partitioned running-window machinery the budget rides), by
-# q:dsir_weights (registered r13, hash-green — the importance-scored
-# selection pass a mixture planner feeds), and by the
-# token_count_expr lattice under q:text_quality_scores and the
-# packing gate.  Accounting: ROTATION_r13.md.
-
-
-
 @register(
     "embedding_dim_stats",
     doc="per-(label, dimension) embedding profile: min/max/count of "
@@ -177,16 +162,6 @@ def embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_vecs"),
         )
     )
-
-
-# RETIRED r9 (VERDICT r08 #2 pairing discipline): q:vocab_top_terms —
-# per-language top-20 token counts.  Every piece it gated is carried
-# by a surviving hash-green gate: the tokenize+explode+map-side-
-# combined count pipeline by q:tfidf_top_terms (same tokens_expr,
-# same agg, plus idf), the skew-proof salted top-k operator by
-# q:topk_per_group_salted (its dedicated gate), and corpus-wide word
-# frequency tables by q:bpe_train_portable.  Accounting:
-# ROTATION_r09.md.
 
 
 @register(
@@ -232,32 +207,6 @@ def export_balanced_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = back.localCheckpoint(eager=True)
     shutil.rmtree(path, ignore_errors=True)
     return res
-
-
-# RETIRED r12 (VERDICT r11 #1 pairing discipline, paired with the
-# q:ngram_coverage_score registration — both gate corpus-frequency
-# term statistics): q:tfidf_top_terms — per-document top-3 TF-IDF
-# terms.  Carried by q:inverted_postings (registered r11, hash-green
-# — the IDENTICAL tokenize -> (doc, token) tf aggregate -> df
-# aggregate skeleton, with min_df/max_df cuts pinning the df lane)
-# and q:bm25_doc_term_scores (registered r11 — BM25 IS tf-idf with
-# saturation: tf lane, df lane, and the per-(doc, term) join-back
-# all under an exact-rational value oracle strictly tighter than the
-# rounded-float score this gate emitted).  The only machinery here
-# the pair lacks is the per-doc top-3 ranking window, carried by
-# q:window_rank_placement and q:topk_per_group_salted (the general
-# ranked-per-group gates).  Accounting: ROTATION_r12.md.
-
-
-# RETIRED r9 (paired with the q:sq8_summary registration, VERDICT r08
-# #4): q:embedding_quantize_int8 — per-vector symmetric int8 codes
-# (scale = 127/max|x|, float scale factors).  Superseded by the
-# strictly stronger SQ8 gate q:sq8_summary (queries/llm_ann.py ->
-# operators/quantize.py): per-DIMENSION affine quantization in exact
-# integer lanes with an oracle-adjudicated reconstruction-error
-# bound, fuzzed in tools/fuzz_portables.py `sq8`.  The 4x-storage-cut
-# contract this row gated is the same one SQ8 proves more of.
-# Accounting: ROTATION_r09.md.
 
 
 @register(

@@ -623,35 +623,6 @@ def compaction_plan_binpack(spark: SparkSession, sf_dir: str) -> DataFrame:
     return compaction_summary(plan, size_col="n_chars", part_cols=("lang",))
 
 
-# RETIRED r12 (VERDICT r11 #1 pairing discipline):
-# q:content_fingerprint — the order-insensitive multiset table
-# fingerprint over orders.  Carried by q:rolling_fingerprint
-# (registered r8, hash-green r11 — the SAME operators/fingerprint.py
-# md5-prefix integer-lane machinery under a value oracle), the
-# `fingerprint` fuzz family (tools/fuzz_portables.py — randomized
-# tables against a pure-Python model of the mod-(2^61-1) multiset
-# sum, every round), and the content_fingerprint_oracle cross-engine
-# unit tests (tests/test_fingerprint.py).  Two driver gates on one
-# hash-lane family added no oracle coverage.  Accounting:
-# ROTATION_r12.md.
-
-
-# RETIRED r12 (VERDICT r11 #1 pairing discipline, the registration
-# side being this round's lakehouse queue work): q:snapshot_summary
-# — the bare 3-commit log-replay summary.  Carried by q:snapshot_dml
-# and q:snapshot_mor (both registered r11, hash-green — each stages
-# a snapshot table and summarizes EVERY version through the
-# identical snapshot_summary() time-travel read, over strictly
-# harder histories: COW rewrites, sidecar-only DV commits,
-# data_change=False layout swaps), by q:stream_snapshot_ingest (the
-# log read behind a streaming writer), and by the
-# snapshot_summary_oracle unit/fuzz gates (tests/test_snapshot.py,
-# fuzz family `snapshot`).  The queued q:snapshot_time_travel gate
-# (register r13) adds checkpoint-seeded + AS-OF replay over a
-# 26-commit history — the deeper version of exactly this gate.
-# Accounting: ROTATION_r12.md.
-
-
 @register(
     "build_zonemap",
     doc="zone-map manifest build + file skipping under driver gating "

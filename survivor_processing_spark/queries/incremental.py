@@ -20,7 +20,6 @@ from ..streaming.incremental import (
     max_watermark,
     read_incremental,
     stream_events,
-    streaming_counts_query,
 )
 from ._registry import register
 from ._util import detach_and_cleanup as _detach_and_cleanup
@@ -79,26 +78,6 @@ def watermark_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     since = wm - dt.timedelta(days=7)
     inc = read_incremental(spark, sf_dir, "events", "ts", since)
     return inc.groupBy("event_type").agg(F.count("*").alias("n_events"))
-
-
-# --- B1/N3: MERGE upsert + idempotent replay --------------------------------
-
-
-# RETIRED r13 (VERDICT r12 #2/#6 pairing discipline, paired with the
-# q:snapshot_mor_upsert registration): q:merge_upsert_idempotent —
-# MERGE an update batch TWICE into a parquet table, updates-win end
-# state (B1/N3).  Carried by q:snapshot_mor_upsert (registered r13,
-# hash-green — the strictly harder keyed upsert over the snapshot
-# log: tombstone DVs + appended files in one atomic commit, replay
-# idempotence enforced by the log's OCC), by
-# q:streaming_foreachbatch_merge (r12-green — the IDENTICAL
-# sinks/merge.py merge_upsert executed per micro-batch over a
-# pre-seeded table, updates-win under the same oracle shape), and by
-# the unit replay test (tests/test_round6_ops.py) pinning
-# double-merge == single-merge.  The N3 §2 row keeps two registered
-# gates (foreachbatch + stream_snapshot_ingest).  Accounting:
-# ROTATION_r13.md.
-
 
 
 # --- N1 streaming: watermark + tumbling-window aggregation ------------------
@@ -405,16 +384,6 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- N1 streaming: stream-stream time-interval join -------------------------
 
 
-# RETIRED r9 (paired with the q:stream_interval_join registration
-# below, VERDICT r08 #4): q:stream_stream_interval_join — an inline
-# clicks->purchases interval join.  The new gate runs the SAME
-# watermarked stream-stream time-interval join through the reusable
-# operator (streaming/joins.py stream_interval_join: refuses
-# unbounded state, supports left_outer), against the same batch
-# oracle; batch-equivalence and the outer form stay covered in
-# tests/test_stream_join.py.  Accounting: ROTATION_r09.md.
-
-
 @register(
     "stream_interval_join",
     doc="the REUSABLE watermarked stream-stream time-interval join "
@@ -427,9 +396,7 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     "watermark, so the end state equals the batch interval join — "
     "that batch join is the oracle (the generated form, "
     "stream_interval_join_oracle, drives the cross-engine tests in "
-    "tests/test_stream_join.py incl. the left_outer shape).  "
-    "Replaces the inline q:stream_stream_interval_join (RETIRED r9, "
-    "comment above)",
+    "tests/test_stream_join.py incl. the left_outer shape)",
     oracle="""
 SELECT c.event_id AS click_id, p.event_id AS purchase_id, c.user_id,
        CAST(floor(epoch(p.ts)) - floor(epoch(c.ts)) AS BIGINT) AS secs_after

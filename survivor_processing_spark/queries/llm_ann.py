@@ -124,7 +124,6 @@ def kmeans_lloyd_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _lloyd(e, "embedding", "vec_id", k=8, iters=3, dim=64)
 
 
-
 @register(
     "cosine_topk",
     doc="brute-force cosine top-10 against a fixed query vector "
@@ -149,15 +148,6 @@ def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return brute_force_topk(e, [float(x) for x in qvec], k=10)
 
 
-# RETIRED r8 (VERDICT r07 #2/#4): q:ivf_topk — the registry's only
-# never-hash-green row (rows+schema partial, approximate recall by
-# construction).  Its family is fully carried by q:ivf_topk_exact
-# (the SAME code path degraded-to-exact, full value hash) and
-# q:ivf_recall_bound (the planted recall-floor contract adjudicating
-# the approximate configuration); the n_probe=4 behavior also stays
-# pinned in tests/test_operators.py.  Accounting: ROTATION_r08.md.
-
-
 @register(
     "ivf_topk_exact",
     doc="the SAME IVF-Flat code path (coarse quantizer trained with "
@@ -168,7 +158,7 @@ def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "bit-identical to exact brute-force top-10 and the full "
     "value-hash oracle applies.  This hash-gates the IVF machinery "
     "itself; the approximate n_probe=4 configuration is adjudicated "
-    "by the ivf_recall_bound unit test (tests/test_round6_ops.py).  "
+    "by the IVF recall-floor unit test (tests/test_round7_ops.py).  "
     "The degrades-to-exact property is also pinned in "
     "tests/test_operators.py",
     oracle="""
@@ -189,19 +179,6 @@ def ivf_topk_exact_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_topk(
         e, [float(x) for x in qvec], k=10, n_centroids=16, n_probe=16
     )
-
-
-# RETIRED r13 (VERDICT r12 pairing discipline): q:ivf_recall_bound —
-# the n_probe=4 recall-floor contract row (constant-row oracle, the
-# weakest oracle in the r10 cohort).  Carried by q:ivf_topk_exact
-# (r11-green — the SAME IVF-Flat code path hash-gated end-to-end in
-# its degraded-to-exact n_probe=n_centroids configuration under a
-# full value oracle), by the degrades-to-exact pin and the
-# ivf_recall_bound unit test (tests/test_operators.py) which keep the
-# approximate-config recall floor asserted every pytest run, and by
-# q:kmeans_lloyd_portable (the coarse quantizer under its own value
-# oracle).  Accounting: ROTATION_r13.md.
-
 
 
 @register(
@@ -248,20 +225,6 @@ def _codes_str_oracle(inner: str) -> str:
         "list_transform(codes, x -> CAST(x AS VARCHAR)), '|') AS codes)"
         f" FROM ({inner})"
     )
-
-
-# RETIRED r13 (VERDICT r12 pairing discipline, paired with the
-# q:snapshot_time_travel registration): q:pq_train_encode — PQ
-# codebook train + encode + reconstruction error.  Carried by
-# q:pq_adc_topk (r10/r12-green — its gate EXECUTES the identical
-# operators/pq.py train+encode with the same constants (m=4, k=8,
-# iters=2) before the ADC ranking, so a wrong Lloyd round, seed
-# order, or code assignment flips that gate's hash), by the `pq`
-# fuzz family (tools/fuzz_portables.py — randomized train/encode vs
-# the generated oracle every round), and by q:sq8_summary +
-# q:kmeans_lloyd_portable (the shared integer-lane Lloyd recipe
-# under their own value oracles).  Accounting: ROTATION_r13.md.
-
 
 
 @register(

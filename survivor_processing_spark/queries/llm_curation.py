@@ -27,7 +27,6 @@ from ..operators.curation import (
 from ._registry import register
 
 
-
 @register(
     "quality_filter_chain",
     doc="C4/Gopher-style rule-chain quality filter: per-rule pass flags, "
@@ -374,20 +373,6 @@ def quality_model_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(prob, 6).alias("quality"),
         (prob >= 0.5).alias("keep"),
     )
-
-
-# RETIRED r11 (VERDICT r10 #1/#5 pairing discipline):
-# q:bpe_train_portable — 8-round distributed BPE merge training.
-# Carried by q:bpe_token_budget (hash-green r10 — it RUNS the
-# identical bpe_train(n_merges=8) internally and its EMITTED oracle
-# replays the same per-merge (pairs, best, apply) CTE chain, so a
-# wrong learned merge, tiebreak, or application order flips the
-# budget gate's value hash just as it flipped this one) plus the
-# `bpe` and `bpe_encode` fuzz families (tools/fuzz_portables.py) and
-# the train-plan audit
-# tests/test_plans.py::test_bpe_train_registered_final_plan_is_tiny,
-# which now drives the operator directly.  Accounting:
-# ROTATION_r11.md.
 
 
 @register(

@@ -26,34 +26,6 @@ from ._registry import register
 # --- dedup -------------------------------------------------------------------
 
 
-# RETIRED r13 (VERDICT r12 #3 pairing discipline, paired with the
-# q:boilerplate_strip registration): q:exact_dedup_docs — hash-groupBy
-# exact dedup, min-id representative.  Carried by q:paragraph_dedup
-# (the SAME keep-first min-struct aggregate machinery at paragraph
-# grain, strictly harder — re-registered this round with the NULL-text
-# contract), by q:near_dup_keep_best (r12-green — keep-best
-# representative selection under a value oracle), and by
-# q:intersect_except_sets (the E9 distinct machinery).  The
-# normalize_text/tokens_expr lattice it exercised runs inside a dozen
-# registered text gates every round.  Accounting: ROTATION_r13.md.
-
-
-
-# RETIRED r13 (VERDICT r12 pairing discipline, paired with the
-# q:dsir_weights registration): q:ngram_jaccard_pairs — exact word-
-# 3-gram Jaccard pairs at >=0.5 via the prefix-filtered inverted
-# index.  Carried by q:ngram_containment_pairs (registered r12,
-# hash-green — the IDENTICAL shingle -> posting -> posting-pair
-# candidate machinery in operators/dedup.py with the intersection
-# count under the harder asymmetric denominator; a broken posting
-# emission or prefix filter flips that gate), by q:minhash_lsh_pairs
-# (the declared 100 TB scale path, whose verify stage recomputes the
-# SAME exact Jaccard on candidates), and by the `containment` fuzz
-# family + SWEEP_SF1 rows still measuring the operator.  Accounting:
-# ROTATION_r13.md.
-
-
-
 @register(
     "minhash_lsh_pairs",
     doc="MinHash(64)+LSH(16x4) near-dup candidates, exact-Jaccard verified "
@@ -98,32 +70,16 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# RETIRED r10 (paired with the q:semantic_decontaminate
-# registration, VERDICT r09 #2 pairing discipline; also executes the
-# "keep contract oracles rare" guidance — this was one of the ~4
-# weaker planted-recall rows): q:simhash_near_pairs — the xxhash64
-# SimHash-64 scale variant at hamming<=3 via 4x16-bit chunk
-# bucketing.  Carried by q:simhash_portable_pairs (the SAME vote /
-# sign-fold / chunk / popcount machinery over the md5-60-bit token
-# hash, full value oracle) and by
-# tests/test_operators.py::test_simhash_pigeonhole_recall_to_hamming7
-# (STRONGER than the retired gate: exhaustive brute-force-vs-banded
-# recall over real sf0.01 signatures, not 50 planted rows) plus the
-# posting-cap tests around it.  Accounting: ROTATION_r10.md.
-
-
 @register(
     "simhash_portable_pairs",
-    doc="the SAME SimHash machinery (per-bit token votes, pigeonhole "
-    "chunk bucketing, popcount verify) over an ENGINE-PORTABLE token "
+    doc="SimHash (per-bit token votes, pigeonhole chunk bucketing, "
+    "popcount verify) over an ENGINE-PORTABLE token "
     "hash — the first 15 hex chars of md5, a 60-bit value DuckDB "
     "computes identically — with 48 voted bits, 6 chunks, hamming<=5 "
     "and no posting cap, so pigeonhole recall is exact and the "
     "output EQUALS a full O(n^2) hamming scan.  This hash-gates the "
     "simhash family end to end (votes, sign fold, chunking, "
-    "popcount); the xxhash64 scale variant is pinned by the "
-    "exhaustive pigeonhole-recall unit test (its planted-recall "
-    "driver row RETIRED r10 into this gate)",
+    "popcount)",
     oracle="""
 WITH toks AS (
     SELECT doc_id,
@@ -163,46 +119,6 @@ def simhash_portable_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# RETIRED r10 (paired with the q:triangle_counts registration,
-# VERDICT r09 #2 pairing discipline): q:near_dup_components —
-# MinHash-LSH pairs -> min-label connected components with a
-# recursive-CTE transitive-closure oracle.  Both halves stay
-# hash-gated elsewhere: the pair source by q:minhash_lsh_pairs (the
-# LSH recall gate over the same >=0.5 shingle-Jaccard threshold) and
-# the component labeling by q:near_dup_keep_best (the SAME
-# connected-components operator over the exact-Jaccard pair set,
-# plus the keep-best window, full value oracle); the CC algorithms
-# themselves (min-label and large/small-star) are pinned in
-# tests/test_operators.py (chain/island closure, star equivalence on
-# a path graph).  Accounting: ROTATION_r10.md.
-
-
-# RETIRED r13 (VERDICT r12 pairing discipline): q:embedding_near_dup_pairs
-# — brute cosine near-dup pairs over the block-pair grid.  Carried by
-# q:embedding_lsh_portable_pairs (registered r12, hash-green — the
-# LSH-bucketed variant of the same cosine pair emission with
-# per-bucket caps, the operator's own documented 100 TB path), by
-# q:semantic_dedup_portable (r11-green — cluster-capped cosine pairs
-# through the same operators/similarity.py kernels), and by
-# q:cosine_topk (the exact cosine kernel under its own value oracle).
-# Accounting: ROTATION_r13.md.
-
-
-
-# RETIRED r10 (paired with the q:build_zonemap registration, VERDICT
-# r09 #2 pairing discipline; with q:simhash_near_pairs this leaves
-# the registry's weaker planted-recall contract rows at TWO):
-# q:embedding_lsh_pairs — the xxhash64 hyperplane-LSH variant
-# (4 planes x 16 tables) under a planted-recall contract.  Carried
-# by q:embedding_lsh_portable_pairs (the SAME banding scheme over
-# md5-parity signs and integer lanes, full value oracle with the
-# portable per-bucket cap) and by
-# tests/test_operators.py::test_lsh_xxhash_planted_recall (added at
-# retirement: the identical exact-copy/perturbed-copy planting the
-# driver row asserted, pinned as a unit test).  Accounting:
-# ROTATION_r10.md.
-
-
 @register(
     "embedding_lsh_portable_pairs",
     doc="the SAME hyperplane-LSH banding (4 planes x 16 tables, "
@@ -216,9 +132,7 @@ def simhash_portable_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tables x buckets x cap^2 instead of the sum-of-m^2 blowup the "
     "uncapped 4-bit config had at sf1 (131 s, VERDICT r05); at gate "
     "scale the cap does not bind, so the output equals the exact "
-    "replay.  The xxhash64 float-lane variant stays the scale "
-    "default, pinned by the planted-recall unit test (its driver "
-    "row RETIRED r10 into this gate)",
+    "replay",
     oracle="""
 WITH dims AS (SELECT unnest(generate_series(1, 64)) AS i),
 seeds AS (SELECT unnest(generate_series(0, 63)) AS s),
@@ -449,18 +363,6 @@ def incremental_dedup_new_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# RETIRED r11 (VERDICT r10 #1/#5 pairing discipline): q:dataset_split_hash
-# — the drift-tolerant md5-prefix train/val/test split.  Carried by
-# q:stratified_exact_split (registered r10, hash-green — the EXACT-
-# proportion split whose operator documents the hash split as its
-# drift-tolerant fallback, operators/curation.py:278, membership-
-# pinning COUNT+SUM(doc_id) oracle) and q:stratified_hash_sample
-# (stays gated — the identical md5-bucket hash-assignment machinery
-# over the identical table: deterministic md5 of the stringified id,
-# threshold on the hex prefix).  A third gate on the same md5-bucket
-# projection added no oracle coverage.  Accounting: ROTATION_r11.md.
-
-
 @register(
     "substring_dedup_spans",
     doc="ExactSubstr-style duplicated-substring removal spans "
@@ -484,23 +386,6 @@ def substring_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("span_end").cast("long").alias("span_end"),
         F.col("span_tokens").cast("long").alias("span_tokens"),
     )
-
-
-# RETIRED r12 (VERDICT r11 #1 pairing discipline, paired with the
-# q:ngram_containment_pairs registration below — both gate the
-# SUBSET-duplication signal): q:substring_dedup_clean — the CUT half
-# of ExactSubstr dedup.  Carried by q:substring_dedup_spans (stays
-# gated, hash-green r11 — the clean variant RUNS the identical
-# duplicated-8-gram span computation, operators/substring.py:173,
-# and only then cuts: a wrong span flips the spans gate's hash
-# first), the `substring` fuzz family (tools/fuzz_portables.py —
-# randomized corpora exercise the cut itself against a pure-Python
-# model every round), and the substring_clean_oracle cross-engine
-# unit tests (tests/test_substring.py).  A second driver gate on the
-# same span machinery added no oracle coverage beyond the cut
-# projection, which the fuzz family pins tighter.  The fuzz family
-# still drives the operator directly.
-# Accounting: ROTATION_r12.md.
 
 
 @register(

@@ -1,9 +1,9 @@
 """LLM-data-pipeline MULTIMODAL queries: binary media columns decoded
 by real stdlib codecs (PNG/GIF/WAV/APNG/MJPEG-AVI) via mapInPandas.
 
-Split from the former queries/llm.py (round 9, VERDICT r08 #6) —
-pure file move, no semantic change; every @register block is
-byte-identical to its pre-split form.
+Each query synthesizes its media, runs the operators/multimodal.py
+codec and checksums the result inside ONE fused mapInPandas, so no
+blob crosses the JVM↔Python boundary more than once.
 """
 
 from __future__ import annotations
@@ -15,27 +15,12 @@ from ..operators.dedup import spread_rows
 from ._registry import register
 
 
-
-# RETIRED r13 (VERDICT r12 pairing discipline, paired with the
-# q:winsorize_group_stats registration): q:multimodal_decode_features
-# — the STUB decode path (fake=True: byte length + md5 digest
-# features).  Carried by q:multimodal_header_parse (r10-green and in
-# this round's window — the REAL decode through the same
-# decode_media entry and mapInPandas Arrow plumbing, strictly
-# harder: synthesized valid PNG/GIF/WAV containers parsed back), by
-# q:multimodal_wav_slice (r12-green) and q:multimodal_gif_frames
-# (content-checksum codecs over the same media schema), and by the
-# fake-path unit tests (tests/test_operators.py) pinning the stub
-# contract.  Accounting: ROTATION_r13.md.
-
-
-
 @register(
     "multimodal_header_parse",
     doc="REAL media decode, no codec libs: synthesize fully valid "
     "PNG (zlib IDAT + CRCs) / GIF87a / 16-bit PCM WAV files per doc "
     "(format = doc_id % 3) in one mapInPandas pass, then "
-    "decode_media(fake=False) parses the actual container headers "
+    "parse_media_header parses the actual container headers "
     "back — PNG IHDR big-endian dims, GIF little-endian logical "
     "screen, WAV fmt/data chunk walk for duration.  The oracle "
     "predicts the parsed metadata in closed form; duration is the "
@@ -73,12 +58,10 @@ def multimodal_header_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
         table_rows(sf_dir, "documents"),
     )
 
-    # r13: synth → decode_media fused into ONE mapInPandas (guide §4):
-    # the container blob never crosses the JVM↔Python boundary, and
-    # the md5 digest decode_media computes for its wider contract —
-    # dropped by the .select() here anyway — is no longer paid.  The
+    # synth → header parse fused into ONE mapInPandas (guide §4): the
+    # container blob never crosses the JVM↔Python boundary.  The
     # header walk is the operator's own parse_media_header, so the
-    # parse stays hash-gated; output rows identical.
+    # parse stays hash-gated.
     def fused(batches):
         from ..operators.multimodal import (
             parse_media_header,
@@ -118,7 +101,7 @@ def multimodal_header_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     "doc-dependent grayscale gradient PNG per document (w = "
     "doc_id%13+4, h = doc_id%7+3, pixel(x,y) = (doc_id+37x+11y)%256), "
     "nearest-neighbor resize every blob to 4x3 through the stdlib "
-    "PNG codec (resize_media_nn: zlib decode, unfilter, sample, "
+    "PNG codec (png_resize_nn: zlib decode, unfilter, sample, "
     "re-encode), decode the OUTPUT blob again and emit its parsed "
     "dims plus the sum of its 12 pixels.  The oracle replays the "
     "whole pixel pipeline in closed form (NN sample index x*w//4, "
@@ -151,13 +134,12 @@ def multimodal_resize_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         table_rows(sf_dir, "documents"),
     )
 
-    # r13: synth → resize_media_nn → checksum fused into ONE
-    # mapInPandas (guide §4): the PNG blob used to cross the
+    # synth → resize → checksum fused into ONE mapInPandas (guide §4):
+    # a chain of Python stages would ship the PNG blob across the
     # JVM↔Python boundary four more times (synth out, resize in/out,
-    # checksum in).  The resize is the operator's own codec row core
-    # (png_resize_nn — exactly what resize_media_nn maps over the
-    # frame), so the zlib/unfilter/sample/re-encode path stays
-    # hash-gated; output rows identical.
+    # checksum in).  The resize is the operator's own codec
+    # (png_resize_nn), so the zlib/unfilter/sample/re-encode path
+    # stays hash-gated.
     def fused(batches):
         from ..operators.multimodal import (
             png_decode,
@@ -190,24 +172,13 @@ def multimodal_resize_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# RETIRED r8 (VERDICT r07 #2): q:multimodal_frame_sample — the
-# codec-STUB row-multiplicity gate, superseded by the three REAL
-# stdlib codec gates that exercise the same frame_sample dispatch
-# end-to-end with content checksums: q:multimodal_gif_frames (LZW
-# decode), q:multimodal_wav_slice (RIFF slice), and
-# q:multimodal_resize_pipeline (PNG decode/resize).  The fake-mode
-# dispatch itself stays unit-tested (tests/test_multimodal.py,
-# tests/test_apng.py frame_sample tests).  Accounting:
-# ROTATION_r08.md.
-
-
 @register(
     "multimodal_wav_slice",
     doc="REAL distributed audio frame-sampling, no codec libs: "
     "synthesize a doc-dependent 16-bit mono PCM WAV per document "
     "(rate 800 Hz, n = (doc_id%40+5)*40 samples, sample(i) = "
     "(doc_id*31 + i*7) % 65536 - 32768), slice it into 0.5 s frames "
-    "through the stdlib RIFF walk (frame_sample real mode: fmt/data "
+    "through the stdlib RIFF walk (sample_frames_real: fmt/data "
     "chunk parse, sample-domain [f*400, (f+1)*400) slice, re-encode "
     "each segment as a standalone valid WAV), then re-parse every "
     "emitted frame and sum its decoded samples.  The oracle replays "
@@ -257,10 +228,10 @@ def multimodal_wav_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
         table_rows(sf_dir, "documents"),
     )
 
-    # r13: synth → frame_sample → checksum fused into ONE mapInPandas
+    # synth → frame slice → checksum fused into ONE mapInPandas
     # (guide §4 — same shape as the GIF query: two fewer JVM↔Python
     # blob round trips, one worker per task instead of three).  Frame
-    # slicing runs through the operator's own row core
+    # slicing runs through the operator's own codec dispatch
     # (sample_frames_real), so the RIFF walk stays hash-gated.
     def fused(batches):
         import struct as _s
@@ -308,13 +279,13 @@ def multimodal_wav_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "multimodal_gif_frames",
     doc="REAL distributed animation frame-sampling, no codec libs "
-    "(r7; shrinks the ffmpeg env limit to true video codecs only — "
-    "PNG r5, WAV r6, GIF now): synthesize a doc-dependent "
+    "(ffmpeg is needed only for true video codecs): "
+    "synthesize a doc-dependent "
     "multi-frame GIF89a per document (w = id%5+3, h = id%4+2, "
     "n_frames = id%3+1, pixel index(f, j) = (id*7 + f*13 + j) % 256) "
     "through the real stdlib encoder (variable-width GIF LZW, "
-    "256-entry global color table), split it with frame_sample real "
-    "mode (full GIF parse + LZW decode, each frame re-encoded as a "
+    "256-entry global color table), split it with sample_frames_real "
+    "(full GIF parse + LZW decode, each frame re-encoded as a "
     "standalone valid GIF), then re-parse every emitted frame and "
     "sum its decoded palette indices.  The oracle replays synthesis "
     "+ slicing in closed form — a wrong LZW width change, sub-block "
@@ -364,14 +335,14 @@ def multimodal_gif_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows_per_task=100,
     )
 
-    # r13: synth → frame_sample → checksum fused into ONE mapInPandas
-    # (guide §4: the former three chained Python stages each ran in
-    # their own worker, shipping every GIF blob JVM→Python→JVM twice
-    # more than needed, and with one Arrow batch per partition the
-    # downstream workers sat blocked on the upstream's whole
-    # partition).  The frame slicing goes through the SAME row core
-    # the frame_sample operator uses (sample_frames_real), so the
-    # codec path stays hash-gated end to end; output rows identical.
+    # synth → frame slice → checksum fused into ONE mapInPandas
+    # (guide §4: three chained Python stages would each run in their
+    # own worker, shipping every GIF blob JVM→Python→JVM twice more
+    # than needed, and with one Arrow batch per partition the
+    # downstream workers would sit blocked on the upstream's whole
+    # partition).  The frame slicing is the operator's own codec
+    # dispatch (sample_frames_real), so the codec path stays
+    # hash-gated end to end.
     def fused(batches):
         import numpy as np
 

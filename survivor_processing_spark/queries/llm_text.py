@@ -13,15 +13,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import load_table
 from ..functions.textstats import (
-    fingerprint_expr,
     lang_id_expr,
     quality_score_exprs,
     rolling_min_by_doc,
     subword_count_expr,
-    token_count_expr,
 )
 from ._registry import register
-
 
 
 @register(
@@ -91,19 +88,6 @@ FROM scores
 def lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     return d.select("doc_id", "lang", lang_id_expr(F.col("text")).alias("lang_guess"))
-
-
-# RETIRED r9 (paired with the q:content_fingerprint registration,
-# VERDICT r08 #2): q:doc_fingerprint — md5-of-sorted-distinct-tokens
-# per document + whitespace token count.  Carried by: the per-doc
-# sketch-fingerprint family by q:rolling_fingerprint (winnowing
-# rolling-hash min, same corpus pass), normalize-then-key exact
-# identity by q:exact_dedup_docs (the production use of a document
-# fingerprint), and table-level content equality by the new
-# q:content_fingerprint (queries/etl.py -> operators/fingerprint.py,
-# the multiset fingerprint production replays verify with).
-# fingerprint_expr/token_count_expr stay pinned bit-for-bit in
-# tests/test_textstats.py.  Accounting: ROTATION_r09.md.
 
 
 @register(

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..catalog import load_table
 from ..operators.cluster import kmeans_lloyd
-from ..operators.fuzzy import fuzzy_join, fuzzy_join_dist1
+from ..operators.fuzzy import fuzzy_join
 from ._registry import register
 
 
@@ -119,19 +119,6 @@ def funnel_stage_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- D9 at scale: guaranteed-recall fuzzy match ------------------------------
-
-
-# RETIRED r10 (paired with the q:pq_train_encode registration,
-# VERDICT r09 #2 pairing discipline): q:fuzzy_name_match — the
-# edit-distance-1 symmetric-delete reconciliation.  Carried by
-# q:fuzzy_name_match_dist2 (the GENERAL depth-2 operator
-# fuzzy_join, whose SymSpell guarantee subsumes depth 1 and whose
-# oracle is the same naive all-pairs levenshtein ground truth) and
-# by q:entity_resolution_cascade / q:entity_match_quarantine (the
-# D9 production consumers of dist-1 matching); the dedicated
-# fuzzy_join_dist1 path stays pinned in tests/test_fuzzy_property.py
-# (randomized recall-vs-naive equivalence).  Accounting:
-# ROTATION_r10.md.
 
 
 @register(

@@ -13,21 +13,6 @@ from pyspark.sql import DataFrame, SparkSession
 from ..catalog import load_table
 from ._registry import register
 
-# --- L4: JSON payload → typed columns --------------------------------------
-
-
-# RETIRED r13 (VERDICT r12 pairing discipline, paired with the
-# q:k_anonymity_stats registration): q:json_extract_payload — L4
-# JSON-string cells to typed columns via get_json_object.  Carried
-# by q:to_json_roundtrip (r10-green and in this round's window — its
-# gate embeds the IDENTICAL get_json_object(props, '$.k') extraction
-# before the L5 re-serialization, so a broken JSON path read flips
-# that gate's hash), and by q:variant_props_agg (r12-green — the
-# parse-once VARIANT path whose doc names this gate as its
-# string-path twin; the L4 §2 row re-anchors there).  Accounting:
-# ROTATION_r13.md.
-
-
 
 # --- L1: explode map-of-arrays → rows --------------------------------------
 

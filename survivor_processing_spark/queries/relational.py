@@ -141,19 +141,6 @@ def anti_join_new_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# RETIRED r11 (VERDICT r10 #1/#5 pairing discipline):
-# q:semi_join_running_entities — EXISTS via left_semi (reference
-# extract_helpers.py:24-57 check_season_status).  Carried by
-# q:anti_join_new_entities (hash-green r10 — the identical join
-# machinery over the identical tables with the opposite polarity:
-# Spark lowers left_semi and left_anti to the same hash join with a
-# semi/anti build flag) and q:intersect_except_sets (stays gated —
-# INTERSECT lowers to an aggregate + LEFT SEMI hash join, so the
-# semi path keeps a full value oracle of its own), plus
-# q:entity_match_quarantine (left_semi production consumer).
-# Accounting: ROTATION_r11.md.
-
-
 # --- E2/E3/E4/E5: grouped aggregate family ---------------------------------
 
 
@@ -262,19 +249,6 @@ def grouped_sum_all_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# RETIRED r11 (VERDICT r10 #1/#5 pairing discipline): q:distinct_dims
-# — SELECT DISTINCT over two dimension columns (reference
-# db_funcs.py:49 drop_duplicates, E9).  DISTINCT lowers to a
-# keys-only hash aggregate; that exact physical operator stays under
-# two full value oracles: q:intersect_except_sets (stays gated —
-# INTERSECT/EXCEPT lower to Distinct-aggregate + semi/anti join, so
-# the plan literally contains the retired query's HashAggregate) and
-# q:exact_dedup_docs (hash-green r10 — groupBy-dedup, the same
-# hash-aggregate dedup over a wider row).  A third gate on the same
-# keys-only aggregate added no oracle coverage.  Accounting:
-# ROTATION_r11.md.
-
-
 # --- F1-F4: window functions ----------------------------------------------
 
 
@@ -368,22 +342,6 @@ def group_max_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_linenumber",
         (F.max("l_linenumber").over(w) + 1 - F.col("l_linenumber")).alias("tc_number"),
     )
-
-
-# --- G1/G3: sort + top-k ----------------------------------------------------
-
-
-# RETIRED r11 (VERDICT r10 #1/#5 pairing discipline):
-# q:top_k_customers — global ORDER BY + LIMIT 25 (reference G1
-# sort_values.head).  Carried by q:topk_per_group_salted (stays
-# gated — the GENERAL per-group top-k whose single-group degenerate
-# case IS the global top-k, same deterministic value-desc/key-asc
-# tiebreak discipline, full value oracle) and q:window_rank_placement
-# (hash-green r10 — the ordering/ranking machinery over the same
-# table).  The TakeOrderedAndProject physical plan stays pinned by
-# tests/test_plans.py::test_topk_is_take_ordered_not_global_sort
-# (drives q:cosine_topk, hash-green r10).  Accounting:
-# ROTATION_r11.md.
 
 
 # --- H1/C8: union-by-name ---------------------------------------------------
@@ -484,20 +442,6 @@ def coalesce_cascade_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise("small")
         .alias("size_class"),
     )
-
-
-# --- beyond-reference: multi-level aggregation (ROLLUP) ---------------------
-
-
-# RETIRED r10 (paired with the q:ols_trend_exact registration,
-# VERDICT r09 #2 pairing discipline): q:rollup_multilevel_agg —
-# ROLLUP(returnflag, linestatus) with GROUPING() flags.  Carried by
-# q:grouping_sets_agg: ROLLUP/CUBE/GROUPING SETS all lower to the
-# SAME Expand + single hash-aggregate physical plan over the same
-# lineitem measures with the same GROUPING() disambiguation — the
-# identical argument that retired q:cube_agg in r9 (the r9 RETIRED
-# note in queries/analytics.py names both carriers; grouping_sets_agg
-# is the one that remains registered).  Accounting: ROTATION_r10.md.
 
 
 # --- beyond-reference: row-set INTERSECT / EXCEPT ---------------------------

@@ -67,32 +67,6 @@ def asof_join_keyed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- D5: as-of join, global dimension (broadcast interval strategy) ---------
 
 
-# RETIRED r10 (paired with the q:pq_adc_topk registration, VERDICT
-# r09 #2 pairing discipline): q:asof_join_broadcast_dim — backward
-# as-of to a small dimension via the broadcast interval rewrite
-# (reference reddit_transform.py:37-44).  Carried by
-# q:asof_join_keyed (the BACKWARD direction, hash-gated) and
-# q:asof_join_nearest_broadcast (the banded-broadcast machinery,
-# hash-gated); the backward×broadcast combination itself stays
-# pinned by the strategy-parametrized DuckDB-ASOF property tests
-# (tests/test_asof_property.py test_asof_matches_duckdb,
-# tests/test_asof.py test_asof_backward_semantics).  Accounting:
-# ROTATION_r10.md.
-
-
-# RETIRED r8 (VERDICT r07 #2, the named candidate): q:asof_join_
-# forward_broadcast — every axis it exercised stays gated by its
-# three siblings: the FORWARD direction by q:asof_join_forward_keyed
-# (same direction arithmetic, keyed), the BROADCAST banding by
-# q:asof_join_broadcast_dim (same zero-fact-shuffle plan, backward;
-# itself RETIRED r10, see above — broadcast banding is now carried
-# by q:asof_join_nearest_broadcast + the property tests), and the
-# banded-broadcast-with-direction composition by
-# q:asof_join_nearest_broadcast.  The forward×broadcast combination
-# itself stays covered by the DuckDB-ASOF property tests
-# (tests/test_asof.py).  Accounting: ROTATION_r08.md.
-
-
 @register(
     "asof_join_nearest_broadcast",
     doc="nearest-direction as-of (pd.merge_asof direction='nearest', "
@@ -291,19 +265,6 @@ def entity_match_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("doc_id").alias("sample_doc_id"),
         )
     )
-
-
-# RETIRED r12 (VERDICT r11 #1 pairing discipline):
-# q:entity_quarantine_roundtrip — D9 cascade residue round-tripped
-# through the B1 MERGE sink twice.  Carried by
-# q:entity_match_quarantine (registered, hash-green r11 — the SAME
-# cascade-residue quarantine surface under a value oracle),
-# q:merge_upsert_idempotent (the replayed-MERGE idempotence contract
-# this gate re-proved, under its own driver gate), and the
-# unit-level replay assertions tests/test_round6_ops.py
-# test_quarantine_merge_replay_idempotent.  Three driver gates on
-# the residue->MERGE->re-merge path added no oracle coverage beyond
-# those two.  Accounting: ROTATION_r12.md.
 
 
 # --- C7: schema sync against a target schema --------------------------------

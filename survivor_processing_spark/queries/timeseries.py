@@ -15,28 +15,11 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..catalog import load_table
-from ..operators.timeseries import resample_daily_ffill
 from ._registry import register
 
 
 def _dec(c: str):
     return F.col(c).cast("decimal(18,2)")
-
-
-# --- gap fill + forward fill -------------------------------------------------
-
-
-# RETIRED r12 (VERDICT r11 #1 pairing discipline, paired with the
-# q:interpolate_linear registration below): q:gap_fill_forward_fill
-# — calendar densify + forward fill.  Carried by
-# q:interpolate_linear (registered r12, hash-green — the SAME
-# keyed-series gap machinery, strictly harder semantics: forward
-# fill is interpolation's t0-only degenerate case, and the operator
-# family lives in the same operators/timeseries.py), by
-# q:cumulative_window_sums (the key-partitioned running-window
-# machinery the fill rides), and by the resample_daily_ffill unit
-# tests (tests/test_operators.py) which pin densify+ffill against a
-# pure-Python calendar model.  Accounting: ROTATION_r12.md.
 
 
 # --- behavioral: event-type transition matrix --------------------------------
@@ -111,24 +94,6 @@ def ntile_decile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max(_dec("c_acctbal")).cast("double").alias("max_bal"),
         )
     )
-
-
-# --- layout: Morton (z-order) keys -------------------------------------------
-
-
-# RETIRED r12 (VERDICT r11 #1 pairing discipline): q:zorder_morton_keys
-# — the bare Morton-interleave projection.  Carried by
-# q:snapshot_dml (registered r11, hash-green — its OPTIMIZE ZORDER
-# step EXECUTES zorder_snapshot, which range-partitions the table by
-# the identical operators/zorder.py zvalue() interleave: a wrong
-# Morton fold reorders the rewrite and flips that gate's per-version
-# hash), by q:build_zonemap (the min/max envelope machinery whose
-# tightening is z-ordering's entire point, with the
-# tests/test_round3_ops.py measurement pinning the tightening), and
-# by the zvalue bit-twiddling unit tests (tests/test_round3_ops.py)
-# against an arithmetic model.  A standalone projection gate on the
-# same shift/mask fold added no oracle coverage.  Accounting:
-# ROTATION_r12.md.
 
 
 # --- cohort retention --------------------------------------------------------

@@ -3,18 +3,13 @@
 The reference's only sink is a keyed upsert: write to a temp table,
 then ``INSERT … ON CONFLICT (keys) DO UPDATE SET col = excluded.col``
 (reference: helpers/load_helpers.py:4-39); every pipeline re-run is
-therefore idempotent (SURVEY.md §2.N3).  The engine's equivalent:
-
-* With Delta Lake (or Iceberg) on a cluster: ``MERGE INTO target
-  USING source ON keys WHEN MATCHED THEN UPDATE SET * WHEN NOT
-  MATCHED THEN INSERT *`` — that is the production path and the
-  one-liner this module would reduce to.
-* Here (vanilla Spark + parquet, no Delta in the container): the
-  classic union + window-dedup + atomic-swap overwrite.  Source rows
-  win over target rows on key collision (``_src_priority``); the
-  swap is staging-dir + rename so a failed job never corrupts the
-  table.  Scale note: the window partitions by the merge keys — the
-  same shuffle a MERGE's join would do; no driver-side data movement.
+therefore idempotent (SURVEY.md §2.N3).  The engine's equivalent over
+vanilla Spark + parquet is the union + window-dedup + atomic-swap
+overwrite in ``merge_upsert``.  Source rows win over target rows on
+key collision (``_src_priority``); the swap is staging-dir + rename
+so a failed job never corrupts the table.  Scale note: the window
+partitions by the merge keys — the same shuffle a MERGE's join would
+do; no driver-side data movement.
 
 Upsert key semantics preserved exactly, including the reference's
 fillna-on-keys behavior (K3: NULL key parts participate after a
@@ -37,17 +32,10 @@ from ..functions.localrel import local_rows_df
 class MergeTable:
     """A parquet-backed keyed table with MERGE upsert semantics."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        path: str,
-        keys: list[str],
-        partition_by: str | None = None,
-    ):
+    def __init__(self, spark: SparkSession, path: str, keys: list[str]):
         self.spark = spark
         self.path = path
         self.keys = keys
-        self.partition_by = partition_by
 
     def exists(self) -> bool:
         if not os.path.isdir(self.path):
@@ -61,12 +49,7 @@ class MergeTable:
         return self.spark.read.parquet(self.path)
 
     def merge(self, source: DataFrame) -> None:
-        if self.partition_by:
-            merge_upsert_partitioned(
-                self.spark, self.path, source, self.keys, self.partition_by
-            )
-        else:
-            merge_upsert(self.spark, self.path, source, self.keys)
+        merge_upsert(self.spark, self.path, source, self.keys)
 
 
 def _contains_map(dt) -> bool:
@@ -106,8 +89,9 @@ def merge_upsert(
     spark: SparkSession, target_path: str, source: DataFrame, keys: list[str]
 ) -> None:
     """Upsert ``source`` into the parquet table at ``target_path`` on
-    ``keys``.  Last-writer-wins per key (source beats target), ties
-    within the source resolved deterministically by key order."""
+    ``keys``.  Last-writer-wins per key (source beats target); ties
+    within the source go to the row with the lowest whole-row
+    xxhash64 (``_row_tiebreak``), so re-runs pick the same row."""
     table = MergeTable(spark, target_path, keys)
     # within-source duplicate keys resolve by a DETERMINISTIC
     # tiebreak (xxhash64 over the full row), not by whichever row a
@@ -142,138 +126,6 @@ def merge_upsert(
         .drop("_rn", "_src_priority", "_tie")
     )
     _atomic_overwrite(spark, merged, target_path)
-
-
-def merge_upsert_partitioned(
-    spark: SparkSession,
-    target_path: str,
-    source: DataFrame,
-    keys: list[str],
-    partition_by: str,
-) -> None:
-    """Partition-scoped MERGE: only partitions that the source
-    touches are read, merged, and rewritten — the 100 TB path (a
-    whole-table rewrite scales with the table; this scales with the
-    *delta*).  Requires ``partition_by`` to be functionally implied
-    by the merge keys (it is for every date/season-partitioned fact
-    here).  Uses dynamic partition overwrite, so untouched partition
-    directories are never listed, read, or replaced."""
-    # a NULL partition value would be unreachable by the isin()
-    # partition filter below but still REPLACED by the dynamic
-    # overwrite — unmatched target rows in the NULL partition would
-    # be silently deleted.  The documented contract is fill-before-
-    # merge (K3); enforce it instead of losing data.
-    if (
-        source.filter(F.col(partition_by).isNull()).limit(1).count() > 0
-    ):
-        raise ValueError(
-            f"source has NULL {partition_by!r} partition values — "
-            "fill partition keys before merging (K3 contract)"
-        )
-    table = MergeTable(spark, target_path, keys)
-    tiebreak = _row_tiebreak(source)
-    if not table.exists():
-        w0 = Window.partitionBy(*keys).orderBy(tiebreak)
-        (
-            source.withColumn("_rn", F.row_number().over(w0))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-            .write.mode("overwrite")
-            .partitionBy(partition_by)
-            .parquet(target_path)
-        )
-        return
-
-    # partitions present in the source — small distinct, broadcastable
-    src_parts = [
-        r[0] for r in source.select(partition_by).distinct().collect()
-    ]
-    target = spark.read.parquet(target_path).filter(
-        F.col(partition_by).isin(src_parts)
-    )
-    src = source.withColumn("_src_priority", F.lit(0)).withColumn(
-        "_tie", tiebreak
-    )
-    tgt = target.withColumn("_src_priority", F.lit(1)).withColumn(
-        "_tie", F.lit(0).cast("long")
-    )
-    w = Window.partitionBy(*keys).orderBy(
-        F.asc("_src_priority"), F.asc("_tie")
-    )
-    merged = (
-        src.unionByName(tgt, allowMissingColumns=True)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_src_priority", "_tie")
-    )
-    # the merged delta reads from target_path and overwrites it:
-    # materialize (lineage break) so the writer doesn't see itself as
-    # a reader; the checkpoint holds only the touched partitions
-    merged = merged.localCheckpoint(eager=True)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy(partition_by).parquet(
-            target_path
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-
-def delta_available() -> bool:
-    """True when delta-spark (Python bindings + JVM jars) is usable
-    in this session — the gate for the production MERGE INTO path."""
-    try:
-        import delta  # noqa: F401
-    except ImportError:
-        return False
-    return True
-
-
-def merge_upsert_delta(
-    spark: SparkSession, target_path: str, source: DataFrame, keys: list[str]
-) -> None:
-    """The production MERGE: ``MERGE INTO delta.`path` USING source
-    ON keys WHEN MATCHED UPDATE SET * WHEN NOT MATCHED INSERT *`` —
-    the exact one-liner the parquet fallback above emulates
-    (reference ON CONFLICT semantics, load_helpers.py:4-39).  Delta
-    handles conflict detection, file-level pruning on the join keys,
-    and atomicity; source-internal duplicates are pre-collapsed the
-    same way as the fallback so MATCHED rows are unambiguous.
-
-    Requires delta-spark (``delta_available()``); exercised by a
-    skip-marked test so the cluster path has CI shape even where the
-    jars are absent.  Cluster setup (the day-one one-liner, SCALE.md
-    env-limits): ``pip install delta-spark`` and build the session
-    with::
-
-        SparkSession.builder
-          .config("spark.jars.packages", "io.delta:delta-spark_2.13:4.0.0")
-          .config("spark.sql.extensions",
-                  "io.delta.sql.DeltaSparkSessionExtension")
-          .config("spark.sql.catalog.spark_catalog",
-                  "org.apache.spark.sql.delta.catalog.DeltaCatalog")
-    """
-    if not delta_available():
-        raise ModuleNotFoundError(
-            "delta-spark not installed; use merge_upsert (parquet "
-            "fallback) or install delta-spark on the cluster"
-        )
-    from delta.tables import DeltaTable
-
-    src = source.dropDuplicates(keys)
-    if not DeltaTable.isDeltaTable(spark, target_path):
-        src.write.format("delta").mode("overwrite").save(target_path)
-        return
-    tgt = DeltaTable.forPath(spark, target_path)
-    cond = " AND ".join(f"t.{k} <=> s.{k}" for k in keys)
-    (
-        tgt.alias("t")
-        .merge(src.alias("s"), cond)
-        .whenMatchedUpdateAll()
-        .whenNotMatchedInsertAll()
-        .execute()
-    )
 
 
 _TARGET_FILE_BYTES = 64 << 20  # ~64 MiB parquet output files (guide §6)
@@ -550,7 +402,7 @@ def _merge_into_snapshot_impl(
     # recorded key stats are planned with ZERO footer reads — at
     # 100 TB, reopening a million footers per merge costs more than
     # the rewrite it prunes; files from pre-stats commits fall back
-    # to a footer walk inside snapshot_zonemap (correct, slower).
+    # to a footer walk inside snapshot_zonemap_rows (correct, slower).
     # ONE log replay feeds both the envelopes and the bloom probe.
     rec = file_stats(table_dir)
     zrows = snapshot_zonemap_rows(table_dir, [key_col], recorded=rec)

@@ -17,11 +17,7 @@ html.parser for HTML — no third-party parsing libs needed), not
 stubs; only network access is injected.
 """
 
-from .binary import (  # noqa: F401
-    parse_binary_files,
-    read_binary_files,
-    with_filename_columns,
-)
+from .binary import parse_binary_files, read_binary_files  # noqa: F401
 from .docx import (  # noqa: F401
     CONFESSIONAL_SCHEMA,
     docx_paragraphs,

@@ -12,9 +12,8 @@ task parses a bounded batch of files — no driver-side loop.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterable, Iterator
+from collections.abc import Callable, Iterable
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -58,13 +57,3 @@ def parse_binary_files(
 
     cols = files.select("path", "content")
     return cols.mapInPandas(run, schema=schema)
-
-
-def with_filename_columns(df: DataFrame, pattern: str, names: list[str]) -> DataFrame:
-    """Derive partition-ish columns from the file name (reference
-    confessional_extract.py:50-68 parses ``(\\d+)x(\\d+)_ (.*)`` out of
-    each docx name): ``regexp_extract(path, pattern, i)`` per group."""
-    out = df
-    for i, n in enumerate(names, start=1):
-        out = out.withColumn(n, F.regexp_extract(F.col("path"), pattern, i))
-    return out

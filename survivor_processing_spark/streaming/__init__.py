@@ -4,12 +4,10 @@ from .incremental import (
     read_incremental,
     max_watermark,
     stream_events,
-    streaming_counts_query,
 )
 
 __all__ = [
     "read_incremental",
     "max_watermark",
     "stream_events",
-    "streaming_counts_query",
 ]

@@ -85,25 +85,3 @@ def stream_events(spark: SparkSession, sf_dir: str, watermark: str = "10 minutes
     if watermark is None:
         return raw
     return raw.withWatermark("ts", watermark)
-
-
-def streaming_counts_query(stream_df: DataFrame, window: str = "1 hour"):
-    """Tumbling-window counts per event type with late-data handling —
-    the standard watermark + windowed agg; state is bounded by the
-    watermark horizon."""
-    return (
-        stream_df.groupBy(
-            F.window("ts", window).alias("win"), F.col("event_type")
-        )
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum("value").alias("total_value"),
-        )
-        .select(
-            F.col("win.start").alias("window_start"),
-            F.col("win.end").alias("window_end"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )

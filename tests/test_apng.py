@@ -1,7 +1,7 @@
 """APNG stdlib codec: parse/slice roundtrips, per-frame pixel sums
 (closed form from synth_apng), still-PNG single-frame contract,
-timing from fcTL delays, corruption refusals, and the frame_sample
-real-mode dispatch."""
+timing from fcTL delays, corruption refusals, and the
+sample_frames_real codec dispatch."""
 
 from __future__ import annotations
 
@@ -9,11 +9,11 @@ import struct
 
 import pytest
 
+from media_fixtures import synth_apng
 from survivor_processing_spark.operators.multimodal import (
     apng_frames,
     apng_slice_frames,
     png_decode,
-    synth_apng,
     synth_gif,
     synth_png,
 )
@@ -152,51 +152,23 @@ def test_broken_sequence_refused():
     assert apng_frames(bytes(ba)) is None
 
 
-def test_frame_sample_dispatches_apng(spark):
-    import pandas as pd
-
+def test_frame_sample_dispatches_apng():
     from survivor_processing_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        frame_sample,
+        sample_frames_real,
     )
 
-    apng = synth_apng(5, 4, 3)
-
-    def synth(batches):
-        for _pdf in batches:
-            yield pd.DataFrame(
-                [(1, apng, None)],
-                columns=["asset_id", "media", "media_meta"],
-            )
-
-    media = spark.createDataFrame([(1,)], "doc_id long").mapInPandas(
-        synth, schema=MEDIA_SCHEMA
-    )
-    out = frame_sample(media, every_s=1.0, fake=False).collect()
-    assert [r["frame_idx"] for r in out] == [0, 1, 2]
-    for r in out:
-        w, h, nch, px = png_decode(bytes(r["frame"]))
+    out = sample_frames_real(synth_apng(5, 4, 3), every_s=1.0)
+    assert [idx for idx, _ts, _f in out] == [0, 1, 2]
+    for idx, _ts, frame in out:
+        w, h, nch, px = png_decode(frame)
         assert (w, h) == (5, 4)
-        assert sum(px) == _expected_sum(5, 4, r["frame_idx"])
+        assert sum(px) == _expected_sum(5, 4, idx)
 
 
-def test_unknown_codec_still_raises(spark):
-    import pandas as pd
-
+def test_unknown_codec_still_raises():
     from survivor_processing_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        frame_sample,
+        sample_frames_real,
     )
 
-    def synth(batches):
-        for _pdf in batches:
-            yield pd.DataFrame(
-                [(1, b"\x00\x00\x00\x18ftypmp42 fake mp4", None)],
-                columns=["asset_id", "media", "media_meta"],
-            )
-
-    media = spark.createDataFrame([(1,)], "doc_id long").mapInPandas(
-        synth, schema=MEDIA_SCHEMA
-    )
-    with pytest.raises(Exception, match="ffmpeg|NotImplemented"):
-        frame_sample(media, every_s=1.0, fake=False).collect()
+    with pytest.raises(NotImplementedError, match="ffmpeg"):
+        sample_frames_real(b"\x00\x00\x00\x18ftypmp42 fake mp4", every_s=1.0)

@@ -2,6 +2,9 @@
 clean failure on a bogus sf_dir, and cross-run hash stability of
 query outputs (instability = a missing window tiebreak column)."""
 
+import ast
+import os
+
 import pytest
 from pyspark.sql.utils import AnalysisException
 
@@ -84,3 +87,94 @@ def test_committed_sweep_covers_registry():
     sweep = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(sweep)
     assert sweep.check_committed(repo) == 0
+
+
+# Package defs that no production path reaches yet, kept on purpose.
+# Each names its owner; delete an entry once its def gains a
+# production caller or is removed (the test below fails on stale
+# entries so this list can only shrink).
+_UNREACHED_ALLOWLIST = {
+    "pipelines/warehouse.py:Warehouse": "ROADMAP item 6",
+    "pipelines/confessional.py:transform_confessional": "ROADMAP item 6",
+    "pipelines/contestant.py:transform_contestants": "ROADMAP item 6",
+    "pipelines/episode_stats.py:transform_episode_stats": "ROADMAP item 6",
+    "pipelines/episodes.py:transform_episodes": "ROADMAP item 6",
+    "pipelines/reddit.py:transform_reddit": "ROADMAP item 6",
+    "pipelines/season.py:transform_season": "ROADMAP item 6",
+    "functions/observe.py:observed_quality": "ROADMAP item 4",
+    "operators/snapshot.py:vacuum_orphans": "ROADMAP item 3",
+    "functions/derive.py:add_to_df":
+        "reference capability: column derivation",
+    "functions/derive.py:iterative_replace_null":
+        "reference capability: column derivation",
+    "sources/jdbc.py:pg_type_to_spark": "reference capability: Postgres I/O",
+    "sources/jdbc.py:partition_bounds": "reference capability: Postgres I/O",
+    "sources/jdbc.py:keyset_predicates": "reference capability: Postgres I/O",
+    "sources/jdbc.py:read_jdbc_table": "reference capability: Postgres I/O",
+    "sources/jdbc.py:write_jdbc_append": "reference capability: Postgres I/O",
+    "sources/html.py:fetch_pages": "reference capability: HTML crawl",
+    "catalog.py:register_views": "reference capability: SQL views",
+    "operators/retrieval.py:bm25_query_topk":
+        "float BM25 search, tests/test_retrieval.py",
+    "operators/bloom.py:bloom_filter_literal":
+        "test reference for bloom_filter_subquery",
+    "functions/textstats.py:rolling_hash_expr":
+        "test reference for rolling_min_by_doc",
+}
+
+
+def _parse(path: str) -> ast.Module:
+    with open(path) as f:
+        return ast.parse(f.read())
+
+
+def _referenced_names(node) -> set[str]:
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias) and n.asname:
+            out.add(n.name.rsplit(".", 1)[-1])
+    return out
+
+
+def test_no_package_function_is_test_only():
+    """Every top-level def in the package is reached from production
+    code: a Name, Attribute or ``import … as`` alias names it from the
+    package (outside the def itself and ``__init__`` re-exports),
+    ``tools/``, ``perfbench/``, ``bench.py`` or ``__spark_entry__.py``,
+    or it carries a decorator (``@register``).  Code that only tests
+    call has to go, or be listed with its owner above."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = os.path.join(repo, "survivor_processing_spark")
+
+    def py_files(root):
+        if root.endswith(".py"):
+            return [root]
+        return sorted(
+            os.path.join(d, f)
+            for d, _, fs in os.walk(root)
+            for f in fs
+            if f.endswith(".py")
+        )
+
+    defs, refs = set(), set()
+    for path in py_files(pkg):
+        rel = os.path.relpath(path, pkg)
+        for st in _parse(path).body:
+            if isinstance(st, (ast.FunctionDef, ast.ClassDef)):
+                defs.add(f"{rel}:{st.name}")
+                body = _referenced_names(st) - {st.name}
+                refs |= body | ({st.name} if st.decorator_list else set())
+            elif not (
+                rel.endswith("__init__.py") and isinstance(st, ast.ImportFrom)
+            ):
+                refs |= _referenced_names(st)
+    for extra in ("tools", "perfbench", "bench.py", "__spark_entry__.py"):
+        for path in py_files(os.path.join(repo, extra)):
+            refs |= _referenced_names(_parse(path))
+    unreached = {k for k in defs if k.split(":", 1)[1] not in refs}
+    assert sorted(unreached - set(_UNREACHED_ALLOWLIST)) == []
+    assert sorted(set(_UNREACHED_ALLOWLIST) - unreached) == []

@@ -10,8 +10,8 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from survivor_processing_spark.operators.fuzzy import (
+    deletion_variants,
     fuzzy_join,
-    fuzzy_join_dist1,
 )
 
 WORD = st.text(alphabet="abc", min_size=1, max_size=6)
@@ -46,7 +46,7 @@ def test_fuzzy_dist1_equals_bruteforce(spark, lefts, rights):
     )
     got = {
         (r["lid"], r["rid"], r["dist"])
-        for r in fuzzy_join_dist1(ldf, rdf, "lw", "rw", max_dist=1).collect()
+        for r in fuzzy_join(ldf, rdf, "lw", "rw", max_dist=1).collect()
     }
     want = {
         (li, ri, _lev(lw, rw))
@@ -90,8 +90,14 @@ def test_fuzzy_dist2_equals_bruteforce(spark, lefts, rights):
 
 
 def test_fuzzy_dist1_rejects_dist2(spark):
-    ldf = spark.createDataFrame([(1, "ab")], "lid int, lw string")
-    with pytest.raises(ValueError, match="max_dist"):
-        fuzzy_join_dist1(ldf, ldf, "lw", "lw", max_dist=2)
-    with pytest.raises(ValueError, match="max_dist"):
-        fuzzy_join(ldf, ldf, "lw", "lw", max_dist=3)
+    # the depth-1 join rejects a distance-2 pair the depth-2 join
+    # keeps; depths outside {1, 2} raise instead of under-returning
+    ldf = spark.createDataFrame([(1, "abcd")], "lid int, lw string")
+    rdf = spark.createDataFrame([(1, "abxy")], "rid int, rw string")
+    assert fuzzy_join(ldf, rdf, "lw", "rw", max_dist=1).count() == 0
+    assert fuzzy_join(ldf, rdf, "lw", "rw", max_dist=2).count() == 1
+    for bad in (0, 3):
+        with pytest.raises(ValueError, match="max_dist"):
+            fuzzy_join(ldf, ldf, "lw", "lw", max_dist=bad)
+        with pytest.raises(ValueError, match="max_dist"):
+            deletion_variants("lw", max_dist=bad)

@@ -164,14 +164,14 @@ def test_snapshot_replay_matches_reference(n_files, plan):
 def test_sq8_codes_partition_and_order_invariant(spark, rows, data):
     """SQ8 bounds are global aggregates and codes are pure per-row
     integer arithmetic — permuting rows or changing partitioning
-    cannot change any vector's codes."""
-    from survivor_processing_spark.operators.quantize import sq8_encode
+    cannot change any vector's code sum or reconstruction error."""
+    from survivor_processing_spark.operators.quantize import sq8_summary
 
     recs = [(i, v) for i, v in enumerate(rows)]
     df = spark.createDataFrame(recs, "vec_id long, embedding array<double>")
     base = {
-        r["vec_id"]: list(r["codes"])
-        for r in sq8_encode(df, dim=3).collect()
+        r["vec_id"]: (r["code_sum"], r["max_err2"])
+        for r in sq8_summary(df, dim=3).collect()
     }
     perm = data.draw(st.permutations(recs))
     parts = data.draw(st.integers(min_value=1, max_value=6))
@@ -179,8 +179,8 @@ def test_sq8_codes_partition_and_order_invariant(spark, rows, data):
         list(perm), "vec_id long, embedding array<double>"
     ).repartition(parts)
     again = {
-        r["vec_id"]: list(r["codes"])
-        for r in sq8_encode(df2, dim=3).collect()
+        r["vec_id"]: (r["code_sum"], r["max_err2"])
+        for r in sq8_summary(df2, dim=3).collect()
     }
     assert again == base
 

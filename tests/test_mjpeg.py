@@ -1,6 +1,6 @@
 """MJPEG AVI demux: synth→demux roundtrip with closed-form per-frame
-payload checksums, strh-vs-avih timing precedence, frame_sample
-dispatch, and refusal of torn containers / non-JPEG streams (the
+payload checksums, strh-vs-avih timing precedence, the
+sample_frames_real dispatch, and refusal of torn containers / non-JPEG streams (the
 compressed-codec case that still genuinely needs ffmpeg)."""
 
 from __future__ import annotations
@@ -9,11 +9,11 @@ import struct
 
 import pytest
 
+from media_fixtures import synth_mjpeg_avi
 from survivor_processing_spark.operators.multimodal import (
     avi_mjpeg_frames,
     avi_slice_frames,
     synth_gif,
-    synth_mjpeg_avi,
 )
 
 
@@ -75,34 +75,19 @@ def test_refusals():
     assert avi_mjpeg_frames(bytes(b)) is None
 
 
-def test_frame_sample_dispatches_avi(spark):
-    import pandas as pd
-
+def test_frame_sample_dispatches_avi():
     from survivor_processing_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        frame_sample,
+        sample_frames_real,
     )
 
-    avi = synth_mjpeg_avi(6, 4, 3, fps=2)
-
-    def synth(batches):
-        for _pdf in batches:
-            yield pd.DataFrame(
-                [(1, avi, None)],
-                columns=["asset_id", "media", "media_meta"],
-            )
-
-    media = spark.createDataFrame([(1,)], "doc_id long").mapInPandas(
-        synth, schema=MEDIA_SCHEMA
-    )
-    out = frame_sample(media, every_s=1.0, fake=False).collect()
-    assert [(r["frame_idx"], r["ts_s"]) for r in out] == [
+    out = sample_frames_real(synth_mjpeg_avi(6, 4, 3, fps=2), every_s=1.0)
+    assert [(idx, ts) for idx, ts, _f in out] == [
         (0, 0.0),
         (1, 0.5),
         (2, 1.0),
     ]
-    for r in out:
-        f = bytes(r["frame"])
+    for idx, _ts, f in out:
         assert f[:2] == b"\xff\xd8" and f[-2:] == b"\xff\xd9"
         i = f.find(b"\xff\xfe")
-        assert sum(f[i + 4 : i + 4 + 64]) == _payload_sum(r["frame_idx"])
+        assert sum(f[i + 4 : i + 4 + 64]) == _payload_sum(idx)
+

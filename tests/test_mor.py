@@ -587,29 +587,6 @@ def test_mor_upsert_then_purge_folds_everything(spark, tbl):
     assert _rows(spark, tbl) == pre
 
 
-def test_pruned_snapshot_scan_applies_dvs(spark, tbl):
-    """Review catch: the pruned range scan is a reader too — it must
-    anti-join live DVs like read_snapshot, or MOR-deleted rows
-    resurrect through the manifest-pruned path."""
-    from survivor_processing_spark.operators.snapshot import (
-        pruned_snapshot_scan,
-    )
-
-    delete_from_snapshot_mor(spark, tbl, "k", 40, 60)
-    got = sorted(
-        r["k"] for r in pruned_snapshot_scan(spark, tbl, "k", 30, 70).collect()
-    )
-    assert got == list(range(30, 40)) + list(range(61, 71))
-    # time travel through the pruned path still serves v1 raw
-    v1 = sorted(
-        r["k"]
-        for r in pruned_snapshot_scan(
-            spark, tbl, "k", 30, 70, version=1
-        ).collect()
-    )
-    assert v1 == list(range(30, 71))
-
-
 def test_table_changes_after_expiry_baseline(spark, tbl):
     """Review catch: an expiry baseline re-states adds WITH dv_adds
     covering them (a shape real commits forbid) and removes files
@@ -656,15 +633,13 @@ def test_table_changes_baseline_with_live_dvs_emits_live_rows_once(
 def test_mor_delete_and_read_on_evolved_table(spark, tbl):
     """Schema evolution × merge-on-read: after a widening, a MOR
     delete over pre-widening files must tombstone by position under
-    the EVOLVED schema, and every read — head, pruned, CDF — serves
-    the widened column as NULL for surviving pre-widening rows."""
+    the EVOLVED schema, and every read — head and range-filtered —
+    serves the widened column as NULL for surviving pre-widening
+    rows."""
     from survivor_processing_spark.operators.mor import (
         upsert_into_snapshot_mor,
     )
-    from survivor_processing_spark.operators.snapshot import (
-        pruned_snapshot_scan,
-        table_schema,
-    )
+    from survivor_processing_spark.operators.snapshot import table_schema
     from survivor_processing_spark.sinks.merge import merge_into_snapshot
 
     widened = spark.createDataFrame(
@@ -686,10 +661,12 @@ def test_mor_delete_and_read_on_evolved_table(spark, tbl):
     assert up["n_updated"] == 1
     got = {r["k"]: r["tag"] for r in read_snapshot(spark, tbl).collect()}
     assert got[39] == "upd"
-    # pruned range scan agrees with the head view
+    # a range-filtered read agrees with the head view
     pr = {
         r["k"]: r["tag"]
-        for r in pruned_snapshot_scan(spark, tbl, "k", 30, 70).collect()
+        for r in read_snapshot(spark, tbl)
+        .filter("k BETWEEN 30 AND 70")
+        .collect()
     }
     assert pr[39] == "upd" and 45 not in pr and pr[61] is None
 

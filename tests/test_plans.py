@@ -88,24 +88,9 @@ def test_grouped_agg_partial_map_side(spark):
     assert "partial_sum" in plan
 
 
-def _simhash_pairs_plan(spark) -> str:
-    # the simhash_near_pairs OPERATOR keeps its plan audit after its
-    # planted-recall driver row retired into q:simhash_portable_pairs
-    # (r10): the scan/aggregation properties pinned here belong to
-    # the operator, audited directly over the raw corpus
-    from survivor_processing_spark.catalog import load_table
-    from survivor_processing_spark.operators.dedup import simhash_near_pairs
-
-    docs = load_table(spark, SF, "documents")
-    df = simhash_near_pairs(
-        docs, "text", "doc_id", max_hamming=3, max_posting=1000, n_chunks=4
-    )
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def test_simhash_partial_aggregation_no_python_hot_path(spark):
-    plan = _simhash_pairs_plan(spark)
-    assert "partial_sum" in plan  # 64 vote sums combine map-side
+    plan = plan_of(spark, "simhash_portable_pairs")
+    assert "partial_sum" in plan  # the lane vote sums combine map-side
     # signature + bucketing + verify are all JVM expressions
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
@@ -148,12 +133,6 @@ def test_lsh_candidates_are_join_free_posting_lists(spark):
     cands = lsh_candidate_pairs(minhash_signatures(docs, "text", "doc_id"))
     plan = cands._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan  # no SortMergeJoin/BroadcastHashJoin/NLJ
-    assert plan.count("Scan parquet") == 1
-
-
-def test_simhash_pairs_join_free_single_scan(spark):
-    plan = _simhash_pairs_plan(spark)
-    assert "Join" not in plan
     assert plan.count("Scan parquet") == 1
 
 

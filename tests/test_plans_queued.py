@@ -450,9 +450,9 @@ def test_stream_interval_join_is_hash_partitioned_not_cartesian(spark):
 
 
 def test_sq8_encode_is_shuffle_free_projection(spark):
-    from survivor_processing_spark.operators.quantize import sq8_encode
+    from survivor_processing_spark.operators.quantize import sq8_summary
 
-    df = sq8_encode(_emb(spark), dim=64)
+    df = sq8_summary(_emb(spark), dim=64)
     plan = _plan(df)
     # after the dim-sized bounds collect, the encode itself is one
     # codegen'd projection over the scan: no shuffle, no Python

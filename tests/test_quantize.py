@@ -1,5 +1,6 @@
 """int8 scalar quantization: pure-Python reference equality for
-bounds/codes, the exact-integer error bound (2·err ≤ max span + 1),
+bounds and per-vector code sums / errors, the exact-integer error
+bound (2·err ≤ max span + 1),
 codes' exact cross-engine hash (Spark == generated DuckDB oracle on
 the sf0.001 embeddings), constant-dimension and dirty-vector
 handling."""
@@ -11,7 +12,6 @@ import pytest
 
 from survivor_processing_spark.operators.quantize import (
     sq8_bounds,
-    sq8_encode,
     sq8_summary,
     sq8_summary_oracle,
 )
@@ -51,10 +51,19 @@ def test_codes_match_python_reference(spark):
     )
     xq, mn, span, want = _ref_codes(vecs, 3)
     got = {
-        r["vec_id"]: list(r["codes"])
-        for r in sq8_encode(df, dim=3).collect()
+        r["vec_id"]: (r["code_sum"], r["max_err2"])
+        for r in sq8_summary(df, dim=3).collect()
     }
-    assert got == {i: want[i] for i in range(3)}
+    assert got == {
+        i: (
+            sum(want[i]),
+            max(
+                abs(510 * (xq[i][d] - mn[d]) - 2 * want[i][d] * span[d])
+                for d in range(3)
+            ),
+        )
+        for i in range(3)
+    }
     assert sq8_bounds(df, "embedding", 3) == (
         mn,
         [m + s for m, s in zip(mn, span)],
@@ -99,7 +108,7 @@ def test_dirty_vectors_quarantined(spark):
         ],
         "vec_id long, embedding array<double>",
     )
-    got = sorted(r["vec_id"] for r in sq8_encode(df, dim=2).collect())
+    got = sorted(r["vec_id"] for r in sq8_summary(df, dim=2).collect())
     assert got == [1, 5]
 
 
@@ -108,7 +117,7 @@ def test_no_clean_vectors_raises(spark):
         [(1, None)], "vec_id long, embedding array<double>"
     )
     with pytest.raises(ValueError, match="no clean vectors"):
-        sq8_encode(df, dim=2)
+        sq8_summary(df, dim=2)
 
 
 def test_summary_matches_duckdb_oracle_sf0001(spark):

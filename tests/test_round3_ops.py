@@ -4,11 +4,13 @@ deterministic k-means."""
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 
 from survivor_processing_spark.operators.cdc import apply_changelog
 from survivor_processing_spark.operators.cluster import kmeans_lloyd
-from survivor_processing_spark.operators.fuzzy import fuzzy_join_dist1
+from survivor_processing_spark.operators.fuzzy import fuzzy_join
 from survivor_processing_spark.operators.partial_agg import (
     merge_agg_states,
     partial_agg_state,
@@ -89,7 +91,7 @@ def test_fuzzy_dist1_complete_recall(spark):
         ],
         "did int, d string",
     )
-    pairs = fuzzy_join_dist1(dirty, clean, "d", "c", max_dist=1)
+    pairs = fuzzy_join(dirty, clean, "d", "c", max_dist=1)
     got = {(r["did"], r["cid"]) for r in pairs.collect()}
     assert {(101, 1), (102, 2), (103, 3), (104, 3)} <= got
     assert not any(d == 105 for d, _ in got)
@@ -101,7 +103,7 @@ def test_fuzzy_pairs_are_unique(spark):
     # many shared deletion variants must not duplicate a pair
     clean = spark.createDataFrame([(1, "aaaa")], "cid int, c string")
     dirty = spark.createDataFrame([(9, "aaa")], "did int, d string")
-    pairs = fuzzy_join_dist1(dirty, clean, "d", "c", max_dist=1).collect()
+    pairs = fuzzy_join(dirty, clean, "d", "c", max_dist=1).collect()
     assert len(pairs) == 1
 
 
@@ -178,12 +180,19 @@ def test_kmeans_deterministic(spark):
 
 
 def test_zorder_write_tightens_rowgroup_stats(spark, tmp_path):
-    """A z-ordered rewrite must give materially narrower per-row-group
-    min/max ranges on BOTH dimensions than the unsorted layout —
-    that narrowing IS the data-skipping win."""
+    """A z-ordered rewrite (OPTIMIZE ZORDER over a snapshot table)
+    must give materially narrower per-row-group min/max ranges on
+    BOTH dimensions than the unsorted layout — that narrowing IS the
+    data-skipping win."""
+    import glob
+
     import pyarrow.parquet as pq
 
-    from survivor_processing_spark.operators.zorder import zorder_write
+    from survivor_processing_spark.operators.snapshot import (
+        init_snapshot,
+        snapshot_files,
+        zorder_snapshot,
+    )
 
     n = 4096
     df = spark.range(n).select(
@@ -194,13 +203,15 @@ def test_zorder_write_tightens_rowgroup_stats(spark, tmp_path):
     # unsorted baseline: shuffle rows round-robin so neither column is
     # accidentally clustered, one file/row group per partition
     df.repartition(4).write.parquet(plain)
-    zorder_write(df, zed, "a", "b", bits=12, n_files=16)
+    init_snapshot(spark, zed, df)
+    zorder_snapshot(spark, zed, "a", "b", n_files=16, bits=12)
 
-    def avg_span(path, col):
-        import glob
+    plain_files = glob.glob(f"{plain}/*.parquet")
+    zed_files = [os.path.join(zed, f) for f in snapshot_files(zed)]
 
+    def avg_span(files, col):
         spans, total = [], 0
-        for f in glob.glob(f"{path}/*.parquet"):
+        for f in files:
             md = pq.ParquetFile(f).metadata
             for rg in range(md.num_row_groups):
                 g = md.row_group(rg)
@@ -214,66 +225,8 @@ def test_zorder_write_tightens_rowgroup_stats(spark, tmp_path):
 
     # plain layout: every row group spans ~the full domain of both
     # columns; z-order: both dimensions should tighten markedly
-    assert avg_span(zed, "a") < avg_span(plain, "a") * 0.5
-    assert avg_span(zed, "b") < avg_span(plain, "b") * 0.5
-
-
-# --- gap fill ---------------------------------------------------------------
-
-
-def test_resample_ffill_semantics(spark):
-    from survivor_processing_spark.operators.timeseries import (
-        resample_daily_ffill,
-    )
-
-    daily = spark.createDataFrame(
-        [
-            (1, "2024-01-02", 10.0),
-            (1, "2024-01-04", 40.0),
-            (2, "2024-01-01", 5.0),
-        ],
-        "k int, day string, v double",
-    ).select("k", F.col("day").cast("date").alias("day"), "v")
-    out = resample_daily_ffill(
-        daily, ["k"], "day", ["v"], "2024-01-01", "2024-01-05"
-    )
-    rows = {
-        (r["k"], str(r["day"])): (r["v"], r["was_gap"]) for r in out.collect()
-    }
-    assert len(rows) == 10  # 2 keys x 5 days
-    assert rows[(1, "2024-01-01")] == (None, True)  # before first obs
-    assert rows[(1, "2024-01-02")] == (10.0, False)
-    assert rows[(1, "2024-01-03")] == (10.0, True)  # carried forward
-    assert rows[(1, "2024-01-04")] == (40.0, False)
-    assert rows[(1, "2024-01-05")] == (40.0, True)
-    assert rows[(2, "2024-01-05")] == (5.0, True)
-
-
-def test_resample_ffill_present_null_value_not_gap(spark):
-    """A genuinely PRESENT day whose value column is NULL must read
-    was_gap = false (the r7 ADVICE finding: deriving was_gap from
-    value-NULLness misflagged it) — and the fill still carries the
-    prior value across it."""
-    from survivor_processing_spark.operators.timeseries import (
-        resample_daily_ffill,
-    )
-
-    daily = spark.createDataFrame(
-        [
-            (1, "2024-01-01", 10.0),
-            (1, "2024-01-02", None),  # present, value NULL
-        ],
-        "k int, day string, v double",
-    ).select("k", F.col("day").cast("date").alias("day"), "v")
-    out = resample_daily_ffill(
-        daily, ["k"], "day", ["v"], "2024-01-01", "2024-01-03"
-    )
-    rows = {
-        str(r["day"]): (r["v"], r["was_gap"]) for r in out.collect()
-    }
-    assert rows["2024-01-01"] == (10.0, False)
-    assert rows["2024-01-02"] == (10.0, False)  # present, not a gap
-    assert rows["2024-01-03"] == (10.0, True)
+    assert avg_span(zed_files, "a") < avg_span(plain_files, "a") * 0.5
+    assert avg_span(zed_files, "b") < avg_span(plain_files, "b") * 0.5
 
 
 def test_zvalue_matches_python_interleave(spark):

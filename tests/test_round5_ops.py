@@ -1,5 +1,5 @@
 """Round-5 additions: auto-sized Bloom filters, the real HTTP REST
-fetcher, guarded-PIL resize, quarantine inspection, exact-config IVF."""
+fetcher, the stdlib PNG codec, quarantine inspection, exact-config IVF."""
 
 from __future__ import annotations
 
@@ -14,11 +14,6 @@ import pytest
 from survivor_processing_spark.operators.bloom import (
     auto_num_bits,
     bloom_semi_join,
-)
-from survivor_processing_spark.operators.multimodal import (
-    pil_available,
-    resize_media,
-    synth_png,
 )
 from survivor_processing_spark.queries import REGISTRY
 from survivor_processing_spark.sources.rest import (
@@ -311,34 +306,7 @@ def test_fetch_pages_distributed_crawl(spark, page_server):
     assert winners == {"alpha": "Alice won", "beta": "Bob won"}
 
 
-# --- guarded-PIL resize -----------------------------------------------------
-
-
-def _media_df(spark):
-    rows = [(1, synth_png(8, 6), ("image/png", 8, 6, None)),
-            (2, b"not an image", (None, None, None, None))]
-    return spark.createDataFrame(
-        rows,
-        "asset_id long, media binary, "
-        "media_meta struct<mime:string,width:int,height:int,duration_s:double>",
-    )
-
-
-@pytest.mark.skipif(not pil_available(), reason="Pillow not installed")
-def test_resize_media_real_pil(spark):
-    """With Pillow present, fake=False really resamples: output
-    decodes to the target dimensions; undecodable blobs quarantine
-    (media NULL) instead of failing the task."""
-    import io
-
-    from PIL import Image
-
-    out = {r.asset_id: r for r in
-           resize_media(_media_df(spark), 4, 3, fake=False).collect()}
-    img = Image.open(io.BytesIO(bytes(out[1].media)))
-    assert img.size == (4, 3)
-    assert out[1].media_meta.width == 4 and out[1].media_meta.height == 3
-    assert out[2].media is None and out[2].media_meta.width is None
+# --- stdlib PNG codec -------------------------------------------------------
 
 
 def test_png_codec_roundtrip_and_filters():
@@ -437,35 +405,28 @@ def test_png_codec_roundtrip_property():
     check()
 
 
-@pytest.mark.skipif(pil_available(), reason="Pillow installed: PIL path active")
-def test_resize_media_stdlib_png_path(spark):
-    """Without Pillow the real path still REALLY resizes PNGs via the
-    stdlib codec: output parses to the target dimensions and samples
-    the expected source pixels; non-PNG blobs quarantine."""
+def test_resize_media_stdlib_png_path():
+    """The stdlib codec REALLY resizes PNGs: output parses to the
+    target dimensions and samples the expected source pixels;
+    non-PNG blobs are refused."""
     from survivor_processing_spark.operators.multimodal import (
         parse_media_header,
         png_decode,
         png_encode,
+        png_resize_nn,
     )
 
     w, h = 8, 6
     px = bytes(((x * 37 + y * 11) & 0xFF) for y in range(h) for x in range(w))
-    rows = [(1, png_encode(w, h, 1, px), ("image/png", w, h, None)),
-            (2, b"not an image", (None, None, None, None))]
-    df = spark.createDataFrame(
-        rows,
-        "asset_id long, media binary, "
-        "media_meta struct<mime:string,width:int,height:int,duration_s:double>",
-    )
-    out = {r.asset_id: r for r in resize_media(df, 4, 3, fake=False).collect()}
-    blob = bytes(out[1].media)
+    blob = png_resize_nn(png_encode(w, h, 1, px), 4, 3)
     assert parse_media_header(blob) == ("image/png", 4, 3, None)
     _, _, _, small = png_decode(blob)
     want = bytes(px[(y * 6 // 3) * w + (x * 8 // 4)]
                  for y in range(3) for x in range(4))
     assert small == want
-    assert out[1].media_meta.width == 4 and out[1].media_meta.mime == "image/png"
-    assert out[2].media is None and out[2].media_meta.width is None
+    with pytest.raises(ValueError, match="not a PNG"):
+        png_resize_nn(b"not an image", 4, 3)
+
 
 
 # --- quarantine inspection + exact IVF --------------------------------------

@@ -159,39 +159,32 @@ def test_wav_slice_boundaries_and_reencode():
     assert total == vals  # concatenated slices reproduce the input
 
 
-def test_frame_sample_real_wav_and_video_guard(spark):
-    from survivor_processing_spark.operators.multimodal import frame_sample
-
-    media = spark.createDataFrame(
-        [(1, synth_wav(1200, 800), None)],
-        "asset_id long, media binary, media_meta struct<mime:string,"
-        "width:int,height:int,duration_s:double>",
+def test_frame_sample_real_wav_and_video_guard():
+    from survivor_processing_spark.operators.multimodal import (
+        sample_frames_real,
     )
-    out = frame_sample(media, every_s=0.5, fake=False).collect()
+
+    out = sample_frames_real(synth_wav(1200, 800), every_s=0.5)
     # 1200 samples @800 Hz = 1.5 s -> 3 frames of 400
-    assert [(r["frame_idx"], r["ts_s"]) for r in out] == [
+    assert [(idx, ts) for idx, ts, _f in out] == [
         (0, 0.0), (1, 0.5), (2, 1.0)
     ]
-    video = spark.createDataFrame(
-        [(2, b"\x00\x01\x02not-audio", None)],
-        "asset_id long, media binary, media_meta struct<mime:string,"
-        "width:int,height:int,duration_s:double>",
-    )
-    with pytest.raises(Exception, match="ffmpeg|NotImplemented"):
-        frame_sample(video, every_s=0.5, fake=False).collect()
+    with pytest.raises(NotImplementedError, match="ffmpeg"):
+        sample_frames_real(b"\x00\x01\x02not-audio", every_s=0.5)
 
 
-# --- IVF recall floor (r7 gating machinery, built + tested in r6) -----------
+# --- IVF recall floor -------------------------------------------------------
 
 
 def test_ivf_recall_bound(spark, sf_dir):
+    from test_round7_ops import _ivf_recall_bound
+
     from survivor_processing_spark.catalog import load_table
-    from survivor_processing_spark.operators.similarity import ivf_recall_bound
 
     e = load_table(spark, sf_dir, "embeddings")
     q = [r for r in e.limit(1).collect()][0]["embedding"]
     query = [float(x) for x in q]
-    row = ivf_recall_bound(
+    row = _ivf_recall_bound(
         e, query, k=5, n_centroids=8, n_probe=8, min_recall=1.0
     ).collect()[0]
     # n_probe = n_centroids scans everything -> recall is exactly 1

@@ -427,12 +427,12 @@ def test_snapshot_zonemap_log_first_no_footer_reads(spark, table_dir):
     works after the data file's footer is destroyed — the proof no
     footer read happens on the fast path."""
     from survivor_processing_spark.operators.snapshot import (
-        snapshot_zonemap,
+        snapshot_zonemap_rows,
         stats_for_files,
     )
     from survivor_processing_spark.operators.zonemap import (
         build_zonemap,
-        prune_files,
+        prune_file_rows,
     )
 
     _write(table_dir, "s0.parquet", list(range(0, 50)))
@@ -447,23 +447,22 @@ def test_snapshot_zonemap_log_first_no_footer_reads(spark, table_dir):
             table_dir, ["s0.parquet", "s1.parquet"], ["k"]
         ),
     )
-    zm = snapshot_zonemap(spark, table_dir, ["k"])
-    assert sorted(map(tuple, zm.collect())) == footer
-    assert prune_files(zm, "k", 0, 10) == ["s0.parquet"]
+    zm = snapshot_zonemap_rows(table_dir, ["k"])
+    assert sorted(zm) == footer
+    assert prune_file_rows(zm, "k", 0, 10) == ["s0.parquet"]
     # fast-path proof: truncate a data file's footer; the log-first
     # manifest still serves its envelope (a footer walk would raise)
     p = os.path.join(table_dir, "s1.parquet")
     with open(p, "r+b") as f:
         f.truncate(8)
-    zm2 = snapshot_zonemap(spark, table_dir, ["k"])
-    assert sorted(map(tuple, zm2.collect())) == footer
+    assert sorted(snapshot_zonemap_rows(table_dir, ["k"])) == footer
     with pytest.raises(Exception):
         build_zonemap(spark, table_dir, ["k"], files=["s1.parquet"]).collect()
 
 
 def test_snapshot_zonemap_mixed_log_falls_back(spark, table_dir):
     from survivor_processing_spark.operators.snapshot import (
-        snapshot_zonemap,
+        snapshot_zonemap_rows,
         stats_for_files,
     )
     from survivor_processing_spark.operators.zonemap import build_zonemap
@@ -476,9 +475,7 @@ def test_snapshot_zonemap_mixed_log_falls_back(spark, table_dir):
         adds=["new.parquet"],
         stats=stats_for_files(table_dir, ["new.parquet"], ["k"]),
     )
-    got = sorted(
-        map(tuple, snapshot_zonemap(spark, table_dir, ["k"]).collect())
-    )
+    got = sorted(snapshot_zonemap_rows(table_dir, ["k"]))
     want = sorted(
         map(tuple, build_zonemap(spark, table_dir, ["k"]).collect())
     )
@@ -524,28 +521,6 @@ def test_compact_snapshot_records_stats(spark, table_dir):
     rec = file_stats(table_dir)
     (name,) = out["adds"]
     assert rec[name]["k"]["vmin"] == "0" and rec[name]["k"]["vmax"] == "24"
-
-
-def test_pruned_snapshot_scan_time_travel_and_skipping(spark, table_dir):
-    from survivor_processing_spark.operators.snapshot import (
-        pruned_snapshot_scan,
-        stats_for_files,
-    )
-
-    _write(table_dir, "lo.parquet", list(range(0, 100)))
-    _write(table_dir, "hi.parquet", list(range(100, 200)))
-    commit_version(
-        table_dir,
-        adds=["lo.parquet", "hi.parquet"],
-        stats=stats_for_files(table_dir, ["lo.parquet", "hi.parquet"], ["k"]),
-    )
-    commit_version(table_dir, removes=["lo.parquet"])
-    # head: lo-range rows are GONE even though the range targets them
-    assert pruned_snapshot_scan(spark, table_dir, "k", 0, 50).count() == 0
-    # v1 time travel: same predicate finds them, scheduling only lo
-    df = pruned_snapshot_scan(spark, table_dir, "k", 0, 50, version=1)
-    assert df.count() == 51
-    assert all("lo.parquet" in f for f in df.inputFiles())
 
 
 def test_merge_plans_log_first_without_touching_untouched_footers(

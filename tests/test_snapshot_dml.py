@@ -158,9 +158,9 @@ def test_delete_failed_commit_rolls_back_files(spark, table_dir, monkeypatch):
 
 def test_zorder_snapshot_tightens_pruning(spark, table_dir):
     from survivor_processing_spark.operators.snapshot import (
-        snapshot_zonemap,
+        snapshot_zonemap_rows,
     )
-    from survivor_processing_spark.operators.zonemap import prune_files
+    from survivor_processing_spark.operators.zonemap import prune_file_rows
 
     # round-robin layout: every file's [vmin, vmax] on BOTH columns
     # spans the whole domain, so pruning keeps everything.  Power-of-
@@ -181,8 +181,8 @@ def test_zorder_snapshot_tightens_pruning(spark, table_dir):
             os.path.join(table_dir, f"rr{i}.parquet"),
         )
     commit_version(table_dir, adds=[f"rr{i}.parquet" for i in range(files)])
-    zm_before = snapshot_zonemap(spark, table_dir, ["a"])
-    kept_before = prune_files(zm_before, "a", 0, n // 8)
+    zm_before = snapshot_zonemap_rows(table_dir, ["a"])
+    kept_before = prune_file_rows(zm_before, "a", 0, n // 8)
     assert len(kept_before) == files  # round-robin defeats pruning
 
     before = sorted(
@@ -200,13 +200,13 @@ def test_zorder_snapshot_tightens_pruning(spark, table_dir):
     assert after == before
     # the SAME range predicate now schedules strictly fewer files,
     # planned log-first from the stats the commit recorded
-    zm_after = snapshot_zonemap(spark, table_dir, ["a"])
-    kept_after = prune_files(zm_after, "a", 0, n // 8)
+    zm_after = snapshot_zonemap_rows(table_dir, ["a"])
+    kept_after = prune_file_rows(zm_after, "a", 0, n // 8)
     assert len(kept_after) < files
     # and the b dimension is ALSO tighter than round-robin (z-curve
     # property: both interleaved dimensions localize)
-    zb = snapshot_zonemap(spark, table_dir, ["b"])
-    assert len(prune_files(zb, "b", 0, n // 8)) < files
+    zb = snapshot_zonemap_rows(table_dir, ["b"])
+    assert len(prune_file_rows(zb, "b", 0, n // 8)) < files
     # time travel keeps serving the pre-optimize layout
     assert snapshot_files(table_dir, 1) == sorted(
         f"rr{i}.parquet" for i in range(files)
@@ -450,7 +450,7 @@ def test_dml_on_evolved_column_tolerates_prewidening_files(spark, table_dir):
     unprunable, not crash on the missing footer entry — their rows
     are NULL on the evolved column, match nothing, and survive."""
     from survivor_processing_spark.operators.snapshot import (
-        snapshot_zonemap,
+        snapshot_zonemap_rows,
     )
     from survivor_processing_spark.sinks.merge import merge_into_snapshot
 
@@ -462,8 +462,8 @@ def test_dml_on_evolved_column_tolerates_prewidening_files(spark, table_dir):
     merge_into_snapshot(spark, table_dir, wide, "k", allow_evolution=True)
     # manifest on the EVOLVED column: the pre-widening file shows a
     # NULL-stat (unprunable) row instead of raising
-    zm = snapshot_zonemap(spark, table_dir, ["tag"])
-    stats = {r["file"]: r["vmin"] for r in zm.collect()}
+    zm = snapshot_zonemap_rows(table_dir, ["tag"])
+    stats = {r[0]: r[3] for r in zm}
     assert any(v is None for v in stats.values())
     # delete on the evolved column: only the row that HAS tag=100
     out = delete_from_snapshot(spark, table_dir, "tag", 100, 100)
@@ -502,35 +502,6 @@ def test_vacuum_reclaims_stranded_claim_tmps(spark, table_dir):
         f.write("{}")
     assert vacuum_orphans(table_dir, grace_seconds=3600.0) == []
     assert os.path.exists(stranded)
-
-
-def test_pruned_scan_serves_evolved_schema(spark, tmp_path):
-    """Review catch: the manifest-pruned range scan must read with
-    the logged evolved schema like every other reader — a surviving
-    pre-widening file must serve the new column as NULL, never let a
-    narrow footer win the inference and drop it."""
-    import pyspark.sql.functions as F
-
-    from survivor_processing_spark.operators.snapshot import (
-        commit_version,
-        pruned_snapshot_scan,
-        stats_for_files,
-    )
-    from survivor_processing_spark.sinks.merge import merge_into_snapshot
-
-    d = str(tmp_path)
-    _write(d, "a.parquet", list(range(0, 10)))
-    commit_version(
-        d, adds=["a.parquet"], stats=stats_for_files(d, ["a.parquet"], ["k"])
-    )
-    src = spark.createDataFrame(
-        [(100, 1.0, "x")], "k long, amt double, tag string"
-    )
-    merge_into_snapshot(spark, d, src, "k", allow_evolution=True)
-    out = pruned_snapshot_scan(spark, d, "k", 0, 5)
-    assert "tag" in out.columns
-    rows = out.collect()
-    assert len(rows) == 6 and all(r["tag"] is None for r in rows)
 
 
 def test_zorder_never_commits_empty_parts(spark, tmp_path):

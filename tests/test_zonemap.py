@@ -171,7 +171,12 @@ def test_zorder_layout_makes_zonemaps_pay_on_both_dims(spark):
 
     import pyspark.sql.functions as F
 
-    from survivor_processing_spark.operators.zorder import zorder_write
+    from survivor_processing_spark.operators.snapshot import (
+        init_snapshot,
+        read_snapshot,
+        snapshot_files,
+        zorder_snapshot,
+    )
 
     df = (
         spark.range(0, 4096)
@@ -184,11 +189,12 @@ def test_zorder_layout_makes_zonemaps_pay_on_both_dims(spark):
     d_z = tempfile.mkdtemp()
     d_r = tempfile.mkdtemp()
     try:
-        zorder_write(df, d_z, "a", "b", bits=8, n_files=16)
+        init_snapshot(spark, d_z, df)
+        zorder_snapshot(spark, d_z, "a", "b", n_files=16, bits=8)
         df.repartition(16).write.mode("overwrite").parquet(d_r)
         pruned = {}
-        for d in (d_z, d_r):
-            zm = build_zonemap(spark, d, ["a", "b"])
+        for d, files in ((d_z, snapshot_files(d_z)), (d_r, None)):
+            zm = build_zonemap(spark, d, ["a", "b"], files=files)
             total = len(prune_files(zm, "a", -1, 10**9))
             kept_a = len(prune_files(zm, "a", 0, 63))
             kept_b = len(prune_files(zm, "b", 0, 63))
@@ -198,14 +204,14 @@ def test_zorder_layout_makes_zonemaps_pay_on_both_dims(spark):
         assert ar == tr and br == tr  # random layout: nothing skips
         assert az <= tz // 2 and bz <= tz // 2  # z-order: both dims
         # and pruning never changes results, layout notwithstanding
-        zm = build_zonemap(spark, d_z, ["a"])
+        zm = build_zonemap(spark, d_z, ["a"], files=snapshot_files(d_z))
         got = sorted(
             (r["a"], r["b"])
             for r in pruned_scan(spark, d_z, zm, "a", 0, 63).collect()
         )
         want = sorted(
             (r["a"], r["b"])
-            for r in spark.read.parquet(d_z)
+            for r in read_snapshot(spark, d_z)
             .filter("a BETWEEN 0 AND 63")
             .collect()
         )
