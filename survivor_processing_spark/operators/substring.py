@@ -55,8 +55,8 @@ are distinct per doc after the hash join), and
 :func:`substring_spans_oracle` / :func:`substring_clean_oracle`
 mechanically generate the DuckDB replay from the same parameters.
 tests/test_substring.py pins Spark == DuckDB on fixed, sf0.001, and
-randomized corpora, and tools/fuzz_portables.py carries a
-planted-boilerplate fuzz family.
+randomized corpora (planted boilerplate, within-doc repeats, random
+n and min_count; spans and cleaned text).
 
 Removal semantics: EVERY occurrence of a duplicated n-gram is
 removed (the paper notes dropping all copies of duplicated spans is

@@ -618,8 +618,8 @@ def sliding_range_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     "in-engine product grows past the documented int64 envelope "
     "(float regr_slope differs at the ulp level across engines — a "
     "value-hash poison this recipe removes).  Oracle EMITTED by "
-    "ols_trend_oracle from the same parameters (fuzzed in "
-    "tools/fuzz_portables.py `ols`)",
+    "ols_trend_oracle from the same parameters (randomized in "
+    "tests/test_regression.py::test_cross_engine_random_scales)",
     oracle=_ols_oracle(
         ["g"],
         "x",

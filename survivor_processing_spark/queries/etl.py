@@ -873,10 +873,9 @@ def snapshot_mor_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- MOR upsert and time-travel gates: closed-form oracles
 # (operators/mor.py mor_upsert_summary_oracle, operators/snapshot.py
-# time_travel_summary_oracle), cross-engine tests (tests/test_mor.py,
-# tests/test_asof_timestamp.py), fuzz families `mor_dv` /
-# `time_travel` (tools/fuzz_portables.py) and plan audits
-# (tests/test_plans_queued.py).
+# time_travel_summary_oracle), cross-engine and randomized model
+# tests (tests/test_mor.py, tests/test_asof_timestamp.py) and plan
+# audits (tests/test_plans_queued.py).
 
 
 @register(

@@ -59,8 +59,8 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     "src once and are reused every iteration; driver traffic is the "
     "loop counter only.  Oracle is EMITTED by "
     "pagerank_portable_oracle — one (c{t}, r{t}) CTE pair per "
-    "iteration from the same parameters (queued r7, fuzzed in "
-    "tools/fuzz_portables.py `pagerank`)",
+    "iteration from the same parameters (randomized in "
+    "tests/test_pagerank.py::test_pagerank_cross_engine_randomized)",
     oracle=pagerank_portable_oracle(n_iters=3, edges_sql=_EDGES_SQL),
 )
 def pagerank_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -75,8 +75,8 @@ def pagerank_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     "horizon, min-merged per node each hop.  Edges repartition on "
     "src once (checkpointed) and every hop reuses the partitioning.  "
     "Oracle is EMITTED by bfs_levels_oracle — one frontier CTE per "
-    "hop from the same seeds (queued r7, fuzzed in "
-    "tools/fuzz_portables.py `bfs`)",
+    "hop from the same seeds (randomized in "
+    "tests/test_bfs.py::test_bfs_cross_engine_random)",
     oracle=bfs_levels_oracle(
         sources=_BFS_SOURCES, n_iters=3, edges_sql=_EDGES_SQL
     ),
@@ -101,8 +101,8 @@ def bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     "bit-portable by construction; emits degree and n_wedges = "
     "deg*(deg-1)/2 so clustering coefficients stay an exact rational "
     "downstream.  Oracle EMITTED by triangle_counts_oracle over the "
-    "same edge derivation (fuzzed in tools/fuzz_portables.py "
-    "`graphstats`)",
+    "same edge derivation (randomized in tests/test_graphstats.py::"
+    "test_randomized_cross_engine_and_brute)",
     oracle=triangle_counts_oracle(_EDGES_SQL),
 )
 def triangle_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -195,8 +195,8 @@ def ivf_topk_exact_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "EXACT integers: max_err2 = max_d 2*|255*(x_d-mn_d) - q_d*span_d| "
     "with the oracle-checkable bound max_err2 <= max_d span_d + 1.  "
     "Driver traffic is the 2 x dim bounds row, nothing else.  Oracle "
-    "EMITTED by sq8_summary_oracle from the same parameters (queued "
-    "r8, fuzzed in tools/fuzz_portables.py `sq8`)",
+    "EMITTED by sq8_summary_oracle from the same parameters (randomized "
+    "in tests/test_quantize.py::test_error_bound_holds_exactly)",
     oracle=_sq8_oracle(dim=64),
 )
 def sq8_summary_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -243,7 +243,7 @@ def _codes_str_oracle(inner: str) -> str:
     "100 TB this is the RAM-resident re-rank: 4 bytes of codes + a "
     "32-entry table replace re-reading 256-byte vectors.  Oracle "
     "EMITTED by pq_adc_topk_oracle from the same query lanes "
-    "(fuzzed in tools/fuzz_portables.py `pq`)",
+    "(randomized in tests/test_pq.py::test_pq_cross_engine_random)",
     oracle=_codes_str_oracle(
         _pq_adc_oracle(_PQ_QUERY, topk=10, m=4, k=8, iters=2)
     ),

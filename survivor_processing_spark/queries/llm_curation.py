@@ -385,8 +385,8 @@ def quality_model_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(word, n_tok) table back onto per-doc word counts; ineligible "
     "words (digits/punct/over-long) count 1 OOV token each so "
     "n_tokens is a budget, not an estimate.  Oracle EMITTED by "
-    "bpe_token_budget_oracle from the same parameters (queued r8, "
-    "fuzzed in tools/fuzz_portables.py `bpe_encode`)",
+    "bpe_token_budget_oracle from the same parameters (randomized in "
+    "tests/test_bpe.py::test_encode_cross_engine_random)",
     oracle=bpe_token_budget_oracle(n_merges=8),
 )
 def bpe_token_budget_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -409,8 +409,8 @@ def bpe_token_budget_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "shuffle on the strata; the 100 TB hot-stratum escape "
     "(hash-prefix sub-strata) is documented on the operator.  Oracle "
     "EMITTED by stratified_exact_split_oracle from the same "
-    "parameters (fuzzed in tools/fuzz_portables.py "
-    "`stratified_split`)",
+    "parameters (randomized in tests/test_stratified_split.py::"
+    "test_cross_engine_synthetic)",
     oracle=_strat_oracle(
         ["lang", "source"],
         "doc_id",

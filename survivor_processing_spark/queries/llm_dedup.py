@@ -372,8 +372,8 @@ def incremental_dedup_new_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "duplicate occurrences merged into maximal per-doc token spans "
     "via one gaps-and-islands window — no cartesian, plan-asserted "
     "in tests/test_plans_queued.py.  Oracle is EMITTED by "
-    "substring_spans_oracle from the same parameters (queued r7, "
-    "fuzzed in tools/fuzz_portables.py `substring`)",
+    "substring_spans_oracle from the same parameters (randomized in "
+    "tests/test_substring.py::test_cross_engine_random)",
     oracle=substring_spans_oracle(n=8, min_count=2),
 )
 def substring_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -174,8 +174,8 @@ from ..operators.retrieval import (  # noqa: E402
     "then one groupBy(token) assembling the posting list as the "
     "deterministic doc-sorted 'doc:tf' string.  The retrieval-based "
     "curation / hard-negative-mining entry point.  Oracle EMITTED by "
-    "inverted_postings_oracle from the same parameters (fuzzed in "
-    "tools/fuzz_portables.py `retrieval`)",
+    "inverted_postings_oracle from the same parameters (randomized in "
+    "tests/test_retrieval.py::test_retrieval_randomized_cross_engine)",
     oracle=inverted_postings_oracle(min_df=2, max_df=400),
 )
 def inverted_postings_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -194,7 +194,7 @@ def inverted_postings_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "one multiply) so both engines run the identical IEEE op "
     "sequence; ranking keys are exact (tf desc, df asc, token) — "
     "never a float.  Oracle EMITTED by bm25_scores_oracle from the "
-    "same parameters (fuzzed in tools/fuzz_portables.py `retrieval`)",
+    "same parameters (randomized in tests/test_retrieval.py)",
     oracle=bm25_scores_oracle(),
 )
 def bm25_doc_term_scores_q(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import json
 import os
+import random
 import shutil
 import tempfile
 
@@ -19,9 +20,12 @@ import pytest
 
 from survivor_processing_spark.operators.snapshot import (
     _entry_path,
+    checkpoint_snapshot,
     commit_version,
     expire_snapshots,
+    log_versions,
     read_snapshot_asof,
+    snapshot_files,
     version_at_timestamp,
 )
 
@@ -103,6 +107,47 @@ def test_commit_ts_monotone_under_backwards_clock(tbl, monkeypatch):
     # before the table existed resolve to v4; clamped, it predates
     with pytest.raises(ValueError, match="predates"):
         version_at_timestamp(tbl, t3 - 250.0)
+
+
+@pytest.mark.parametrize("seed", [0, 1])
+def test_random_logs_under_skewed_clock_resolve_by_delta_rule(
+    seed, monkeypatch, tmp_path
+):
+    """Random add/remove commit sequences with checkpoints placed at
+    random, under a wall clock that jitters backwards: entry
+    timestamps stay monotone, every entry's timestamp resolves to the
+    latest version sharing it, and that version's active set equals
+    the pure-Python model, checkpoint present or not."""
+    import time as _time
+
+    rng = random.Random(seed)
+    d = str(tmp_path)
+    base = _time.time()
+    step = iter([rng.uniform(-5.0, 5.0) for _ in range(12)])
+    monkeypatch.setattr(_time, "time", lambda: base + next(step, 10.0))
+    model, active, plan = {}, set(), []
+    for i in range(rng.randrange(4, 9)):
+        nm = _write(d, f"f{i}.parquet", [i])
+        removes = (
+            [rng.choice(sorted(active))]
+            if active and rng.random() < 0.4
+            else []
+        )
+        commit_version(d, adds=[nm], removes=removes)
+        active = (active | {nm}) - set(removes)
+        model[i + 1] = active
+        plan.append((nm, removes))
+        if rng.random() < 0.3:
+            checkpoint_snapshot(d)
+            plan.append("checkpoint")
+    entry_ts = {v: _entry_ts(d, v) for v in log_versions(d)}
+    tss = list(entry_ts.values())
+    assert tss == sorted(tss), (seed, plan, tss)
+    for ts in tss:
+        want_v = max(u for u, t in entry_ts.items() if t <= ts)
+        got_v = version_at_timestamp(d, ts)
+        assert got_v == want_v, (seed, plan, ts)
+        assert set(snapshot_files(d, got_v)) == model[got_v], (seed, plan, got_v)
 
 
 def test_expiry_baseline_preserves_cut_timestamp(tbl):

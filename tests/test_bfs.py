@@ -78,18 +78,21 @@ def test_bfs_cycle_and_parallel_edges(spark):
 
 
 def test_bfs_cross_engine_random(spark):
+    # self-loops, parallel edges and unreachable components arise
+    # from uniform endpoint draws; iters 0 is the sources-only horizon
     rng = random.Random(17)
     for _ in range(3):
-        n = rng.randint(5, 50)
+        n = rng.randint(3, 60)
         edges = [
             (rng.randrange(n), rng.randrange(n))
             for _ in range(rng.randint(1, 4 * n))
         ]
-        sources = rng.sample(range(n), rng.randint(1, 3))
-        iters = rng.randint(0, 5)
+        sources = rng.sample(range(n), rng.randint(1, min(4, n)))
+        iters = rng.randint(0, 6)
         got = _spark_bfs(spark, edges, sources, iters)
-        assert got == _duck_bfs(edges, sources, iters)
-        assert got == _reference_bfs(edges, sources, iters)
+        drawn = (n, len(edges), sources, iters)
+        assert got == _duck_bfs(edges, sources, iters), drawn
+        assert got == _reference_bfs(edges, sources, iters), drawn
 
 
 def test_bfs_orders_derived(spark):

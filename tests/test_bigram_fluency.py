@@ -76,17 +76,17 @@ def test_validation(spark):
 
 def test_randomized_cross_engine(spark):
     rng = random.Random(20260815)
-    vocab = ["aa", "bb", "cc", "dd", "e1"]
+    vocab = ["aa", "bb", "cc", "dd", "e1", "f"]
     for trial in range(4):
         rows = [
             (
                 i,
                 " ".join(
-                    rng.choice(vocab) + rng.choice(["", "."])
-                    for _ in range(rng.randrange(0, 12))
+                    rng.choice(vocab) + rng.choice(["", ".", ","])
+                    for _ in range(rng.randrange(0, 14))
                 ),
             )
-            for i in range(rng.randrange(1, 15))
+            for i in range(rng.randrange(1, 18))
         ]
         kw = dict(scale=rng.choice([1000, 1_000_000]))
         assert _spark_rows(spark, rows, **kw) == _duck_rows(rows, **kw), (

@@ -92,17 +92,29 @@ def test_within_doc_repeats_do_not_count(spark):
 @pytest.mark.parametrize("seed", [0, 1, 2])
 def test_randomized_cross_engine(spark, seed):
     rng = random.Random(seed)
-    pool = [f"para {i}" for i in range(15)]
+    pool = [f"para {i}" for i in range(rng.randint(5, 20))]
     texts = {
         d: "\n".join(
             rng.choice(pool) for _ in range(rng.randint(0, 8))
         )
         if rng.random() > 0.1
         else None  # NULL docs ride along
-        for d in range(30)
+        for d in range(rng.randint(3, 30))
     }
-    kw = {"min_docs": rng.choice([2, 3, 5])}
-    assert _spark_rows(spark, texts, **kw) == _duck_rows(texts, **kw)
+    min_docs = rng.choice([2, 3, 5])
+    got = _spark_rows(spark, texts, min_docs=min_docs)
+    assert got == _duck_rows(texts, min_docs=min_docs), (seed, min_docs)
+    # a paragraph survives iff fewer than min_docs distinct docs hold it
+    dfreq: dict[str, set] = {}
+    for d, t in texts.items():
+        for para in (t or "").split("\n") if t is not None else ():
+            dfreq.setdefault(para, set()).add(d)
+    for d, t in texts.items():
+        if t is None:
+            assert got[d] == (0, 0, None), d
+            continue
+        kept = [p for p in t.split("\n") if len(dfreq[p]) < min_docs]
+        assert got[d][2] == "\n".join(kept), (seed, d)
 
 
 def test_commutes_with_keep_first_on_disjoint_sets(spark):

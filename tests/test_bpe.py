@@ -140,20 +140,28 @@ def _reference_bpe_vocab(texts, n_merges, max_vocab):
 
 @pytest.mark.parametrize("seed", [11, 23, 47])
 def test_bpe_cross_engine_randomized(spark, seed):
+    """Tiny alphabets (pair-count ties everywhere, 'aaaa' self-overlap
+    chains), words up to the max_word_len boundary and, sometimes, a
+    max_vocab cap."""
     rng = random.Random(seed)
-    alphabet = "abcdef"
+    alphabet = "ab" if rng.random() < 0.3 else "abcdef"
     vocab = [
-        "".join(rng.choice(alphabet) for _ in range(rng.randint(1, 9)))
-        for _ in range(30)
+        "".join(rng.choice(alphabet) for _ in range(rng.randint(1, 16)))
+        for _ in range(rng.randint(4, 40))
     ]
     texts = [
-        " ".join(rng.choice(vocab) for _ in range(rng.randint(3, 25)))
-        for _ in range(40)
+        " ".join(rng.choice(vocab) for _ in range(rng.randint(1, 30)))
+        for _ in range(rng.randint(2, 60))
     ]
-    got = _spark_merges(spark, texts, n_merges=5)
-    want = _duck_merges(texts, n_merges=5)
-    assert got == want
-    assert got == _reference_bpe(texts, n_merges=5)
+    kw = {"n_merges": rng.randint(1, 8)}
+    if rng.random() < 0.4:
+        kw["max_vocab"] = rng.randint(2, 12)
+    got = _spark_merges(spark, texts, **kw)
+    assert got == _duck_merges(texts, **kw), kw
+    if "max_vocab" in kw:
+        assert got == _reference_bpe_vocab(texts, kw["n_merges"], kw["max_vocab"]), kw
+    else:
+        assert got == _reference_bpe(texts, kw["n_merges"]), kw
 
 
 # ---- encode / token budget ----------------------------------------
@@ -227,13 +235,24 @@ def test_encode_early_stop_guard(spark):
 
 
 def test_encode_cross_engine_random(spark):
+    """Corpora mixing alphabetic, OOV and empty docs, random
+    (n_merges, encode_max_len), with and without a max_vocab cap."""
     rng = random.Random(41)
-    vocab = ["low", "lower", "lowest", "new", "newest", "ab", "a1b", "!!"]
-    texts = [
-        " ".join(rng.choice(vocab) for _ in range(rng.randint(0, 20)))
-        for _ in range(30)
-    ]
-    for kw in ({"n_merges": 4}, {"n_merges": 2, "max_vocab": 4}):
+    for cap in (False, True):
+        vocab = [
+            "".join(rng.choice("abcd") for _ in range(rng.randint(1, 10)))
+            for _ in range(rng.randint(3, 20))
+        ] + ["x9!", "42", "", "a1b", "!!"]
+        texts = [
+            " ".join(rng.choice(vocab) for _ in range(rng.randint(0, 25)))
+            for _ in range(rng.randint(2, 40))
+        ]
+        kw = {
+            "n_merges": rng.randint(1, 6),
+            "encode_max_len": rng.choice([8, 32]),
+        }
+        if cap:
+            kw["max_vocab"] = rng.randint(2, 10)
         assert _spark_budget(spark, texts, **kw) == _duck_budget(
             texts, **kw
         ), kw

@@ -63,18 +63,18 @@ def test_validation(spark):
 
 def test_randomized_cross_engine(spark):
     rng = random.Random(20260815)
-    vocab = ["ab", "cd", "ef", "gh", "ij", "k9", "l0"]
+    vocab = ["ab", "cd", "ef", "gh", "ij", "k9", "l0", "J0", "k"]
     for trial in range(4):
         texts = [
             " ".join(
-                rng.choice(vocab) + (rng.choice(["", ",", "."]))
-                for _ in range(rng.randrange(0, 12))
+                rng.choice(vocab) + (rng.choice(["", ",", ".", "!"]))
+                for _ in range(rng.randrange(0, 15))
             )
-            for _ in range(rng.randrange(1, 14))
+            for _ in range(rng.randrange(1, 20))
         ]
         kw = dict(
-            min_count=rng.choice([1, 2]),
-            scale=rng.choice([1000, 1_000_000_000]),
+            min_count=rng.choice([1, 2, 3]),
+            scale=rng.choice([1, 1000, 1_000_000_000]),
         )
         assert _spark_rows(spark, texts, **kw) == _duck_rows(texts, **kw), (
             trial,

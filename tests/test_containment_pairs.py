@@ -90,21 +90,35 @@ def test_identical_docs_contain_both_ways(spark):
 
 @pytest.mark.parametrize("seed", [1, 2])
 def test_randomized_cross_engine(spark, seed):
+    """Random corpora with a planted subset duplicate (a short doc
+    quoted verbatim inside a long one), random thresholds and shingle
+    widths: the ordered pair set and every containment value vs the
+    oracle, and the planted subset surfaces at 1.0 short->long."""
     import random
 
     rng = random.Random(seed)
-    vocab = [f"v{i}" for i in range(rng.randint(6, 15))]
+    vocab = [f"v{i}" for i in range(rng.randint(6, 16))]
     texts = {
         d: " ".join(
             rng.choice(vocab) for _ in range(rng.randint(1, 25))
         )
-        for d in range(rng.randint(5, 25))
+        for d in range(rng.randint(4, 25))
     }
-    t = rng.choice([0.25, 0.5, 0.75])
+    src = None
+    if rng.random() < 0.6:
+        src = rng.choice(list(texts))
+        host = " ".join(f"h{i}" for i in range(rng.randint(10, 25)))
+        texts[900] = f"{host} {texts[src]} {host}"
+    t = rng.choice([0.25, 0.5, 0.75, 0.9])
     kw = {"shingle_n": rng.choice([2, 3])}
     got = _spark_pairs(spark, texts, t, max_posting=None, **kw)
     want = _oracle_pairs(texts, t, **kw)
-    assert got == want
+    assert got == want, (t, kw)
+    # the subset guarantee holds only for docs with >= n words: a
+    # shorter doc is one partial shingle that never re-appears as a
+    # full n-gram of the host
+    if src is not None and len(texts[src].split()) >= kw["shingle_n"]:
+        assert got.get((src, 900)) == 1.0, (src, t, kw)
 
 
 def test_sf0001_cross_engine_and_dominates_jaccard(spark):

@@ -102,13 +102,37 @@ def test_ratio_cap_binds_and_replays(spark):
 
 @pytest.mark.parametrize("seed", [0, 1])
 def test_randomized_cross_engine(spark, seed):
+    """Raw docs drawn from a target or a disjoint noise vocabulary,
+    with one planted doc of each; random (n, n_buckets, scale,
+    ratio_cap); seed 0 persists the counts, seed 1 tokenizes twice."""
     rng = random.Random(seed)
-    vocab = [f"w{i}" for i in range(40)]
-    mk = lambda k: " ".join(rng.choice(vocab) for _ in range(k))
-    raw = {i: mk(rng.randint(0, 30)) for i in range(40)}
-    tgt = {i: mk(rng.randint(2, 30)) for i in range(10)}
-    kw = dict(n=rng.choice([1, 2, 3]), n_buckets=64)
-    assert _spark_rows(spark, raw, tgt, **kw) == _duck_rows(raw, tgt, **kw)
+    tgt_vocab = [f"t{i}" for i in range(rng.randint(4, 12))]
+    noise_vocab = [f"n{i}" for i in range(rng.randint(4, 12))]
+
+    def mk(vocab, k):
+        return " ".join(rng.choice(vocab) for _ in range(k))
+
+    raw = {
+        i: mk(tgt_vocab if rng.random() < 0.5 else noise_vocab, rng.randint(0, 30))
+        for i in range(rng.randint(5, 40))
+    }
+    raw[900] = mk(tgt_vocab, 20)
+    raw[901] = mk(noise_vocab, 20)
+    tgt = {i: mk(tgt_vocab, rng.randint(2, 30)) for i in range(rng.randint(2, 10))}
+    kw = dict(
+        n=rng.randint(1, 3),
+        n_buckets=rng.choice([16, 64, 4096]),
+        scale=rng.choice([1000, 1_000_000]),
+        ratio_cap=rng.choice([2, 1000]),
+    )
+    got = _spark_rows(spark, raw, tgt, materialize=seed == 0, **kw)
+    assert got == _duck_rows(raw, tgt, **kw), kw
+    # monotone tilt, where nothing blurs it: few bucket collisions,
+    # grams the target covers, and a permissive cap (a tight cap
+    # squeezes the target lane below the noise lanes' floor)
+    if kw["n_buckets"] == 4096 and kw["n"] <= 2 and kw["ratio_cap"] == 1000:
+        s_t, s_n = got[900][2], got[901][2]
+        assert s_t is None or s_n is None or s_t >= s_n, kw
 
 
 def test_sf0001_cross_engine(spark):

@@ -84,10 +84,13 @@ def test_randomized_cross_engine(spark):
     for trial in range(4):
         rows = [
             (
-                rng.randrange(-100, 100),
-                rng.choice([None, "", "x", "yy", "z'q"]),
+                rng.randrange(-1000, 1000),
+                rng.choice([None, "", "x", "yy", "z'q", "a b", "0"]),
             )
-            for _ in range(rng.randrange(0, 50))
+            for _ in range(rng.randrange(0, 120))
         ]
-        got = _spark_fp(spark, rows) if rows else _spark_fp(spark, [])
+        got = _spark_fp(spark, rows)
         assert got == _duck_fp(rows), (trial, rows)
+        # order- and partitioning-invariant
+        parts = rng.choice([1, 5, 32])
+        assert _spark_fp(spark, rows, parts) == got, (trial, parts)

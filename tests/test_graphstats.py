@@ -102,10 +102,10 @@ def test_star_hub_zero_triangles(spark):
 def test_randomized_cross_engine_and_brute(spark):
     rng = random.Random(20260815)
     for trial in range(4):
-        n = rng.randrange(4, 14)
+        n = rng.randrange(3, 18)
         edges = [
             (rng.randrange(n), rng.randrange(n))
-            for _ in range(rng.randrange(3, 40))
+            for _ in range(rng.randrange(2, 60))
         ]
         got = _spark_rows(spark, edges)
         assert got == _duck_rows(edges), (trial, edges)

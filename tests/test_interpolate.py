@@ -81,16 +81,18 @@ def test_fixed_cross_engine(spark):
 
 @pytest.mark.parametrize("seed", [0, 1, 2, 3])
 def test_randomized_cross_engine(spark, seed):
+    # NULL runs, leading/trailing NULLs, all-NULL keys, negatives
     rng = random.Random(seed)
     rows = []
-    for k in "abcde":
+    for k in range(rng.randint(1, 6)):
         ts = sorted(rng.sample(range(0, 500), rng.randint(0, 25)))
+        null_p = rng.choice([0.2, 0.4, 0.5, 0.9, 1.0])
         for t in ts:
-            y = None if rng.random() < 0.4 else rng.randint(-1000, 1000)
-            rows.append((k, t, y))
+            y = None if rng.random() < null_p else rng.randint(-1000, 1000)
+            rows.append((f"k{k}", t, y))
     if not rows:
-        rows = [("a", 0, 1)]
-    assert _spark_rows(spark, rows) == _duck_rows(rows)
+        rows = [("k0", 0, 1)]
+    assert _spark_rows(spark, rows) == _duck_rows(rows), (seed, len(rows))
 
 
 def test_interpolation_is_exact_not_float(spark):

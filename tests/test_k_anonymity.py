@@ -59,23 +59,24 @@ def test_k1_is_noop(spark):
 
 def test_row_level_agrees_with_summary(spark):
     rng = random.Random(20260815)
-    rows = [
-        (
-            rng.choice(["a", "b", "c"]),
-            rng.randrange(1, 4),
-            f"p{i}",
-        )
-        for i in range(rng.randrange(5, 40))
-    ]
-    for k in (1, 2, 3, 5):
+    for _ in range(2):
+        rows = [
+            (
+                rng.choice(["a", "b", "c"]),
+                rng.randrange(1, 5),
+                f"p{i}",
+            )
+            for i in range(rng.randrange(1, 60))
+        ]
         df = _df(spark, rows)
-        n_kept = k_anonymity_suppress(df, ["zipc", "age"], k).count()
-        stats = tuple(
-            k_anonymity_stats(df, ["zipc", "age"], k).collect()[0]
-        )
-        assert stats[2] == n_kept
-        assert stats[2] + stats[3] == len(rows)
-        assert stats == _duck_stats(rows, k)
+        for k in rng.sample([1, 2, 3, 4, 5, 8], 3):
+            n_kept = k_anonymity_suppress(df, ["zipc", "age"], k).count()
+            stats = tuple(
+                k_anonymity_stats(df, ["zipc", "age"], k).collect()[0]
+            )
+            assert stats[2] == n_kept, (len(rows), k)
+            assert stats[2] + stats[3] == len(rows), (len(rows), k)
+            assert stats == _duck_stats(rows, k), (len(rows), k)
 
 
 def test_validation(spark):

@@ -87,14 +87,13 @@ def test_validation(spark):
 def test_randomized_cross_engine(spark):
     rng = random.Random(20260815)
     for trial in range(4):
+        span = rng.choice([30, 50])  # the narrow span is tie-heavy
+        pool = [None] + list(range(-span, span + 1)) + [0, 0, 5, 5]
         rows = [
-            (
-                rng.choice(["a", "b", "c"]),
-                rng.choice([None] + list(range(-50, 51))),
-            )
-            for _ in range(rng.randrange(1, 60))
+            (rng.choice(["a", "b", "c", "d"]), rng.choice(pool))
+            for _ in range(rng.randrange(1, 80))
         ]
-        kw = dict(c=rng.choice([(3, 1), (5, 2), (0, 1)]))
+        kw = dict(c=rng.choice([(3, 1), (5, 2), (0, 1), (1, 3)]))
         assert _spark_rows(spark, rows, **kw) == _duck_rows(rows, **kw), (
             trial,
             rows,

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import json
 import os
+import random
 import shutil
 import tempfile
 
@@ -22,8 +23,10 @@ from survivor_processing_spark.operators.mor import (
     delete_from_snapshot_mor,
     purge_dvs,
     table_changes,
+    upsert_into_snapshot_mor,
 )
 from survivor_processing_spark.operators.snapshot import (
+    checkpoint_snapshot,
     commit_version,
     compact_snapshot,
     expire_snapshots,
@@ -764,3 +767,108 @@ def test_dv_aware_fused_summary_matches_per_version_reads(spark, tbl):
     # at v2..v5 and >4 qualifying versions
     assert got[0][1] == 151 and got[4][1] == 151 - 10 - 10 - 10 - 5
     assert got[5][1:] == got[4][1:]  # purge is layout-only
+
+
+@pytest.mark.parametrize("seed", [0, 1])
+def test_random_dml_interleavings_match_model(spark, seed, tmp_path):
+    """Random seed layouts (the first file with a NULL key), then a
+    random order of two MOR deletes (sharded sidecar writes), two MOR
+    upserts (random dv_shards), a purge, a z-order, a compaction and
+    an expiry, with log checkpoints placed at random.
+    Every logged version reads as a pure-Python model of the table at
+    that version: a deletion vector applies from its commit on, a
+    checkpoint is invisible, re-deletes count only live rows, upserts
+    replace per key like a dict update, the layout operations keep
+    logical content, and live DV coverage names only active files."""
+    rng = random.Random(seed)
+    d = str(tmp_path)
+    n_files = rng.randrange(2, 5)
+    bounds = sorted(rng.sample(range(0, 400), n_files * 2))
+    names, keys = [], []
+    for i in range(n_files):
+        ks = list(range(bounds[2 * i], bounds[2 * i + 1] + 1))
+        if i == 0 or rng.random() < 0.3:
+            ks.append(None)  # NULL keys never match a range
+        names.append(_write(d, f"s{i}.parquet", ks))
+        keys += ks
+    commit_version(d, adds=names)
+    logical = sorted(
+        ((k, float(k) if k is not None else -1.0) for k in keys),
+        key=lambda t: (t[0] is None, t[0], t[1]),
+    )
+    history = {1: logical}
+    kinds = ["delete", "delete", "upsert", "upsert"]
+    kinds += ["purge", "zorder", "compact", "expire"]
+    rng.shuffle(kinds)
+    ops = []
+    for kind in kinds:
+        if rng.random() < 0.35:
+            checkpoint_snapshot(d)
+            ops.append("checkpoint")
+        drawn = (seed, bounds, ops)
+        if kind == "delete":
+            dlo = rng.randrange(0, 400)
+            dhi = dlo + rng.randrange(0, 120)
+            shards = rng.choice([1, 1, 2, 3])
+            ops.append(("delete", dlo, dhi, shards))
+            out = delete_from_snapshot_mor(spark, d, "k", dlo, dhi, shards=shards)
+            live_hits = [
+                t for t in logical if t[0] is not None and dlo <= t[0] <= dhi
+            ]
+            if not live_hits:
+                assert out["version"] is None, drawn
+                continue
+            assert out["n_deleted"] == len(live_hits), drawn
+            logical = [
+                t for t in logical if t[0] is None or not dlo <= t[0] <= dhi
+            ]
+            history[out["version"]] = logical
+        elif kind == "upsert":
+            batch = {
+                rng.randrange(0, 500): float(rng.randrange(-99, 0))
+                for _ in range(rng.randrange(1, 10))
+            }
+            dv_shards = rng.choice(["auto", 1, 2])
+            ops.append(("upsert", sorted(batch), dv_shards))
+            src = spark.createDataFrame(sorted(batch.items()), "k long, amt double")
+            out = upsert_into_snapshot_mor(spark, d, src, "k", dv_shards=dv_shards)
+            live_hit = sum(1 for t in logical if t[0] is not None and t[0] in batch)
+            assert out["n_updated"] == live_hit, drawn
+            assert out["n_inserted"] == len(batch) - live_hit, drawn
+            logical = sorted(
+                [t for t in logical if t[0] is None or t[0] not in batch]
+                + list(batch.items()),
+                key=lambda t: (t[0] is None, t[0], t[1]),
+            )
+            history[out["version"]] = logical
+        elif kind == "purge":
+            ops.append("purge")
+            had = bool(snapshot_dvs(d))
+            out = purge_dvs(spark, d, stats_cols=["k"])
+            assert had == (out["version"] is not None), drawn
+            if out["version"] is not None:
+                history[out["version"]] = logical
+            assert not snapshot_dvs(d), drawn
+        elif kind == "zorder":
+            ops.append("zorder")
+            out = zorder_snapshot(spark, d, "k", "amt", n_files=2)
+            history[out["version"]] = logical
+            assert not snapshot_dvs(d), drawn
+        elif kind == "compact":
+            ops.append("compact")
+            out = compact_snapshot(spark, d, target_bytes=1 << 20, stats_cols=["k"])
+            if out["version"] is not None:
+                history[out["version"]] = logical
+        else:
+            ops.append("expire")
+            out = expire_snapshots(d, keep_last=2)
+            if out["cut_version"] is not None:
+                history = {
+                    v: rows for v, rows in history.items() if v >= out["cut_version"]
+                }
+    drawn = (seed, bounds, ops)
+    active = set(snapshot_files(d))
+    for cov in snapshot_dvs(d).values():
+        assert set(cov) <= active, drawn
+    for v, want in sorted(history.items()):
+        assert _rows(spark, d, v) == want, (drawn, v)

@@ -85,18 +85,23 @@ def test_within_doc_repeats_count(spark):
 
 
 def test_cross_engine_random_params(spark):
+    """Random corpora with heavy repetition and a planted gibberish
+    doc, random (n, min_ref_count): counts vs the oracle."""
     rng = random.Random(29)
-    vocab = [f"t{i}" for i in range(15)]
-    texts = {
-        d: " ".join(
-            rng.choice(vocab) for _ in range(rng.randint(0, 25))
-        )
-        for d in range(40)
-    }
-    for kw in ({"n": 2}, {"n": 3, "min_ref_count": 3}, {"n": 1}):
+    for _ in range(3):
+        vocab = [f"t{i}" for i in range(rng.randint(5, 20))]
+        texts = {
+            d: " ".join(
+                rng.choice(vocab) for _ in range(rng.randint(0, 30))
+            )
+            for d in range(rng.randint(3, 40))
+        }
+        if rng.random() < 0.5:  # unique-gibberish doc
+            texts[500] = " ".join(f"zz{i}" for i in range(8))
+        kw = {"n": rng.randint(1, 4), "min_ref_count": rng.randint(1, 4)}
         assert _spark_cov(spark, texts, **kw) == _duck_cov(
             texts, **kw
-        ), kw
+        ), (kw, len(texts))
 
 
 def test_cross_engine_sf0001(spark):

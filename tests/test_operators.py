@@ -4,9 +4,11 @@ dedup, similarity, and the merge sink (FIXTURES.md §C mini-fixtures)."""
 from __future__ import annotations
 
 import os
+import random
 import shutil
 import tempfile
 
+import pandas as pd
 import pyspark.sql.functions as F
 import pytest
 from pyspark.sql.types import (
@@ -18,6 +20,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from registered_query import run_registered
 from survivor_processing_spark.operators.dedup import (
     connected_components,
     exact_dedup,
@@ -33,6 +36,24 @@ from survivor_processing_spark.operators.similarity import (
     ivf_topk,
 )
 from survivor_processing_spark.sinks.merge import merge_upsert
+
+
+WORDS = [
+    "alpha", "beta", "gamma", "delta", "epsilon", "zeta", "eta", "theta",
+    "iota", "kappa", "lam", "mu", "nu", "xi", "omicron", "pi", "rho",
+]
+
+
+def _documents(docs):
+    return pd.DataFrame(
+        {
+            "doc_id": range(len(docs)),
+            "text": docs,
+            "source": ["s"] * len(docs),
+            "lang": ["en"] * len(docs),
+            "n_chars": [len(t) for t in docs],
+        }
+    )
 
 
 def test_id_minting_sequential(spark):
@@ -109,6 +130,27 @@ def test_simhash_stable_and_close_for_near_dups(spark):
     }
     hamming = bin(out[1] ^ out[2]).count("1")
     assert hamming <= 16  # near-dups land close in hamming space
+
+
+@pytest.mark.parametrize("seed", [0, 1])
+def test_simhash_pairs_registered_match_oracle_on_random_corpora(spark, seed):
+    """Random word corpora with a planted identical copy and a
+    one-word edit: the registered simhash_portable_pairs == its
+    oracle."""
+    rng = random.Random(seed)
+    n = rng.randint(4, 25)
+    docs = [
+        " ".join(rng.choice(WORDS) for _ in range(rng.randint(3, 30)))
+        for _ in range(n)
+    ]
+    docs[1] = docs[0]
+    words = docs[0].split()
+    words[0] = "OMEGA"
+    docs[2] = " ".join(words)
+    got, want = run_registered(
+        spark, "simhash_portable_pairs", "documents", _documents(docs)
+    )
+    assert got == want, (seed, n)
 
 
 def test_brute_force_topk_self_first(spark, sf_dir):
@@ -332,8 +374,6 @@ def test_ngram_prefix_filter_exact_vs_bruteforce(spark):
     """Prefix-filtered Jaccard join == brute-force all-pairs at the
     threshold (exact recall claim), across threshold boundaries."""
     import itertools
-    import random
-
     from survivor_processing_spark.operators.dedup import ngram_jaccard_pairs
 
     rng = random.Random(42)
@@ -455,8 +495,6 @@ def test_star_cc_matches_union_find_on_random_graphs(spark):
     """connected_components (min-label propagation) == driver-side
     union-find ground truth on random graphs (including
     multi-component and dense cases)."""
-    import random
-
     rng = random.Random(7)
     for n, m in ((30, 15), (60, 80), (40, 40)):
         edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
@@ -547,6 +585,32 @@ def test_dedup_paragraphs_keep_first(spark):
         4: (3, 1, "epsilon"),
         5: (0, 0, None),
     }
+
+
+@pytest.mark.parametrize("seed", [0, 1])
+def test_paragraph_dedup_registered_matches_oracle_on_random_corpora(spark, seed):
+    """Random corpora whose ' the ' occurrences become paragraph
+    breaks, with a fully duplicated doc (its dedup text is empty) and a
+    first paragraph spliced into a later doc: the registered
+    paragraph_dedup == its oracle, reassembly order included."""
+    rng = random.Random(seed)
+    n = rng.randint(2, 12)
+
+    def para():
+        return " ".join(rng.choice(WORDS) for _ in range(rng.randint(1, 6)))
+
+    docs = [
+        " the ".join(para() for _ in range(rng.randint(1, 5)))
+        for _ in range(n)
+    ]
+    if n > 2:
+        docs[1] = docs[0]
+    if n > 3:
+        docs[3] = docs[3] + " the " + docs[0].split(" the ")[0]
+    got, want = run_registered(
+        spark, "paragraph_dedup", "documents", _documents(docs)
+    )
+    assert got == want, (seed, n)
 
 
 def test_repetition_stats_exact_fractions(spark):

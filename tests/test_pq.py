@@ -22,7 +22,7 @@ from survivor_processing_spark.operators.pq import (
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def _reference_pq(vectors, m, k, iters):
+def _reference_pq(vectors, m, k, iters, dim=None):
     """Same semantics in pure Python: {id: (codes, recon_err)}."""
     clean = {
         i: v
@@ -31,10 +31,11 @@ def _reference_pq(vectors, m, k, iters):
     }
     if not clean:
         return {}
-    dims = {len(v) for v in clean.values()}
-    # dim = md5-smallest clean vector's length
-    probe = min(clean, key=lambda i: hashlib.md5(str(i).encode()).hexdigest())
-    dim = len(clean[probe])
+    if dim is None:  # dim = md5-smallest clean vector's length
+        probe = min(
+            clean, key=lambda i: hashlib.md5(str(i).encode()).hexdigest()
+        )
+        dim = len(clean[probe])
     clean = {i: v for i, v in clean.items() if len(v) == dim}
     sub = dim // m
     q = {
@@ -184,13 +185,29 @@ def test_pq_recon_err_decreases_with_k(spark):
 
 
 def test_pq_cross_engine_random(spark):
+    """Random (m, k, iters, dim) with a planted duplicate, a zero
+    vector and hygiene poison (NULL vector, ragged, NULL lane): codes
+    and recon_err vs the oracle and the reference, and the ADC top-k
+    of a perturbed corpus vector vs its oracle."""
     rng = random.Random(23)
-    for m, k, iters, dim in ((2, 3, 1, 8), (4, 5, 3, 16)):
-        vecs = _rand_vectors(rng, rng.randint(10, 50), dim)
-        got = _spark_pq(spark, vecs, m=m, k=k, iters=iters)
-        want = _duck_pq(vecs, m=m, k=k, iters=iters, dim=dim)
-        ref = _reference_pq(vecs, m=m, k=k, iters=iters)
-        assert got == want == ref, (m, k, iters, dim)
+    for _ in range(2):
+        m, sub = rng.choice([2, 3, 4]), rng.randint(2, 5)
+        dim = m * sub
+        n, k, iters = rng.randint(6, 40), rng.randint(2, 6), rng.randint(1, 3)
+        vecs = _rand_vectors(rng, n, dim)
+        vecs[1] = list(vecs[0])  # duplicate
+        vecs[2] = [0.0] * dim  # zero vector
+        vecs[900] = None
+        vecs[901] = [1.0] * (dim + 1)
+        vecs[902] = [0.5] * (dim - 1) + [None]
+        kw = {"m": m, "k": k, "iters": iters}
+        got = _spark_pq(spark, vecs, dim=dim, **kw)
+        want = _duck_pq(vecs, dim=dim, **kw)
+        ref = _reference_pq(vecs, dim=dim, **kw)
+        assert got == want == ref, (n, dim, kw)
+        query = [x + rng.uniform(-0.05, 0.05) for x in vecs[rng.randrange(n)]]
+        got_a = _spark_adc(spark, vecs, query, topk=5, **kw)
+        assert got_a == _duck_adc(vecs, query, topk=5, **kw), (n, dim, kw)
 
 
 def test_pq_cross_engine_sf0001(spark):

@@ -74,27 +74,41 @@ def test_codes_match_python_reference(spark):
 
 
 def test_error_bound_holds_exactly(spark):
+    """Random tables with one constant dimension: the summary equals
+    the DuckDB oracle, every vector is within the bound, and the
+    largest error equals the Python reference's."""
     import random
 
+    import pandas as pd
+
     rng = random.Random(20260815)
-    vecs = [
-        [rng.uniform(-2, 2) for _ in range(8)] for _ in range(200)
-    ]
-    df = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(vecs)],
-        "vec_id long, embedding array<double>",
-    )
-    rows = sq8_summary(df, dim=8).collect()
-    assert len(rows) == 200
-    assert all(r["err_within_bound"] for r in rows)
-    # the bound is tight-ish: SOME lane should land near half a step
-    xq, mn, span, codes = _ref_codes(vecs, 8)
-    max_err2 = max(
-        abs(510 * (v[d] - mn[d]) - 2 * codes[i][d] * span[d])
-        for i, v in enumerate(xq)
-        for d in range(8)
-    )
-    assert max(r["max_err2"] for r in rows) == max_err2
+    for _ in range(3):
+        dim, n = rng.randint(2, 8), rng.randint(3, 200)
+        const_dim = rng.randrange(dim)
+        vecs = [[rng.uniform(-3, 3) for _ in range(dim)] for _ in range(n)]
+        for v in vecs:
+            v[const_dim] = 1.25
+        df = spark.createDataFrame(
+            list(enumerate(vecs)), "vec_id long, embedding array<double>"
+        )
+        rows = sorted(tuple(r) for r in sq8_summary(df, dim=dim).collect())
+        con = duckdb.connect()
+        con.register(
+            "embeddings", pd.DataFrame({"vec_id": range(n), "embedding": vecs})
+        )
+        want = sorted(
+            (int(a), int(b), int(c), bool(x))
+            for a, b, c, x in con.execute(sq8_summary_oracle(dim=dim)).fetchall()
+        )
+        assert rows == want, (dim, n)
+        assert len(rows) == n and all(r[3] for r in rows), (dim, n)
+        xq, mn, span, codes = _ref_codes(vecs, dim)
+        max_err2 = max(
+            abs(510 * (v[d] - mn[d]) - 2 * codes[i][d] * span[d])
+            for i, v in enumerate(xq)
+            for d in range(dim)
+        )
+        assert max(r[2] for r in rows) == max_err2, (dim, n)
 
 
 def test_dirty_vectors_quarantined(spark):

@@ -122,13 +122,30 @@ def test_null_hygiene(spark):
 
 
 def test_cross_engine_random_scales(spark):
+    """Random grouped point clouds with planted perfect lines,
+    constant-x and single-point groups, NULLs and random scales."""
     rng = random.Random(43)
-    for scale in (1, 100, 1000):
-        rows = [
-            (f"g{rng.randint(0, 3)}", rng.uniform(-9, 9), rng.uniform(-9, 9))
-            for _ in range(120)
-        ]
-        assert _spark_fit(spark, rows, scale) == _duck_fit(rows, scale), scale
+    for _ in range(3):
+        scale = rng.choice([1, 10, 100, 1000])
+        rows = []
+        for g in range(rng.randint(1, 5)):
+            kind, npts = rng.random(), rng.randint(1, 60)
+            if kind < 0.2:  # perfect line
+                a, b = rng.randint(-3, 3), rng.randint(-5, 5)
+                rows += [(f"g{g}", float(x), float(a * x + b)) for x in range(npts)]
+            elif kind < 0.3:  # constant x
+                rows += [(f"g{g}", 2.0, rng.uniform(-5, 5)) for _ in range(npts)]
+            else:
+                rows += [
+                    (f"g{g}", rng.uniform(-8, 8), rng.uniform(-8, 8))
+                    for _ in range(npts)
+                ]
+        if rng.random() < 0.4:
+            rows += [("g0", None, 1.0), ("g0", 1.0, None)]
+        assert _spark_fit(spark, rows, scale) == _duck_fit(rows, scale), (
+            scale,
+            len(rows),
+        )
 
 
 def test_cross_engine_sf0001_events(spark):

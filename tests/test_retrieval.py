@@ -126,14 +126,30 @@ def test_sat_coeffs_reduce():
 
 @pytest.mark.parametrize("seed", [0, 1, 2])
 def test_retrieval_randomized_cross_engine(spark, seed):
-    texts = _rand_corpus(seed)
+    """Random corpora with empty docs and, half the time, a
+    stopword-class token in every doc; random min_df/max_df cuts and
+    k1/b rationals: postings and BM25 lanes vs the oracles."""
+    rng = random.Random(seed)
+    texts = _rand_corpus(seed, rng.randint(2, 40), rng.randint(3, 25))
+    if rng.random() < 0.5:
+        texts = {d: (t + " hot") if t else "hot" for d, t in texts.items()}
+    kw = {"min_df": rng.randint(1, 3)}
+    if rng.random() < 0.5:
+        kw["max_df"] = rng.randint(kw["min_df"], 25)
+    bkw = {
+        "k1_num": rng.randint(1, 4),
+        "k1_den": rng.randint(1, 4),
+        "b_num": rng.randint(0, 2),
+        "top_terms": rng.randint(1, 5),
+    }
+    bkw["b_den"] = rng.randint(max(1, bkw["b_num"]), 4)
     df = _spark_df(spark, texts)
-    assert sorted(map(tuple, inverted_postings(df, max_df=20).collect())) == _duck(
-        inverted_postings_oracle(max_df=20), texts
-    )
-    assert sorted(map(tuple, bm25_doc_term_scores(df).collect())) == _duck(
-        bm25_scores_oracle(), texts
-    )
+    assert sorted(map(tuple, inverted_postings(df, **kw).collect())) == _duck(
+        inverted_postings_oracle(**kw), texts
+    ), kw
+    assert sorted(map(tuple, bm25_doc_term_scores(df, **bkw).collect())) == _duck(
+        bm25_scores_oracle(**bkw), texts
+    ), bkw
 
 
 def test_retrieval_sf0001_cross_engine(spark):

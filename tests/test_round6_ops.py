@@ -4,8 +4,11 @@ error-bound gate, and the quarantine MERGE replay."""
 
 from __future__ import annotations
 
+import random
 import struct
 
+import duckdb
+import pandas as pd
 import pyspark.sql.functions as F
 import pytest
 
@@ -108,6 +111,31 @@ def test_lsh_portable_null_first_vector(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     out = lsh_portable_pairs(df, threshold=0.9, n_planes=2, n_tables=2)
     assert sorted(map(tuple, out.collect())) == [(1, 2)]
+
+
+@pytest.mark.parametrize("seed", [0, 1])
+def test_lsh_portable_matches_registered_oracle(spark, seed):
+    """Random 64-dim corpora with up to three scaled copies of vector 0
+    (cosine 1.0): the capped portable LSH at the registered
+    parameters == the embedding_lsh_portable_pairs oracle."""
+    from survivor_processing_spark.queries import REGISTRY
+
+    rng = random.Random(seed)
+    n = rng.randint(5, 40)
+    vecs = [[rng.uniform(-1, 1) for _ in range(64)] for _ in range(n)]
+    for j in range(min(3, n - 1)):
+        vecs[j + 1] = [x * rng.uniform(0.5, 2.0) for x in vecs[0]]
+    df = spark.createDataFrame(
+        list(enumerate(vecs)), "vec_id long, embedding array<double>"
+    )
+    got = sorted(
+        map(tuple, lsh_portable_pairs(df, 0.5, 4, 16, max_bucket=64).collect())
+    )
+    con = duckdb.connect()
+    con.register("embeddings", pd.DataFrame({"vec_id": range(n), "embedding": vecs}))
+    oracle = REGISTRY["embedding_lsh_portable_pairs"].oracle
+    want = sorted(map(tuple, con.execute(oracle).fetchall()))
+    assert got == want, (seed, n)
 
 
 # --- WAV slicing ------------------------------------------------------------

@@ -6,8 +6,12 @@ aggregate (bench broadcast, plan-audited in test_plans_queued.py)."""
 
 from __future__ import annotations
 
+import random
+
 import duckdb
+import pandas as pd
 import pyspark.sql.functions as F
+import pytest
 
 from survivor_processing_spark.operators.decontam import (
     semantic_decontaminate,
@@ -68,6 +72,73 @@ def test_threshold_is_exact_integer_boundary(spark):
         a, b, threshold_num=81, threshold_den=100, dim=2
     ).collect()
     assert miss == []
+
+
+@pytest.mark.parametrize("seed, kernel_min_bench", [(0, 0), (1, 48)])
+def test_random_planted_copies_match_oracle(spark, seed, kernel_min_bench):
+    """Random train/bench sets with planted exact and scaled copies of
+    bench vectors (always of the first) and random rational
+    thresholds, on both pairing lanes (kernel_min_bench 0 forces the
+    kernel, 48 the nested-loop join): Spark == the DuckDB oracle, and
+    every non-zero planted copy is flagged."""
+    rng = random.Random(seed)
+    dim = rng.randrange(3, 9)
+    num, den = rng.choice([(81, 100), (64, 100), (1, 4), (9, 16)])
+    bench = [
+        (100 + j, [rng.uniform(-2, 2) for _ in range(dim)])
+        for j in range(rng.randrange(1, 6))
+    ]
+    train = [
+        (i, [rng.uniform(-2, 2) for _ in range(dim)])
+        for i in range(rng.randrange(5, 40))
+    ]
+    planted = []
+    for j, (bid, bv) in enumerate(bench):
+        if j == 0 or rng.random() < 0.7:
+            f = rng.choice([1.0, 0.5, 2.0])
+            planted.append((1000 + bid, [x * f for x in bv]))
+    train += planted
+    got = sorted(
+        tuple(int(x) for x in r)
+        for r in semantic_decontaminate(
+            _df(spark, train),
+            _df(spark, bench),
+            threshold_num=num,
+            threshold_den=den,
+            dim=dim,
+            kernel_min_bench=kernel_min_bench,
+        ).collect()
+    )
+    con = duckdb.connect()
+    for name, rows in (("t_tbl", train), ("b_tbl", bench)):
+        con.register(
+            name,
+            pd.DataFrame(
+                {"vec_id": [i for i, _ in rows], "embedding": [v for _, v in rows]}
+            ),
+        )
+    want = sorted(
+        tuple(int(x) for x in r)
+        for r in con.execute(
+            semantic_decontaminate_oracle(
+                "SELECT vec_id, embedding FROM t_tbl",
+                "SELECT vec_id, embedding FROM b_tbl",
+                threshold_num=num,
+                threshold_den=den,
+                dim=dim,
+            )
+        ).fetchall()
+    )
+    drawn = (seed, dim, (num, den), kernel_min_bench)
+    assert got == want, drawn
+    flagged = {t for t, _, _ in got}
+    # a zero vector has no cosine (dot 0)
+    missed = [
+        pid
+        for pid, pv in planted
+        if any(abs(x) > 1e-6 for x in pv) and pid not in flagged
+    ]
+    assert not missed, (drawn, missed)
 
 
 def test_matches_duckdb_oracle_on_planted_sf0001(spark):

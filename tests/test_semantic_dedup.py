@@ -6,9 +6,13 @@ per-cluster cap, empty input, and the int64-safety envelope the
 from __future__ import annotations
 
 import hashlib
+import random
 
+import pandas as pd
 import pyspark.sql.functions as F
+import pytest
 
+from registered_query import run_registered
 from survivor_processing_spark.operators.similarity import (
     semantic_dedup_portable,
 )
@@ -124,3 +128,25 @@ def test_registered_query_plants_and_removes(spark, sf_dir):
     for _, r in out.iterrows():
         a, b = int(r["vec_id"]), int(r["dup_of"])
         assert abs(a - b) == 10000000
+
+
+@pytest.mark.parametrize("seed", [0, 1])
+def test_registered_query_matches_oracle_on_random_corpora(spark, seed):
+    """Random 64-dim corpora with a planted exact duplicate, a NULL
+    vector and a ragged one, through the registered query (which plants
+    its own scaled copies): seed choice, integer argmin assignment, the
+    per-cluster cap and the sqrt-free cosine test vs the oracle."""
+    rng = random.Random(seed)
+    n = rng.randint(3, 40)
+    vecs = [[rng.uniform(-1, 1) for _ in range(64)] for _ in range(n)]
+    if n > 5:
+        vecs[2] = list(vecs[0])  # cos 1: the md5 keeper rule decides
+        vecs[4] = None  # quarantined on both engines
+        vecs[5] = vecs[5][:32]  # ragged: quarantined on both engines
+    got, want = run_registered(
+        spark,
+        "semantic_dedup_portable",
+        "embeddings",
+        pd.DataFrame({"vec_id": range(n), "embedding": vecs}),
+    )
+    assert got == want, (seed, n)

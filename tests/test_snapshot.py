@@ -6,6 +6,7 @@ empty-snapshot schema contract, and the DuckDB summary oracle."""
 from __future__ import annotations
 
 import os
+import random
 import shutil
 import tempfile
 
@@ -203,6 +204,43 @@ def test_merge_rewrites_only_intersecting_files(spark, table_dir):
         for r in read_snapshot(spark, table_dir, 1).collect()
     }
     assert len(v1) == 400 and v1[150] == 150.0 and 999 not in v1
+
+
+@pytest.mark.parametrize("seed", [0, 1])
+def test_merge_random_batches_match_dict_upsert(spark, seed, table_dir):
+    """Random disjoint key-range seed files and random update/insert
+    batches: the merged snapshot equals a dict upsert of the batches,
+    version 1 stays intact, and in the first batch a seed file whose
+    key envelope excludes every batch key survives by name."""
+    from survivor_processing_spark.sinks.merge import merge_into_snapshot
+
+    rng = random.Random(seed)
+    d = table_dir
+    n_files = rng.randrange(2, 5)
+    bounds = sorted(rng.sample(range(0, 400), n_files * 2))
+    ranges = [(bounds[2 * i], bounds[2 * i + 1] + 1) for i in range(n_files)]
+    names = _seed_table(spark, d, ranges)
+    ref = {k: float(k) for lo, hi in ranges for k in range(lo, hi)}
+    pre = dict(ref)
+    for b in range(rng.randrange(1, 3)):
+        batch = {
+            rng.randrange(0, 500): float(rng.randrange(-99, 0))
+            for _ in range(rng.randrange(1, 12))
+        }
+        src = spark.createDataFrame(
+            sorted(batch.items()), "k long, amt double"
+        )
+        merge_into_snapshot(spark, d, src, "k")
+        ref.update(batch)
+        if b == 0:
+            still = set(snapshot_files(d))
+            for nm, (lo, hi) in zip(names, ranges):
+                if not any(lo <= k < hi for k in batch):
+                    assert nm in still, (seed, nm, sorted(batch))
+    got = {r["k"]: r["amt"] for r in read_snapshot(spark, d).collect()}
+    assert got == ref, (seed, ranges)
+    v1 = {r["k"]: r["amt"] for r in read_snapshot(spark, d, 1).collect()}
+    assert v1 == pre, (seed, ranges)
 
 
 def test_merge_insert_only_touches_nothing(spark, table_dir):

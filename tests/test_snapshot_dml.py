@@ -7,6 +7,7 @@ commits claim versions with O_EXCL semantics."""
 from __future__ import annotations
 
 import os
+import random
 import shutil
 import tempfile
 
@@ -131,6 +132,56 @@ def test_delete_idempotent_replay(spark, table_dir):
     assert _keys(spark, table_dir) == [
         k for k in range(1, 21) if not (5 <= k <= 8)
     ]
+
+
+def _by_key(rows):
+    return sorted(rows, key=lambda t: (t[0] is None, t[0]))
+
+
+@pytest.mark.parametrize("seed", [0, 1])
+def test_delete_random_ranges_match_dict_filter(spark, seed, table_dir):
+    """Random disjoint key-range seed files (the first, and some
+    others, with a NULL key) and a random delete range: the snapshot
+    equals a dict filter, NULL keys survive, the count is exact, a
+    file with no matching row survives by name even when its envelope
+    intersects the range, a no-op delete mints no version, and
+    version 1 stays intact."""
+    rng = random.Random(seed)
+    d = table_dir
+    n_files = rng.randrange(2, 5)
+    bounds = sorted(rng.sample(range(0, 400), n_files * 2))
+    per_file = {}
+    for i in range(n_files):
+        ks = list(range(bounds[2 * i], bounds[2 * i + 1] + 1))
+        if i == 0 or rng.random() < 0.3:
+            ks.append(None)
+        per_file[_write(d, f"s{i}.parquet", ks)] = ks
+    commit_version(d, adds=list(per_file))
+    rows = [
+        (k, float(k) if k is not None else 0.0)
+        for ks in per_file.values()
+        for k in ks
+    ]
+    dlo = rng.randrange(0, 400)
+    dhi = dlo + rng.randrange(0, 120)
+
+    def hit(k):
+        return k is not None and dlo <= k <= dhi
+
+    out = delete_from_snapshot(spark, d, "k", dlo, dhi)
+    drawn = (seed, bounds, dlo, dhi)
+    got = _by_key((r["k"], r["amt"]) for r in read_snapshot(spark, d).collect())
+    assert got == _by_key(t for t in rows if not hit(t[0])), drawn
+    n_del = sum(hit(k) for k, _ in rows)
+    assert out["n_deleted"] == n_del, drawn
+    still = set(snapshot_files(d))
+    for nm, ks in per_file.items():
+        if not any(hit(k) for k in ks):
+            assert nm in still, (drawn, nm)
+    if n_del == 0:
+        assert out["version"] is None, drawn
+    v1 = _by_key((r["k"], r["amt"]) for r in read_snapshot(spark, d, 1).collect())
+    assert v1 == _by_key(rows), drawn
 
 
 def test_delete_failed_commit_rolls_back_files(spark, table_dir, monkeypatch):

@@ -74,25 +74,46 @@ def test_partition_and_determinism(spark):
 
 
 def test_cross_engine_synthetic(spark):
+    """Random strata distributions (1-row and hot strata included) and
+    random weight vectors: per-(stratum, split) counts vs the oracle
+    and the floor-count formula."""
+    import pyspark.sql.functions as F
+
     rng = random.Random(19)
-    rows = [(i, rng.choice(["en", "de", "fr"])) for i in range(200)]
-    df = spark.createDataFrame(rows, "doc_id long, lang string")
-    got = sorted(
-        (r["lang"], r["split"], r["n_docs"])
-        for r in stratified_exact_split(df, ["lang"], "doc_id")
-        .groupBy("lang", "split")
-        .agg(__import__("pyspark").sql.functions.count("*").alias("n_docs"))
-        .collect()
-    )
-    con = duckdb.connect()
-    con.register("documents", pd.DataFrame(rows, columns=["doc_id", "lang"]))
-    want = sorted(
-        (a, b, int(c))
-        for a, b, c in con.execute(
-            stratified_exact_split_oracle(["lang"])
-        ).fetchall()
-    )
-    assert got == want
+    for _ in range(3):
+        langs = [f"l{i}" for i in range(rng.randint(1, 6))]
+        rows = [(i, rng.choice(langs)) for i in range(rng.randint(1, 300))]
+        weights = [(f"s{j}", rng.randint(1, 9)) for j in range(rng.randint(1, 4))]
+        df = spark.createDataFrame(rows, "doc_id long, lang string")
+        got = sorted(
+            (r["lang"], r["split"], r["n_docs"])
+            for r in stratified_exact_split(
+                df, ["lang"], "doc_id", weights=weights
+            )
+            .groupBy("lang", "split")
+            .agg(F.count("*").alias("n_docs"))
+            .collect()
+        )
+        con = duckdb.connect()
+        con.register(
+            "documents", pd.DataFrame(rows, columns=["doc_id", "lang"])
+        )
+        want = sorted(
+            (a, b, int(c))
+            for a, b, c in con.execute(
+                stratified_exact_split_oracle(["lang"], weights=weights)
+            ).fetchall()
+        )
+        assert got == want, (len(rows), weights)
+        per_lang = {}
+        for lang, split, c in got:
+            per_lang.setdefault(lang, {})[split] = c
+        for lang, counts in per_lang.items():
+            expect = _expected_counts(sum(counts.values()), weights)
+            assert counts == {k: v for k, v in expect.items() if v}, (
+                lang,
+                weights,
+            )
 
 
 def test_cross_engine_sf0001_custom_weights(spark):

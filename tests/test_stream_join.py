@@ -6,10 +6,12 @@ join row-for-row, and the unbounded-state / ambiguous-column guards.
 
 from __future__ import annotations
 
+import random
 import tempfile
 import uuid
 
 import duckdb
+import pandas as pd
 import pyspark.sql.functions as F
 import pytest
 
@@ -83,6 +85,62 @@ def test_static_mode_matches_duckdb_oracle(spark):
     got = _key(out.collect())
     assert len(got) > 0  # the fixture must actually exercise the join
     assert got == want
+
+
+@pytest.mark.parametrize("seed", [0, 1])
+def test_static_mode_random_events_match_oracle(spark, seed):
+    """Random two-sided event sets over 5 keys and random upper
+    bounds: the static-mode interval join == the DuckDB oracle."""
+    rng = random.Random(seed)
+    lrows = [
+        (rng.randrange(0, 5), i, rng.randrange(0, 10000))
+        for i in range(rng.randrange(1, 40))
+    ]
+    rrows = [
+        (rng.randrange(0, 5), i, rng.randrange(0, 10000))
+        for i in range(rng.randrange(1, 40))
+    ]
+    upper = rng.choice([60, 600, 3600])
+    left = spark.createDataFrame(
+        lrows, "user_id long, view_id long, sec long"
+    ).selectExpr("user_id", "view_id", "timestamp_seconds(sec) AS view_ts")
+    right = spark.createDataFrame(
+        rrows, "user_id long, click_id long, sec long"
+    ).selectExpr("user_id", "click_id", "timestamp_seconds(sec) AS click_ts")
+    got = _key(
+        stream_interval_join(
+            left,
+            right,
+            keys=["user_id"],
+            left_ts="view_ts",
+            right_ts="click_ts",
+            upper=f"{upper} seconds",
+        ).collect()
+    )
+    con = duckdb.connect()
+    con.register(
+        "lraw", pd.DataFrame(lrows, columns=["user_id", "view_id", "sec"])
+    )
+    con.register(
+        "rraw", pd.DataFrame(rrows, columns=["user_id", "click_id", "sec"])
+    )
+    wdf = con.execute(
+        stream_interval_join_oracle(
+            keys=["user_id"],
+            left_sql="SELECT user_id, view_id, to_timestamp(sec) AS view_ts FROM lraw",
+            right_sql=(
+                "SELECT user_id, click_id, to_timestamp(sec) AS click_ts FROM rraw"
+            ),
+            left_ts="view_ts",
+            right_ts="click_ts",
+            upper_s=upper,
+        )
+    ).fetchdf()
+    want = sorted(
+        (int(u), int(v), int(c))
+        for u, v, c in zip(wdf["user_id"], wdf["view_id"], wdf["click_id"])
+    )
+    assert got == want, (seed, upper, len(lrows), len(rrows))
 
 
 def test_streaming_replay_matches_static(spark):

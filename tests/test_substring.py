@@ -163,23 +163,50 @@ def test_cross_engine_clean_fixed(spark):
 
 
 def test_cross_engine_random(spark):
+    """Random corpora with planted shared boilerplate, within-doc
+    repeats and short docs, random (n, min_count): spans AND cleaned
+    text vs the generated oracles."""
     rng = random.Random(77)
-    vocab = [f"w{i}" for i in range(30)]
-    boiler = " ".join(rng.choice(vocab) for _ in range(12))
-    texts = {}
-    for d in range(25):
-        words = [rng.choice(vocab) for _ in range(rng.randint(0, 40))]
-        if rng.random() < 0.5:
-            ins = rng.randint(0, len(words))
-            words[ins:ins] = boiler.split()
-        texts[d] = " ".join(words)
-    for n in (3, 6):
-        got = _spark_spans(spark, texts, n=n)
+    vocab = [f"w{i}" for i in range(25)]
+    for _ in range(3):
+        n = rng.randint(2, 6)
+        min_count = rng.choice([2, 2, 3])
+        boiler = " ".join(
+            rng.choice(vocab) for _ in range(rng.randint(n, 3 * n))
+        )
+        texts = {}
+        for d in range(rng.randint(5, 30)):
+            words = [rng.choice(vocab) for _ in range(rng.randint(0, 35))]
+            if rng.random() < 0.5:
+                ins = rng.randint(0, len(words))
+                words[ins:ins] = boiler.split()
+            if rng.random() < 0.15 and words:  # within-doc repeat
+                words = words + words
+            texts[d] = " ".join(words)
+        got = _spark_spans(spark, texts, n=n, min_count=min_count)
         want = sorted(
             (int(d), int(s), int(e))
-            for d, s, e, _ in _duck(substring_spans_oracle(n=n), texts)
+            for d, s, e, _ in _duck(
+                substring_spans_oracle(n=n, min_count=min_count), texts
+            )
         )
-        assert got == want, f"n={n}"
+        assert got == want, (n, min_count, len(texts))
+        df = spark.createDataFrame(
+            list(texts.items()), "doc_id long, text string"
+        )
+        got_c = sorted(
+            (r["doc_id"], r["clean_text"], r["n_removed_tokens"])
+            for r in substring_dedup_clean(
+                df, n=n, min_count=min_count
+            ).collect()
+        )
+        want_c = sorted(
+            (int(d), c, int(rm))
+            for d, c, _, rm in _duck(
+                substring_clean_oracle(n=n, min_count=min_count), texts
+            )
+        )
+        assert got_c == want_c, (n, min_count, len(texts))
 
 
 def test_cross_engine_sf0001(spark):

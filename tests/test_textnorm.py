@@ -77,14 +77,19 @@ def test_randomized_mark_soup_cross_engine(spark, seed):
     rng = random.Random(seed)
     bases = "aeiouAEIOU\u1100\u1161\uac00\u03b1\u03b2\u03b3"
     marks = ["\u0300", "\u0301", "\u0308", "\u030a", "\u0327", ""]
-    texts = {
-        i: "".join(
-            rng.choice(bases) + rng.choice(marks)
-            for _ in range(rng.randint(0, 40))
-        )
-        for i in range(30)
-    }
-    assert _spark_rows(spark, texts) == _duck_rows(texts)
+    texts = {}
+    for i in range(rng.randint(2, 30)):
+        r = rng.random()
+        if r < 0.1:
+            texts[i] = None
+        elif r < 0.2:
+            texts[i] = ""
+        else:
+            texts[i] = "".join(
+                rng.choice(bases) + rng.choice(marks)
+                for _ in range(rng.randint(1, 40))
+            )
+    assert _spark_rows(spark, texts) == _duck_rows(texts), seed
 
 
 def test_sf0001_cross_engine(spark):

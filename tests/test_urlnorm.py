@@ -34,7 +34,7 @@ def _duck_canon(urls):
     return [
         r[1]
         for r in con.execute(
-            url_canonicalize_oracle(src) + " ORDER BY url"
+            url_canonicalize_oracle(src) + " ORDER BY url NULLS FIRST"
         ).fetchall()
     ]
 
@@ -73,13 +73,16 @@ def test_null_propagates(spark):
 def test_randomized_cross_engine(spark):
     rng = random.Random(20260815)
     frags = [
-        "http://", "HTTPS://", "a.COM", ":80", ":443", ":99", "/p",
-        "/P/", "?", "a=1", "&", "utm_x=2", "ref=3", "#f", "=", "x",
-        "//", "  ",
+        "http://", "HTTPS://", "fTp://", "a.COM", "B.org", ":80", ":443",
+        ":99", ":8080", "/p", "/P/", "?", "a=1", "&", "&&", "utm_x=2",
+        "ref=3", "fbclid=9", "#f", "#f#g", "=", "x", "x y", ".", "//",
+        "  ",
     ]
     for trial in range(4):
-        urls = sorted(
-            "".join(rng.choice(frags) for _ in range(rng.randrange(1, 8)))
-            for _ in range(25)
-        )
+        urls = [
+            None
+            if rng.random() < 0.08
+            else "".join(rng.choice(frags) for _ in range(rng.randrange(1, 9)))
+            for _ in range(rng.randrange(2, 30))
+        ]
         assert _spark_canon(spark, urls) == _duck_canon(urls), (trial, urls)

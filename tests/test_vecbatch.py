@@ -1,11 +1,12 @@
 """The numpy vector kernels and their shared Arrow batch layer
-(operators/vecbatch.py): exactness rules, totality, plan shape, and
-the vector fuzz families against their DuckDB oracles."""
+(operators/vecbatch.py): exactness rules, totality and plan shape.
+The kernels' randomized oracle checks live with their operators'
+tests (test_lloyd_property, test_pq, test_semantic_dedup,
+test_semantic_decontam)."""
 
 from __future__ import annotations
 
 import hashlib
-import importlib.util
 import math
 import os
 import subprocess
@@ -309,20 +310,6 @@ def test_ivf_index_ragged_vector_gets_null_cluster(spark):
     assert None not in got.values()
     assert all(len(c) == 3 for _, c in cents)
     assert len({tuple(c) for _, c in cents}) == len(cents)
-
-
-def test_vector_fuzz_families_match_oracles(spark):
-    """The vector families of tools/fuzz_portables.py (k-means, PQ,
-    semantic dedup, semantic decontamination with kernel_min_bench
-    drawn from {0, 48}, so both pairing lanes run) agree with their
-    DuckDB oracles on every trial."""
-    spec = importlib.util.spec_from_file_location(
-        "fuzz_portables", os.path.join(REPO, "tools", "fuzz_portables.py")
-    )
-    fuzz = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(fuzz)
-    only = {"lloyd", "pq", "semantic_dedup", "semantic_decontam"}
-    assert fuzz.run(spark, 20260814, 3, only) == 0
 
 
 _PATCHED_VERSION = (3, 10) <= sys.version_info[:2] <= (3, 12)

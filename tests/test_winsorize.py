@@ -85,13 +85,22 @@ def test_validation(spark):
 def test_randomized_cross_engine(spark, seed):
     rng = random.Random(seed)
     rows = []
-    for g in "abcd":
-        for _ in range(rng.randint(1, 40)):
-            v = None if rng.random() < 0.15 else rng.randint(-50, 50)
-            rows.append((g, v))
-    # keep at least one non-null per group to avoid empty groups
-    rows += [(g, 0) for g in "abcd"]
-    for p_lo, p_hi in [((5, 100), (95, 100)), ((1, 10), (9, 10)), ((1, 3), (2, 3))]:
-        assert _spark_rows(spark, rows, p_lo=p_lo, p_hi=p_hi) == _duck_rows(
-            rows, p_lo=p_lo, p_hi=p_hi
-        )
+    for g in range(rng.randint(1, 5)):
+        tie_pool = list(range(-5, 6)) if rng.random() < 0.5 else None
+        for _ in range(rng.randint(1, 60)):
+            if rng.random() < 0.1:
+                v = None
+            elif tie_pool is not None:
+                v = rng.choice(tie_pool)
+            else:
+                v = rng.randint(-10**6, 10**6)
+            rows.append((f"g{g}", v))
+        rows.append((f"g{g}", 0))  # non-empty after the NULL cut
+    for _ in range(3):  # random rational percentiles, lo <= hi
+        lo_d, hi_d = rng.randint(1, 20), rng.randint(1, 20)
+        lo, hi = (rng.randint(0, lo_d), lo_d), (rng.randint(0, hi_d), hi_d)
+        if lo[0] * hi[1] > hi[0] * lo[1]:
+            lo, hi = hi, lo
+        assert _spark_rows(spark, rows, p_lo=lo, p_hi=hi) == _duck_rows(
+            rows, p_lo=lo, p_hi=hi
+        ), (seed, lo, hi)

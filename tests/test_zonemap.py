@@ -161,6 +161,46 @@ def test_randomized_range_contract(spark, ranged_dir):
         assert got == want, (lo, hi)
 
 
+@pytest.mark.parametrize("seed", [0, 1])
+def test_random_layouts_match_oracle_and_prune_exactly(spark, seed, tmp_path):
+    """Random file layouts and row-group sizes: the manifest equals
+    the DuckDB parquet_metadata oracle, and random numeric and
+    numeric-looking string ranges (bytewise ordering on both engines)
+    satisfy pruned scan == full scan + filter."""
+    rng = random.Random(seed)
+    d = str(tmp_path)
+    all_k, all_s = [], []
+    for i in range(rng.randrange(1, 5)):
+        ks = [rng.randrange(-1000, 1000) for _ in range(rng.randrange(1, 40))]
+        ss = [str(rng.randrange(0, 2000)) for _ in ks]
+        all_k += ks
+        all_s += ss
+        pq.write_table(
+            pa.table({"k": ks, "s": ss}),
+            os.path.join(d, f"f{i}.parquet"),
+            row_group_size=rng.choice([2, 7, 1000]),
+        )
+    zm = build_zonemap(spark, d, ["k", "s"])
+    assert sorted(map(tuple, zm.collect())) == _oracle_rows(d, ["k", "s"])
+    lo = rng.randrange(-1100, 1100)
+    hi = lo + rng.randrange(0, 800)
+    got = sorted(
+        r["k"] for r in pruned_scan(spark, d, zm, "k", lo, hi).collect()
+    )
+    assert got == sorted(x for x in all_k if lo <= x <= hi), (seed, lo, hi)
+    slo = str(rng.randrange(0, 2000))
+    shi = max(slo, str(rng.randrange(0, 2000)))
+    got_s = sorted(
+        r["s"]
+        for r in pruned_scan(spark, d, zm, "s", slo, shi, cast="string").collect()
+    )
+    assert got_s == sorted(x for x in all_s if slo <= x <= shi), (
+        seed,
+        slo,
+        shi,
+    )
+
+
 def test_zorder_layout_makes_zonemaps_pay_on_both_dims(spark):
     """The composition the two operators exist for: a z-ordered
     layout tightens BOTH dimensions' per-file envelopes, so a range

@@ -9,6 +9,8 @@ bit-equal (the real driver hashes values, so bit-equality is the
 target — aggregated doubles should be rounded inside the query).
 
 Usage: python tools/check_correctness.py [sf_dir] [query ...]
+Tier-1 runs the same comparison over sf0.001
+(``tests/test_contract.py::test_query_matches_oracle``).
 """
 
 from __future__ import annotations
@@ -25,6 +27,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from survivor_processing_spark import TABLES, get_spark  # noqa: E402
+from survivor_processing_spark.queries import REGISTRY  # noqa: E402
 
 
 def duckdb_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
@@ -102,45 +105,49 @@ def compare(name: str, sdf: pd.DataFrame, odf: pd.DataFrame) -> list[str]:
     return problems
 
 
+def check_query(
+    spark, con, sf_dir: str, name: str
+) -> tuple[pd.DataFrame | None, list[str]]:
+    """Run registered query ``name`` over ``sf_dir`` on Spark and its
+    oracle SQL on ``con`` (a ``duckdb_con`` over the same dir), and
+    compare them: ``compare_partial`` for ``partial=True`` entries,
+    ``compare`` otherwise.  Returns the Spark frame (None if Spark
+    raised) and the problems found (empty on a match)."""
+    q = REGISTRY[name]
+    try:
+        sdf = q.fn(spark, sf_dir).toPandas()
+    except Exception:
+        return None, [f"spark raised\n{traceback.format_exc()}"]
+    try:
+        odf = con.execute(q.oracle).df()
+    except Exception:
+        return sdf, [f"oracle raised\n{traceback.format_exc()}"]
+    if q.partial:
+        return sdf, compare_partial(sdf, odf)
+    return sdf, compare(name, sdf, odf)
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
     spark = get_spark("check-correctness")
     con = duckdb_con(sf_dir)
-    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
+    oracles = entrymod.oracle_sql()
     n_fail = 0
-    for name, fn in qs.items():
+    for name in entrymod.queries():
         if only and name not in only:
             continue
-        try:
-            sdf = fn(spark, sf_dir).toPandas()
-        except Exception:
-            print(f"FAIL {name}: spark raised\n{traceback.format_exc()}")
-            n_fail += 1
-            continue
         if name not in oracles:
-            print(f"SKIP {name}: no oracle (rows-only) — {len(sdf)} rows")
+            print(f"SKIP {name}: no oracle")
             continue
-        try:
-            odf = con.execute(oracles[name]).df()
-        except Exception:
-            print(f"FAIL {name}: oracle raised\n{traceback.format_exc()}")
-            n_fail += 1
-            continue
-        from survivor_processing_spark.queries import REGISTRY
-
-        if REGISTRY.get(name) is not None and REGISTRY[name].partial:
-            problems = compare_partial(sdf, odf)
-            tag = "PART"
-        else:
-            problems = compare(name, sdf, odf)
-            tag = "OK  "
+        sdf, problems = check_query(spark, con, sf_dir, name)
         if problems:
             n_fail += 1
             print(f"FAIL {name}:")
             for p in problems[:8]:
                 print(f"   - {p}")
         else:
+            tag = "PART" if REGISTRY[name].partial else "OK  "
             print(f"{tag} {name} ({len(sdf)} rows, {len(sdf.columns)} cols)")
     print(f"\n{n_fail} failing")
     return 1 if n_fail else 0
