@@ -43,9 +43,3 @@ def sql_double_lit(x: float) -> str:
 def sql_double_array(values) -> str:
     """``array(cast('…' as double),...)`` — float64 lanes."""
     return "array(" + ",".join(sql_double_lit(x) for x in values) + ")"
-
-
-def sql_string_lit(s: str) -> str:
-    """One string literal, single-quoted with backslash/quote
-    escaping (Spark's default parser honors backslash escapes)."""
-    return "'" + str(s).replace("\\", "\\\\").replace("'", "\\'") + "'"

@@ -1,4 +1,17 @@
-"""Distributed Bloom-filter build and map-side join pre-filter.
+"""Bloom filters: a distributed build for the map-side join
+pre-filter, and the hash family the snapshot log's per-file key
+blooms share.
+
+One hash family serves both.  :func:`_positions` gives the k bit
+positions of a key as Spark Columns (two xxhash64 lanes, enhanced
+double hashing); :func:`_positions_np` gives the same positions in
+numpy.  The join pre-filter below builds and probes with the Column
+form.  The per-file key blooms of the snapshot log
+(``operators/snapshot.py`` ``file_key_blooms``) are built on the
+driver with the numpy form from the files a commit just wrote, and
+probed by the merge (``sinks/merge.py``) with the Column form, so
+``tests/test_snapshot.py::test_positions_np_matches_spark`` holds the
+two to bit-for-bit agreement.
 
 The 100 TB join pattern this encodes: when a selective dimension
 predicate keeps only a sliver of the dim, the fact side should be
@@ -48,6 +61,7 @@ from __future__ import annotations
 import uuid
 from functools import reduce
 
+import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
@@ -58,10 +72,12 @@ def _positions(
     """k independent bit positions for ``key`` (enhanced-double-hash
     family over two xxhash64 lanes — standard Kirsch-Mitzenmacher).
 
-    ``num_bits`` may be a Column (per-row filter size) — the
-    manifest-bloom PROBE (sinks/merge.py) derives its membership test
-    from THIS function against blooms built by it, so the hash family
-    physically cannot drift between build and probe."""
+    ``num_bits`` may be a Column (per-row filter size): the
+    manifest-bloom PROBE (sinks/merge.py) tests membership with THIS
+    function against per-file blooms that :func:`_positions_np`
+    builds on the driver.  The two implementations must agree bit for
+    bit; ``tests/test_snapshot.py::test_positions_np_matches_spark``
+    pins that on every key type the build accepts."""
     nb = num_bits if isinstance(num_bits, Column) else F.lit(num_bits)
     # Each lane is reduced mod num_bits BEFORE the double-hash combine
     # so the arithmetic stays far from long range (ANSI mode overflows
@@ -70,6 +86,65 @@ def _positions(
     h1 = F.pmod(F.xxhash64(key), nb)
     h2 = F.pmod(F.xxhash64(key, F.lit(0x9E3779B9)), nb)
     return [F.pmod(h1 + F.lit(i) * h2, nb) for i in range(num_hashes)]
+
+
+# Spark's XXH64 (org.apache.spark.sql.catalyst.expressions.XXH64) over
+# uint64 lanes; numpy integer arrays wrap mod 2**64 like JVM longs.
+_P1 = np.uint64(0x9E3779B185EBCA87)
+_P2 = np.uint64(0xC2B2AE3D27D4EB4F)
+_P3 = np.uint64(0x165667B19E3779F9)
+_P4 = np.uint64(0x85EBCA77C2B2AE63)
+_P5 = np.uint64(0x27D4EB2F165667C5)
+
+
+def _rotl(x: np.ndarray, r: int) -> np.ndarray:
+    return (x << np.uint64(r)) | (x >> np.uint64(64 - r))
+
+
+def _fmix(h: np.ndarray) -> np.ndarray:
+    h = (h ^ (h >> np.uint64(33))) * _P2
+    h = (h ^ (h >> np.uint64(29))) * _P3
+    return h ^ (h >> np.uint64(32))
+
+
+def _xxh64_long(v: np.ndarray, seed: np.ndarray) -> np.ndarray:
+    """``XXH64.hashLong`` of uint64-viewed longs ``v``."""
+    h = seed + _P5 + np.uint64(8)
+    h = h ^ (_rotl(v * _P2, 31) * _P1)
+    return _fmix(_rotl(h, 27) * _P1 + _P4)
+
+
+def _xxh64_int(v: np.ndarray, seed: np.ndarray) -> np.ndarray:
+    """``XXH64.hashInt`` of uint64 lanes holding the ints' low 32 bits."""
+    h = seed + _P5 + np.uint64(4)
+    h = h ^ (v * _P1)
+    return _fmix(_rotl(h, 23) * _P2 + _P3)
+
+
+def _positions_np(
+    keys: np.ndarray, num_bits: int, num_hashes: int
+) -> np.ndarray:
+    """:func:`_positions` on the driver: a ``(num_hashes, len(keys))``
+    int64 array of the positions Spark computes for the same non-NULL
+    keys.  int64 keys hash as ``hashLong`` (bigint); int8/16/32 keys
+    hash as ``hashInt`` (tinyint, smallint, int, and date as days
+    since the epoch).  Any other dtype raises TypeError."""
+    if keys.dtype == np.int64:
+        h1 = _xxh64_long(keys.view(np.uint64), np.uint64(42))
+    elif keys.dtype in (np.int8, np.int16, np.int32):
+        lo = keys.astype(np.int64).view(np.uint64) & np.uint64(0xFFFFFFFF)
+        h1 = _xxh64_int(lo, np.uint64(42))
+    else:
+        raise TypeError(f"no Spark xxhash64 twin for dtype {keys.dtype}")
+    # lane 2 is xxhash64(key, 0x9E3779B9L): the literal hashed as a
+    # long, seeded with lane 1's raw hash
+    h2 = _xxh64_long(np.full_like(h1, 0x9E3779B9), h1)
+    m = np.int64(num_bits)
+    a = np.mod(h1.view(np.int64), m)
+    b = np.mod(h2.view(np.int64), m)
+    return np.stack(
+        [np.mod(a + np.int64(i) * b, m) for i in range(num_hashes)]
+    )
 
 
 # ONE parsed SQL string (the module's own "bloom lesson", applied to

@@ -522,7 +522,7 @@ def upsert_into_snapshot_mor(
             adds = pruned
             new_stats = stats_for_files(table_dir, adds, [key_col])
             attach_key_blooms(
-                spark, table_dir, adds, key_col, new_stats, bloom_bits
+                table_dir, adds, key_col, new_stats, bloom_bits
             )
             version = commit_version(
                 table_dir,
@@ -631,7 +631,7 @@ def purge_dvs(
             from .snapshot import attach_key_blooms
 
             attach_key_blooms(
-                spark, table_dir, adds, bloom_key, new_stats, bloom_bits
+                table_dir, adds, bloom_key, new_stats, bloom_bits
             )
         version = commit_version(
             table_dir,

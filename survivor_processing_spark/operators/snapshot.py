@@ -661,13 +661,11 @@ def unpack_words(b64: str) -> list[int]:
 
 
 def file_key_blooms(
-    spark: SparkSession,
     table_dir: str,
     files: list[str] | dict[str, int],
     key_col: str,
     num_bits: int = 1 << 13,
     num_hashes: int = 3,
-    key_type: str | None = None,
 ) -> dict[str, dict]:
     """Per-FILE Bloom filter over ``key_col``, in the
     ``commit_version(stats=...)`` bloom shape: ``{file: {"m", "k",
@@ -679,30 +677,30 @@ def file_key_blooms(
     raise ``num_bits`` for bigger files; the log entry grows with
     the FILTER, not the data) excludes files that provably lack
     every source key.  False positives cost an extra rewrite, never
-    correctness; false negatives cannot happen because the writer
-    hashes the file's OWN full key column with the SAME
-    Kirsch-Mitzenmacher family (operators/bloom.py ``_positions``)
-    the probe uses — shared code, so the family can't drift.
+    correctness; false negatives cannot happen because the build
+    hashes the file's OWN full key column with
+    ``operators/bloom.py`` ``_positions_np``, the driver twin of the
+    ``_positions`` family the probe evaluates in the JVM.
 
-    ONE distributed job for ALL files, even at mixed sizes: pass a
-    ``{file: num_bits}`` dict to size each file's filter
-    independently — the per-row m comes from a broadcast file→m map
-    (the same per-row-m arithmetic the merge PROBE uses, so mixed
-    sizes share one build exactly like they share one probe).  A
-    list builds every file at the scalar ``num_bits``.  The job
-    reads key_col of the new files, explodes the k probe positions,
-    word-level ``bit_or`` grouped by (input file, word index).  NULL
-    keys contribute no bits (a NULL in a file can never equal a
-    source key — sources reject NULL keys outright)."""
-    from .bloom import _positions, _powers
+    Built on the driver, no Spark job: each file's key column is read
+    with pyarrow in record batches (memory bounded by the batch and
+    the m-bit array), NULL keys are dropped (a NULL in a file can
+    never equal a source key — sources reject NULL keys outright) and
+    the k positions set bits.  Pass a ``{file: num_bits}`` dict to
+    size each file's filter independently; a list builds every file
+    at the scalar ``num_bits``.  A file whose key column is not an
+    integer or date type gets no entry: it is probed by its envelope
+    only."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as _pq
 
-    if isinstance(files, dict):
-        bits_by_file = dict(files)
-        file_names = sorted(bits_by_file)
-    else:
-        file_names = list(files)
-        bits_by_file = {f: num_bits for f in file_names}
-    for f, m in bits_by_file.items():
+    from .bloom import _positions_np
+
+    if not isinstance(files, dict):
+        files = {f: num_bits for f in files}
+    out = {}
+    for f, m in files.items():
         if m < 64 or m % 64:
             # the packed form is whole int64 words; a ragged tail word
             # would make a probe position index past the dense array
@@ -712,114 +710,48 @@ def file_key_blooms(
                 f"num_bits must be a positive multiple of 64, got {m}"
                 f" (file {f!r})"
             )
-    paths = [os.path.join(table_dir, f) for f in file_names]
-    # explicit single-column read schema (r13 optimization): the
-    # build only touches key_col, and its type is either handed in by
-    # the writer (who just produced the files) or logged — footer
-    # inference here cost ~0.1 s of driver work per commit for a
-    # fact the caller already knows.  Unknown type falls back to
-    # inference, never guesses; a table with no log yet (bootstrap
-    # commit, direct builds over bare files) has nothing to consult.
-    if key_type is None and log_versions(table_dir):
-        logged = table_schema(table_dir)
-        if logged:
-            key_type = dict(logged).get(key_col)
-    reader = (
-        spark.read.schema(f"`{key_col}` {key_type}")
-        if key_type
-        else spark.read
-    )
-    sizes = set(bits_by_file.values())
-    if len(sizes) == 1:
-        m_expr = F.lit(next(iter(sizes)))
-    else:
-        # per-row filter size from a literal file→m map: one build
-        # job for every size class (previously one job per class).
-        # ONE parsed map literal — per-entry F.lit() pairs are py4j
-        # round trips that scale with the commit's file count.
-        from ..functions.sql_literals import sql_string_lit
-
-        entries = ",".join(
-            f"{sql_string_lit(f)},{int(bits_by_file[f])}"
-            for f in file_names
-        )
-        m_expr = F.element_at(F.expr(f"map({entries})"), F.col("_f"))
-    # right-size the scan: the session's small-file split floor would
-    # schedule 32 near-empty tasks for a KB-scale commit's files
-    # (~15 ms each of pure task launch under foreachBatch's no-AQE
-    # plans).  The build's cost is per ROW (explode k positions +
-    # hash), not per byte — byte-based sizing single-tasked a
-    # 150k-key build into a 5 s straggler — so size from the footer
-    # row counts (driver-side metadata read, file-count-bounded) at
-    # the ~64k rows/task spread_rows convention.  coalesce only ever
-    # shrinks.
-    import pyarrow.parquet as _pq
-
-    total_rows = sum(_pq.ParquetFile(p).metadata.num_rows for p in paths)
-    want = max(1, (total_rows >> 16) + (1 if total_rows & 0xFFFF else 0))
-    scan = reader.parquet(*paths)
-    pos = (
-        scan.coalesce(want)
-        .select(
-            F.element_at(
-                F.split(F.input_file_name(), "/"), -1
-            ).alias("_f"),
-            F.col(key_col).alias("_k"),
-        )
-        .where(F.col("_k").isNotNull())
-        .select(
-            "_f",
-            F.explode(
-                F.array(*_positions(F.col("_k"), m_expr, num_hashes))
-            ).alias("p"),
-        )
-    )
-    rows = (
-        pos.select(
-            "_f",
-            (F.col("p") / F.lit(64)).cast("int").alias("w"),
-            F.element_at(
-                _powers(),
-                F.col("p").bitwiseAND(F.lit(63)).cast("int") + F.lit(1),
-            ).alias("b"),
-        )
-        .groupBy("_f", "w")
-        .agg(F.bit_or("b").alias("word"))
-        .collect()
-    )
-    sparse: dict[str, dict[int, int]] = {f: {} for f in file_names}
-    for r in rows:
-        sparse[r["_f"]][int(r["w"])] = int(r["word"])
-    out = {}
-    for f in file_names:
-        n_words = bits_by_file[f] // 64
-        dense = [sparse[f].get(w, 0) for w in range(n_words)]
+        with _pq.ParquetFile(os.path.join(table_dir, f)) as pf:
+            typ = pf.schema_arrow.field(key_col).type
+            if pa.types.is_date32(typ):
+                typ = pa.int32()
+            elif not pa.types.is_signed_integer(typ):
+                continue
+            bits = np.zeros(m, dtype=bool)
+            for batch in pf.iter_batches(
+                batch_size=1 << 16, columns=[key_col]
+            ):
+                keys = (
+                    batch.column(0)
+                    .drop_null()
+                    .cast(typ)
+                    .to_numpy(zero_copy_only=False)
+                )
+                bits[_positions_np(keys, m, num_hashes).ravel()] = True
+        # bit i of word w is position 64*w + i: little-endian bit and
+        # byte order inside each word
+        words = np.packbits(bits, bitorder="little").view("<i8")
         out[f] = {
-            "m": bits_by_file[f],
+            "m": m,
             "k": num_hashes,
-            "b64": _pack_words(dense),
+            "b64": _pack_words(words.tolist()),
         }
     return out
 
 
 def attach_key_blooms(
-    spark: SparkSession,
     table_dir: str,
     adds: list[str],
     key_col: str,
     new_stats: dict[str, dict],
     bloom_bits: int | str | None = "auto",
-    key_type: str | None = None,
 ) -> dict[str, dict]:
     """Mutates ``new_stats`` in place: per-file key blooms for
     ``adds``, sized "auto" at ~10 bits/key from the row count the
     stats pass measured (clamped to [2^13, 2^17] bits — the log
-    grows with the FILTER, not the data).  ONE distributed build job
-    for every file regardless of size mix (``file_key_blooms`` takes
-    the per-file sizing dict; previously each size class ran its own
-    job — a mixed-size commit paid the whole job fixed cost twice).
-    The single bloom-sizing policy for every writer (merge, delete,
-    streaming bootstrap)."""
+    grows with the FILTER, not the data), built on the driver from
+    the files the commit just wrote (``file_key_blooms``).  The
+    single bloom-sizing policy for every writer (merge, delete,
+    merge-on-read upsert, streaming bootstrap)."""
     if not bloom_bits or not adds:
         return new_stats
     bits: dict[str, int] = {}
@@ -832,9 +764,7 @@ def attach_key_blooms(
             )
         else:
             bits[fname] = int(bloom_bits)
-    for fname, b in file_key_blooms(
-        spark, table_dir, bits, key_col, key_type=key_type
-    ).items():
+    for fname, b in file_key_blooms(table_dir, bits, key_col).items():
         new_stats[fname][key_col]["bloom"] = b
     return new_stats
 
@@ -2202,24 +2132,17 @@ def init_snapshot(
         new_stats = (
             stats_for_files(table_dir, adds, cols) if cols else None
         )
-        types = dict(df.dtypes)
         if bloom_key and new_stats:
             attach_key_blooms(
-                spark,
-                table_dir,
-                adds,
-                bloom_key,
-                new_stats,
-                bloom_bits,
-                key_type=types.get(bloom_key),
+                table_dir, adds, bloom_key, new_stats, bloom_bits
             )
-        # schema-in-the-log from commit 1 (r13 optimization, guide
-        # §1.2/§6): the writer KNOWS df's schema, and recording it
-        # makes every later read — summaries, DML rewrites, bloom
-        # builds, time travel — an explicit-schema parquet scan
-        # instead of a footer-inference pass (~80-115 ms of driver
-        # work per un-schema'd read at local scale; at 100 TB the
-        # inference job reopens footers the log already describes).
+        # schema-in-the-log from commit 1: the writer KNOWS df's
+        # schema, and recording it makes every later read —
+        # summaries, DML rewrites, time travel — an explicit-schema
+        # parquet scan instead of a footer-inference pass (~80-115 ms
+        # of driver work per un-schema'd read at local scale; at
+        # 100 TB the inference job reopens footers the log already
+        # describes).
         version = commit_version(
             table_dir,
             adds=adds,

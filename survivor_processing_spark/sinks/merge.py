@@ -143,9 +143,10 @@ def sized_for_write(
     with.  Un-sized, a KB-scale merge batch inherits the session's
     32-way partitioning (files.minPartitionNum / shuffle width) and
     lands as ~32 near-empty parquet files per commit — paying 32
-    write tasks now and one task per file in every later stats,
-    bloom, and scan job (and foreachBatch plans run WITHOUT AQE
-    coalescing, so streaming ingest hit this every batch).  The
+    write tasks now, one footer and key-bloom read per file at
+    commit, and one task per file in every later scan (foreachBatch
+    plans run WITHOUT AQE coalescing, so streaming ingest hit this
+    every batch).  The
     target is max(bytes/64 MiB, rows/1M) over whichever estimates
     the caller has; ``coalesce`` only ever SHRINKS, so a genuinely
     large rewrite keeps its parallelism."""
@@ -438,16 +439,16 @@ def _merge_into_snapshot_impl(
         )
         .select("file", "_k")
     )
-    # second manifest cut, per-file key BLOOMS (recorded at write
-    # time, operators/snapshot.py file_key_blooms): on an UNSORTED
-    # table every file's [vmin, vmax] spans the whole key domain and
-    # the envelope alone degrades this merge to a full rewrite — the
-    # bloom excludes files that provably lack every source key.
-    # Probe replicates the build's Kirsch-Mitzenmacher family
-    # exactly (same xxhash64 lanes, per-row m so mixed filter sizes
-    # coexist); a file without a recorded bloom (or an unexpected k)
-    # stays envelope-only — never skip blind.  False positives cost
-    # one extra file rewrite, never correctness.
+    # second manifest cut, per-file key BLOOMS (built on the driver
+    # at write time, operators/snapshot.py file_key_blooms): on an
+    # UNSORTED table every file's [vmin, vmax] spans the whole key
+    # domain and the envelope alone degrades this merge to a full
+    # rewrite — the bloom excludes files that provably lack every
+    # source key.  The probe evaluates bloom.py ``_positions`` (per-row
+    # m, so mixed filter sizes coexist), whose numpy twin built the
+    # bits; a file without a recorded bloom (a non-integer key, or an
+    # unexpected k) stays envelope-only — never skip blind.  False
+    # positives cost one extra file rewrite, never correctness.
     brows = []
     for fname in active:
         b = rec.get(fname, {}).get(key_col, {}).get("bloom")
@@ -481,10 +482,11 @@ def _merge_into_snapshot_impl(
             )
             return word.bitwiseAND(mask) != F.lit(0)
 
-        # probe positions come from the SAME _positions the build
-        # used (Column num_bits = per-row m), so the hash family
-        # cannot drift — a drift here would read unset bits and
-        # silently insert keys the file already holds
+        # probe positions (Column num_bits = per-row m) must equal
+        # the build's _positions_np bit for bit — a drift would read
+        # unset bits and silently insert keys the file already holds;
+        # tests/test_snapshot.py::test_positions_np_matches_spark
+        # pins the two together
         member = None
         for p in _positions(F.col("_k"), F.col("m"), 3):
             member = _bit_set(p) if member is None else member & _bit_set(p)
@@ -563,17 +565,10 @@ def _merge_into_snapshot_impl(
     try:
         new_stats = stats_for_files(table_dir, adds, [key_col])
         # "auto" sizes each file's filter at ~10 bits/key (clamped to
-        # 1-16 KiB per entry); shared policy with every other writer
-        # — operators/snapshot.py attach_key_blooms
-        attach_key_blooms(
-            spark,
-            table_dir,
-            adds,
-            key_col,
-            new_stats,
-            bloom_bits,
-            key_type=dict(merged.dtypes).get(key_col),
-        )
+        # 1-16 KiB per entry) and builds it on the driver from the
+        # files just written; shared policy with every other writer —
+        # operators/snapshot.py attach_key_blooms
+        attach_key_blooms(table_dir, adds, key_col, new_stats, bloom_bits)
         version = commit_version(
             table_dir,
             adds=adds,
@@ -747,9 +742,7 @@ def delete_from_snapshot(
     adds = pruned_adds
     try:
         new_stats = {f: all_stats[f] for f in adds}
-        attach_key_blooms(
-            spark, table_dir, adds, key_col, new_stats, bloom_bits
-        )
+        attach_key_blooms(table_dir, adds, key_col, new_stats, bloom_bits)
         version = commit_version(
             table_dir,
             adds=adds,

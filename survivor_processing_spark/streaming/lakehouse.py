@@ -78,9 +78,9 @@ def stream_into_snapshot(
             # the batch arrives with the source's scan width (the
             # 32-way small-file floor; foreachBatch plans never AQE-
             # coalesce), and init_snapshot writes it as given — an
-            # unsized bootstrap lands ~32 near-empty files that every
-            # later batch's reads, stats and bloom jobs then pay for
-            # one task per file.  Bootstrap happens once per table
+            # unsized bootstrap lands ~32 near-empty files, and every
+            # later batch's scans and commit-time footer and key-bloom
+            # reads pay per file.  Bootstrap happens once per table
             # lifetime, so the exact count is worth its single job
             # (it also subsumes the emptiness probe) and sizes the
             # first commit like every other writer (sized_for_write).

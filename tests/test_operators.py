@@ -613,6 +613,32 @@ def test_paragraph_dedup_registered_matches_oracle_on_random_corpora(spark, seed
     assert got == want, (seed, n)
 
 
+
+def test_anti_join_new_entities_registered_matches_oracle(spark):
+    """The fixtures give ``anti_join_new_entities`` 0 rows at sf0.001
+    and sf0.01, so the oracle gate there checks only its schema.  Over
+    a planted pair the values are compared: customers with no orders
+    come out, an order with a NULL ``o_custkey`` matches no customer,
+    and a customer with a NULL ``c_custkey`` matches no order."""
+    customer = pd.DataFrame(
+        {
+            "c_custkey": pd.array([1, 2, 3, 4, None], dtype="Int64"),
+            "c_name": ["a", "b", "c", "d", "nullkey"],
+        }
+    )
+    orders = pd.DataFrame(
+        {
+            "o_orderkey": pd.array([10, 11, 12, 13], dtype="Int64"),
+            "o_custkey": pd.array([2, 2, None, 4], dtype="Int64"),
+        }
+    )
+    got, want = run_registered(
+        spark,
+        "anti_join_new_entities",
+        {"customer": customer, "orders": orders},
+    )
+    assert got == want == [(None, "nullkey"), (1, "a"), (3, "c")]
+
 def test_repetition_stats_exact_fractions(spark):
     """Hand-computed Gopher repetition fractions, incl. the strict
     short-doc (0-gram) path."""

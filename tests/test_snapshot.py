@@ -589,7 +589,7 @@ def test_merge_plans_log_first_without_touching_untouched_footers(
     assert "b.parquet" in snapshot_files(table_dir)  # survived BY NAME
 
 
-# --- round-9: per-file key blooms in the manifest ---------------------------
+# --- per-file key blooms in the manifest ------------------------------------
 
 
 def test_bloom_cuts_merge_on_unsorted_table(spark, table_dir):
@@ -610,7 +610,7 @@ def test_bloom_cuts_merge_on_unsorted_table(spark, table_dir):
         table_dir, ["even.parquet", "odd.parquet"], ["k"]
     )
     for f, b in file_key_blooms(
-        spark, table_dir, ["even.parquet", "odd.parquet"], "k"
+        table_dir, ["even.parquet", "odd.parquet"], "k"
     ).items():
         stats[f]["k"]["bloom"] = b
     commit_version(
@@ -795,11 +795,11 @@ def test_bloom_guards_reject_ragged_and_ignore_corrupt(spark, table_dir):
 
     _write(table_dir, "x.parquet", [1, 2, 3])
     with pytest.raises(ValueError, match="multiple of 64"):
-        file_key_blooms(spark, table_dir, ["x.parquet"], "k", num_bits=100)
+        file_key_blooms(table_dir, ["x.parquet"], "k", num_bits=100)
     # a corrupt (truncated) recorded bloom degrades that file to
     # envelope-only: the merge still finds and updates its keys
     stats = stats_for_files(table_dir, ["x.parquet"], ["k"])
-    good = file_key_blooms(spark, table_dir, ["x.parquet"], "k")["x.parquet"]
+    good = file_key_blooms(table_dir, ["x.parquet"], "k")["x.parquet"]
     good["b64"] = good["b64"][: len(good["b64"]) // 2]  # torn payload
     stats["x.parquet"]["k"]["bloom"] = good
     commit_version(table_dir, adds=["x.parquet"], stats=stats)
@@ -815,6 +815,219 @@ def test_bloom_guards_reject_ragged_and_ignore_corrupt(spark, table_dir):
     for f in out["adds"]:
         b = rec[f]["k"]["bloom"]
         assert len(b["b64"]) > 0 and b["m"] % 64 == 0
+
+
+# Spark's range and edge values for each key type the driver-side
+# bloom build accepts (date: days since the epoch, 0001-01-01 to
+# 9999-12-31)
+_BLOOM_KEY_TYPES = {
+    "bigint": ("int64", -(1 << 63), (1 << 63) - 1),
+    "int": ("int32", -(1 << 31), (1 << 31) - 1),
+    "smallint": ("int16", -(1 << 15), (1 << 15) - 1),
+    "tinyint": ("int8", -(1 << 7), (1 << 7) - 1),
+    "date": ("int32", -719162, 2932896),
+}
+
+
+def _bloom_keys(rng, sql_type: str, n: int):
+    """0, ±1, the type's extremes and ``n`` random values, as an
+    int numpy array of the type's width."""
+    import numpy as np
+
+    dt, lo, hi = _BLOOM_KEY_TYPES[sql_type]
+    edges = np.array([0, 1, -1, lo, hi], dtype=dt)
+    return np.concatenate(
+        [edges, rng.integers(lo, hi, n, dtype=dt, endpoint=True)]
+    )
+
+
+def _spark_rows(sql_type: str, keys):
+    import datetime
+
+    if sql_type == "date":
+        epoch = datetime.date(1970, 1, 1)
+        return [(epoch + datetime.timedelta(days=int(k)),) for k in keys]
+    return [(int(k),) for k in keys]
+
+
+@pytest.mark.parametrize("sql_type", sorted(_BLOOM_KEY_TYPES))
+def test_positions_np_matches_spark(spark, sql_type):
+    """The per-file key blooms are built by bloom.py ``_positions_np``
+    on the driver and probed by ``_positions`` in the JVM
+    (sinks/merge.py).  Both must give the same positions for every
+    key, or the probe reads unset bits and a merge inserts keys a
+    file already holds."""
+    import numpy as np
+    import pyspark.sql.functions as F
+
+    from survivor_processing_spark.operators.bloom import (
+        _positions,
+        _positions_np,
+    )
+
+    keys = _bloom_keys(np.random.default_rng(7), sql_type, 3000)
+    df = spark.createDataFrame(_spark_rows(sql_type, keys), f"k {sql_type}")
+    sizes = [1 << 13, 1 << 16, 1 << 17]
+    got = df.select(
+        *[
+            F.array(*_positions(F.col("k"), m, 3)).alias(f"p{m}")
+            for m in sizes
+        ]
+    ).collect()
+    for m in sizes:
+        spark_pos = np.array([r[f"p{m}"] for r in got], dtype=np.int64).T
+        np.testing.assert_array_equal(
+            _positions_np(keys, m, 3), spark_pos, err_msg=f"m={m}"
+        )
+
+
+def _spark_file_key_blooms(spark, table_dir, bits_by_file, key_col, k=3):
+    """Reference build, the distributed form the driver-side
+    ``file_key_blooms`` replaced: one job reads ``key_col`` of every
+    file, explodes the k positions of each non-NULL key (per-row m
+    from a file→m map) and ``bit_or``s them per (file, word)."""
+    import pyspark.sql.functions as F
+
+    from survivor_processing_spark.operators.bloom import _positions, _powers
+    from survivor_processing_spark.operators.snapshot import _pack_words
+
+    names = sorted(bits_by_file)
+    entries = ",".join(f"'{f}',{bits_by_file[f]}" for f in names)
+    m_expr = F.element_at(F.expr(f"map({entries})"), F.col("_f"))
+    pos = (
+        spark.read.parquet(*[os.path.join(table_dir, f) for f in names])
+        .select(
+            F.element_at(F.split(F.input_file_name(), "/"), -1).alias("_f"),
+            F.col(key_col).alias("_k"),
+        )
+        .where(F.col("_k").isNotNull())
+        .select(
+            "_f",
+            F.explode(F.array(*_positions(F.col("_k"), m_expr, k))).alias("p"),
+        )
+    )
+    rows = (
+        pos.select(
+            "_f",
+            (F.col("p") / F.lit(64)).cast("int").alias("w"),
+            F.element_at(
+                _powers(),
+                F.col("p").bitwiseAND(F.lit(63)).cast("int") + F.lit(1),
+            ).alias("b"),
+        )
+        .groupBy("_f", "w")
+        .agg(F.bit_or("b").alias("word"))
+        .collect()
+    )
+    sparse = {f: {} for f in names}
+    for r in rows:
+        sparse[r["_f"]][r["w"]] = r["word"]
+    return {
+        f: {
+            "m": bits_by_file[f],
+            "k": k,
+            "b64": _pack_words(
+                [sparse[f].get(w, 0) for w in range(bits_by_file[f] // 64)]
+            ),
+        }
+        for f in names
+    }
+
+
+@pytest.mark.parametrize("sql_type", sorted(_BLOOM_KEY_TYPES))
+def test_file_key_blooms_match_spark_build(spark, table_dir, sql_type):
+    """The driver-side build logs byte-identical blooms to the
+    distributed reference build, per key type, on files with NULL
+    keys, a 1-row file, an all-NULL file and mixed per-file m."""
+    import numpy as np
+
+    from survivor_processing_spark.operators.snapshot import file_key_blooms
+
+    rng = np.random.default_rng(11)
+    atype = pa.date32() if sql_type == "date" else pa.from_numpy_dtype(
+        np.dtype(_BLOOM_KEY_TYPES[sql_type][0])
+    )
+
+    def put(name, keys):
+        pq.write_table(
+            pa.table({"k": pa.array(keys, type=atype)}),
+            os.path.join(table_dir, name),
+        )
+
+    many = _bloom_keys(rng, sql_type, 20000).tolist()
+    put("big.parquet", many)
+    with_nulls = [
+        None if i % 20 == 3 else k
+        for i, k in enumerate(_bloom_keys(rng, sql_type, 2000).tolist())
+    ]
+    put("nulls.parquet", with_nulls)
+    put("one.parquet", many[-1:])
+    put("empty.parquet", [None, None, None])
+    bits = {
+        "big.parquet": 1 << 17,
+        "nulls.parquet": 1 << 16,
+        "one.parquet": 1 << 13,
+        "empty.parquet": 64,
+    }
+    got = file_key_blooms(table_dir, bits, "k")
+    assert got == _spark_file_key_blooms(spark, table_dir, bits, "k")
+
+
+@pytest.mark.parametrize(
+    "sql_type,cast,key_of",
+    [
+        ("string", "string", lambda i: f"key-{i:06d}"),
+        ("double", "double", float),
+    ],
+)
+def test_unsupported_key_types_merge_by_envelope(
+    spark, table_dir, sql_type, cast, key_of
+):
+    """A key type without a driver-side hash twin records stats but
+    no bloom; copy-on-write merges and merge-on-read upserts over
+    those files stay exact, the later ones probing by envelope only."""
+    from survivor_processing_spark.operators.mor import (
+        upsert_into_snapshot_mor,
+    )
+    from survivor_processing_spark.operators.snapshot import (
+        file_stats,
+        init_snapshot,
+    )
+    from survivor_processing_spark.sinks.merge import merge_into_snapshot
+
+    schema = f"k {sql_type}, v bigint"
+    model = {key_of(i): i for i in range(0, 400, 2)}
+    init_snapshot(
+        spark,
+        table_dir,
+        spark.createDataFrame(list(model.items()), schema).repartition(3),
+        bloom_key="k",
+    )
+
+    def apply(writer, ids, v):
+        batch = {key_of(i): v + i for i in ids}
+        out = writer(
+            spark,
+            table_dir,
+            spark.createDataFrame(list(batch.items()), schema),
+            "k",
+            cast=cast,
+        )
+        model.update(batch)
+        got = read_snapshot(spark, table_dir).collect()
+        assert len(got) == len(model)
+        assert {r["k"]: r["v"] for r in got} == model
+        return out
+
+    # updates of existing keys plus inserts, through both writers, then
+    # a second merge into the files the first merge and upsert wrote
+    apply(merge_into_snapshot, list(range(10, 60, 2)) + [401, 403], 1000)
+    apply(upsert_into_snapshot_mor, list(range(20, 80, 4)) + [405], 2000)
+    apply(merge_into_snapshot, [10, 20, 401, 405, 407], 3000)
+    rec = file_stats(table_dir)
+    assert rec and all(
+        "n_rows" in st["k"] and "bloom" not in st["k"] for st in rec.values()
+    )
 
 
 def test_expire_crash_window_cannot_resurrect_removed_files(spark, table_dir):
