@@ -6,12 +6,14 @@ One hash family serves both.  :func:`_positions` gives the k bit
 positions of a key as Spark Columns (two xxhash64 lanes, enhanced
 double hashing); :func:`_positions_np` gives the same positions in
 numpy.  The join pre-filter below builds and probes with the Column
-form.  The per-file key blooms of the snapshot log
-(``operators/snapshot.py`` ``file_key_blooms``) are built on the
-driver with the numpy form from the files a commit just wrote, and
-probed by the merge (``sinks/merge.py``) with the Column form, so
+form.  The per-file key blooms of the snapshot log are numpy-only:
+built on the driver from the files a commit just wrote
+(``operators/snapshot.py`` ``file_key_blooms``) and probed on the
+driver with the merge's collected source keys (``sinks/merge.py``
+``plan_key_merge``).  Their bits are still Spark's xxhash64 family —
 ``tests/test_snapshot.py::test_positions_np_matches_spark`` holds the
-two to bit-for-bit agreement.
+two forms to bit-for-bit agreement, and the tests' Spark reference
+builds and probes use the Column form.
 
 The 100 TB join pattern this encodes: when a selective dimension
 predicate keeps only a sliver of the dim, the fact side should be
@@ -72,12 +74,11 @@ def _positions(
     """k independent bit positions for ``key`` (enhanced-double-hash
     family over two xxhash64 lanes — standard Kirsch-Mitzenmacher).
 
-    ``num_bits`` may be a Column (per-row filter size): the
-    manifest-bloom PROBE (sinks/merge.py) tests membership with THIS
-    function against per-file blooms that :func:`_positions_np`
-    builds on the driver.  The two implementations must agree bit for
+    ``num_bits`` may be a Column (per-row filter size), which is how
+    the tests' Spark reference build and probe of the per-file key
+    blooms use it.  This and :func:`_positions_np` must agree bit for
     bit; ``tests/test_snapshot.py::test_positions_np_matches_spark``
-    pins that on every key type the build accepts."""
+    pins that on every key type the per-file blooms accept."""
     nb = num_bits if isinstance(num_bits, Column) else F.lit(num_bits)
     # Each lane is reduced mod num_bits BEFORE the double-hash combine
     # so the arithmetic stays far from long range (ANSI mode overflows
@@ -150,7 +151,7 @@ def _positions_np(
 # ONE parsed SQL string (the module's own "bloom lesson", applied to
 # itself): the previous F.array(*[F.lit(1 << i) ...]) built the same
 # 64 values through 64 py4j round trips — ~0.18 s of pure driver time
-# PER CALL, and the merge probe / might_contain each call this three
+# PER CALL, and the bloom build / might_contain each call this three
 # times per expression build.  Bit 63 is long-min; the SQL parser
 # rejects the -9223372036854775808L literal (unary minus over an
 # overflowing long), so the last element is a foldable shiftleft.

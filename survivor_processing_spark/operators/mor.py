@@ -70,7 +70,6 @@ from .snapshot import (
     commit_version,
     plan_head,
     file_stats,
-    key_candidate_files,
     log_versions,
     range_candidate_files,
     snapshot_dvs,
@@ -323,12 +322,15 @@ def upsert_into_snapshot_mor(
 
     Same source contract as the COW merge: key-unique, no NULL keys,
     no schema drift (extra/missing/retyped columns rejected; use the
-    COW path for explicit evolution).  Matched positions are found
-    with the log-first envelope cut (files whose ``key_col`` envelope
-    excludes every source key are never scanned) and rows an earlier
-    DV already deleted are anti-joined out first, so a replayed batch
-    re-converges instead of double-tombstoning — the same
-    exactly-once-EFFECT contract as the COW merge.
+    COW path for explicit evolution).  The files to scan for matched
+    positions come from the COW merge's driver-side plan
+    (``sinks/merge.py`` ``plan_key_merge``: one collect of the source
+    keys, then the log-first envelopes and per-file key blooms — a
+    file whose envelope or bloom excludes every source key is never
+    scanned), and rows an earlier DV already deleted are anti-joined
+    out first, so a replayed batch re-converges instead of
+    double-tombstoning — the same exactly-once-EFFECT contract as the
+    COW merge.
 
     Change-feed bonus: because the commit IS (tombstones + inserts),
     ``table_changes`` emits the exact old row image as ``delete`` and
@@ -371,35 +373,33 @@ def upsert_into_snapshot_mor(
     CONCURRENCY note)."""
     from pyspark import StorageLevel
 
-    from ..sinks.merge import check_merge_source
+    from ..sinks.merge import (
+        plan_key_merge,
+        sized_for_compute,
+        sized_for_write,
+    )
     from .snapshot import attach_key_blooms
-    from .zonemap import _CAST_ORD
 
-    # fail an unsupported cast before the key-contract aggregate runs
-    # (key_candidate_files re-validates it against the envelopes)
-    if _CAST_ORD.get(cast.lower().split("(")[0]) is None:
-        raise ValueError(f"unsupported merge key cast {cast!r}")
     # MATERIALIZE the source once (the COW merge's rule, the public
-    # Delta MERGE move): the key-contract aggregate, the candidate
-    # probe, the tombstone semi-join, and the append write all
-    # consume it — unpersisted in the finally; every action completes
-    # before return.
+    # Delta MERGE move): the key collect fills the cache, and the
+    # tombstone semi-join and the append write read it again —
+    # unpersisted in the finally; every action completes before
+    # return.
     pinned = source.persist(StorageLevel.MEMORY_AND_DISK)
     source = pinned
     try:
-        # one aggregate adjudicates emptiness + both key contracts
-        # (sinks/merge.py check_merge_source): a NULL key matches
-        # nothing and would re-insert per run
-        n_in_source = check_merge_source(source, key_col)
+        planned = plan_head(table_dir)
+        active = snapshot_files(table_dir)
+        # the key contract (empty, NULL, duplicate keys) and the files
+        # that can hold a source key, in one collect of the keys
+        n_in_source, candidates = plan_key_merge(
+            table_dir, source, key_col, cast
+        )
         # narrow the view of the just-cached source for every later
         # consumer (sinks/merge.py sized_for_write note): a small
         # batch otherwise schedules its arrival width of near-empty
         # tasks per downstream job
-        from ..sinks.merge import sized_for_compute
-
         source = sized_for_compute(source, max(1, n_in_source))
-        planned = plan_head(table_dir)
-        active = snapshot_files(table_dir)
         if n_in_source == 0:
             return {
                 "version": None,
@@ -415,7 +415,6 @@ def upsert_into_snapshot_mor(
         reader = spark.read
         if logged:
             reader = reader.schema(_schema_ddl(logged))
-        if logged:
             head_cols = [c for c, _ in logged]
             head_types = dict(logged)
         else:
@@ -440,17 +439,6 @@ def upsert_into_snapshot_mor(
                 f"upsert (missing {missing}, extra {extra}, drift {drift})"
                 " — use merge_into_snapshot(allow_evolution=True) to widen"
             )
-        # log-first envelope cut: files whose envelope excludes EVERY
-        # source key are provably unmatched and never scanned.  NULL or
-        # uncastable envelopes keep the file — never skip blind.
-        candidates = key_candidate_files(
-            spark,
-            table_dir,
-            key_col,
-            source,
-            cast,
-            recorded=file_stats(table_dir),
-        )
         tag = uuid.uuid4().hex[:8]
         sidecars: dict[str, list[str]] = {}
         n_updated = 0
@@ -491,8 +479,6 @@ def upsert_into_snapshot_mor(
             # column order (never a source-ordered footer), sized for
             # the batch volume rather than the source's scan width
             # (sinks/merge.py sized_for_write — guide §6)
-            from ..sinks.merge import sized_for_write
-
             sized_for_write(
                 source.select(*head_cols), est_rows=n_in_source
             ).write.mode("overwrite").parquet(staging)

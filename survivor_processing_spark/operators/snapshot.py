@@ -650,16 +650,6 @@ def _pack_words(words: list[int]) -> str:
     ).decode("ascii")
 
 
-def unpack_words(b64: str) -> list[int]:
-    import base64
-    import struct
-
-    raw = base64.b64decode(b64)
-    return [
-        struct.unpack(">q", raw[i : i + 8])[0] for i in range(0, len(raw), 8)
-    ]
-
-
 def file_key_blooms(
     table_dir: str,
     files: list[str] | dict[str, int],
@@ -679,8 +669,9 @@ def file_key_blooms(
     every source key.  False positives cost an extra rewrite, never
     correctness; false negatives cannot happen because the build
     hashes the file's OWN full key column with
-    ``operators/bloom.py`` ``_positions_np``, the driver twin of the
-    ``_positions`` family the probe evaluates in the JVM.
+    ``operators/bloom.py`` ``_positions_np``, the same function the
+    merge's driver-side plan (``sinks/merge.py`` ``plan_key_merge``)
+    probes the source keys with.
 
     Built on the driver, no Spark job: each file's key column is read
     with pyarrow in record batches (memory bounded by the batch and
@@ -782,12 +773,13 @@ def range_candidate_files(
     row in ``[lo, hi]`` — the shared pre-plan file cut of both
     row-level DELETE paths (copy-on-write ``sinks/merge.py
     delete_from_snapshot`` and merge-on-read ``operators/mor.py
-    delete_from_snapshot_mor``).  Log-first manifest, guarded exactly
-    like ``prune_files``: an envelope whose recorded ordering
-    disagrees with the cast's comparison class raises (never a silent
-    wrong prune), a ``try_cast`` that loses width yields NULL which
-    KEEPS the file, and NULL-stat files are always candidates —
-    never skip blind."""
+    delete_from_snapshot_mor``); the keyed writers' key-set cut is
+    ``sinks/merge.py`` ``plan_key_merge``.  Log-first manifest,
+    guarded exactly like ``prune_files``: an envelope whose recorded
+    ordering disagrees with the cast's comparison class raises (never
+    a silent wrong prune), a ``try_cast`` that loses width yields
+    NULL which KEEPS the file, and NULL-stat files are always
+    candidates — never skip blind."""
     from .zonemap import _CAST_ORD
 
     from .zonemap import prune_file_rows
@@ -823,52 +815,6 @@ def range_candidate_files(
         | ((cmin <= F.lit(hi)) & (cmax >= F.lit(lo)))
     )
     return sorted(r["file"] for r in keep_rows.select("file").collect())
-
-
-def key_candidate_files(
-    spark: SparkSession,
-    table_dir: str,
-    key_col: str,
-    keys: DataFrame,
-    cast: str = "bigint",
-    recorded: dict[str, dict] | None = None,
-) -> list[str]:
-    """Active files whose ``key_col`` envelope can possibly hold ANY
-    of the ``keys`` — the key-set sibling of
-    :func:`range_candidate_files` (the MOR upsert's pre-plan cut;
-    the COW merge keeps its richer envelope+bloom cut inline).  Same
-    guards: ordering mismatch raises, an uncastable or NULL envelope
-    keeps the file — never skip blind."""
-    from .zonemap import _CAST_ORD
-
-    required = _CAST_ORD.get(cast.lower().split("(")[0])
-    if required is None:
-        raise ValueError(f"unsupported merge key cast {cast!r}")
-    zrows = snapshot_zonemap_rows(table_dir, [key_col], recorded=recorded)
-    guard_zonemap_ordering(zrows, key_col, cast, required, "key")
-    zm = local_rows_df(
-        spark,
-        zrows,
-        "file string, col string, n_rows long, "
-        "vmin string, vmax string, ord string",
-    )
-    cmin = F.expr(f"try_cast(vmin as {cast})")
-    cmax = F.expr(f"try_cast(vmax as {cast})")
-    rows = (
-        keys.select(F.col(key_col).alias("_k"))
-        .join(
-            F.broadcast(zm),
-            F.col("vmin").isNull()
-            | cmin.isNull()
-            | cmax.isNull()
-            | ((cmin <= F.col("_k")) & (cmax >= F.col("_k"))),
-            "inner",
-        )
-        .select("file")
-        .distinct()
-        .collect()
-    )
-    return sorted(r["file"] for r in rows)
 
 
 def stats_for_files(

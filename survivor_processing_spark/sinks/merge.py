@@ -18,15 +18,17 @@ constant fill — callers fill before merging, as the reference does).
 
 from __future__ import annotations
 
+import base64
+import datetime
 import os
+import re
 import shutil
 import uuid
 
+import numpy as np
 import pyspark.sql.functions as F
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
-
-from ..functions.localrel import local_rows_df
 
 
 class MergeTable:
@@ -213,18 +215,18 @@ def merge_into_snapshot(
     does — the untouched files survive by NAME in the next snapshot.
 
     Mechanics:
-    1. footer-only zone maps over the ACTIVE file set (file-count
-       driver work), ordering-guarded exactly like ``prune_files``
-       (a cast whose comparison disagrees with the envelope's
-       recorded ordering raises — never a silent wrong prune);
-    2. affected = files whose [vmin, vmax] envelope contains ANY
-       source key (broadcast join of the file-count-sized manifest
-       against the source keys; NULL-stat files are always
-       affected — never skip blind);
-    3. merged = unmatched rows of the affected files ∪ source
+    1. :func:`plan_key_merge` collects the source's key column to the
+       driver in ONE Spark action (which also fills the source's
+       cache), enforces the key contract there, and picks the
+       affected files from the log-first manifest: a file is affected
+       when some source key lies inside its [vmin, vmax] envelope and
+       its recorded key bloom admits that key.  A NULL-stat or
+       unprovable envelope, or a missing or damaged bloom, keeps the
+       file — never skip blind;
+    2. merged = unmatched rows of the affected files ∪ source
        (source wins per key; source must be key-unique — reject,
        don't guess); written as NEW files, never in place;
-    4. one atomic log commit: remove(affected) + add(new files).
+    3. one atomic log commit: remove(affected) + add(new files).
        Readers of the previous snapshot never observe a torn table —
        scans are log-driven, and the new files are invisible until
        the commit lands.
@@ -256,17 +258,12 @@ def merge_into_snapshot(
     without a ConcurrentAppend read-set check).  Serialize same-key
     writers externally, or route them through one streaming
     ``stream_into_snapshot`` pipeline."""
-    from ..operators.zonemap import _CAST_ORD
-
-    required = _CAST_ORD.get(cast.lower().split("(")[0])
-    if required is None:
-        raise ValueError(f"unsupported merge key cast {cast!r}")
     # MATERIALIZE the source once (the public Delta MERGE move): the
-    # plan below consumes it four times — the key-contract aggregate,
-    # the candidate probe, the left_anti, and the union write — and
-    # at 100 TB recomputing an arbitrary source lineage four times
-    # costs more than one spill-capable materialization.  Unpersisted
-    # in the finally; every action completes before return.
+    # key collect fills the cache, and the left_anti and the union
+    # write read it again — at 100 TB recomputing an arbitrary source
+    # lineage three times costs more than one spill-capable
+    # materialization.  Unpersisted in the finally; every action
+    # completes before return.
     source = source.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         return _merge_into_snapshot_impl(
@@ -277,52 +274,184 @@ def merge_into_snapshot(
             cast,
             bloom_bits,
             allow_evolution,
-            required,
         )
     finally:
         source.unpersist()
 
 
-def check_merge_source(source: DataFrame, key_col: str) -> int:
-    """ONE aggregate job adjudicates the whole merge-source key
-    contract — emptiness, NULL keys, key-uniqueness — and returns the
-    source row count.  A NULL key would match no zone-map envelope
-    and no left_anti row, so the same row re-inserts on every run —
-    silently breaking the idempotency the upsert promises; a
-    duplicate key would make 'source wins per key' ambiguous.
-    Reject, don't guess.  The example-key lookup that makes the
-    duplicate error actionable runs a second job on the FAILURE path
-    only — the green path is one job (shared by the COW merge and
-    the MOR upsert; previously each ran a separate uniqueness probe
-    plus an emptiness probe per call)."""
-    row = (
-        source.groupBy(key_col)
-        .agg(F.count(F.lit(1)).alias("_c"))
-        .agg(
-            F.coalesce(F.sum("_c"), F.lit(0)).alias("n"),
-            F.coalesce(F.max("_c"), F.lit(0)).alias("max_c"),
-            F.max(F.col(key_col).isNull()).alias("has_null"),
-        )
-        .first()
+# Driver-side replicas of try_cast(stat AS <cast>) for the envelope
+# bounds plan_key_merge compares exactly.  Spark's own grammar is wider;
+# a stat outside these shapes is unprovable and keeps its file.
+_ISO_DAY = re.compile(r"[0-9]{4}-[0-9]{2}-[0-9]{2}")
+_FINITE = re.compile(r"[+-]?([0-9]+\.?[0-9]*|\.[0-9]+)([eE][+-]?[0-9]+)?")
+_EPOCH = datetime.date(1970, 1, 1)
+
+
+def _key_bound(stat: str | None, kind: str | None, cast: str):
+    """An envelope bound as a value comparable with the sorted source
+    keys, or None when the driver cannot prove it equals Spark's
+    ``try_cast(stat AS cast)`` (a NULL stat, a width-losing integral
+    cast, an unparseable string, NaN or inf, a key type without an
+    exact rule) — the caller then keeps the file."""
+    from ..operators.zonemap import _try_cast_int
+
+    if stat is None:
+        return None
+    if kind == "int":
+        ok, v = _try_cast_int(stat, cast)
+        return v if ok else None
+    if kind == "date" and _ISO_DAY.fullmatch(stat):
+        try:
+            return (datetime.date.fromisoformat(stat) - _EPOCH).days
+        except ValueError:
+            return None
+    if kind == "double" and _FINITE.fullmatch(stat):
+        return float(stat)
+    if kind == "string":
+        return stat
+    return None
+
+
+def _bloom_words(b) -> np.ndarray | None:
+    """The words of a recorded key bloom, or None when it is missing,
+    not k=3, undecodable, or its size disagrees with its m — the file
+    is then probed by its envelope only (an out-of-range probe would
+    read past the words and could skip a file that matches)."""
+    if not (
+        isinstance(b, dict) and b.get("k") == 3 and b.get("m") and b.get("b64")
+    ):
+        return None
+    try:
+        raw = base64.b64decode(b["b64"])
+        if len(raw) * 8 != int(b["m"]):
+            return None
+    except (ValueError, TypeError):
+        return None
+    # _pack_words stores each int64 word big-endian; bit i of word w
+    # is position 64*w + i
+    return np.frombuffer(raw, dtype=">u8").astype(np.uint64)
+
+
+def plan_key_merge(
+    table_dir: str, source: DataFrame, key_col: str, cast: str
+) -> tuple[int, list[str]]:
+    """The driver-side plan of a keyed snapshot merge, shared by the
+    copy-on-write :func:`merge_into_snapshot` and the merge-on-read
+    ``operators/mor.py`` ``upsert_into_snapshot_mor``: returns
+    ``(n_src, affected files)``.
+
+    ONE Spark action, ``source.select(key_col).toArrow()``, brings the
+    key column to the driver; everything else is decided there.
+
+    - Key contract: a NULL key raises (it would match no file and no
+      left_anti row, so the same row re-inserts on every run), a
+      duplicate key raises naming one (``source wins per key`` would be
+      ambiguous), and an empty source returns ``(0, [])`` without
+      reading the log.  Duplicates follow Spark's grouping: -0.0 equals
+      0.0 and every NaN is one key.
+    - Affected files: the log-first zone-map rows, ordering-guarded
+      like ``prune_files``, are checked against the sorted keys with
+      ``np.searchsorted``; the keys inside a file's envelope are then
+      tested against its recorded key bloom with ``operators/bloom.py``
+      ``_positions_np``, the hash family the bloom was built with.
+      Bounds are compared exactly for integral casts (via
+      ``zonemap._try_cast_int``, which keeps width-losing casts NULL),
+      date keys (ISO day), string keys (byte order) and finite double
+      stats; any bound the driver cannot prove exact — and every file
+      when the source holds a NaN, which parquet stats leave out —
+      considers all source keys.  Keeping a file costs a rewrite,
+      never a wrong result.
+
+    Memory bound: the key column is held on the driver as one Arrow
+    array (8 B per bigint key) plus its sorted numpy copy, and 24 B
+    per key of bloom positions for each distinct filter size probed.
+    Work is the keys inside each file's envelope, summed over files —
+    the rows the Spark broadcast join it replaces produced."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from ..operators.bloom import _positions_np
+    from ..operators.snapshot import (
+        file_stats,
+        guard_zonemap_ordering,
+        snapshot_zonemap_rows,
     )
-    if row["has_null"]:
+    from ..operators.zonemap import _CAST_ORD, _INT_CAST_RANGE
+
+    base = cast.lower().split("(")[0]
+    required = _CAST_ORD.get(base)
+    if required is None:
+        raise ValueError(f"unsupported merge key cast {cast!r}")
+    col = source.select(key_col).toArrow().column(0)
+    if col.null_count:
         raise ValueError(
             f"source has NULL merge keys in {key_col!r} — a NULL "
             "key matches nothing and would re-insert every run"
         )
-    if row["max_c"] > 1:
-        bad = (
-            source.groupBy(key_col)
-            .count()
-            .filter(F.col("count") > 1)
-            .limit(1)
-            .collect()
-        )
+    srt = col.combine_chunks()
+    srt = srt.take(pc.array_sort_indices(srt))
+    t = srt.type
+    keys = (srt.cast(pa.int32()) if pa.types.is_date32(t) else srt).to_numpy(
+        zero_copy_only=False
+    )
+    same = keys[1:] == keys[:-1]
+    if keys.dtype.kind == "f":
+        same |= np.isnan(keys[1:]) & np.isnan(keys[:-1])
+    dup = np.flatnonzero(same)
+    if dup.size:
         raise ValueError(
             f"source is not key-unique on {key_col!r} "
-            f"(e.g. {bad[0][key_col]!r})"
+            f"(e.g. {srt[int(dup[0])].as_py()!r})"
         )
-    return int(row["n"])
+    n = len(keys)
+    if n == 0:
+        return 0, []
+    if pa.types.is_integer(t) and base in _INT_CAST_RANGE:
+        kind = "int"
+    elif pa.types.is_date32(t) and base == "date":
+        kind = "date"
+    elif pa.types.is_float64(t) and base == "double":
+        # NaNs sort last; parquet stats leave NaN out, so no envelope
+        # can prove it excludes one
+        kind = None if np.isnan(keys[-1]) else "double"
+    elif pa.types.is_string(t) or pa.types.is_large_string(t):
+        kind = "string" if base == "string" else None
+    else:
+        kind = None
+    search = keys.astype(np.int64) if kind in ("int", "date") else keys
+    # the per-file key blooms exist for signed-integer and date keys
+    # only (operators/snapshot.py file_key_blooms)
+    hashable = pa.types.is_integer(t) or pa.types.is_date32(t)
+    rec = file_stats(table_dir)
+    zrows = snapshot_zonemap_rows(table_dir, [key_col], recorded=rec)
+    guard_zonemap_ordering(zrows, key_col, cast, required, "merge")
+    positions: dict[int, np.ndarray] = {}
+    affected = []
+    for fname, _c, _n, vmin, vmax, _o in zrows:
+        lo_v = _key_bound(vmin, kind, base)
+        hi_v = _key_bound(vmax, kind, base)
+        if lo_v is None or hi_v is None:
+            lo, hi = 0, n
+        else:
+            lo = int(np.searchsorted(search, lo_v, "left"))
+            hi = int(np.searchsorted(search, hi_v, "right"))
+            if lo >= hi:
+                continue
+        words = (
+            _bloom_words(rec.get(fname, {}).get(key_col, {}).get("bloom"))
+            if hashable
+            else None
+        )
+        if words is not None:
+            m = len(words) * 64
+            if m not in positions:
+                positions[m] = _positions_np(keys, m, 3)
+            p = positions[m][:, lo:hi]
+            bit = (words[p >> 6] >> (p & 63).astype(np.uint64)) & np.uint64(1)
+            if not bit.all(axis=0).any():
+                continue
+        affected.append(fname)
+    return n, sorted(affected)
 
 
 def _merge_into_snapshot_impl(
@@ -333,35 +462,31 @@ def _merge_into_snapshot_impl(
     cast: str,
     bloom_bits: int | str | None,
     allow_evolution: bool,
-    required: str,
 ) -> dict:
-    from ..operators.bloom import _positions, _powers
     from ..operators.snapshot import (
         attach_key_blooms,
         commit_version,
-        file_stats,
-        guard_zonemap_ordering,
         plan_head,
         read_snapshot,
         snapshot_dvs,
         snapshot_files,
-        snapshot_zonemap_rows,
         stats_for_files,
         strip_deleted_rows,
-        unpack_words,
     )
 
-    n_src = check_merge_source(source, key_col)
-    # the contract aggregate just materialized the persisted source
-    # at its arrival width (the 32-way scan floor for a small batch);
-    # every later consumer — the candidate probe, the broadcast
-    # build, the left_anti, the union write — would otherwise
-    # schedule that many near-empty tasks per job.  Narrow the VIEW
-    # of the cached blocks to the row count's worth of partitions
-    # (coalesce reads all cached blocks in fewer tasks; shrink-only).
-    source = sized_for_compute(source, max(1, n_src))
+    # the planned version is read BEFORE the log replay the plan makes,
+    # so the commit's read-set is never newer than what was planned
     planned = plan_head(table_dir)
     active = snapshot_files(table_dir)
+    n_src, affected = plan_key_merge(table_dir, source, key_col, cast)
+    # the key collect just materialized the persisted source at its
+    # arrival width (the 32-way scan floor for a small batch); every
+    # later consumer — the left_anti and the union write — would
+    # otherwise schedule that many near-empty tasks per job.  Narrow
+    # the VIEW of the cached blocks to the row count's worth of
+    # partitions (coalesce reads all cached blocks in fewer tasks;
+    # shrink-only).
+    source = sized_for_compute(source, max(1, n_src))
     if n_src == 0:
         # an empty batch must be a clean no-op, not an empty commit
         return {
@@ -399,108 +524,8 @@ def _merge_into_snapshot_impl(
             "source column types drift from the table schema "
             f"(col, source, table): {drift}"
         )
-    # LOG-FIRST envelopes (stats-in-manifest): files whose commit
-    # recorded key stats are planned with ZERO footer reads — at
-    # 100 TB, reopening a million footers per merge costs more than
-    # the rewrite it prunes; files from pre-stats commits fall back
-    # to a footer walk inside snapshot_zonemap_rows (correct, slower).
-    # ONE log replay feeds both the envelopes and the bloom probe.
-    rec = file_stats(table_dir)
-    zrows = snapshot_zonemap_rows(table_dir, [key_col], recorded=rec)
-    guard_zonemap_ordering(zrows, key_col, cast, required, "merge")
-    # manifest-sized local rows: a plain createDataFrame would
-    # parallelize them into Python-RDD slices and the broadcast build
-    # below would pay a Python worker round trip per slice — the
-    # LocalRelation path is pure JVM (functions/localrel.py)
-    zm = local_rows_df(
-        spark,
-        zrows,
-        "file string, col string, n_rows long, "
-        "vmin string, vmax string, ord string",
-    )
-    # try_cast with NULL-keeps-the-file semantics, mirroring
-    # prune_files: the ordering guard above proves the comparison
-    # CLASS agrees, but a width-losing cast (cast='int' over a bigint
-    # envelope beyond int32) yields NULL — which would make the join
-    # predicate NULL, mark the file unaffected, and INSERT a key the
-    # file already holds.  An uncastable envelope is an affected
-    # envelope; never skip blind.
-    cmin = F.expr(f"try_cast(vmin as {cast})")
-    cmax = F.expr(f"try_cast(vmax as {cast})")
-    cand = (
-        source.select(F.col(key_col).alias("_k"))
-        .join(
-            F.broadcast(zm),
-            F.col("vmin").isNull()
-            | cmin.isNull()
-            | cmax.isNull()
-            | ((cmin <= F.col("_k")) & (cmax >= F.col("_k"))),
-            "inner",
-        )
-        .select("file", "_k")
-    )
-    # second manifest cut, per-file key BLOOMS (built on the driver
-    # at write time, operators/snapshot.py file_key_blooms): on an
-    # UNSORTED table every file's [vmin, vmax] spans the whole key
-    # domain and the envelope alone degrades this merge to a full
-    # rewrite — the bloom excludes files that provably lack every
-    # source key.  The probe evaluates bloom.py ``_positions`` (per-row
-    # m, so mixed filter sizes coexist), whose numpy twin built the
-    # bits; a file without a recorded bloom (a non-integer key, or an
-    # unexpected k) stays envelope-only — never skip blind.  False
-    # positives cost one extra file rewrite, never correctness.
-    brows = []
-    for fname in active:
-        b = rec.get(fname, {}).get(key_col, {}).get("bloom")
-        if (
-            isinstance(b, dict)
-            and b.get("k") == 3
-            and b.get("m")
-            and b.get("b64")
-        ):
-            # a truncated/undecodable/mismatched packed filter must
-            # degrade to envelope-only for THIS file (an out-of-range
-            # probe would read NULL and silently skip) — never skip
-            # blind
-            try:
-                words = unpack_words(b["b64"])
-            except Exception:
-                words = None
-            if words is not None and len(words) * 64 == int(b["m"]):
-                brows.append((fname, int(b["m"]), words))
-    if brows:
-        bm = local_rows_df(
-            spark, brows, "file string, m long, words array<long>"
-        )
-
-        def _bit_set(p):
-            word = F.element_at(
-                F.col("words"), (p / F.lit(64)).cast("int") + F.lit(1)
-            )
-            mask = F.element_at(
-                _powers(), p.bitwiseAND(F.lit(63)).cast("int") + F.lit(1)
-            )
-            return word.bitwiseAND(mask) != F.lit(0)
-
-        # probe positions (Column num_bits = per-row m) must equal
-        # the build's _positions_np bit for bit — a drift would read
-        # unset bits and silently insert keys the file already holds;
-        # tests/test_snapshot.py::test_positions_np_matches_spark
-        # pins the two together
-        member = None
-        for p in _positions(F.col("_k"), F.col("m"), 3):
-            member = _bit_set(p) if member is None else member & _bit_set(p)
-        cand = cand.join(F.broadcast(bm), "file", "left").where(
-            F.col("m").isNull() | member
-        )
-    # the distinct's reduce stage inherits the full shuffle width —
-    # and actions over a foreachBatch source run WITHOUT AQE
-    # coalescing, so a KB-scale batch scheduled 32 near-empty reduce
-    # tasks per micro-batch here.  The result is file-count-bounded;
-    # one task reads all shuffle partitions.
-    hits = cand.select("file").distinct().coalesce(1).collect()
-    affected = sorted(r["file"] for r in hits)
-    untouched = [f for f in active if f not in set(affected)]
+    hit = set(affected)
+    untouched = [f for f in active if f not in hit]
     # the schema the merge WRITES: the table head, widened by the
     # extra source columns when evolving (stable order: table columns
     # first, then the new ones sorted) — and recorded in the commit

@@ -19,7 +19,10 @@ At 100 TB this is the standing ingestion shape: the stream's rate
 bounds each batch, the manifest (envelopes + blooms) bounds each
 merge's rewrite to the files the batch's keys can actually touch,
 and maintenance (compaction, z-order, retention) runs between
-commits as further atomic versions of the same log.
+commits as further atomic versions of the same log.  Each batch's
+merge is planned on the driver from one collect of the batch's key
+column (``sinks/merge.py`` ``plan_key_merge``), so the batch's key
+column must fit in driver memory.
 """
 
 from __future__ import annotations

@@ -538,6 +538,48 @@ def test_mor_upsert_cdf_emits_exact_update_images(spark, tbl):
     ]
 
 
+def test_mor_upsert_scans_only_bloom_admitted_files(spark, tmp_path, monkeypatch):
+    """On an unsorted table every file's envelope spans the key domain,
+    so only the per-file key blooms can tell the files apart: the
+    upsert scans just the files whose bloom admits a source key,
+    still tombstones every matched row, and stays exact against a
+    dict model.  Keys 12j+7 and 12j+9 lie inside every envelope and in
+    no file."""
+    import survivor_processing_spark.operators.mor as mor
+    from survivor_processing_spark.operators.snapshot import (
+        file_key_blooms,
+        stats_for_files,
+    )
+
+    d = str(tmp_path)
+    names = [_write(d, f"u{f}.parquet", list(range(f, 600, 12))) for f in range(6)]
+    stats = stats_for_files(d, names, ["k"])
+    for f, b in file_key_blooms(d, names, "k").items():
+        stats[f]["k"]["bloom"] = b
+    commit_version(d, adds=names, stats=stats)
+    model = {k: float(k) for k in range(600) if k % 12 < 6}
+    scanned = []
+    real = mor.strip_deleted_rows
+
+    def spy(spark_, scan, table_dir, dvs, files, **kw):
+        scanned.append(sorted(files))
+        return real(spark_, scan, table_dir, dvs, files, **kw)
+
+    monkeypatch.setattr(mor, "strip_deleted_rows", spy)
+    batch = {37: -1.0, 121: -2.0, 580: -3.0, 7: -4.0, 93: -5.0, 5000: -6.0}
+    out = upsert_into_snapshot_mor(
+        spark,
+        d,
+        spark.createDataFrame(sorted(batch.items()), "k long, amt double"),
+        "k",
+    )
+    model.update(batch)
+    assert scanned == [["u1.parquet", "u4.parquet"]]
+    assert out["n_updated"] == 3 and out["n_inserted"] == 3
+    assert out["n_files_covered"] == 2 and out["n_untouched"] == 4
+    assert dict(_rows(spark, d)) == model
+
+
 def test_mor_upsert_rejects_bad_sources(spark, tbl):
     from survivor_processing_spark.operators.mor import (
         upsert_into_snapshot_mor,

@@ -5,6 +5,7 @@ empty-snapshot schema contract, and the DuckDB summary oracle."""
 
 from __future__ import annotations
 
+import datetime
 import os
 import random
 import shutil
@@ -278,7 +279,7 @@ def test_merge_guards(spark, table_dir):
     dup = spark.createDataFrame(
         [(1, 1.0), (1, 2.0)], "k long, amt double"
     )
-    with pytest.raises(ValueError, match="not key-unique"):
+    with pytest.raises(ValueError, match=r"not key-unique on 'k' \(e\.g\. 1\)"):
         merge_into_snapshot(spark, table_dir, dup, "k")
     ok = spark.createDataFrame([(1, 1.0)], "k long, amt double")
     with pytest.raises(ValueError, match="ordering mismatch"):
@@ -409,6 +410,62 @@ def test_merge_envelope_width_guard(spark, table_dir):
     rows = {r["k"]: r["amt"] for r in read_snapshot(spark, table_dir).collect()}
     assert len(rows) == 5  # updated, NOT re-inserted
     assert rows[big] == -1.0
+
+
+def test_keyed_writers_job_ratchet(spark, table_dir):
+    """A warm keyed merge plans on the driver from one collect of the
+    source keys: a copy-on-write merge of a small key-unique batch
+    into a multi-file table launches at most 3 Spark jobs, and a
+    merge-on-read upsert into a table without deletion vectors at
+    most 4.  A probe that goes back to Spark jobs of its own breaks
+    the bound (the probe-based plan launched 9 each)."""
+    import uuid
+
+    from survivor_processing_spark.operators.mor import (
+        upsert_into_snapshot_mor,
+    )
+    from survivor_processing_spark.operators.snapshot import init_snapshot
+    from survivor_processing_spark.sinks.merge import merge_into_snapshot
+
+    sc = spark.sparkContext
+
+    def jobs(fn):
+        group = f"ratchet-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def batch(lo, v):
+        ks = list(range(lo, lo + 30))
+        return spark.createDataFrame(
+            pa.table({"k": pa.array(ks, type=pa.int64()), "amt": [v] * 30})
+        )
+
+    init_snapshot(
+        spark,
+        table_dir,
+        spark.range(0, 4000)
+        .selectExpr("id as k", "cast(id as double) as amt")
+        .repartition(4, "k"),
+        stats_cols=["k"],
+        bloom_key="k",
+    )
+    merge_into_snapshot(spark, table_dir, batch(100, -1.0), "k")  # warm-up
+    cow = jobs(
+        lambda: merge_into_snapshot(spark, table_dir, batch(107, -2.0), "k")
+    )
+    mor = jobs(
+        lambda: upsert_into_snapshot_mor(
+            spark, table_dir, batch(1000, -3.0), "k"
+        )
+    )
+    assert cow <= 3 and mor <= 4, (cow, mor)
+    rows = {r["k"]: r["amt"] for r in read_snapshot(spark, table_dir).collect()}
+    assert len(rows) == 4000
+    assert rows[100] == -1.0 and rows[107] == -2.0 and rows[1029] == -3.0
 
 
 def test_vacuum_orphans_removes_only_uncommitted(spark, table_dir):
@@ -842,8 +899,6 @@ def _bloom_keys(rng, sql_type: str, n: int):
 
 
 def _spark_rows(sql_type: str, keys):
-    import datetime
-
     if sql_type == "date":
         epoch = datetime.date(1970, 1, 1)
         return [(epoch + datetime.timedelta(days=int(k)),) for k in keys]
@@ -1028,6 +1083,263 @@ def test_unsupported_key_types_merge_by_envelope(
     assert rec and all(
         "n_rows" in st["k"] and "bloom" not in st["k"] for st in rec.values()
     )
+
+
+def _spark_key_probe(spark, table_dir, source, key_col, cast):
+    """Reference plan, the Spark probe ``plan_key_merge`` replaced:
+    a broadcast join of the source keys against the log-first
+    manifest (``try_cast`` envelopes; a NULL or uncastable bound keeps
+    the file), then a test of each surviving key against its file's
+    recorded bloom with the Column ``_positions`` at per-row m (a
+    missing, undecodable or wrong-size bloom leaves the file
+    envelope-only); affected = the distinct files left.  ``source``
+    carries a ``case`` column, so one job plans many sources:
+    returns ``{case: sorted affected files}``."""
+    import base64
+    import struct
+
+    import pyspark.sql.functions as F
+
+    from survivor_processing_spark.functions.localrel import local_rows_df
+    from survivor_processing_spark.operators.bloom import _positions, _powers
+    from survivor_processing_spark.operators.snapshot import (
+        file_stats,
+        snapshot_zonemap_rows,
+    )
+
+    rec = file_stats(table_dir)
+    zm = local_rows_df(
+        spark,
+        snapshot_zonemap_rows(table_dir, [key_col], recorded=rec),
+        "file string, col string, n_rows long, "
+        "vmin string, vmax string, ord string",
+    )
+    cmin = F.expr(f"try_cast(vmin as {cast})")
+    cmax = F.expr(f"try_cast(vmax as {cast})")
+    cand = source.select("case", F.col(key_col).alias("_k")).join(
+        F.broadcast(zm),
+        F.col("vmin").isNull()
+        | cmin.isNull()
+        | cmax.isNull()
+        | ((cmin <= F.col("_k")) & (cmax >= F.col("_k"))),
+        "inner",
+    )
+    brows = []
+    for fname in sorted(rec):
+        b = rec[fname].get(key_col, {}).get("bloom")
+        if not (isinstance(b, dict) and b.get("k") == 3 and b.get("m")):
+            continue
+        try:
+            raw = base64.b64decode(b["b64"])
+            words = [
+                struct.unpack(">q", raw[i : i + 8])[0]
+                for i in range(0, len(raw), 8)
+            ]
+        except Exception:
+            continue
+        if len(words) * 64 == int(b["m"]):
+            brows.append((fname, int(b["m"]), words))
+    if brows:
+        bm = local_rows_df(
+            spark, brows, "file string, m long, words array<long>"
+        )
+
+        def bit_set(p):
+            word = F.element_at(
+                F.col("words"), (p / F.lit(64)).cast("int") + F.lit(1)
+            )
+            mask = F.element_at(
+                _powers(), p.bitwiseAND(F.lit(63)).cast("int") + F.lit(1)
+            )
+            return word.bitwiseAND(mask) != F.lit(0)
+
+        member = None
+        for p in _positions(F.col("_k"), F.col("m"), 3):
+            member = bit_set(p) if member is None else member & bit_set(p)
+        cand = cand.join(F.broadcast(bm), "file", "left").where(
+            F.col("m").isNull() | member
+        )
+    out = {}
+    for r in cand.select("case", "file").distinct().collect():
+        out.setdefault(r["case"], []).append(r["file"])
+    return {c: sorted(fs) for c, fs in out.items()}
+
+
+# key type -> (arrow type, merge cast, key of an int)
+_PLAN_KEY_TYPES = {
+    "bigint": (pa.int64(), "bigint", int),
+    "int": (pa.int32(), "int", int),
+    "smallint": (pa.int16(), "smallint", int),
+    "tinyint": (pa.int8(), "tinyint", lambda i: i - 60),
+    "date": (
+        pa.date32(),
+        "date",
+        lambda i: datetime.date(2000, 1, 1) + datetime.timedelta(days=i),
+    ),
+    # 1-, 2- and 3-byte UTF-8 characters: envelopes hold multi-byte
+    # bounds, and byte order is not the digit order of the generator
+    "string": (
+        pa.string(),
+        "string",
+        lambda i: "".join("aZé中0"[(i + 50) // 5**j % 5] for j in range(4)),
+    ),
+    "double": (pa.float64(), "double", lambda i: i * 0.37 - 20),
+}
+
+
+def _plan_table(table_dir, sql_type, rng, n_files=6):
+    """``n_files`` files over keys 0..119 (as ``sql_type``): half are
+    contiguous ranges, half scatter over the whole domain; blooms at
+    mixed m, one torn, one recorded at the wrong m, and one file whose
+    stats carry no envelope.  Returns ``{file: set of int keys}``."""
+    from survivor_processing_spark.operators.snapshot import (
+        file_key_blooms,
+        stats_for_files,
+    )
+
+    atype, _cast, key_of = _PLAN_KEY_TYPES[sql_type]
+    held = {}
+    for i in range(n_files):
+        if i % 2:
+            ks = rng.sample(range(120), 20)
+        else:
+            lo = rng.randrange(0, 100)
+            ks = list(range(lo, lo + rng.randrange(3, 20)))
+        name = f"p{i}.parquet"
+        pq.write_table(
+            pa.table({"k": pa.array([key_of(k) for k in ks], type=atype)}),
+            os.path.join(table_dir, name),
+        )
+        held[name] = set(ks)
+    names = sorted(held)
+    stats = stats_for_files(table_dir, names, ["k"])
+    sizes = [256, 1024, 1 << 13, 1 << 14]
+    blooms = file_key_blooms(
+        table_dir, {f: rng.choice(sizes) for f in names}, "k"
+    )
+    for f, b in blooms.items():
+        stats[f]["k"]["bloom"] = b
+    if blooms:
+        stats["p1.parquet"]["k"]["bloom"]["b64"] = blooms["p1.parquet"][
+            "b64"
+        ][:20]
+        stats["p3.parquet"]["k"]["bloom"]["m"] *= 2
+    stats["p5.parquet"]["k"].update(vmin=None, vmax=None, ord=None)
+    commit_version(table_dir, adds=names, stats=stats)
+    return held
+
+
+def _plan_cases(spark, table_dir, sql_type, cases, cast=None):
+    """``(driver plan, Spark probe)`` affected files per source in
+    ``cases`` (lists of int ids, keyed as ``sql_type``)."""
+    from survivor_processing_spark.sinks.merge import plan_key_merge
+
+    atype, base, key_of = _PLAN_KEY_TYPES[sql_type]
+    cast = cast or base
+
+    def frame(cols):
+        # an Arrow-built frame is a local relation: no Python workers
+        return spark.createDataFrame(pa.table(cols))
+
+    want = _spark_key_probe(
+        spark,
+        table_dir,
+        frame(
+            {
+                "case": [c for c, ids in enumerate(cases) for _ in ids],
+                "k": pa.array(
+                    [key_of(i) for ids in cases for i in ids], type=atype
+                ),
+            }
+        ),
+        "k",
+        cast,
+    )
+    out = []
+    for c, ids in enumerate(cases):
+        src = frame({"k": pa.array([key_of(i) for i in ids], type=atype)})
+        n, got = plan_key_merge(table_dir, src, "k", cast)
+        assert n == len(ids)
+        out.append((got, want.get(c, [])))
+    return out
+
+
+@pytest.mark.parametrize("sql_type", sorted(_PLAN_KEY_TYPES))
+def test_plan_key_merge_matches_spark_probe(spark, sql_type):
+    """The driver-side plan against the Spark probe it replaced, on
+    a seeded family of about 200 source keys x 6 files per key type:
+    never a file fewer, and the same files wherever the driver
+    compares bounds exactly (all but doubles).  A source NaN keeps
+    every file (parquet stats leave NaN out)."""
+    rng = random.Random(sql_type)
+    for _ in range(2):
+        d = tempfile.mkdtemp()
+        try:
+            held = _plan_table(d, sql_type, rng)
+            every = set().union(*held.values())
+            # keys just outside each file (held by no file), and each
+            # range file's own bounds alone
+            edges = sorted(
+                {k for ks in held.values() for k in (min(ks) - 1, max(ks) + 1)}
+                - every
+            )
+            cases = [rng.sample(range(-60, 180), 200), edges] + [
+                [k] for f, ks in sorted(held.items())[::2] for k in (min(ks), max(ks))
+            ]
+            for ids, (got, want) in zip(
+                cases, _plan_cases(spark, d, sql_type, cases)
+            ):
+                assert set(got) >= set(want), (sql_type, ids)
+                if sql_type != "double":
+                    assert got == want, (sql_type, ids)
+                # no false negatives against the files' real contents
+                hit = {f for f, ks in held.items() if ks & set(ids)}
+                assert hit <= set(got), (sql_type, ids)
+        finally:
+            shutil.rmtree(d, ignore_errors=True)
+    if sql_type == "double":
+        d = tempfile.mkdtemp()
+        try:
+            _plan_table(d, sql_type, rng)
+            src = spark.createDataFrame([(float("nan"),), (1.0,)], "k double")
+            from survivor_processing_spark.sinks.merge import plan_key_merge
+
+            assert plan_key_merge(d, src, "k", "double")[1] == sorted(
+                snapshot_files(d)
+            )
+        finally:
+            shutil.rmtree(d, ignore_errors=True)
+
+
+def test_plan_key_merge_width_guard_matches_spark_probe(spark, table_dir):
+    """cast='int' over bigint envelopes: a bound beyond int32 is NULL
+    to ``try_cast``, so its file is probed by its bloom alone — on
+    both sides, whether or not the bloom admits a source key."""
+    from survivor_processing_spark.operators.snapshot import (
+        file_key_blooms,
+        stats_for_files,
+    )
+
+    big = 1 << 40
+    files = {
+        "small.parquet": list(range(100)),
+        "huge.parquet": [big + i for i in range(5)],
+        "straddle.parquet": [7, big + 9],
+    }
+    for f, ks in files.items():
+        _write(table_dir, f, ks)
+    stats = stats_for_files(table_dir, sorted(files), ["k"])
+    for f, b in file_key_blooms(table_dir, sorted(files), "k").items():
+        stats[f]["k"]["bloom"] = b
+    commit_version(table_dir, adds=sorted(files), stats=stats)
+    cases = [[3, 500], [big + 2], [big + 9, 1000], [-5]]
+    for ids, (got, want) in zip(
+        cases, _plan_cases(spark, table_dir, "bigint", cases, cast="int")
+    ):
+        assert got == want, ids
+        assert {f for f, ks in files.items() if set(ks) & set(ids)} <= set(
+            got
+        )
 
 
 def test_expire_crash_window_cannot_resurrect_removed_files(spark, table_dir):
