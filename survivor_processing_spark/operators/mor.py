@@ -54,8 +54,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
-import uuid
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -65,111 +63,67 @@ from .snapshot import (
     MOR_POS_TAG as _PCOL,
 )
 from .snapshot import (
+    Landing,
     _entry_path,
-    _schema_ddl,
-    commit_version,
-    plan_head,
     file_stats,
+    head_schema,
     log_versions,
+    plan_head,
     range_candidate_files,
     snapshot_dvs,
     snapshot_files,
-    stats_for_files,
     strip_deleted_rows,
-    table_schema,
+    table_reader,
 )
 
 
 def _write_dv_sidecar(
-    spark: SparkSession,
-    table_dir: str,
+    landing: Landing,
     hits: DataFrame,
-    tag: str,
     shards: int = 1,
 ) -> tuple[dict[str, list[str]], int]:
-    """The shared deletion-vector sidecar protocol: land ``hits``
-    (``file``/``pos`` tombstones) via staging + rename, then read the
-    (tiny) staged output back ONCE for per-file counts instead of
-    re-running the scan that produced it.
+    """Land ``hits`` (``file``/``pos`` tombstones) as deletion-vector
+    sidecars under ``landing`` (the caller commits them as
+    ``dv_adds``, or leaves the scope and they are removed).
 
     Each sidecar is ONE parquet file (never split after landing), but
     a commit may carry SEVERAL sidecars with DISJOINT file-coverage:
     with ``shards > 1`` the tombstones hash-partition on their data
     FILE, so a large tombstone set (a MOR upsert matching millions of
     rows across thousands of files) writes through ``shards``
-    parallel tasks instead of funnelling one — the single-task write
-    VERDICT r10 flagged.  All positions for one data file land in one
-    sidecar (hash partition on ``file``), so coverage sets never
-    overlap and no reader ever has to merge two same-commit sidecars
-    for one file.  ``shards=1`` keeps the classic one-sidecar commit
-    (and its ``dv-{tag}.parquet`` name) for sliver-sized deletes.
+    parallel tasks instead of funnelling one.  All positions for one
+    data file land in one sidecar (hash partition on ``file``), so
+    coverage sets never overlap and no reader ever has to merge two
+    same-commit sidecars for one file.  ``shards=1`` keeps the
+    classic one-sidecar commit (and its ``dv-{tag}.parquet`` name)
+    for sliver-sized deletes.
 
+    Coverage is read back on the driver from each landed sidecar's
+    ``file`` column in record batches — memory bounded by one batch
+    plus the distinct covered files, whatever the tombstone count —
+    and the tombstone count is the landing's footer row count.
     Returns ``({sidecar_name: sorted covered files}, n_rows)`` —
-    ``({}, 0)`` when nothing matched, with nothing left behind."""
-    staging = os.path.join(table_dir, f"_tmp_dv_{tag}")
-    if shards <= 1:
-        staged = hits.coalesce(1)
-    else:
-        staged = hits.repartition(shards, F.col("file"))
-    staged.write.mode("overwrite").parquet(staging)
-    parts = sorted(p for p in os.listdir(staging) if p.endswith(".parquet"))
-    if shards <= 1 and len(parts) != 1:
-        raise RuntimeError(f"expected one DV part, got {len(parts)}")
-    # map each part to its per-file tombstone counts.  The staging
-    # dir is KB-scale by the MOR sizing contract, so the counts come
-    # from a driver-side pyarrow read of the `file` column (saves a
-    # whole Spark job per DV write); a tombstone set past 64 MB —
-    # outside the contract but possible via shards on a huge upsert —
-    # keeps the distributed read so the driver never loads it.
-    by_part: dict[str, list[str]] = {}
-    n_rows = 0
-    staged_bytes = sum(
-        os.path.getsize(os.path.join(staging, p)) for p in parts
-    )
-    if staged_bytes <= (64 << 20):
-        import pyarrow.parquet as _pq
+    ``({}, 0)`` when nothing matched."""
+    import pyarrow.parquet as pq
 
-        for part in parts:
-            col = _pq.read_table(
-                os.path.join(staging, part), columns=["file"]
-            ).column("file")
-            counts = col.value_counts()
-            for rec in counts:
-                by_part.setdefault(part, []).append(
-                    rec["values"].as_py()
-                )
-                n_rows += int(rec["counts"].as_py())
+    if shards <= 1:
+        names = landing.land(
+            hits.coalesce(1), "dv", name="dv-{tag}.parquet", one="DV"
+        )
     else:
-        rows = (
-            spark.read.schema("file string, pos long")
-            .parquet(staging)
-            .select("file", F.col("_metadata.file_name").alias("part"))
-            .groupBy("part", "file")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
+        names = landing.land(
+            hits.repartition(shards, F.col("file")),
+            "dv",
+            name="dv-{tag}-{i:04d}.parquet",
         )
-        for r in rows:
-            by_part.setdefault(r["part"], []).append(r["file"])
-            n_rows += int(r["n"])
-    if not by_part:
-        shutil.rmtree(staging, ignore_errors=True)
-        return {}, 0
     sidecars: dict[str, list[str]] = {}
-    for i, part in enumerate(parts):
-        files = by_part.get(part)
-        if not files:  # empty shard: fewer data files than shards
-            continue
-        name = (
-            f"dv-{tag}.parquet"
-            if shards <= 1
-            else f"dv-{tag}-{i:04d}.parquet"
-        )
-        os.rename(
-            os.path.join(staging, part), os.path.join(table_dir, name)
-        )
-        sidecars[name] = sorted(files)
-    shutil.rmtree(staging, ignore_errors=True)
-    return sidecars, n_rows
+    for name in names:
+        covered: set[str] = set()
+        with pq.ParquetFile(os.path.join(landing.table_dir, name)) as pf:
+            for batch in pf.iter_batches(batch_size=1 << 16, columns=["file"]):
+                covered.update(batch.column(0).unique().to_pylist())
+        sidecars[name] = sorted(covered)
+    return sidecars, sum(landing.rows[n] for n in names)
 
 
 def _auto_dv_shards(n_candidates: int) -> int:
@@ -232,7 +186,7 @@ def delete_from_snapshot_mor(
     active = snapshot_files(table_dir)
     rec = file_stats(table_dir)
     candidates = range_candidate_files(
-        spark, table_dir, key_col, lo, hi, cast, recorded=rec
+        table_dir, key_col, lo, hi, cast, recorded=rec
     )
     noop = {
         "version": None,
@@ -244,11 +198,7 @@ def delete_from_snapshot_mor(
     }
     if not candidates:
         return noop
-    logged = table_schema(table_dir)
-    reader = spark.read
-    if logged:
-        reader = reader.schema(_schema_ddl(logged))
-    scan = reader.parquet(
+    scan = table_reader(spark, table_dir).parquet(
         *[os.path.join(table_dir, f) for f in candidates]
     )
     # keep_tags: the positions being recorded ARE the metadata tags;
@@ -270,26 +220,14 @@ def delete_from_snapshot_mor(
         if shards == "auto"
         else int(shards)
     )
-    sidecars, n_deleted = _write_dv_sidecar(
-        spark, table_dir, hits, uuid.uuid4().hex[:8], shards=n_shards
-    )
-    if not sidecars:
-        return noop
-    covered = sorted({f for cov in sidecars.values() for f in cov})
-    try:
-        version = commit_version(
-            table_dir,
-            dv_adds=sidecars,
-            planned_version=planned,
+    with Landing(table_dir) as landing:
+        sidecars, n_deleted = _write_dv_sidecar(landing, hits, n_shards)
+        if not sidecars:
+            return noop
+        version = landing.commit(
+            [], dv_adds=sidecars, planned_version=planned
         )
-    except BaseException:
-        # an uncommitted sidecar must not linger for vacuum to explain
-        for name in sidecars:
-            try:
-                os.remove(os.path.join(table_dir, name))
-            except OSError:
-                pass
-        raise
+    covered = sorted({f for cov in sidecars.values() for f in cov})
     return {
         "version": version,
         "n_deleted": n_deleted,
@@ -374,11 +312,11 @@ def upsert_into_snapshot_mor(
     from pyspark import StorageLevel
 
     from ..sinks.merge import (
+        check_source_schema,
         plan_key_merge,
         sized_for_compute,
         sized_for_write,
     )
-    from .snapshot import attach_key_blooms
 
     # MATERIALIZE the source once (the COW merge's rule, the public
     # Delta MERGE move): the key collect fills the cache, and the
@@ -411,127 +349,71 @@ def upsert_into_snapshot_mor(
                 "dv": None,
                 "dvs": [],
             }
-        logged = table_schema(table_dir)
-        reader = spark.read
-        if logged:
-            reader = reader.schema(_schema_ddl(logged))
-            head_cols = [c for c, _ in logged]
-            head_types = dict(logged)
-        else:
-            # read_snapshot serves the schema even for an all-removed
-            # snapshot (filter-false scan of a historically-known file)
-            from .snapshot import read_snapshot
-
-            head = read_snapshot(spark, table_dir)
-            head_cols = list(head.columns)
-            head_types = dict(head.dtypes)
-        src_types = dict(source.dtypes)
-        missing = [c for c in head_cols if c not in src_types]
-        extra = sorted(set(src_types) - set(head_cols))
-        drift = [
-            (c, src_types.get(c), t)
-            for c, t in head_types.items()
-            if c in src_types and src_types[c] != t
-        ]
-        if missing or extra or drift:
-            raise ValueError(
-                "source schema must match the table exactly for the MOR "
-                f"upsert (missing {missing}, extra {extra}, drift {drift})"
-                " — use merge_into_snapshot(allow_evolution=True) to widen"
-            )
-        tag = uuid.uuid4().hex[:8]
-        sidecars: dict[str, list[str]] = {}
-        n_updated = 0
-        if candidates:
-            scan = reader.parquet(
-                *[os.path.join(table_dir, f) for f in candidates]
-            )
-            live = strip_deleted_rows(
-                spark,
-                scan,
-                table_dir,
-                snapshot_dvs(table_dir),
-                candidates,
-                keep_tags=True,
-            )
-            hits = live.join(
-                source.select(key_col), on=key_col, how="left_semi"
-            ).select(F.col(_FCOL).alias("file"), F.col(_PCOL).alias("pos"))
-            shards = (
-                _auto_dv_shards(len(candidates))
-                if dv_shards == "auto"
-                else int(dv_shards)
-            )
-            sidecars, n_updated = _write_dv_sidecar(
-                spark, table_dir, hits, tag, shards=shards
-            )
-        covered = sorted({f for cov in sidecars.values() for f in cov})
-        # everything from here to the commit sits inside ONE rollback
-        # scope: a failure in the staging write, the renames, the footer
-        # counts, the stats/bloom build, or the commit itself must unwind
-        # the renamed data files AND the committed-looking sidecars — an
-        # uncommitted sidecar must not linger for vacuum to explain (the
-        # invariant delete_from_snapshot_mor enforces)
-        staging = os.path.join(table_dir, f"_tmp_upsert_{tag}")
-        adds: list[str] = []
-        try:
-            # append the source as new files, projected onto the table's
-            # column order (never a source-ordered footer), sized for
-            # the batch volume rather than the source's scan width
-            # (sinks/merge.py sized_for_write — guide §6)
-            sized_for_write(
-                source.select(*head_cols), est_rows=n_in_source
-            ).write.mode("overwrite").parquet(staging)
-            for i, part in enumerate(
-                sorted(
-                    p for p in os.listdir(staging) if p.endswith(".parquet")
+        table = head_schema(spark, table_dir)
+        check_source_schema(
+            table,
+            source,
+            widen="use merge_into_snapshot(allow_evolution=True) to widen",
+        )
+        # one rollback scope for the tombstone sidecars AND the
+        # appended files: leaving it without a commit removes both
+        with Landing(table_dir) as landing:
+            sidecars: dict[str, list[str]] = {}
+            n_updated = 0
+            if candidates:
+                scan = table_reader(spark, table_dir).parquet(
+                    *[os.path.join(table_dir, f) for f in candidates]
                 )
-            ):
-                name = f"upsert-{tag}-{i:05d}.parquet"
-                os.rename(
-                    os.path.join(staging, part), os.path.join(table_dir, name)
+                live = strip_deleted_rows(
+                    spark,
+                    scan,
+                    table_dir,
+                    snapshot_dvs(table_dir),
+                    candidates,
+                    keep_tags=True,
                 )
-                adds.append(name)
-            shutil.rmtree(staging, ignore_errors=True)
-            import pyarrow.parquet as pq
-
-            pruned, n_src = [], 0
-            for name in adds:
-                n = pq.ParquetFile(
-                    os.path.join(table_dir, name)
-                ).metadata.num_rows
-                n_src += n
-                if n == 0:
-                    os.remove(os.path.join(table_dir, name))
-                else:
-                    pruned.append(name)
-            adds = pruned
-            new_stats = stats_for_files(table_dir, adds, [key_col])
-            attach_key_blooms(
-                table_dir, adds, key_col, new_stats, bloom_bits
+                hits = live.join(
+                    source.select(key_col), on=key_col, how="left_semi"
+                ).select(
+                    F.col(_FCOL).alias("file"), F.col(_PCOL).alias("pos")
+                )
+                shards = (
+                    _auto_dv_shards(len(candidates))
+                    if dv_shards == "auto"
+                    else int(dv_shards)
+                )
+                sidecars, n_updated = _write_dv_sidecar(
+                    landing, hits, shards
+                )
+            # append the source as new files, projected onto the
+            # table's column order (never a source-ordered footer),
+            # sized for the batch volume rather than the source's scan
+            # width (sinks/merge.py sized_for_write — guide §6)
+            adds = landing.land(
+                sized_for_write(
+                    source.select(*[c for c, _ in table]),
+                    est_rows=n_in_source,
+                ),
+                "upsert",
             )
-            version = commit_version(
-                table_dir,
-                adds=adds,
-                stats=new_stats or None,
+            version = landing.commit(
+                adds,
+                stats_cols=[key_col],
+                bloom_key=key_col,
+                bloom_bits=bloom_bits,
                 dv_adds=sidecars or None,
                 planned_version=planned,
             )
-        except BaseException:
-            for name in adds + list(sidecars):
-                try:
-                    os.remove(os.path.join(table_dir, name))
-                except OSError:
-                    pass
-            shutil.rmtree(staging, ignore_errors=True)
-            raise
+        covered = sorted({f for cov in sidecars.values() for f in cov})
         return {
             "version": version,
             "n_updated": n_updated,
             # exact under the key-uniqueness invariant; clamped-approx
             # if pre-existing duplicate live rows inflate n_updated (see
             # docstring)
-            "n_inserted": max(0, n_src - n_updated),
+            "n_inserted": max(
+                0, sum(landing.rows[a] for a in adds) - n_updated
+            ),
             "n_files_covered": len(covered),
             "n_untouched": len(active) - len(covered),
             "adds": adds,
@@ -580,60 +462,22 @@ def purge_dvs(
             "adds": [],
         }
     covered = sorted({f for cov in dvs.values() for f in cov})
-    logged = table_schema(table_dir)
-    reader = spark.read
-    if logged:
-        reader = reader.schema(_schema_ddl(logged))
-    scan = reader.parquet(
+    scan = table_reader(spark, table_dir).parquet(
         *[os.path.join(table_dir, f) for f in covered]
     )
     live = strip_deleted_rows(spark, scan, table_dir, dvs, covered)
-    tag = uuid.uuid4().hex[:8]
-    staging = os.path.join(table_dir, f"_tmp_purge_{tag}")
-    live.write.mode("overwrite").parquet(staging)
-    adds = []
-    for i, part in enumerate(
-        sorted(p for p in os.listdir(staging) if p.endswith(".parquet"))
-    ):
-        name = f"purge-{tag}-{i:05d}.parquet"
-        os.rename(
-            os.path.join(staging, part), os.path.join(table_dir, name)
-        )
-        adds.append(name)
-    shutil.rmtree(staging, ignore_errors=True)
-    # drop empty parts (a file whose every row was deleted):
-    # NULL-stat files defeat pruning forever
-    from .snapshot import _drop_empty_parts
-
-    adds = _drop_empty_parts(table_dir, adds)
-    try:
-        cols = list(stats_cols or [])
-        if bloom_key and bloom_key not in cols:
-            cols.append(bloom_key)
-        new_stats = (
-            stats_for_files(table_dir, adds, cols) if cols and adds else None
-        )
-        if bloom_key and new_stats:
-            from .snapshot import attach_key_blooms
-
-            attach_key_blooms(
-                table_dir, adds, bloom_key, new_stats, bloom_bits
-            )
-        version = commit_version(
-            table_dir,
-            adds=adds,
+    with Landing(table_dir) as landing:
+        # a file whose every row was deleted lands no replacement
+        adds = landing.land(live, "purge")
+        version = landing.commit(
+            adds,
             removes=covered,
-            stats=new_stats,
+            stats_cols=stats_cols,
+            bloom_key=bloom_key,
+            bloom_bits=bloom_bits,
             data_change=False,
             planned_version=planned,
         )
-    except BaseException:
-        for name in adds:
-            try:
-                os.remove(os.path.join(table_dir, name))
-            except OSError:
-                pass
-        raise
     return {
         "version": version,
         "n_rewritten": len(covered),
@@ -682,10 +526,7 @@ def table_changes(
         raise ValueError(f"need v_from < v_to, got {v_from} >= {v_to}")
     # output schema: the table schema at v_to (logged wins, else any
     # file's footer), plus the two change columns
-    logged = table_schema(table_dir, v_to)
-    reader = spark.read
-    if logged:
-        reader = reader.schema(_schema_ddl(logged))
+    reader = table_reader(spark, table_dir, v_to)
 
     def _scan(files: list[str]) -> DataFrame:
         return reader.parquet(

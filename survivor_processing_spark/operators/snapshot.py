@@ -18,13 +18,17 @@ reopening a million footers costs more than the scan being pruned).
 File names are relative to the table directory.  A snapshot at version v = replay
 of entries 1..v (adds ∪, removes ∖) — O(log size) driver work on a
 file-count-bounded log, exactly the zonemap-manifest cost class.
-Commits are two-phase (write tmp, ``os.replace`` — atomic on POSIX)
-and strictly sequential; like Delta's optimistic protocol collapsed
-to the single-writer case, which is what a driver-coordinated Spark
-job is.  At 100 TB none of this changes: the log stays tiny (one
-entry per commit), and the SCAN — the only distributed part —
-schedules exactly the active files, the same pre-plan file pruning
-the zone maps do, composable with them.
+Commits are two-phase (write tmp, ``os.link`` claim — atomic on
+POSIX) and strictly sequential; like Delta's optimistic protocol
+collapsed to the single-writer case, which is what a
+driver-coordinated Spark job is.  Every writer's new files reach the
+log by one path, :class:`Landing`: staged write, rename to flat
+names, one footer read per file (0-row parts dropped; stats and key
+blooms recorded from it), commit — and a scope left without a commit
+removes everything it landed.  At 100 TB none of this changes: the
+log stays tiny (one entry per commit), and the SCAN — the only
+distributed part — schedules exactly the active files, the same
+pre-plan file pruning the zone maps do, composable with them.
 
 Correctness contract (tested + fuzzed): for every version v,
 ``read_snapshot(..., v)`` ≡ reading exactly the files a pure-Python
@@ -486,24 +490,6 @@ def commit_version(
     )
 
 
-def _drop_empty_parts(table_dir: str, adds: list[str]) -> list[str]:
-    """Delete 0-row staged parts and return the survivors — shared by
-    every rewriter (compact/zorder/init/purge/COW delete).  A 0-row
-    file is worse than noise in the manifest: its envelope is
-    NULL-stat, and NULL-stat files are permanent 'never skip blind'
-    candidates that every later merge/delete rewrites forever."""
-    import pyarrow.parquet as _pq
-
-    kept = []
-    for name in adds:
-        path = os.path.join(table_dir, name)
-        if _pq.ParquetFile(path).metadata.num_rows == 0:
-            os.remove(path)
-        else:
-            kept.append(name)
-    return kept
-
-
 def file_stats(
     table_dir: str, version: int | None = None
 ) -> dict[str, dict]:
@@ -761,7 +747,6 @@ def attach_key_blooms(
 
 
 def range_candidate_files(
-    spark: SparkSession,
     table_dir: str,
     key_col: str,
     lo,
@@ -777,12 +762,11 @@ def range_candidate_files(
     ``sinks/merge.py`` ``plan_key_merge``.  Log-first manifest,
     guarded exactly like ``prune_files``: an envelope whose recorded
     ordering disagrees with the cast's comparison class raises (never
-    a silent wrong prune), a ``try_cast`` that loses width yields
-    NULL which KEEPS the file, and NULL-stat files are always
-    candidates — never skip blind."""
-    from .zonemap import _CAST_ORD
-
-    from .zonemap import prune_file_rows
+    a silent wrong prune), and the cut itself is
+    ``zonemap.prune_file_rows`` on the driver — a bound it cannot
+    prove (NULL stat, width-losing cast) KEEPS the file; never skip
+    blind."""
+    from .zonemap import _CAST_ORD, prune_file_rows
 
     required = _CAST_ORD.get(cast.lower().split("(")[0])
     if required is None:
@@ -791,49 +775,162 @@ def range_candidate_files(
         raise ValueError("delete bounds must be non-NULL")
     zrows = snapshot_zonemap_rows(table_dir, [key_col], recorded=recorded)
     guard_zonemap_ordering(zrows, key_col, cast, required, "delete")
-    # driver-side fast path: the envelope-vs-range cut is a few
-    # integer compares over file-count-sized driver data — minting a
-    # Spark job for it bills ~0.3-0.4 s of analysis per DELETE plan.
-    # Exact-or-bail (zonemap.prune_file_rows): falls through to the
-    # expression path whenever a stat is outside the verified
-    # try_cast grammar.
-    fast = prune_file_rows(zrows, key_col, lo, hi, cast)
-    if fast is not None:
-        return fast
-    zm = local_rows_df(
-        spark,
-        zrows,
-        "file string, col string, n_rows long, "
-        "vmin string, vmax string, ord string",
-    )
-    cmin = F.expr(f"try_cast(vmin as {cast})")
-    cmax = F.expr(f"try_cast(vmax as {cast})")
-    keep_rows = zm.filter(
-        F.col("vmin").isNull()
-        | cmin.isNull()
-        | cmax.isNull()
-        | ((cmin <= F.lit(hi)) & (cmax >= F.lit(lo)))
-    )
-    return sorted(r["file"] for r in keep_rows.select("file").collect())
+    return prune_file_rows(zrows, key_col, lo, hi, cast)
 
 
 def stats_for_files(
-    table_dir: str, files: list[str], cols: list[str]
+    table_dir: str,
+    files: list[str],
+    cols: list[str],
+    footers: dict | None = None,
 ) -> dict[str, dict]:
     """Footer-walk ``cols`` stats for ``files`` in the
     ``commit_version(stats=...)`` shape — what a writer calls on the
-    files it just produced, before committing them."""
+    files it just produced, before committing them.  ``footers``
+    maps a file to its already-read ``FileMetaData`` (the landing's
+    one footer read); other files are read here."""
     from .zonemap import file_column_stats
 
+    footers = footers or {}
     out: dict[str, dict] = {}
     for name in files:
         st: dict[str, dict] = {}
         for _, c, n, vmin, vmax, ordv in file_column_stats(
-            os.path.join(table_dir, name), cols
+            os.path.join(table_dir, name), cols, footers.get(name)
         ):
             st[c] = {"n_rows": n, "vmin": vmin, "vmax": vmax, "ord": ordv}
         out[name] = st
     return out
+
+
+class Landing:
+    """The one path by which new files enter a snapshot table: a
+    rollback scope around "write, rename, drop empty parts, record
+    stats and blooms, commit".  Every writer (``init_snapshot``,
+    ``compact_snapshot``, ``zorder_snapshot``, the copy-on-write
+    MERGE/DELETE in ``sinks/merge.py``, the merge-on-read DML and DV
+    purge in ``operators/mor.py``) runs::
+
+        with Landing(table_dir) as landing:
+            adds = landing.land(df, "merge")
+            version = landing.commit(adds, removes=..., stats_cols=...)
+
+    :meth:`land` writes a DataFrame to ``_tmp_<op>_<tag>``, renames
+    each part into the table directory as ``<op>-<tag>-<i>.parquet``
+    (flat names — see :func:`commit_version`), reads each new
+    footer ONCE — that read drops the 0-row parts (a 0-row file is a
+    NULL-stat manifest entry, a permanent 'never skip blind'
+    candidate every later merge/delete would rewrite) and keeps the
+    row counts and the metadata the commit's stats are built from.
+    :meth:`commit` records the footer stats and key blooms and calls
+    :func:`commit_version`.
+
+    Leaving the scope without a successful commit — an exception
+    anywhere inside it, or a writer that decides nothing needs
+    committing — removes every file landed under it (data parts, DV
+    sidecars, every compaction bin) and every staging directory.
+    New files are invisible to log-driven readers until the commit
+    lands; a hard crash inside the scope leaves files that
+    :func:`vacuum_orphans` reclaims."""
+
+    def __init__(self, table_dir: str):
+        import uuid
+
+        self.table_dir = table_dir
+        self.tag = uuid.uuid4().hex[:8]
+        self.rows: dict[str, int] = {}
+        self.version: int | None = None
+        self._footers: dict = {}
+        self._landed: list[str] = []
+        self._staging: list[str] = []
+
+    def __enter__(self) -> "Landing":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        import shutil
+
+        for d in self._staging:
+            shutil.rmtree(d, ignore_errors=True)
+        if self.version is None:
+            for name in self._landed:
+                try:
+                    os.remove(os.path.join(self.table_dir, name))
+                except OSError:
+                    pass
+
+    def land(
+        self,
+        df: DataFrame,
+        op: str,
+        name: str = "{op}-{tag}-{i:05d}.parquet",
+        one: str | None = None,
+        keep_schema_part: bool = False,
+    ) -> list[str]:
+        """Land ``df``'s parts under ``name`` (formatted with ``op``,
+        ``tag`` and the part index) and return the non-empty ones, in
+        part order.  ``one`` requires exactly one part and names it in
+        the error.  ``keep_schema_part`` keeps the first part when
+        every part is empty, so an empty table still has a file that
+        holds its schema."""
+        import pyarrow.parquet as pq
+
+        staging = os.path.join(self.table_dir, f"_tmp_{op}_{self.tag}")
+        self._staging.append(staging)
+        df.write.mode("overwrite").parquet(staging)
+        parts = sorted(
+            p for p in os.listdir(staging) if p.endswith(".parquet")
+        )
+        if one and len(parts) != 1:
+            raise RuntimeError(f"expected one {one} part, got {len(parts)}")
+        names = []
+        for i, part in enumerate(parts):
+            fname = name.format(op=op, tag=self.tag, i=i)
+            path = os.path.join(self.table_dir, fname)
+            os.rename(os.path.join(staging, part), path)
+            self._landed.append(fname)
+            self._footers[fname] = pq.ParquetFile(path).metadata
+            names.append(fname)
+        kept = [f for f in names if self._footers[f].num_rows]
+        if not kept and keep_schema_part:
+            kept = names[:1]
+        for f in names:
+            if f not in kept:
+                os.remove(os.path.join(self.table_dir, f))
+                self._landed.remove(f)
+        self.rows.update((f, self._footers[f].num_rows) for f in kept)
+        return kept
+
+    def commit(
+        self,
+        adds: list[str],
+        removes: list[str] | None = None,
+        stats_cols: list[str] | None = None,
+        bloom_key: str | None = None,
+        bloom_bits: int | str | None = "auto",
+        **entry,
+    ) -> int:
+        """Record ``stats_cols`` envelopes (plus ``bloom_key``'s, with
+        its per-file key blooms) for ``adds`` from the footers
+        :meth:`land` read, then :func:`commit_version` the entry;
+        ``entry`` passes through (``schema``, ``dv_adds``,
+        ``data_change``, ``planned_version``)."""
+        cols = list(stats_cols or [])
+        if bloom_key and bloom_key not in cols:
+            cols.append(bloom_key)
+        stats = stats_for_files(self.table_dir, adds, cols, self._footers)
+        if bloom_key:
+            attach_key_blooms(
+                self.table_dir, adds, bloom_key, stats, bloom_bits
+            )
+        self.version = commit_version(
+            self.table_dir,
+            adds=adds,
+            removes=removes,
+            stats=stats if cols else None,
+            **entry,
+        )
+        return self.version
 
 
 def _replay(
@@ -1055,6 +1152,27 @@ def _schema_ddl(cols: list[list[str]]) -> str:
     return ", ".join(f"`{n}` {t}" for n, t in cols)
 
 
+def table_reader(
+    spark: SparkSession, table_dir: str, version: int | None = None
+):
+    """``spark.read`` carrying the table schema logged at ``version``
+    (head by default), so a scan of any subset of the table's files —
+    pre-widening ones included — serves every column; a bare reader
+    (footer schema) when the log never recorded one."""
+    logged = table_schema(table_dir, version)
+    return spark.read.schema(_schema_ddl(logged)) if logged else spark.read
+
+
+def head_schema(spark: SparkSession, table_dir: str) -> list[list[str]]:
+    """``[[name, type], ...]`` of the table at head: the logged schema
+    — no DataFrame built — or, for a log that never recorded one, the
+    schema Spark reads from the head's files."""
+    logged = table_schema(table_dir)
+    if logged:
+        return logged
+    return [[c, t] for c, t in read_snapshot(spark, table_dir).dtypes]
+
+
 def read_snapshot(
     spark: SparkSession, table_dir: str, version: int | None = None
 ) -> DataFrame:
@@ -1075,10 +1193,7 @@ def read_snapshot(
     the post-delete table without a rewrite.  A version with no live
     DVs (every existing table) keeps the exact bare-scan plan."""
     files = snapshot_files(table_dir, version)
-    logged = table_schema(table_dir, version)
-    reader = spark.read
-    if logged:
-        reader = reader.schema(_schema_ddl(logged))
+    reader = table_reader(spark, table_dir, version)
     if files:
         scan = reader.parquet(
             *[os.path.join(table_dir, f) for f in files]
@@ -1493,9 +1608,6 @@ def compact_snapshot(
     layout.  Returns ``{"version", "n_rewritten", "n_kept",
     "adds"}`` with ``version=None`` when the layout is already
     optimal (the no-op makes repeated maintenance idempotent)."""
-    import shutil
-    import uuid
-
     from .compaction import compaction_plan
 
     planned = plan_head(table_dir)
@@ -1512,86 +1624,60 @@ def compact_snapshot(
     bins: dict[int, list[str]] = {}
     for r in plan.collect():  # manifest-sized
         bins.setdefault(int(r["bin"]), []).append(r["file"])
-    adds: list[str] = []
-    removes: list[str] = []
-    tag = uuid.uuid4().hex[:8]
-    logged = table_schema(table_dir)
+    # schema-aware: compacting pre-widening files must carry the
+    # evolved columns (as NULL), not freeze the narrow footer
+    reader = table_reader(spark, table_dir)
     dvs = snapshot_dvs(table_dir)
-    for b, fs in sorted(bins.items()):
-        if len(fs) < 2:
-            continue
-        # schema-aware: compacting pre-widening files must carry the
-        # evolved columns (as NULL), not freeze the narrow footer
-        reader = spark.read
-        if logged:
-            reader = reader.schema(_schema_ddl(logged))
-        merged = reader.parquet(
-            *[os.path.join(table_dir, f) for f in sorted(fs)]
-        )
-        if dvs:
-            # merge-on-read interplay: a bin rewrite that ignored
-            # live deletion vectors would RESURRECT deleted rows into
-            # the compacted file; applying them here also PURGES the
-            # bin's DVs (the remove prunes their coverage — see
-            # snapshot_dvs), exactly Delta's OPTIMIZE-over-DVs move.
-            # Single-file bins keep their file AND its coverage.
-            merged = strip_deleted_rows(
-                spark, merged, table_dir, dvs, sorted(fs)
+    with Landing(table_dir) as landing:
+        adds: list[str] = []
+        removes: list[str] = []
+        for b, fs in sorted(bins.items()):
+            if len(fs) < 2:
+                continue
+            merged = reader.parquet(
+                *[os.path.join(table_dir, f) for f in sorted(fs)]
             )
-        merged = merged.coalesce(1)
-        staging = os.path.join(table_dir, f"_tmp_compact_{tag}_{b}")
-        merged.write.mode("overwrite").parquet(staging)
-        parts = sorted(
-            p for p in os.listdir(staging) if p.endswith(".parquet")
-        )
-        if len(parts) != 1:  # coalesce(1) guarantees this; never
-            raise RuntimeError(  # silently drop a straggler part
-                f"expected one compacted part, got {len(parts)}"
+            if dvs:
+                # merge-on-read interplay: a bin rewrite that ignored
+                # live deletion vectors would RESURRECT deleted rows
+                # into the compacted file; applying them here also
+                # PURGES the bin's DVs (the remove prunes their
+                # coverage — see snapshot_dvs), exactly Delta's
+                # OPTIMIZE-over-DVs move.  Single-file bins keep their
+                # file AND its coverage.
+                merged = strip_deleted_rows(
+                    spark, merged, table_dir, dvs, sorted(fs)
+                )
+            # one file per bin (coalesce(1) guarantees it; never
+            # silently drop a straggler part).  A bin whose every row
+            # was DV-deleted lands nothing: its sources still leave
+            # the table
+            adds += landing.land(
+                merged.coalesce(1),
+                "compact",
+                name=f"compact-{landing.tag}-{b:05d}.parquet",
+                one="compacted",
             )
-        name = f"compact-{tag}-{b:05d}.parquet"
-        os.rename(os.path.join(staging, parts[0]), os.path.join(table_dir, name))
-        shutil.rmtree(staging, ignore_errors=True)
-        adds.append(name)
-        removes.extend(sorted(fs))
-    # a bin whose every row was DV-deleted compacts to a 0-row file:
-    # its sources still leave the table, but the empty replacement
-    # must not enter the manifest (NULL-stat files defeat pruning)
-    adds = _drop_empty_parts(table_dir, adds)
-    if not removes:
-        return {
-            "version": None,
-            "n_rewritten": 0,
-            "n_kept": len(active),
-            "adds": [],
-        }
-    # failed commit ⇒ remove the renamed compacted files (log-driven
-    # readers never saw them; this keeps raw dir consumers and disk
-    # clean too).  Hard crashes are mopped up by vacuum_orphans.
-    # stats_cols (optional) records the compacted files' envelopes in
-    # the commit, so later merges/prunes plan them log-first.
-    try:
-        version = commit_version(
-            table_dir,
-            adds=adds,
+            removes.extend(sorted(fs))
+        if not removes:
+            return {
+                "version": None,
+                "n_rewritten": 0,
+                "n_kept": len(active),
+                "adds": [],
+            }
+        # stats_cols (optional) records the compacted files' envelopes
+        # in the commit, so later merges/prunes plan them log-first
+        version = landing.commit(
+            adds,
             removes=removes,
-            stats=(
-                stats_for_files(table_dir, adds, stats_cols)
-                if stats_cols
-                else None
-            ),
+            stats_cols=stats_cols,
             planned_version=planned,
             # layout-only: logical content identical to the parent
             # (DVs applied above were already logically deleted), so
             # change-feed readers skip this commit
             data_change=False,
         )
-    except BaseException:
-        for name in adds:
-            try:
-                os.remove(os.path.join(table_dir, name))
-            except OSError:
-                pass
-        raise
     return {
         "version": version,
         "n_rewritten": len(removes),
@@ -1947,9 +2033,6 @@ def zorder_snapshot(
     later prunes want in the manifest.
 
     Returns ``{"version", "n_rewritten", "adds"}``."""
-    import shutil
-    import uuid
-
     from .zorder import zvalue
 
     if n_files < 1:
@@ -1962,41 +2045,20 @@ def zorder_snapshot(
     # so a layout rewrite never drops post-widening columns from
     # pre-widening files
     base = read_snapshot(spark, table_dir)
-    tag = uuid.uuid4().hex[:8]
-    staging = os.path.join(table_dir, f"_tmp_zorder_{tag}")
-    (
-        base.withColumn("_z", zvalue(col_a, col_b, bits))
-        .repartitionByRange(n_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode("overwrite")
-        .parquet(staging)
-    )
-    adds = []
-    for i, part in enumerate(
-        sorted(p for p in os.listdir(staging) if p.endswith(".parquet"))
-    ):
-        name = f"zorder-{tag}-{i:05d}.parquet"
-        os.rename(
-            os.path.join(staging, part), os.path.join(table_dir, name)
+    with Landing(table_dir) as landing:
+        # n_files above the populated z-range bins (or a fully-DV-
+        # deleted table) stages empty parts; the landing drops them
+        adds = landing.land(
+            base.withColumn("_z", zvalue(col_a, col_b, bits))
+            .repartitionByRange(n_files, "_z")
+            .sortWithinPartitions("_z")
+            .drop("_z"),
+            "zorder",
         )
-        adds.append(name)
-    shutil.rmtree(staging, ignore_errors=True)
-    # n_files above the populated z-range bins (or a fully-DV-deleted
-    # table) stages empty parts — never commit them (NULL-stat files
-    # defeat pruning forever)
-    adds = _drop_empty_parts(table_dir, adds)
-    # swap + stats inside the same rollback scope as compact/merge: a
-    # failed commit unwinds the renamed files (log-driven readers
-    # never saw them); hard crashes are vacuum_orphans territory
-    try:
-        version = commit_version(
-            table_dir,
-            adds=adds,
+        version = landing.commit(
+            adds,
             removes=active,
-            stats=stats_for_files(
-                table_dir, adds, stats_cols or [col_a, col_b]
-            ),
+            stats_cols=stats_cols or [col_a, col_b],
             # layout-only commit; reading through read_snapshot above
             # already applied any live deletion vectors, and removing
             # every active file retires them (snapshot_dvs prunes) —
@@ -2004,13 +2066,6 @@ def zorder_snapshot(
             data_change=False,
             planned_version=planned,
         )
-    except BaseException:
-        for name in adds:
-            try:
-                os.remove(os.path.join(table_dir, name))
-            except OSError:
-                pass
-        raise
     return {"version": version, "n_rewritten": len(active), "adds": adds}
 
 
@@ -2029,59 +2084,16 @@ def init_snapshot(
     from the very first commit, so the first MERGE/DELETE already
     plans log-first).  Refuses a directory that already carries a
     log — bootstrap is not an upsert."""
-    import shutil
-    import uuid
-
     if log_versions(table_dir):
         raise ValueError(
             f"{table_dir!r} already has a snapshot log — use "
             "merge_into_snapshot/commit_version to change it"
         )
     os.makedirs(table_dir, exist_ok=True)
-    tag = uuid.uuid4().hex[:8]
-    staging = os.path.join(table_dir, f"_tmp_init_{tag}")
-    df.write.mode("overwrite").parquet(staging)
-    adds = []
-    for i, part in enumerate(
-        sorted(p for p in os.listdir(staging) if p.endswith(".parquet"))
-    ):
-        name = f"{prefix}-{tag}-{i:05d}.parquet"
-        os.rename(
-            os.path.join(staging, part), os.path.join(table_dir, name)
-        )
-        adds.append(name)
-    shutil.rmtree(staging, ignore_errors=True)
-    # empty parts defeat pruning forever (NULL-stat envelopes) —
-    # drop them, EXCEPT when the whole bootstrap is empty: then one
-    # 0-row part stays as the table's schema holder
-    import pyarrow.parquet as _pq
-
-    nonempty = [
-        a
-        for a in adds
-        if _pq.ParquetFile(os.path.join(table_dir, a)).metadata.num_rows
-        > 0
-    ]
-    if nonempty:
-        for a in adds:
-            if a not in set(nonempty):
-                os.remove(os.path.join(table_dir, a))
-        adds = nonempty
-    elif len(adds) > 1:
-        for a in adds[1:]:
-            os.remove(os.path.join(table_dir, a))
-        adds = adds[:1]
-    try:
-        cols = list(stats_cols or [])
-        if bloom_key and bloom_key not in cols:
-            cols.append(bloom_key)
-        new_stats = (
-            stats_for_files(table_dir, adds, cols) if cols else None
-        )
-        if bloom_key and new_stats:
-            attach_key_blooms(
-                table_dir, adds, bloom_key, new_stats, bloom_bits
-            )
+    with Landing(table_dir) as landing:
+        # an all-empty bootstrap keeps one 0-row part as the table's
+        # schema holder
+        adds = landing.land(df, prefix, keep_schema_part=True)
         # schema-in-the-log from commit 1: the writer KNOWS df's
         # schema, and recording it makes every later read —
         # summaries, DML rewrites, time travel — an explicit-schema
@@ -2089,17 +2101,11 @@ def init_snapshot(
         # of driver work per un-schema'd read at local scale; at
         # 100 TB the inference job reopens footers the log already
         # describes).
-        version = commit_version(
-            table_dir,
-            adds=adds,
-            stats=new_stats,
+        version = landing.commit(
+            adds,
+            stats_cols=stats_cols,
+            bloom_key=bloom_key,
+            bloom_bits=bloom_bits,
             schema=[[c, t] for c, t in df.dtypes],
         )
-    except BaseException:
-        for name in adds:
-            try:
-                os.remove(os.path.join(table_dir, name))
-            except OSError:
-                pass
-        raise
     return {"version": version, "adds": adds}

@@ -44,6 +44,7 @@ from __future__ import annotations
 
 import datetime as _dt
 import os
+import re
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -82,16 +83,19 @@ def _ord_of(v) -> str:
     return "other"
 
 
-def file_column_stats(path: str, cols: list[str]) -> list[tuple]:
+def file_column_stats(path: str, cols: list[str], md=None) -> list[tuple]:
     """Footer-only stats rows for ONE parquet file: ``(basename, col,
     n_rows, vmin, vmax, ord)`` with min/max stringified AFTER a typed
     merge across row groups (exactly :func:`build_zonemap`'s rows for
     that file).  Shared by the directory builder below and by the
     snapshot log's stats-at-commit recording (operators/snapshot.py),
-    so an envelope is one representation everywhere."""
+    so an envelope is one representation everywhere.  ``md`` is the
+    file's already-read footer (``FileMetaData``), if the caller has
+    it; otherwise the footer is read here."""
     import pyarrow.parquet as pq
 
-    md = pq.ParquetFile(path).metadata
+    if md is None:
+        md = pq.ParquetFile(path).metadata
     names = {md.schema.column(i).name: i for i in range(md.num_columns)}
     rows = []
     for c in cols:
@@ -187,7 +191,7 @@ _CAST_ORD = {
 }
 
 # value range per integral cast — Spark's try_cast returns NULL on
-# overflow, and the driver-side fast path must reproduce that exactly
+# overflow, and the driver-side cut must reproduce that exactly
 _INT_CAST_RANGE = {
     "tinyint": (-(1 << 7), (1 << 7) - 1),
     "smallint": (-(1 << 15), (1 << 15) - 1),
@@ -200,11 +204,13 @@ _INT_CAST_RANGE = {
 # Spark try_cast(string AS <integral>) accepts ASCII-whitespace-
 # trimmed [+-]?digits ONLY (decimals, exponents, hex, non-ASCII
 # digits all yield NULL under ANSI try_cast — verified against
-# Spark 4.1); anything outside this shape makes the fast path bail
-# to the expression path rather than guess
-_INT_STR = __import__("re").compile(
-    r"[ \t\r\n\f\v]*([+-]?[0-9]+)[ \t\r\n\f\v]*"
-)
+# Spark 4.1); a stat outside this shape is unprovable and keeps its
+# file
+_INT_STR = re.compile(r"[ \t\r\n\f\v]*([+-]?[0-9]+)[ \t\r\n\f\v]*")
+# the other exact shapes: an ISO day, a finite decimal/exponent float
+_ISO_DAY = re.compile(r"[0-9]{4}-[0-9]{2}-[0-9]{2}")
+_FINITE = re.compile(r"[+-]?([0-9]+\.?[0-9]*|\.[0-9]+)([eE][+-]?[0-9]+)?")
+_EPOCH = _dt.date(1970, 1, 1)
 
 
 def _try_cast_int(s: str | None, cast: str):
@@ -212,7 +218,7 @@ def _try_cast_int(s: str | None, cast: str):
     casts.  Returns ``(evaluable, value)``: ``(True, int|None)`` when
     the result provably matches Spark's (None = SQL NULL), or
     ``(False, None)`` when the string's shape is outside the verified
-    grammar and the caller must fall back to the Spark expression."""
+    grammar."""
     if s is None:
         return True, None
     m = _INT_STR.fullmatch(s)
@@ -223,39 +229,74 @@ def _try_cast_int(s: str | None, cast: str):
     return True, (v if lo <= v <= hi else None)
 
 
+def _key_bound(stat: str | None, kind: str | None, cast: str):
+    """An envelope bound as a driver value, or None when the driver
+    cannot prove it equals Spark's ``try_cast(stat AS cast)`` (a NULL
+    stat, a width-losing integral cast, an unparseable string, NaN or
+    inf, a key type without an exact rule) — the caller then keeps
+    the file.  ``kind`` is the comparison domain: ``int`` (integral
+    casts), ``date`` (days since the epoch), ``double`` or
+    ``string`` (byte order: Python's code-point order is UTF-8's)."""
+    if stat is None:
+        return None
+    if kind == "int":
+        ok, v = _try_cast_int(stat, cast)
+        return v if ok else None
+    if kind == "date" and _ISO_DAY.fullmatch(stat):
+        try:
+            return (_dt.date.fromisoformat(stat) - _EPOCH).days
+        except ValueError:
+            return None
+    if kind == "double" and _FINITE.fullmatch(stat):
+        return float(stat)
+    if kind == "string":
+        return stat
+    return None
+
+
+def _range_bound(v, kind: str | None):
+    """A caller's range bound in ``kind``'s domain, converted the way
+    Spark's comparison converts the literal, or None when it has no
+    exact counterpart there (the caller then keeps every file)."""
+    if isinstance(v, bool):
+        return None
+    if kind == "int" and isinstance(v, int):
+        return v
+    if kind == "double" and isinstance(v, (int, float)) and v == v:
+        return float(v)
+    if kind == "date" and type(v) is _dt.date:
+        return (v - _EPOCH).days
+    if kind == "string" and isinstance(v, str):
+        return v
+    return None
+
+
 def prune_file_rows(
     zrows: list[tuple], col: str, lo, hi, cast: str = "bigint"
-) -> list[str] | None:
-    """DRIVER-side fast path of :func:`prune_files` over already-
-    collected zone-map rows ``(file, col, n_rows, vmin, vmax, ord)``:
-    the envelope-vs-range comparison is a handful of integer
-    compares per file, and running it as a Spark filter+collect
-    bills a whole analysis/collect round-trip (~0.3-0.4 s here) for
-    a list scan.  Exact-or-bail: integral casts only, every non-NULL
-    stat must parse under the verified try_cast grammar and the
-    bounds must be Python ints — anything else returns ``None`` and
-    the caller keeps the Spark expression path, so the fast path can
-    never *diverge*, only decline.  Semantics mirror
-    :func:`prune_files` exactly: NULL stats and NULL-casting stats
-    KEEP the file (never skip blind)."""
+) -> list[str]:
+    """The envelope-vs-range file cut over zone-map rows ``(file,
+    col, n_rows, vmin, vmax, ord)``, decided on the driver: a handful
+    of compares per file, where a Spark filter+collect would bill a
+    whole analysis/collect round-trip for a list scan.  A file is
+    KEPT when its envelope intersects ``[lo, hi]`` or when any bound
+    cannot be proven exact (:func:`_key_bound` — NULL stats,
+    width-losing casts, unparseable stats; :func:`_range_bound` — a
+    ``lo``/``hi`` of another type): never skip blind.  Exact for
+    integral, date, double and string casts; every other cast keeps
+    every file."""
     base = cast.lower().split("(")[0]
-    if base not in _INT_CAST_RANGE:
-        return None
-    if not isinstance(lo, int) or not isinstance(hi, int):
-        return None
+    kind = "int" if base in _INT_CAST_RANGE else None
+    if base in ("date", "double", "string"):
+        kind = base
+    lo_v, hi_v = _range_bound(lo, kind), _range_bound(hi, kind)
     keep = []
     for r in zrows:
         if r[1] != col:
             continue
-        ok_min, cmin = _try_cast_int(r[3], base)
-        ok_max, cmax = _try_cast_int(r[4], base)
-        if not (ok_min and ok_max):
-            return None
+        vmin, vmax = _key_bound(r[3], kind, base), _key_bound(r[4], kind, base)
         if (
-            r[3] is None
-            or cmin is None
-            or cmax is None
-            or (cmin <= hi and cmax >= lo)
+            None in (lo_v, hi_v, vmin, vmax)
+            or (vmin <= hi_v and vmax >= lo_v)
         ):
             keep.append(r[0])
     return sorted(keep)
@@ -266,7 +307,8 @@ def prune_files(
 ) -> list[str]:
     """Files whose [vmin, vmax] envelope intersects [lo, hi] on
     ``col`` (cast to ``cast`` for the comparison), plus every file
-    with NULL stats (never skip blind).  Manifest-sized collects.
+    with NULL stats (never skip blind).  One manifest-sized collect;
+    the cut is :func:`prune_file_rows`.
 
     Raises ``ValueError`` when ``cast``'s comparison semantics
     disagree with the ordering the envelope was built under (e.g.
@@ -275,10 +317,6 @@ def prune_files(
     required = _CAST_ORD.get(cast.lower().split("(")[0])
     if required is None:
         raise ValueError(f"unsupported prune cast {cast!r}")
-    # ONE manifest-sized collect serves the ordering guard AND the
-    # driver-side prune fast path (previously: one Spark round-trip
-    # for the guard, a second for the keep-filter — ~0.3-0.4 s of
-    # pure analysis overhead per call on a list-sized manifest)
     zrows = [
         (r["file"], r["col"], r["n_rows"], r["vmin"], r["vmax"], r["ord"])
         for r in zonemap.filter(F.col("col") == col).collect()
@@ -292,27 +330,7 @@ def prune_files(
             f"{mismatched[5]}, prune cast {cast!r} compares "
             f"{required} (file {mismatched[0]})"
         )
-    fast = prune_file_rows(zrows, col, lo, hi, cast)
-    if fast is not None:
-        return fast
-    zm = zonemap.filter(F.col("col") == col)
-    # try_cast, and a NULL result KEEPS the file: the ordering guard
-    # above proves comparison semantics agree, but a cast can still
-    # fail on WIDTH (cast='int' against a bigint envelope whose stats
-    # exceed int32) — under ANSI that cast raises mid-job and under
-    # legacy mode it yields NULL, which would make the keep predicate
-    # NULL and silently skip a file that may match.  A stat we cannot
-    # represent in the requested type is treated exactly like a NULL
-    # stat: unprunable, never skipped blind.
-    cmin = F.expr(f"try_cast(vmin as {cast})")
-    cmax = F.expr(f"try_cast(vmax as {cast})")
-    keep = zm.filter(
-        F.col("vmin").isNull()
-        | cmin.isNull()
-        | cmax.isNull()
-        | ((cmin <= F.lit(hi)) & (cmax >= F.lit(lo)))
-    )
-    return sorted(r["file"] for r in keep.select("file").collect())
+    return prune_file_rows(zrows, col, lo, hi, cast)
 
 
 def pruned_scan(

@@ -19,9 +19,7 @@ constant fill — callers fill before merging, as the reference does).
 from __future__ import annotations
 
 import base64
-import datetime
 import os
-import re
 import shutil
 import uuid
 
@@ -226,10 +224,12 @@ def merge_into_snapshot(
     2. merged = unmatched rows of the affected files ∪ source
        (source wins per key; source must be key-unique — reject,
        don't guess); written as NEW files, never in place;
-    3. one atomic log commit: remove(affected) + add(new files).
-       Readers of the previous snapshot never observe a torn table —
-       scans are log-driven, and the new files are invisible until
-       the commit lands.
+    3. one atomic log commit: remove(affected) + add(new files),
+       landed through ``operators/snapshot.py`` ``Landing`` (a failure
+       before the commit lands removes every new file).  Readers of
+       the previous snapshot never observe a torn table — scans are
+       log-driven, and the new files are invisible until the commit
+       lands.
 
     Returns ``{"version", "n_affected", "n_untouched", "adds"}``.
     Source rows whose keys fall outside every envelope are inserts
@@ -279,39 +279,6 @@ def merge_into_snapshot(
         source.unpersist()
 
 
-# Driver-side replicas of try_cast(stat AS <cast>) for the envelope
-# bounds plan_key_merge compares exactly.  Spark's own grammar is wider;
-# a stat outside these shapes is unprovable and keeps its file.
-_ISO_DAY = re.compile(r"[0-9]{4}-[0-9]{2}-[0-9]{2}")
-_FINITE = re.compile(r"[+-]?([0-9]+\.?[0-9]*|\.[0-9]+)([eE][+-]?[0-9]+)?")
-_EPOCH = datetime.date(1970, 1, 1)
-
-
-def _key_bound(stat: str | None, kind: str | None, cast: str):
-    """An envelope bound as a value comparable with the sorted source
-    keys, or None when the driver cannot prove it equals Spark's
-    ``try_cast(stat AS cast)`` (a NULL stat, a width-losing integral
-    cast, an unparseable string, NaN or inf, a key type without an
-    exact rule) — the caller then keeps the file."""
-    from ..operators.zonemap import _try_cast_int
-
-    if stat is None:
-        return None
-    if kind == "int":
-        ok, v = _try_cast_int(stat, cast)
-        return v if ok else None
-    if kind == "date" and _ISO_DAY.fullmatch(stat):
-        try:
-            return (datetime.date.fromisoformat(stat) - _EPOCH).days
-        except ValueError:
-            return None
-    if kind == "double" and _FINITE.fullmatch(stat):
-        return float(stat)
-    if kind == "string":
-        return stat
-    return None
-
-
 def _bloom_words(b) -> np.ndarray | None:
     """The words of a recorded key bloom, or None when it is missing,
     not k=3, undecodable, or its size disagrees with its m — the file
@@ -354,12 +321,12 @@ def plan_key_merge(
       ``np.searchsorted``; the keys inside a file's envelope are then
       tested against its recorded key bloom with ``operators/bloom.py``
       ``_positions_np``, the hash family the bloom was built with.
-      Bounds are compared exactly for integral casts (via
-      ``zonemap._try_cast_int``, which keeps width-losing casts NULL),
-      date keys (ISO day), string keys (byte order) and finite double
-      stats; any bound the driver cannot prove exact — and every file
-      when the source holds a NaN, which parquet stats leave out —
-      considers all source keys.  Keeping a file costs a rewrite,
+      Bounds are compared exactly (``zonemap._key_bound``, the rule
+      the range prune shares) for integral casts (width-losing casts
+      stay NULL), date keys (ISO day), string keys (byte order) and
+      finite double stats; any bound the driver cannot prove exact —
+      and every file when the source holds a NaN, which parquet stats
+      leave out — considers all source keys.  Keeping a file costs a rewrite,
       never a wrong result.
 
     Memory bound: the key column is held on the driver as one Arrow
@@ -376,7 +343,7 @@ def plan_key_merge(
         guard_zonemap_ordering,
         snapshot_zonemap_rows,
     )
-    from ..operators.zonemap import _CAST_ORD, _INT_CAST_RANGE
+    from ..operators.zonemap import _CAST_ORD, _INT_CAST_RANGE, _key_bound
 
     base = cast.lower().split("(")[0]
     required = _CAST_ORD.get(base)
@@ -454,6 +421,40 @@ def plan_key_merge(
     return n, sorted(affected)
 
 
+def check_source_schema(
+    table: list[list[str]],
+    source: DataFrame,
+    allow_evolution: bool = False,
+    widen: str = "pass allow_evolution=True to widen the table explicitly",
+) -> list[str]:
+    """The keyed writers' source-schema contract against the table's
+    ``[[name, type], ...]``, validated once before any write: a source
+    missing a table column, holding a column the table lacks (unless
+    ``allow_evolution``), or retyping one raises — the copy-on-write
+    MERGE replaces whole rows (a missing column would NULL matched
+    rows' values), and an unvetted column would mint schema-drifting
+    data files.  ``widen`` is the remedy the extra-column error names.
+    Returns the extra columns, sorted (the widening when allowed)."""
+    src_types = dict(source.dtypes)
+    missing = [c for c, _ in table if c not in src_types]
+    if missing:
+        raise ValueError(f"source is missing table columns {missing}")
+    extra = sorted(set(src_types) - {c for c, _ in table})
+    if extra and not allow_evolution:
+        raise ValueError(
+            f"source has columns the table lacks: {extra} — a silent "
+            "drop would lose data and a silent add would drift the "
+            f"schema; {widen}"
+        )
+    drift = [(c, src_types[c], t) for c, t in table if src_types[c] != t]
+    if drift:
+        raise ValueError(
+            "source column types drift from the table schema "
+            f"(col, source, table): {drift}"
+        )
+    return extra
+
+
 def _merge_into_snapshot_impl(
     spark: SparkSession,
     table_dir: str,
@@ -464,14 +465,13 @@ def _merge_into_snapshot_impl(
     allow_evolution: bool,
 ) -> dict:
     from ..operators.snapshot import (
-        attach_key_blooms,
-        commit_version,
+        Landing,
+        head_schema,
         plan_head,
-        read_snapshot,
         snapshot_dvs,
         snapshot_files,
-        stats_for_files,
         strip_deleted_rows,
+        table_reader,
     )
 
     # the planned version is read BEFORE the log replay the plan makes,
@@ -495,48 +495,20 @@ def _merge_into_snapshot_impl(
             "n_untouched": len(active),
             "adds": [],
         }
-    # schema contract, validated ONCE against the table head before
-    # any write: the affected path's unionByName would coerce or fail
-    # late, and the insert-only path previously wrote the source's
-    # own schema verbatim — a source with extra or retyped columns
-    # would mint schema-drifting data files that later scans resolve
-    # from an arbitrary footer.  Reject drift up front.
-    head = read_snapshot(spark, table_dir)
-    src_types = dict(source.dtypes)
-    missing = [c for c, _ in head.dtypes if c not in src_types]
-    if missing:
-        raise ValueError(
-            f"source is missing table columns {missing}"
-        )
-    extra = sorted(set(src_types) - {c for c, _ in head.dtypes})
-    if extra and not allow_evolution:
-        raise ValueError(
-            f"source has columns the table lacks: {extra} — a silent "
-            "drop would lose data and a silent add would drift the "
-            "schema; pass allow_evolution=True to widen the table "
-            "explicitly"
-        )
-    drift = [
-        (c, src_types[c], t) for c, t in head.dtypes if src_types[c] != t
-    ]
-    if drift:
-        raise ValueError(
-            "source column types drift from the table schema "
-            f"(col, source, table): {drift}"
-        )
+    table = head_schema(spark, table_dir)
+    extra = check_source_schema(table, source, allow_evolution)
     hit = set(affected)
     untouched = [f for f in active if f not in hit]
     # the schema the merge WRITES: the table head, widened by the
     # extra source columns when evolving (stable order: table columns
     # first, then the new ones sorted) — and recorded in the commit
     # so every later read resolves it from the log, not a footer
-    out_cols = list(head.columns) + (extra if allow_evolution else [])
+    out_cols = [c for c, _ in table] + extra
     if affected:
-        # read the affected files WITH the table's current schema
-        # (head carries the logged evolved schema when one exists):
-        # a pre-widening file read raw would lack the new columns and
+        # read the affected files WITH the table's logged schema: a
+        # pre-widening file read raw would lack the new columns and
         # the union would silently drop them from the source rows
-        base = spark.read.schema(head.schema).parquet(
+        base = table_reader(spark, table_dir).parquet(
             *[os.path.join(table_dir, f) for f in affected]
         )
         # merge-on-read interplay: rewriting a DV-covered file from
@@ -549,70 +521,40 @@ def _merge_into_snapshot_impl(
         keep = base.join(
             source.select(key_col), on=key_col, how="left_anti"
         )
-        if extra and allow_evolution:
-            # widening: kept rows take NULL for the new columns
-            merged = keep.unionByName(
-                source.select(*out_cols), allowMissingColumns=True
-            ).select(*out_cols)
-        else:
-            merged = keep.unionByName(source.select(*base.columns))
+        # widening: kept rows take NULL for the new columns
+        merged = keep.unionByName(
+            source.select(*out_cols), allowMissingColumns=bool(extra)
+        ).select(*out_cols)
     else:
         # insert-only: STILL project onto the write schema — writing
         # the source verbatim is how unvetted columns sneak into data
-        # files (the drift guard above already rejected type changes)
+        # files (the schema check above already rejected type changes)
         merged = source.select(*out_cols)
-    staging = os.path.join(table_dir, f"_tmp_merge_{uuid.uuid4().hex[:8]}")
     affected_bytes = sum(
         os.path.getsize(os.path.join(table_dir, f)) for f in affected
     )
-    sized_for_write(
-        merged, est_bytes=affected_bytes, est_rows=n_src
-    ).write.mode("overwrite").parquet(staging)
-    adds = []
-    tag = uuid.uuid4().hex[:8]
-    for i, part in enumerate(
-        sorted(p for p in os.listdir(staging) if p.endswith(".parquet"))
-    ):
-        name = f"merge-{tag}-{i:05d}.parquet"
-        os.rename(os.path.join(staging, part), os.path.join(table_dir, name))
-        adds.append(name)
-    shutil.rmtree(staging, ignore_errors=True)
-    # a failed commit must not strand the renamed data files: readers
-    # of a snapshot table are log-driven (so orphans were already
-    # invisible to them), but raw directory consumers and disk space
-    # deserve the rollback too.  A hard crash between rename and
-    # commit is mopped up by operators/snapshot.py vacuum_orphans.
-    # The new files' key envelopes ride the commit (stats-in-manifest)
-    # so the NEXT merge plans them log-first, no footer reads.
-    # everything from here to the commit sits inside the rollback
-    # scope: a stats or bloom failure must unwind the renamed data
-    # files exactly like a commit failure would
-    try:
-        new_stats = stats_for_files(table_dir, adds, [key_col])
-        # "auto" sizes each file's filter at ~10 bits/key (clamped to
-        # 1-16 KiB per entry) and builds it on the driver from the
-        # files just written; shared policy with every other writer —
-        # operators/snapshot.py attach_key_blooms
-        attach_key_blooms(table_dir, adds, key_col, new_stats, bloom_bits)
-        version = commit_version(
-            table_dir,
-            adds=adds,
+    # the new files' key envelopes and blooms ride the commit
+    # (stats-in-manifest) so the NEXT merge plans them log-first, no
+    # footer reads; "auto" sizes each file's filter at ~10 bits/key —
+    # operators/snapshot.py attach_key_blooms
+    with Landing(table_dir) as landing:
+        adds = landing.land(
+            sized_for_write(merged, est_bytes=affected_bytes, est_rows=n_src),
+            "merge",
+        )
+        version = landing.commit(
+            adds,
             removes=affected,
-            stats=new_stats,
+            stats_cols=[key_col],
+            bloom_key=key_col,
+            bloom_bits=bloom_bits,
             schema=(
                 [[c, dict(merged.dtypes)[c]] for c in out_cols]
-                if extra and allow_evolution
+                if extra
                 else None
             ),
             planned_version=planned,
         )
-    except BaseException:
-        for name in adds:
-            try:
-                os.remove(os.path.join(table_dir, name))
-            except OSError:
-                pass
-        raise
     return {
         "version": version,
         "n_affected": len(affected),
@@ -658,41 +600,37 @@ def delete_from_snapshot(
     "n_untouched", "adds"}``; a delete that matches nothing is a
     clean no-op (version None), never an empty commit."""
     from ..operators.snapshot import (
-        attach_key_blooms,
-        commit_version,
+        Landing,
         file_stats,
         plan_head,
         range_candidate_files,
         snapshot_dvs,
         snapshot_files,
-        stats_for_files,
         strip_deleted_rows,
+        table_reader,
     )
 
     planned = plan_head(table_dir)
     active = snapshot_files(table_dir)
     rec = file_stats(table_dir)
     candidates = range_candidate_files(
-        spark, table_dir, key_col, lo, hi, cast, recorded=rec
+        table_dir, key_col, lo, hi, cast, recorded=rec
     )
+    noop = {
+        "version": None,
+        "n_deleted": 0,
+        "n_rewritten": 0,
+        "n_removed": 0,
+        "n_untouched": len(active),
+        "adds": [],
+    }
     if not candidates:
-        return {
-            "version": None,
-            "n_deleted": 0,
-            "n_rewritten": 0,
-            "n_removed": 0,
-            "n_untouched": len(active),
-            "adds": [],
-        }
+        return noop
     pred = (F.col(key_col) >= F.lit(lo)) & (F.col(key_col) <= F.lit(hi))
     # schema-aware read: rewriting a pre-widening file must carry the
     # evolved columns (as NULL), not silently drop them
-    from ..operators.snapshot import read_snapshot as _read_snapshot
-
-    tbl_schema = _read_snapshot(spark, table_dir).schema
-    base = spark.read.schema(tbl_schema).parquet(
-        *[os.path.join(table_dir, f) for f in candidates]
-    )
+    reader = table_reader(spark, table_dir)
+    base = reader.parquet(*[os.path.join(table_dir, f) for f in candidates])
     # merge-on-read interplay: rows a live deletion vector already
     # removed must neither count as deleted again nor resurrect in
     # the rewrite — both raw reads below go through the DV filter.
@@ -720,17 +658,9 @@ def delete_from_snapshot(
     )
     matches = {r["_f"]: int(r["n"]) for r in per_file}
     affected = sorted(matches)
-    n_deleted = sum(matches.values())
     if not affected:
-        return {
-            "version": None,
-            "n_deleted": 0,
-            "n_rewritten": 0,
-            "n_removed": 0,
-            "n_untouched": len(active),
-            "adds": [],
-        }
-    survivors = spark.read.schema(tbl_schema).parquet(
+        return noop
+    survivors = reader.parquet(
         *[os.path.join(table_dir, f) for f in affected]
     )
     if dvs:
@@ -738,53 +668,25 @@ def delete_from_snapshot(
             spark, survivors, table_dir, dvs, affected
         )
     survivors = survivors.where(~pred | F.col(key_col).isNull())
-    staging = os.path.join(table_dir, f"_tmp_delete_{uuid.uuid4().hex[:8]}")
-    sized_for_write(
-        survivors,
-        est_bytes=sum(
-            os.path.getsize(os.path.join(table_dir, f)) for f in affected
-        ),
-    ).write.mode("overwrite").parquet(staging)
-    adds = []
-    tag = uuid.uuid4().hex[:8]
-    for i, part in enumerate(
-        sorted(p for p in os.listdir(staging) if p.endswith(".parquet"))
-    ):
-        name = f"delete-{tag}-{i:05d}.parquet"
-        os.rename(os.path.join(staging, part), os.path.join(table_dir, name))
-        adds.append(name)
-    shutil.rmtree(staging, ignore_errors=True)
-    # ONE footer walk serves both the 0-row prune and the commit
-    # stats (a 0-row file would be a NULL-stat manifest entry that
-    # defeats pruning forever)
-    all_stats = stats_for_files(table_dir, adds, [key_col])
-    pruned_adds = []
-    for name in adds:
-        if int(all_stats[name][key_col]["n_rows"]) == 0:
-            os.remove(os.path.join(table_dir, name))
-        else:
-            pruned_adds.append(name)
-    adds = pruned_adds
-    try:
-        new_stats = {f: all_stats[f] for f in adds}
-        attach_key_blooms(table_dir, adds, key_col, new_stats, bloom_bits)
-        version = commit_version(
-            table_dir,
-            adds=adds,
+    affected_bytes = sum(
+        os.path.getsize(os.path.join(table_dir, f)) for f in affected
+    )
+    with Landing(table_dir) as landing:
+        # a file whose every row matched lands no replacement
+        adds = landing.land(
+            sized_for_write(survivors, est_bytes=affected_bytes), "delete"
+        )
+        version = landing.commit(
+            adds,
             removes=affected,
-            stats=new_stats or None,
+            stats_cols=[key_col],
+            bloom_key=key_col,
+            bloom_bits=bloom_bits,
             planned_version=planned,
         )
-    except BaseException:
-        for name in adds:
-            try:
-                os.remove(os.path.join(table_dir, name))
-            except OSError:
-                pass
-        raise
     return {
         "version": version,
-        "n_deleted": n_deleted,
+        "n_deleted": sum(matches.values()),
         "n_rewritten": len(adds),
         "n_removed": len(affected),
         "n_untouched": len(active) - len(affected),

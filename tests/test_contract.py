@@ -221,3 +221,50 @@ def test_no_package_function_is_test_only():
     unreached = {k for k in defs if k.split(":", 1)[1] not in refs}
     assert sorted(unreached - set(_UNREACHED_ALLOWLIST)) == []
     assert sorted(set(_UNREACHED_ALLOWLIST) - unreached) == []
+
+
+def test_one_landing_path_for_snapshot_writers():
+    """New files enter a snapshot table through one rollback scope,
+    ``operators/snapshot.py`` ``Landing``: no other function of the
+    three writer modules renames staged parts or catches
+    ``BaseException`` for a hand-rolled rollback.
+    ``_atomic_overwrite`` (the whole-table swap of ``MergeTable``) is
+    the one other renamer."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    allowed = {"Landing.land", "Landing.__exit__", "_atomic_overwrite"}
+    found = []
+    for rel in ("operators/snapshot.py", "operators/mor.py", "sinks/merge.py"):
+        tree = _parse(os.path.join(repo, "survivor_processing_spark", rel))
+        scopes = [
+            (n.name, n) for n in tree.body if isinstance(n, ast.FunctionDef)
+        ]
+        scopes += [
+            (f"{c.name}.{n.name}", n)
+            for c in tree.body
+            if isinstance(c, ast.ClassDef)
+            for n in c.body
+            if isinstance(n, ast.FunctionDef)
+        ]
+        for qual, fn in scopes:
+            if qual in allowed:
+                continue
+            for node in ast.walk(fn):
+                renames = (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "rename"
+                    and isinstance(node.func.value, ast.Name)
+                    and node.func.value.id == "os"
+                )
+                # a bare ``except:`` catches BaseException too
+                catches = isinstance(node, ast.ExceptHandler) and (
+                    node.type is None
+                    or "BaseException" in {
+                        t.id
+                        for t in ast.walk(node.type)
+                        if isinstance(t, ast.Name)
+                    }
+                )
+                if renames or catches:
+                    found.append(f"{rel}:{qual}:{node.lineno}")
+    assert found == []

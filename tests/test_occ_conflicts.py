@@ -163,7 +163,6 @@ def test_purge_loses_to_concurrent_mor_delete(spark, tbl, monkeypatch):
     purge's commit — the purge must raise SnapshotConflictError, the
     concurrent delete must stay deleted, and a RETRIED purge must
     converge with both deletes intact."""
-    from survivor_processing_spark.operators import mor as mor_mod
     from survivor_processing_spark.operators import snapshot as snap_mod
 
     delete_from_snapshot_mor(spark, tbl, "k", 10, 20)  # v2: DV on f0
@@ -180,7 +179,7 @@ def test_purge_loses_to_concurrent_mor_delete(spark, tbl, monkeypatch):
             assert out["version"] == 3
         return real_commit(table_dir, *args, **kwargs)
 
-    monkeypatch.setattr(mor_mod, "commit_version", racing_commit)
+    monkeypatch.setattr(snap_mod, "commit_version", racing_commit)
     with pytest.raises(SnapshotConflictError):
         purge_dvs(spark, tbl)
     # loser rolled back: no purge files landed, both deletes live
@@ -343,10 +342,10 @@ def test_conflict_dv_vs_dv_same_file(spark, tbl, monkeypatch):
     compose silently — for upserts both would append a replacement
     for one existing key, breaking key uniqueness.  The loser raises
     and a replan converges."""
-    from survivor_processing_spark.operators import mor as mor_mod
+    from survivor_processing_spark.operators import snapshot as snap_mod
 
     state = {"armed": True}
-    real_commit = mor_mod.commit_version
+    real_commit = snap_mod.commit_version
 
     def racing_commit(table_dir, *args, **kwargs):
         if state["armed"] and kwargs.get("dv_adds"):
@@ -357,7 +356,7 @@ def test_conflict_dv_vs_dv_same_file(spark, tbl, monkeypatch):
             assert out["version"] == 2
         return real_commit(table_dir, *args, **kwargs)
 
-    monkeypatch.setattr(mor_mod, "commit_version", racing_commit)
+    monkeypatch.setattr(snap_mod, "commit_version", racing_commit)
     src = spark.createDataFrame([(7, 777.0)], "k long, amt double")
     with pytest.raises(SnapshotConflictError, match="deletion"):
         upsert_into_snapshot_mor(spark, tbl, src, "k")

@@ -395,6 +395,142 @@ def test_merge_failed_commit_rolls_back_files(spark, table_dir, monkeypatch):
     assert rows[10] == 10.0
 
 
+@pytest.fixture(scope="module")
+def writer_template(spark):
+    """A 4-file table (k 0..199, stats + blooms) with one live
+    deletion vector, built once and copied per rollback case."""
+    from survivor_processing_spark.operators.mor import (
+        delete_from_snapshot_mor,
+    )
+    from survivor_processing_spark.operators.snapshot import init_snapshot
+
+    root = tempfile.mkdtemp()
+    d = os.path.join(root, "t")
+    init_snapshot(
+        spark,
+        d,
+        spark.range(0, 200)
+        .selectExpr("id as k", "cast(id as double) as amt")
+        .repartition(4, "k"),
+        stats_cols=["k"],
+        bloom_key="k",
+    )
+    delete_from_snapshot_mor(spark, d, "k", 150, 160)
+    yield d
+    shutil.rmtree(root, ignore_errors=True)
+
+
+def _run_writer(spark, writer: str, d: str, scratch: str) -> None:
+    from survivor_processing_spark.operators.mor import (
+        delete_from_snapshot_mor,
+        purge_dvs,
+        upsert_into_snapshot_mor,
+    )
+    from survivor_processing_spark.operators.snapshot import (
+        compact_snapshot,
+        init_snapshot,
+        zorder_snapshot,
+    )
+    from survivor_processing_spark.sinks.merge import (
+        delete_from_snapshot,
+        merge_into_snapshot,
+    )
+    from survivor_processing_spark.streaming.lakehouse import (
+        stream_into_snapshot,
+    )
+
+    # 20 updates of existing keys (some in the DV'd file) + 5 inserts
+    batch = spark.createDataFrame(
+        [(k, -1.0) for k in list(range(140, 160)) + list(range(900, 905))],
+        "k long, amt double",
+    )
+    if writer == "init_snapshot":
+        init_snapshot(spark, d, batch, stats_cols=["k"], bloom_key="k")
+    elif writer == "compact_snapshot":
+        compact_snapshot(spark, d, target_bytes=1 << 30, stats_cols=["k"])
+    elif writer == "zorder_snapshot":
+        zorder_snapshot(spark, d, "k", "amt", n_files=2)
+    elif writer == "merge_into_snapshot":
+        merge_into_snapshot(spark, d, batch, "k")
+    elif writer == "stream_into_snapshot":
+        stage = os.path.join(scratch, "stage")
+        batch.write.parquet(stage)
+        q = stream_into_snapshot(
+            spark.readStream.schema("k long, amt double").parquet(stage),
+            d,
+            "k",
+            os.path.join(scratch, "ckpt"),
+        )
+        q.awaitTermination()
+    elif writer == "delete_from_snapshot":
+        delete_from_snapshot(spark, d, "k", 10, 120)
+    elif writer == "delete_from_snapshot_mor":
+        delete_from_snapshot_mor(spark, d, "k", 10, 120, shards=2)
+    elif writer == "upsert_into_snapshot_mor":
+        upsert_into_snapshot_mor(spark, d, batch, "k")
+    else:
+        assert writer == "purge_dvs"
+        purge_dvs(spark, d, stats_cols=["k"], bloom_key="k")
+
+
+_WRITERS = [
+    "init_snapshot",
+    "compact_snapshot",
+    "zorder_snapshot",
+    "merge_into_snapshot",
+    "stream_into_snapshot",
+    "delete_from_snapshot",
+    "delete_from_snapshot_mor",
+    "upsert_into_snapshot_mor",
+    "purge_dvs",
+]
+
+
+@pytest.mark.parametrize("step", ["stats_for_files", "commit_version"])
+@pytest.mark.parametrize("writer", _WRITERS)
+def test_writer_failure_leaves_table_unchanged(
+    spark, writer_template, monkeypatch, writer, step
+):
+    """Every snapshot writer lands its files through one rollback
+    scope: a failure in the footer-stats step or in the commit itself
+    leaves the table directory listing (no staged ``_tmp_*``
+    directory, no renamed part, no DV sidecar) and the snapshot
+    exactly as they were."""
+    import survivor_processing_spark.operators.snapshot as snap
+
+    scratch = tempfile.mkdtemp()
+    try:
+        d = os.path.join(scratch, "t")
+        if writer == "init_snapshot":
+            os.makedirs(d)
+        else:
+            shutil.copytree(writer_template, d)
+
+        def state():
+            if not log_versions(d):
+                return sorted(os.listdir(d)), None, None
+            return (
+                sorted(os.listdir(d)),
+                snapshot_files(d),
+                snap.snapshot_dvs(d),
+            )
+
+        before = state()
+
+        def boom(*a, **k):
+            raise RuntimeError(f"injected {step} failure")
+
+        monkeypatch.setattr(snap, step, boom)
+        with pytest.raises(Exception, match=f"injected {step} failure"):
+            _run_writer(spark, writer, d, scratch)
+        monkeypatch.undo()
+        after = state()
+        assert not [f for f in after[0] if f.startswith("_tmp_")]
+        assert after == before
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
+
+
 def test_merge_envelope_width_guard(spark, table_dir):
     """cast='int' against a bigint envelope beyond int32: the file's
     envelope is uncastable, so it must count as AFFECTED (update in
@@ -416,9 +552,10 @@ def test_keyed_writers_job_ratchet(spark, table_dir):
     """A warm keyed merge plans on the driver from one collect of the
     source keys: a copy-on-write merge of a small key-unique batch
     into a multi-file table launches at most 3 Spark jobs, and a
-    merge-on-read upsert into a table without deletion vectors at
-    most 4.  A probe that goes back to Spark jobs of its own breaks
-    the bound (the probe-based plan launched 9 each)."""
+    merge-on-read upsert at most 4 into a table without deletion
+    vectors and 5 with one live.  A probe that goes back to Spark
+    jobs of its own breaks the bound (the probe-based plan launched
+    9 each)."""
     import uuid
 
     from survivor_processing_spark.operators.mor import (
@@ -462,10 +599,19 @@ def test_keyed_writers_job_ratchet(spark, table_dir):
             spark, table_dir, batch(1000, -3.0), "k"
         )
     )
-    assert cow <= 3 and mor <= 4, (cow, mor)
+    # with a live deletion vector (the upsert above left one) the
+    # tombstone scan anti-joins it, and its broadcast build side is
+    # one more job: one task per live sidecar
+    mor_dv = jobs(
+        lambda: upsert_into_snapshot_mor(
+            spark, table_dir, batch(2000, -4.0), "k"
+        )
+    )
+    assert cow <= 3 and mor <= 4 and mor_dv <= 5, (cow, mor, mor_dv)
     rows = {r["k"]: r["amt"] for r in read_snapshot(spark, table_dir).collect()}
     assert len(rows) == 4000
     assert rows[100] == -1.0 and rows[107] == -2.0 and rows[1029] == -3.0
+    assert rows[2029] == -4.0
 
 
 def test_vacuum_orphans_removes_only_uncommitted(spark, table_dir):
