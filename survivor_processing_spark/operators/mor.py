@@ -14,8 +14,8 @@ the repo's own snapshot log (operators/snapshot.py):
   writes sidecar parquet(s) of ``(file string, pos long)`` positions
   — the commit is ``dv_adds``-only, zero data files rewritten; a
   large tombstone set SHARDS the sidecar write by data file
-  (disjoint-coverage sidecars, parallel writer tasks — r11, fixing
-  the single-task ``coalesce(1)`` funnel VERDICT r10 flagged);
+  (disjoint-coverage sidecars, parallel writer tasks instead of a
+  single-task ``coalesce(1)`` funnel);
 - row identity is Spark's parquet ``_metadata.file_name`` /
   ``_metadata.row_index`` — the physical position in the file, the
   exact identity Delta DVs and Iceberg position deletes key on, and
@@ -25,7 +25,7 @@ the repo's own snapshot log (operators/snapshot.py):
   ``read_snapshot`` anti-joins live DVs (``strip_deleted_rows``), and
   every COW rewriter (compaction, z-order, MERGE, COW DELETE) applies
   them before rewriting — a rewrite retires the coverage it folds in
-  (``snapshot_dvs`` prunes coverage as files are removed);
+  (the log replay prunes coverage as files are removed);
 - :func:`purge_dvs` is Delta's ``REORG ... APPLY (PURGE)``: rewrite
   ONLY the covered files with their DVs applied, committed with
   ``data_change=False`` (layout-only — the rows were already
@@ -52,7 +52,6 @@ at-scale replacement for that pattern, not a translation of it.
 
 from __future__ import annotations
 
-import json
 import os
 
 import pyspark.sql.functions as F
@@ -64,16 +63,16 @@ from .snapshot import (
 )
 from .snapshot import (
     Landing,
-    _entry_path,
-    file_stats,
+    _apply_entry,
+    _dv_sidecars,
+    _load_entry,
+    _state_at,
     head_schema,
     log_versions,
-    plan_head,
     range_candidate_files,
-    snapshot_dvs,
-    snapshot_files,
     strip_deleted_rows,
     table_reader,
+    table_state,
 )
 
 
@@ -182,34 +181,25 @@ def delete_from_snapshot_mor(
     delete big enough to push READS past the broadcast cap in
     ``strip_deleted_rows`` still belongs on the COW path, whose cost
     is proportional to files touched, not rows deleted."""
-    planned = plan_head(table_dir)
-    active = snapshot_files(table_dir)
-    rec = file_stats(table_dir)
-    candidates = range_candidate_files(
-        table_dir, key_col, lo, hi, cast, recorded=rec
-    )
+    state = table_state(table_dir)
+    candidates = range_candidate_files(state, key_col, lo, hi, cast)
     noop = {
         "version": None,
         "n_deleted": 0,
         "n_files_covered": 0,
-        "n_untouched": len(active),
+        "n_untouched": len(state.active),
         "dv": None,
         "dvs": [],
     }
     if not candidates:
         return noop
-    scan = table_reader(spark, table_dir).parquet(
+    scan = table_reader(spark, state).parquet(
         *[os.path.join(table_dir, f) for f in candidates]
     )
     # keep_tags: the positions being recorded ARE the metadata tags;
     # the anti-join below drops rows an earlier DV already deleted
     live = strip_deleted_rows(
-        spark,
-        scan,
-        table_dir,
-        snapshot_dvs(table_dir),
-        candidates,
-        keep_tags=True,
+        spark, scan, table_dir, state.dvs, candidates, keep_tags=True
     )
     pred = (F.col(key_col) >= F.lit(lo)) & (F.col(key_col) <= F.lit(hi))
     hits = live.where(pred).select(
@@ -225,14 +215,14 @@ def delete_from_snapshot_mor(
         if not sidecars:
             return noop
         version = landing.commit(
-            [], dv_adds=sidecars, planned_version=planned
+            [], dv_adds=sidecars, planned_version=state.version
         )
     covered = sorted({f for cov in sidecars.values() for f in cov})
     return {
         "version": version,
         "n_deleted": n_deleted,
         "n_files_covered": len(covered),
-        "n_untouched": len(active) - len(covered),
+        "n_untouched": len(state.active) - len(covered),
         "dv": next(iter(sidecars)) if len(sidecars) == 1 else None,
         "dvs": sorted(sidecars),
     }
@@ -326,12 +316,11 @@ def upsert_into_snapshot_mor(
     pinned = source.persist(StorageLevel.MEMORY_AND_DISK)
     source = pinned
     try:
-        planned = plan_head(table_dir)
-        active = snapshot_files(table_dir)
+        state = table_state(table_dir)
         # the key contract (empty, NULL, duplicate keys) and the files
         # that can hold a source key, in one collect of the keys
         n_in_source, candidates = plan_key_merge(
-            table_dir, source, key_col, cast
+            state, source, key_col, cast
         )
         # narrow the view of the just-cached source for every later
         # consumer (sinks/merge.py sized_for_write note): a small
@@ -344,12 +333,12 @@ def upsert_into_snapshot_mor(
                 "n_updated": 0,
                 "n_inserted": 0,
                 "n_files_covered": 0,
-                "n_untouched": len(active),
+                "n_untouched": len(state.active),
                 "adds": [],
                 "dv": None,
                 "dvs": [],
             }
-        table = head_schema(spark, table_dir)
+        table = head_schema(spark, state)
         check_source_schema(
             table,
             source,
@@ -361,14 +350,14 @@ def upsert_into_snapshot_mor(
             sidecars: dict[str, list[str]] = {}
             n_updated = 0
             if candidates:
-                scan = table_reader(spark, table_dir).parquet(
+                scan = table_reader(spark, state).parquet(
                     *[os.path.join(table_dir, f) for f in candidates]
                 )
                 live = strip_deleted_rows(
                     spark,
                     scan,
                     table_dir,
-                    snapshot_dvs(table_dir),
+                    state.dvs,
                     candidates,
                     keep_tags=True,
                 )
@@ -402,7 +391,7 @@ def upsert_into_snapshot_mor(
                 bloom_key=key_col,
                 bloom_bits=bloom_bits,
                 dv_adds=sidecars or None,
-                planned_version=planned,
+                planned_version=state.version,
             )
         covered = sorted({f for cov in sidecars.values() for f in cov})
         return {
@@ -415,7 +404,7 @@ def upsert_into_snapshot_mor(
                 0, sum(landing.rows[a] for a in adds) - n_updated
             ),
             "n_files_covered": len(covered),
-            "n_untouched": len(active) - len(covered),
+            "n_untouched": len(state.active) - len(covered),
             "adds": adds,
             "dv": next(iter(sidecars)) if len(sidecars) == 1 else None,
             "dvs": sorted(sidecars),
@@ -449,23 +438,22 @@ def purge_dvs(
     no-op."""
     # a MOR delete landing between this plan and this commit would
     # otherwise have its fresh DV silently folded OUT by our rewrite
-    # (the resurrection race ADVICE r10 flagged) — the read-set
-    # declaration makes commit_version fail us loudly instead
-    planned = plan_head(table_dir)
-    dvs = snapshot_dvs(table_dir)
-    active = snapshot_files(table_dir)
-    if not dvs:
+    # (resurrecting its rows) — the read-set declaration
+    # (planned_version = the state's version) makes commit_version
+    # fail us loudly instead
+    state = table_state(table_dir)
+    if not state.dvs:
         return {
             "version": None,
             "n_rewritten": 0,
-            "n_untouched": len(active),
+            "n_untouched": len(state.active),
             "adds": [],
         }
-    covered = sorted({f for cov in dvs.values() for f in cov})
-    scan = table_reader(spark, table_dir).parquet(
+    covered = sorted({f for cov in state.dvs.values() for f in cov})
+    scan = table_reader(spark, state).parquet(
         *[os.path.join(table_dir, f) for f in covered]
     )
-    live = strip_deleted_rows(spark, scan, table_dir, dvs, covered)
+    live = strip_deleted_rows(spark, scan, table_dir, state.dvs, covered)
     with Landing(table_dir) as landing:
         # a file whose every row was deleted lands no replacement
         adds = landing.land(live, "purge")
@@ -476,12 +464,12 @@ def purge_dvs(
             bloom_key=bloom_key,
             bloom_bits=bloom_bits,
             data_change=False,
-            planned_version=planned,
+            planned_version=state.version,
         )
     return {
         "version": version,
         "n_rewritten": len(covered),
-        "n_untouched": len(active) - len(covered),
+        "n_untouched": len(state.active) - len(covered),
         "adds": adds,
     }
 
@@ -524,9 +512,23 @@ def table_changes(
         raise ValueError(f"version {v_from} not in log (0 = from start)")
     if v_from >= v_to:
         raise ValueError(f"need v_from < v_to, got {v_from} >= {v_to}")
+    # the DV coverage at v_from (one replay, checkpoint-seeded: an
+    # incremental consumer reading a small (v_from, v_to] window of a
+    # long-lived table skips the pre-window entry chain), advanced
+    # through the window by the same fold every replay uses, so each
+    # emitted commit sees its PARENT version's DVs — skipped
+    # data_change=False commits advance it too
+    state = _state_at(table_dir, versions, v_from)
+    steps: list[tuple[int, dict, dict[str, list[str]]]] = []
+    for n in versions:
+        if v_from < n <= v_to:
+            e = _load_entry(table_dir, n)
+            if e.get("data_change") is not False:
+                steps.append((n, e, dict(state.dvs)))
+            _apply_entry(state, e)
     # output schema: the table schema at v_to (logged wins, else any
     # file's footer), plus the two change columns
-    reader = table_reader(spark, table_dir, v_to)
+    reader = table_reader(spark, state)
 
     def _scan(files: list[str]) -> DataFrame:
         return reader.parquet(
@@ -540,32 +542,9 @@ def table_changes(
             F.lit(v).cast("int").alias("_commit_version"),
         )
 
-    # incremental DV-coverage replay: `cov` tracks sidecar -> covered
-    # files so delete images can apply "the parent version's DVs"
-    # without a full snapshot_dvs() replay per commit.  Seeded from
-    # the newest log CHECKPOINT ≤ v_from (its dvs ARE the replayed
-    # coverage at that version), so an incremental consumer reading
-    # a small (v_from, v_to] window of a long-lived table skips the
-    # pre-window entry chain entirely.
-    from .snapshot import _latest_ckpt
-
-    cov: dict[str, set[str]] = {}
-    start = 0
-    if v_from:
-        ck = _latest_ckpt(table_dir, v_from, versions)
-        if ck:
-            cov = {s: set(c) for s, c in ck.get("dvs", {}).items()}
-            start = ck["version"]
     parts: list[DataFrame] = []
-    for n in versions:
-        if n <= start:
-            continue
-        if n > v_to:
-            break
-        with open(_entry_path(table_dir, n)) as f:
-            e = json.load(f)
-        emit = n > v_from and e.get("data_change") is not False
-        if emit and e.get("baseline"):
+    for n, e, parent_dvs in steps:
+        if e.get("baseline"):
             # an expiry baseline is history COMPACTION, not a data
             # change: its adds re-state the files active at the cut,
             # its removes name crash-window bookkeeping whose data
@@ -575,77 +554,55 @@ def table_changes(
             # it as the feed's INITIAL SNAPSHOT: the live rows at the
             # cut — adds with the baseline's own DVs applied — as
             # 'insert', nothing else.
-            base_dvs = {
-                s: sorted(c) for s, c in (e.get("dv_adds") or {}).items()
-            }
             img = _scan(sorted(e["adds"]))
-            if base_dvs:
+            if e.get("dv_adds"):
                 img = strip_deleted_rows(
-                    spark, img, table_dir, base_dvs, sorted(e["adds"])
+                    spark, img, table_dir, e["dv_adds"], sorted(e["adds"])
                 )
             parts.append(_tail(img, "insert", n))
-            for s, covered in (e.get("dv_adds") or {}).items():
-                cov[s] = set(covered)
-            for name in e["removes"]:
-                for s in list(cov):
-                    cov[s].discard(name)
-                    if not cov[s]:
-                        del cov[s]
             continue
-        if emit and e["removes"]:
+        if e["removes"]:
             # the removed files' LIVE rows at the parent version
-            parent_dvs = {s: sorted(c) for s, c in cov.items()}
-            doomed = _scan(sorted(e["removes"]))
             doomed = strip_deleted_rows(
-                spark, doomed, table_dir, parent_dvs, sorted(e["removes"])
+                spark,
+                _scan(sorted(e["removes"])),
+                table_dir,
+                parent_dvs,
+                sorted(e["removes"]),
             )
             parts.append(_tail(doomed, "delete", n))
-        if emit and e["adds"]:
+        if e["adds"]:
             parts.append(_tail(_scan(sorted(e["adds"])), "insert", n))
-        if emit and e.get("dv_adds"):
-            for s, covered in sorted(e["dv_adds"].items()):
-                # tombstone side renamed: a table column called
-                # "file"/"pos" must not make the join ambiguous
-                tomb = (
-                    spark.read.schema("file string, pos long")
-                    .parquet(os.path.join(table_dir, s))
-                    .select(
-                        F.col("file").alias("__sps_dv_file"),
-                        F.col("pos").alias("__sps_dv_pos"),
-                    )
-                )
-                parent_dvs = {sc: sorted(c) for sc, c in cov.items()}
-                img = strip_deleted_rows(
-                    spark,
-                    _scan(sorted(covered)),
-                    table_dir,
-                    parent_dvs,
-                    sorted(covered),
-                    keep_tags=True,
-                )
-                dead = img.join(
-                    F.broadcast(tomb),
-                    (F.col(_FCOL) == F.col("__sps_dv_file"))
-                    & (F.col(_PCOL) == F.col("__sps_dv_pos")),
-                    "left_semi",
-                ).drop(_FCOL, _PCOL)
-                parts.append(_tail(dead, "delete", n))
-                # fold THIS sidecar into the DV state before the
-                # commit's next sidecar: a commit may carry several
-                # (sharded MOR writes), and a position two of them
-                # both name must emit once, not once per sidecar —
-                # processing order is the sorted name order, so the
-                # feed is deterministic.  The post-loop advance below
-                # re-assigns the same coverage (idempotent).
-                cov[s] = set(covered)
-        # advance coverage state through EVERY entry (skipped ones too)
-        for s, covered in (e.get("dv_adds") or {}).items():
-            cov[s] = set(covered)
-        for name in e["removes"]:
-            for s in list(cov):
-                cov[s].discard(name)
-                if not cov[s]:
-                    del cov[s]
+        for s, covered in sorted((e.get("dv_adds") or {}).items()):
+            tomb, small = _dv_sidecars(spark, table_dir, [s])
+            # tombstone side renamed: a table column called
+            # "file"/"pos" must not make the join ambiguous
+            tomb = tomb.select(
+                F.col("file").alias("__sps_dv_file"),
+                F.col("pos").alias("__sps_dv_pos"),
+            )
+            img = strip_deleted_rows(
+                spark,
+                _scan(sorted(covered)),
+                table_dir,
+                parent_dvs,
+                sorted(covered),
+                keep_tags=True,
+            )
+            dead = img.join(
+                F.broadcast(tomb) if small else tomb,
+                (F.col(_FCOL) == F.col("__sps_dv_file"))
+                & (F.col(_PCOL) == F.col("__sps_dv_pos")),
+                "left_semi",
+            ).drop(_FCOL, _PCOL)
+            parts.append(_tail(dead, "delete", n))
+            # fold THIS sidecar into the parent DVs before the
+            # commit's next sidecar: a commit may carry several
+            # (sharded MOR writes), and a position two of them both
+            # name must emit once, not once per sidecar — processing
+            # order is the sorted name order, so the feed is
+            # deterministic
+            parent_dvs = {**parent_dvs, s: sorted(covered)}
     if parts:
         out = parts[0]
         for p in parts[1:]:
@@ -654,8 +611,7 @@ def table_changes(
     # empty feed (e.g. only data_change=False commits in range):
     # a filter-false scan of any logged file keeps the exact schema
     for n in versions:
-        with open(_entry_path(table_dir, n)) as f:
-            adds = json.load(f)["adds"]
+        adds = _load_entry(table_dir, n)["adds"]
         if adds:
             return _tail(
                 _scan([adds[0]]).filter(F.lit(False)), "insert", v_to

@@ -15,9 +15,15 @@ writer provides them, per-added-file column envelopes under
 records the envelope once at commit time and every later prune or
 merge plans from the log with ZERO footer reads — at 100 TB,
 reopening a million footers costs more than the scan being pruned).
-File names are relative to the table directory.  A snapshot at version v = replay
-of entries 1..v (adds ∪, removes ∖) — O(log size) driver work on a
-file-count-bounded log, exactly the zonemap-manifest cost class.
+File names are relative to the table directory.  A snapshot at
+version v = replay of entries 1..v, and there is one replay:
+:func:`table_state` lists the log once, seeds from the newest
+checkpoint ≤ v and folds each later entry with :func:`_apply_entry`,
+the one place the replay rules live (active files, per-file stats,
+deletion-vector coverage, schema).  Every reader and writer takes one
+state per call, so what it acts on all belongs to one version —
+O(commits since checkpoint) driver work on a file-count-bounded log,
+exactly the zonemap-manifest cost class.
 Commits are two-phase (write tmp, ``os.link`` claim — atomic on
 POSIX) and strictly sequential; like Delta's optimistic protocol
 collapsed to the single-writer case, which is what a
@@ -41,6 +47,7 @@ from __future__ import annotations
 
 import json
 import os
+from dataclasses import dataclass, field
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -86,16 +93,6 @@ def log_versions(table_dir: str) -> list[int]:
     return sorted(out)
 
 
-def plan_head(table_dir: str) -> int:
-    """The read-set declaration every DML/maintenance writer captures
-    BEFORE reading any plan state (active files, stats, DVs): the
-    current log head, or 0 for an empty log.  Passed to
-    ``commit_version(planned_version=)`` — capturing before the state
-    reads is conservative-safe: a commit landing between the capture
-    and a read can only raise a false conflict, never slip past one."""
-    return (log_versions(table_dir) or [0])[-1]
-
-
 def _ckpt_path(table_dir: str, version: int) -> str:
     return os.path.join(_log_path(table_dir), f"ckpt-v{version:08d}.json")
 
@@ -116,15 +113,15 @@ def log_checkpoints(table_dir: str) -> list[int]:
     return sorted(out)
 
 
-# (path -> ((mtime_ns, size, inode), parsed state)): one plan
-# touches the same checkpoint through _replay, file_stats,
-# snapshot_dvs AND table_schema.  The key is the file's full stat
-# identity, not bare mtime: a table directory deleted and recreated
-# at the same path within one process can mint a new ckpt-v{N}.json
-# at an identical path, and on coarse-mtime filesystems bare mtime
-# would serve the OLD table's parsed state for the new one —
-# mtime_ns + size + inode pins the exact file object.  Bounded
-# because a process reads a handful of tables.
+# (path -> ((mtime_ns, size, inode), parsed state)): every
+# table_state at or past a checkpoint seeds from it, and one writer
+# takes a state to plan and another per commit attempt.  The key is
+# the file's full stat identity, not bare mtime: a table directory
+# deleted and recreated at the same path within one process can mint
+# a new ckpt-v{N}.json at an identical path, and on coarse-mtime
+# filesystems bare mtime would serve the OLD table's parsed state for
+# the new one — mtime_ns + size + inode pins the exact file object.
+# Bounded because a process reads a handful of tables.
 _CKPT_CACHE: dict[str, tuple[tuple[int, int, int], dict]] = {}
 
 
@@ -155,17 +152,117 @@ def _latest_ckpt(
             except (OSError, json.JSONDecodeError):
                 continue  # torn/foreign checkpoint: fall back
             if ck.get("version") == c:
-                # READ-ONLY CONTRACT: the returned object IS the
-                # cached parsed state — callers must copy anything
-                # they mutate or hand out (a mutated inner dict would
-                # poison the cache for every later read).  _replay /
-                # snapshot_dvs / table_schema already build fresh
-                # sets/lists from it; file_stats deep-copies the stat
-                # dicts it returns.  A defensive deepcopy here would
-                # cost O(files) per call — more than the json.load
-                # the cache exists to avoid.
+                # READ-ONLY: the returned object IS the cached parsed
+                # state; _state_at copies what it seeds from it
                 return ck
     return None
+
+
+def _load_entry(table_dir: str, version: int) -> dict:
+    with open(_entry_path(table_dir, version)) as f:
+        return json.load(f)
+
+
+@dataclass
+class TableState:
+    """The table at one version, replayed from ONE log listing.  Every
+    reader and writer takes one per call, so the files, stats,
+    deletion vectors and schema it acts on belong to the same version
+    (a head read that resolved the head once per facet could pair one
+    version's files with another's DVs and resurrect deleted rows).
+
+    ``versions`` is the listing it was replayed from; ``active`` the
+    file names; ``stats`` each active file's recorded envelopes
+    (``{}`` when its add carried none), sorted by name; ``dvs`` the
+    live deletion-vector coverage ``{sidecar: sorted covered files}``;
+    ``schema`` the logged ``[[name, type], ...]`` or None.  Read-only
+    to callers: :func:`_apply_entry` is the one thing that advances
+    it."""
+
+    table_dir: str
+    version: int = 0
+    versions: list[int] = field(default_factory=list)
+    active: set[str] = field(default_factory=set)
+    stats: dict[str, dict] = field(default_factory=dict)
+    dvs: dict[str, list[str]] = field(default_factory=dict)
+    schema: list[list[str]] | None = None
+
+
+def _apply_entry(state: TableState, e: dict) -> None:
+    """Fold one log entry into ``state`` — the replay rules, written
+    once:
+
+    - files: adds join the active set, then removes leave it;
+    - stats: an add resets the file's stats to what THAT entry
+      recorded (or ``{}``) and a remove drops them, so a name added,
+      removed and re-added never inherits the dead add's envelope or
+      bloom (a stale one would let a prune or merge skip a match);
+    - deletion vectors: ``dv_adds`` assigns a sidecar's coverage,
+      every removed file leaves all coverage, and a sidecar whose
+      coverage empties drops out — a rewrite retires the DVs of the
+      files it removes by construction, and a re-added name never
+      resurrects a dead DV;
+    - schema: the latest entry that records one wins."""
+    removes = set(e["removes"])
+    recorded = e.get("stats") or {}
+    state.active.update(e["adds"])
+    state.active -= removes
+    for name in e["adds"]:
+        state.stats[name] = recorded.get(name, {})
+    for name in removes:
+        state.stats.pop(name, None)
+    for s, files in (e.get("dv_adds") or {}).items():
+        state.dvs[s] = sorted(files)
+    if removes:
+        for s in list(state.dvs):
+            state.dvs[s] = [f for f in state.dvs[s] if f not in removes]
+            if not state.dvs[s]:
+                del state.dvs[s]
+    if e.get("schema"):
+        state.schema = [list(c) for c in e["schema"]]
+
+
+def _state_at(table_dir: str, versions: list[int], v: int) -> TableState:
+    """Replay the listing ``versions`` up to ``v`` (0 = the empty table
+    before v1): seeded from the newest checkpoint ≤ v, then one
+    :func:`_apply_entry` per later entry, each opened once."""
+    state = TableState(table_dir, versions=versions)
+    start = 0
+    ck = _latest_ckpt(table_dir, v, versions)
+    if ck:
+        # copy on seed: ck is the cached parsed checkpoint, and a
+        # state's containers reach callers who may mutate them
+        state.active = set(ck["active"])
+        state.stats = {
+            f: {c: dict(s) for c, s in st.items()}
+            for f, st in ck.get("stats", {}).items()
+        }
+        state.dvs = {s: list(c) for s, c in ck.get("dvs", {}).items()}
+        if ck.get("schema"):
+            state.schema = [list(c) for c in ck["schema"]]
+        start = ck["version"]
+    for n in versions:
+        if start < n <= v:
+            _apply_entry(state, _load_entry(table_dir, n))
+    state.version = v
+    state.stats = {f: state.stats.get(f, {}) for f in sorted(state.active)}
+    return state
+
+
+def table_state(table_dir: str, version: int | None = None) -> TableState:
+    """The table at ``version`` (default: head) — the one log replay.
+    One :func:`log_versions` listing resolves the version AND drives
+    the replay, so a commit landing mid-read is either wholly visible
+    or wholly invisible.  Raises for an empty log or a version the
+    log does not hold."""
+    versions = log_versions(table_dir)
+    if not versions:
+        raise ValueError(f"no snapshot log under {table_dir!r}")
+    head = versions[-1]
+    v = head if version is None else int(version)
+    if v not in versions:
+        raise ValueError(f"version {v} not in log (head {head})")
+    return _state_at(table_dir, versions, v)
 
 
 def commit_version(
@@ -228,7 +325,7 @@ def commit_version(
     coverage must be non-empty.  Replay prunes a sidecar's coverage
     as its files are removed and drops it when none remain, so a
     rewrite (purge/zorder/compaction/merge) retires DVs by
-    construction — see :func:`snapshot_dvs`.
+    construction — see :func:`_apply_entry`.
 
     ``data_change=False`` marks a commit whose LOGICAL table content
     is identical to its parent (compaction, z-order, DV purge — the
@@ -303,6 +400,17 @@ def commit_version(
             )
     import uuid
 
+    def entry(n: int) -> dict:
+        try:
+            return _load_entry(table_dir, n)
+        except FileNotFoundError:
+            # listed, then gone: a concurrent expiry compacted the
+            # history under this commit — a maintenance race
+            raise SnapshotConflictError(
+                f"log entry v{n} vanished mid-commit (a "
+                "concurrent expire compacted history); replan"
+            ) from None
+
     own_removes = set(removes)
     own_covered = set(dv_covered)
     # incremental scan state: entries are immutable once committed,
@@ -313,6 +421,8 @@ def commit_version(
     used_names: set[str] = set()
     names_scanned_up_to = 0
     for _ in range(max_attempts):
+        # one listing per attempt: the head it claims past, the
+        # conflict scan and the active set it validates against
         versions = log_versions(table_dir)
         if planned_version is not None:
             if versions and planned_version != 0 and (
@@ -335,17 +445,7 @@ def commit_version(
             for n in versions:
                 if n <= scanned_up_to:
                     continue
-                try:
-                    with open(_entry_path(table_dir, n)) as f:
-                        e = json.load(f)
-                except FileNotFoundError:
-                    # entry vanished between the listing and the
-                    # read: concurrent expiry — same maintenance
-                    # race as above
-                    raise SnapshotConflictError(
-                        f"log entry v{n} vanished mid-commit (a "
-                        "concurrent expire compacted history); replan"
-                    ) from None
+                e = entry(n)
                 their_removes = set(e["removes"])
                 their_covered = {
                     f
@@ -397,7 +497,9 @@ def commit_version(
                         "on the same file; replan"
                     )
                 scanned_up_to = n
-        active = set(snapshot_files(table_dir)) if versions else set()
+        active = _state_at(
+            table_dir, versions, versions[-1] if versions else 0
+        ).active
         dup = [a for a in adds if a in active]
         if dup:
             raise ValueError(f"add of already-active files: {dup}")
@@ -414,14 +516,7 @@ def commit_version(
             for n in versions:
                 if n <= names_scanned_up_to:
                     continue
-                try:
-                    with open(_entry_path(table_dir, n)) as f:
-                        e = json.load(f)
-                except FileNotFoundError:
-                    raise SnapshotConflictError(
-                        f"log entry v{n} vanished mid-commit (a "
-                        "concurrent expire compacted history); replan"
-                    ) from None
+                e = entry(n)
                 used_names |= set(e["adds"]) | set(e.get("dv_adds") or {})
                 names_scanned_up_to = n
             stale = sorted(set(dv_names) & used_names)
@@ -448,8 +543,7 @@ def commit_version(
         ts = round(_time.time(), 3)
         if versions:
             try:
-                with open(_entry_path(table_dir, versions[-1])) as f:
-                    parent_ts = json.load(f).get("ts")
+                parent_ts = _load_entry(table_dir, versions[-1]).get("ts")
             except (OSError, json.JSONDecodeError):
                 parent_ts = None  # expired/torn parent: keep wall clock
             if parent_ts is not None:
@@ -490,59 +584,7 @@ def commit_version(
     )
 
 
-def file_stats(
-    table_dir: str, version: int | None = None
-) -> dict[str, dict]:
-    """Replayed per-file stats for the files ACTIVE at ``version``:
-    ``{file: {col: {...}}}``.  A file whose add carried no stats maps
-    to ``{}`` — present, but envelope-less (callers fall back to a
-    footer read or treat it as unprunable; never skip blind).
-
-    Stats are replayed PER ENTRY, exactly like the active set: an add
-    resets the file's stats to whatever THAT commit recorded (or
-    nothing), and a remove drops them — so a name that is added with
-    stats, removed, and later re-added with different content can
-    never inherit the dead add's envelope/bloom (a stale envelope
-    would let a later prune or merge skip a file that matches)."""
-    # single listing shared with _replay — see its docstring
-    active, v, versions = _replay(table_dir, version)
-    out: dict[str, dict] = {}
-    start = 0
-    ck = _latest_ckpt(table_dir, v, versions)
-    if ck:
-        # the checkpoint's stats map covers exactly its active set —
-        # the same state this loop would have built up to there.
-        # TWO-level copy (file dict AND per-column dicts): the
-        # checkpoint cache hands out its parsed state by reference
-        # (read-only contract), and this function's result escapes to
-        # callers who may mutate the inner stat dicts.
-        out = {
-            f: {c: dict(s) for c, s in st.items()}
-            for f, st in ck.get("stats", {}).items()
-        }
-        start = ck["version"]
-    for n in versions:
-        if n <= start:
-            continue
-        if n > v:
-            break
-        with open(_entry_path(table_dir, n)) as f:
-            e = json.load(f)
-        for name in e["adds"]:
-            out[name] = {}
-        for name, st in (e.get("stats") or {}).items():
-            out[name] = st
-        for name in e["removes"]:
-            out.pop(name, None)
-    return {f: out.get(f, {}) for f in active}
-
-
-def snapshot_zonemap_rows(
-    table_dir: str,
-    cols: list[str],
-    version: int | None = None,
-    recorded: dict[str, dict] | None = None,
-) -> list[tuple]:
+def snapshot_zonemap_rows(state: TableState, cols: list[str]) -> list[tuple]:
     """Zone-map manifest rows for a snapshot — ``(file, col, n_rows,
     vmin, vmax, ord)`` tuples, the ``build_zonemap`` schema — read
     LOG-FIRST: files whose commit recorded stats for every requested
@@ -563,14 +605,8 @@ def snapshot_zonemap_rows(
     crash against pre-widening files."""
     from .zonemap import file_column_stats
 
-    # ``recorded`` lets a caller that already replayed the log (the
-    # copy-on-write merge reads stats once for envelopes AND blooms)
-    # skip a second replay of the same entries
-    if recorded is None:
-        recorded = file_stats(table_dir, version)
     rows = []
-    for name in sorted(recorded):
-        st = recorded[name]
+    for name, st in state.stats.items():
         if all(c in st for c in cols):
             for c in cols:
                 s = st[c]
@@ -589,7 +625,7 @@ def snapshot_zonemap_rows(
             # count; ONE stats walk covers every present column — not
             # an open per column (at the million-footer scale this
             # module budgets for, the multiplier is pure waste)
-            path = os.path.join(table_dir, name)
+            path = os.path.join(state.table_dir, name)
             import pyarrow.parquet as _pq
 
             pf = _pq.ParquetFile(path)
@@ -747,12 +783,7 @@ def attach_key_blooms(
 
 
 def range_candidate_files(
-    table_dir: str,
-    key_col: str,
-    lo,
-    hi,
-    cast: str = "bigint",
-    recorded: dict[str, dict] | None = None,
+    state: TableState, key_col: str, lo, hi, cast: str = "bigint"
 ) -> list[str]:
     """Active files whose ``key_col`` envelope can possibly hold a
     row in ``[lo, hi]`` — the shared pre-plan file cut of both
@@ -773,7 +804,7 @@ def range_candidate_files(
         raise ValueError(f"unsupported delete key cast {cast!r}")
     if lo is None or hi is None:
         raise ValueError("delete bounds must be non-NULL")
-    zrows = snapshot_zonemap_rows(table_dir, [key_col], recorded=recorded)
+    zrows = snapshot_zonemap_rows(state, [key_col])
     guard_zonemap_ordering(zrows, key_col, cast, required, "delete")
     return prune_file_rows(zrows, key_col, lo, hi, cast)
 
@@ -933,92 +964,45 @@ class Landing:
         return self.version
 
 
-def _replay(
-    table_dir: str, version: int | None
-) -> tuple[set[str], int, list[int]]:
-    """Active set at ``version`` plus the resolved version AND the
-    single log listing it was computed from.  Every replay-style
-    reader (``file_stats``, ``snapshot_dvs``, ``table_schema``) MUST
-    drive its own delta loop from this returned listing rather than
-    re-listing the log: with ``version=None`` a commit landing
-    between two listings would make ``_replay`` resolve the NEWER
-    head while the caller's delta loop iterates a list that stops
-    short of it — silently missing the newest entry's dv_adds /
-    stats / schema (the loop-listing ⊇ replay-listing invariant)."""
-    versions = log_versions(table_dir)
-    if not versions:
-        raise ValueError(f"no snapshot log under {table_dir!r}")
-    head = versions[-1]
-    v = head if version is None else int(version)
-    if v not in versions:
-        raise ValueError(f"version {v} not in log (head {head})")
-    # checkpoint-seeded: start from the newest checkpoint ≤ v and
-    # replay only the delta — head reads on a long-lived table cost
-    # O(commits since last checkpoint), not O(all commits)
-    active: set[str] = set()
-    start = 0
-    ck = _latest_ckpt(table_dir, v, versions)
-    if ck:
-        active = set(ck["active"])
-        start = ck["version"]
-    for n in versions:
-        if n <= start:
-            continue
-        if n > v:
-            break
-        with open(_entry_path(table_dir, n)) as f:
-            e = json.load(f)
-        active |= set(e["adds"])
-        active -= set(e["removes"])
-    return active, v, versions
-
-
 def snapshot_files(table_dir: str, version: int | None = None) -> list[str]:
     """Table-relative file names active at ``version`` (default:
-    head), by replaying the log — sorted, so downstream plans are
-    deterministic."""
-    active, _, _ = _replay(table_dir, version)
-    return sorted(active)
+    head) — sorted, so downstream plans are deterministic."""
+    return sorted(table_state(table_dir, version).active)
 
 
-def snapshot_dvs(
-    table_dir: str, version: int | None = None
-) -> dict[str, list[str]]:
-    """Deletion-vector sidecars LIVE at ``version``:
-    ``{sidecar: [covered active data files]}`` (merge-on-read DML —
-    operators/mor.py).  Replay mirrors the active-set replay: a
-    ``dv_adds`` entry assigns the sidecar's coverage, every file
-    remove prunes that file from all coverage, and a sidecar whose
-    coverage empties drops out — so a rewrite that removes the
-    covered files (purge/zorder/compaction/merge) retires the DV by
-    construction, and a later re-add of a removed NAME can never
-    resurrect a dead DV (the prune happened when the remove
-    replayed).  Empty dict = copy-on-write reads, zero overhead."""
-    # one log listing per read (the list _replay resolved against) —
-    # a second listing here could see a commit _replay's didn't,
-    # or vice versa with version=None (see _replay's docstring)
-    _, v, versions = _replay(table_dir, version)
-    cov: dict[str, set[str]] = {}
-    start = 0
-    ck = _latest_ckpt(table_dir, v, versions)
-    if ck:
-        cov = {s: set(c) for s, c in ck.get("dvs", {}).items()}
-        start = ck["version"]
-    for n in versions:
-        if n <= start:
-            continue
-        if n > v:
-            break
-        with open(_entry_path(table_dir, n)) as f:
-            e = json.load(f)
-        for s, files in (e.get("dv_adds") or {}).items():
-            cov[s] = set(files)
-        for name in e["removes"]:
-            for s in list(cov):
-                cov[s].discard(name)
-                if not cov[s]:
-                    del cov[s]
-    return {s: sorted(files) for s, files in cov.items()}
+def _dv_sidecars(
+    spark: SparkSession, table_dir: str, sidecars: list[str]
+) -> tuple[DataFrame, bool]:
+    """The one read of deletion-vector sidecars: ``(scan, broadcast)``,
+    the scan as ``file string, pos long`` (``_metadata`` resolves) and
+    whether the sidecars total at most 64 MiB — small enough to
+    broadcast (a DV is bounded by deletes since the last purge, small
+    by maintenance contract); past that the caller's join shuffles
+    rather than OOM an executor.
+
+    LOUD on a torn/foreign sidecar: reading one with the explicit
+    schema would serve NULL positions, the join would match nothing,
+    and every deleted row would silently RESURRECT — the one failure
+    mode a deletion vector must never have.  The footer checks are
+    driver-side and sidecar-count bounded."""
+    import pyarrow.parquet as _pq
+
+    paths = [os.path.join(table_dir, s) for s in sidecars]
+    for s, path in zip(sidecars, paths):
+        try:
+            names = set(_pq.ParquetFile(path).schema_arrow.names)
+        except Exception as exc:
+            raise ValueError(
+                f"unreadable deletion-vector sidecar {s!r}: {exc}"
+            ) from exc
+        if not {"file", "pos"} <= names:
+            raise ValueError(
+                f"deletion-vector sidecar {s!r} lacks (file, pos) "
+                f"columns — found {sorted(names)}; refusing a read "
+                "that would silently resurrect deleted rows"
+            )
+    scan = spark.read.schema("file string, pos long").parquet(*paths)
+    return scan, sum(os.path.getsize(p) for p in paths) <= 64 << 20
 
 
 def strip_deleted_rows(
@@ -1028,7 +1012,6 @@ def strip_deleted_rows(
     dvs: dict[str, list[str]],
     files: list[str] | None = None,
     keep_tags: bool = False,
-    broadcast_max_bytes: int = 64 << 20,
 ):
     """Anti-join DV-deleted row positions out of ``scan`` — the
     merge-on-read read path shared by :func:`read_snapshot` and every
@@ -1043,10 +1026,8 @@ def strip_deleted_rows(
     ``(_metadata.file_name, _metadata.row_index)`` — Spark's parquet
     row index is the physical position in the file, the exact
     identity a Delta deletion vector / Iceberg position delete keys
-    on.  The DV side is broadcast while its sidecars total under
-    ``broadcast_max_bytes`` (a DV is bounded by deletes since the
-    last purge — small by maintenance contract); past that it
-    degrades to a shuffled anti-join rather than an executor OOM.
+    on.  The DV side is read, checked and sized by
+    :func:`_dv_sidecars` (broadcast under its cut, shuffled past it).
 
     ``keep_tags=True`` returns the frame WITH the internal
     ``MOR_FILE_TAG``/``MOR_POS_TAG`` columns (the MOR DML writers
@@ -1070,45 +1051,14 @@ def strip_deleted_rows(
     if not covered:
         return tagged if keep_tags else scan
     sidecars = sorted(s for s, cov in dvs.items() if set(cov) & covered)
-    # LOUD on a torn/foreign sidecar: reading one with the explicit
-    # schema would serve NULL positions, the anti-join would match
-    # nothing, and every deleted row would silently RESURRECT — the
-    # one failure mode a deletion vector must never have.  Footer
-    # checks are driver-side and sidecar-count bounded (a DV set is
-    # small by maintenance contract).
-    import pyarrow.parquet as _pq
-
-    for s in sidecars:
-        try:
-            footer = _pq.ParquetFile(
-                os.path.join(table_dir, s)
-            ).schema_arrow
-        except Exception as exc:
-            raise ValueError(
-                f"unreadable deletion-vector sidecar {s!r}: {exc}"
-            ) from exc
-        names = set(footer.names)
-        if not {"file", "pos"} <= names:
-            raise ValueError(
-                f"deletion-vector sidecar {s!r} lacks (file, pos) "
-                f"columns — found {sorted(names)}; refusing a read "
-                "that would silently resurrect deleted rows"
-            )
-    total = sum(
-        os.path.getsize(os.path.join(table_dir, s)) for s in sidecars
-    )
+    dv, small = _dv_sidecars(spark, table_dir, sidecars)
     # DV side renamed to internal names: a TABLE column called
     # "file"/"pos" must not make the join condition ambiguous
-    dv = (
-        spark.read.schema("file string, pos long")
-        .parquet(*[os.path.join(table_dir, s) for s in sidecars])
-        .where(F.col("file").isin(sorted(covered)))
-        .select(
-            F.col("file").alias("__sps_dv_file"),
-            F.col("pos").alias("__sps_dv_pos"),
-        )
+    dv = dv.where(F.col("file").isin(sorted(covered))).select(
+        F.col("file").alias("__sps_dv_file"),
+        F.col("pos").alias("__sps_dv_pos"),
     )
-    if total <= broadcast_max_bytes:
+    if small:
         dv = F.broadcast(dv)
     out = tagged.join(
         dv,
@@ -1119,58 +1069,27 @@ def strip_deleted_rows(
     return out if keep_tags else out.select(*data_cols)
 
 
-def table_schema(
-    table_dir: str, version: int | None = None
-) -> list[list[str]] | None:
-    """The logged table schema in force AT ``version`` (latest
-    schema-carrying entry ≤ v wins), or None when no entry ever
-    recorded one — pre-evolution tables read footer schemas exactly
-    as before."""
-    # single listing shared with _replay — see its docstring
-    _, v, versions = _replay(table_dir, version)
-    out: list[list[str]] | None = None
-    start = 0
-    ck = _latest_ckpt(table_dir, v, versions)
-    if ck:
-        out = (
-            [list(c) for c in ck["schema"]] if ck.get("schema") else None
-        )
-        start = ck["version"]
-    for n in versions:
-        if n <= start:
-            continue
-        if n > v:
-            break
-        with open(_entry_path(table_dir, n)) as f:
-            e = json.load(f)
-        if e.get("schema"):
-            out = [list(c) for c in e["schema"]]
-    return out
-
-
 def _schema_ddl(cols: list[list[str]]) -> str:
     return ", ".join(f"`{n}` {t}" for n, t in cols)
 
 
-def table_reader(
-    spark: SparkSession, table_dir: str, version: int | None = None
-):
-    """``spark.read`` carrying the table schema logged at ``version``
-    (head by default), so a scan of any subset of the table's files —
-    pre-widening ones included — serves every column; a bare reader
-    (footer schema) when the log never recorded one."""
-    logged = table_schema(table_dir, version)
-    return spark.read.schema(_schema_ddl(logged)) if logged else spark.read
+def table_reader(spark: SparkSession, state: TableState):
+    """``spark.read`` carrying ``state``'s logged schema, so a scan of
+    any subset of the table's files — pre-widening ones included —
+    serves every column; a bare reader (footer schema) when the log
+    never recorded one."""
+    if state.schema:
+        return spark.read.schema(_schema_ddl(state.schema))
+    return spark.read
 
 
-def head_schema(spark: SparkSession, table_dir: str) -> list[list[str]]:
-    """``[[name, type], ...]`` of the table at head: the logged schema
-    — no DataFrame built — or, for a log that never recorded one, the
-    schema Spark reads from the head's files."""
-    logged = table_schema(table_dir)
-    if logged:
-        return logged
-    return [[c, t] for c, t in read_snapshot(spark, table_dir).dtypes]
+def head_schema(spark: SparkSession, state: TableState) -> list[list[str]]:
+    """``[[name, type], ...]`` of the table at ``state``: the logged
+    schema — no DataFrame built — or, for a log that never recorded
+    one, the schema Spark reads from the state's files."""
+    if state.schema:
+        return state.schema
+    return [[c, t] for c, t in _scan(spark, state).dtypes]
 
 
 def read_snapshot(
@@ -1191,27 +1110,31 @@ def read_snapshot(
     positions out (:func:`strip_deleted_rows`), so every reader —
     summaries, time travel, the COW rewriters' schema probe — sees
     the post-delete table without a rewrite.  A version with no live
-    DVs (every existing table) keeps the exact bare-scan plan."""
-    files = snapshot_files(table_dir, version)
-    reader = table_reader(spark, table_dir, version)
+    DVs (every existing table) keeps the exact bare-scan plan.
+
+    Files, DVs and schema all come from ONE :func:`table_state`, so a
+    head read never pairs one version's files with another's DVs."""
+    return _scan(spark, table_state(table_dir, version))
+
+
+def _scan(spark: SparkSession, state: TableState) -> DataFrame:
+    """:func:`read_snapshot` of a state already replayed."""
+    d = state.table_dir
+    files = sorted(state.active)
+    reader = table_reader(spark, state)
     if files:
-        scan = reader.parquet(
-            *[os.path.join(table_dir, f) for f in files]
-        )
-        dvs = snapshot_dvs(table_dir, version)
-        if dvs:
-            scan = strip_deleted_rows(spark, scan, table_dir, dvs, files)
+        scan = reader.parquet(*[os.path.join(d, f) for f in files])
+        if state.dvs:
+            scan = strip_deleted_rows(spark, scan, d, state.dvs, files)
         return scan
     # empty snapshot: recover the schema from ANY file ever logged
-    for n in log_versions(table_dir):
-        with open(_entry_path(table_dir, n)) as f:
-            adds = json.load(f)["adds"]
+    for n in state.versions:
+        adds = _load_entry(d, n)["adds"]
         if adds:
-            return (
-                reader.parquet(os.path.join(table_dir, adds[0]))
-                .filter(F.lit(False))
+            return reader.parquet(os.path.join(d, adds[0])).filter(
+                F.lit(False)
             )
-    raise ValueError(f"log under {table_dir!r} never added a file")
+    raise ValueError(f"log under {d!r} never added a file")
 
 
 def version_at_timestamp(table_dir: str, ts: float) -> int:
@@ -1237,15 +1160,14 @@ def version_at_timestamp(table_dir: str, ts: float) -> int:
     commit-timestamp adjustment, tie-proof even for same-millisecond
     commits).  LEGACY logs written before the clamp (raw wall clock)
     can carry NON-monotone timestamps under writer clock skew, and a
-    break at the first entry past ``ts`` — the r12 fast path — would
-    either misresolve or raise on a query time sitting between
-    out-of-order entries; a later dip is undetectable without
-    reading past the break, so no early-exit scheme is exact for
-    them (ADVICE r12).  The resolver therefore reads EVERY entry's
-    timestamp: latest version with effective ts ≤ ``ts`` over the
-    whole log, exact for clamped and legacy logs alike.  Cost
-    context: this is one tiny JSON read per version — metadata of
-    the same order the log listing itself touches, and far below the
+    break at the first entry past ``ts`` would either misresolve or
+    raise on a query time sitting between out-of-order entries; a
+    later dip is undetectable without reading past the break, so no
+    early-exit scheme is exact for them.  The resolver therefore reads
+    EVERY entry's timestamp: latest version with effective ts ≤ ``ts``
+    over the whole log, exact for clamped and legacy logs alike.  Cost
+    context: this is one tiny JSON read per version — metadata of the
+    same order the log listing itself touches, and far below the
     checkpoint-seeded DATA replay the resolved read then performs —
     so exactness is bought for noise."""
     versions = log_versions(table_dir)
@@ -1254,8 +1176,7 @@ def version_at_timestamp(table_dir: str, ts: float) -> int:
     best: int | None = None
     eff: float | None = None  # effective ts after legacy inheritance
     for n in versions:
-        with open(_entry_path(table_dir, n)) as f:
-            e_ts = json.load(f).get("ts")
+        e_ts = _load_entry(table_dir, n).get("ts")
         if e_ts is not None:
             eff = float(e_ts)
         # a no-ts entry keeps the previous eff (inherits its
@@ -1286,12 +1207,10 @@ def snapshot_history(
     the commit wall-clock in epoch seconds; NULL for entries from
     before commit timestamps existed)."""
     rows = []
-    active: set[str] = set()
+    state = TableState(table_dir)
     for n in log_versions(table_dir):
-        with open(_entry_path(table_dir, n)) as f:
-            e = json.load(f)
-        active |= set(e["adds"])
-        active -= set(e["removes"])
+        e = _load_entry(table_dir, n)
+        _apply_entry(state, e)
         ts = e.get("ts")
         rows.append(
             (
@@ -1299,7 +1218,7 @@ def snapshot_history(
                 float(ts) if ts is not None else None,
                 len(e["adds"]),
                 len(e["removes"]),
-                len(active),
+                len(state.active),
             )
         )
     return local_rows_df(
@@ -1393,30 +1312,28 @@ def snapshot_summary(
     """Spark side of :func:`snapshot_summary_oracle`: per-version
     row count + decimal sum over the time-travel scan.
 
-    r13: versions with live data, a flat file layout, and one shared
+    Versions with live data, a flat file layout, and one shared
     logged schema are FUSED into a single scan — per-(file,
-    dv-sidecar) partial aggregates joined to a driver-local
-    membership LocalRelation — instead of one scan+aggregate plan
-    per version: a k-version summary was paying k relation builds
-    and a k-branch union (driver planning dominated the gate wall;
-    r13 job traces).  count/decimal-sum are exactly distributive
-    over files, so the fused totals are bit-identical.  Versions
-    that don't qualify (empty snapshots, or a schema-evolution
-    boundary) keep the per-version path and are unioned after.
+    dv-sidecar) partial aggregates rolled up on the driver — instead
+    of one scan+aggregate plan per version: a k-version summary would
+    pay k relation builds and a k-branch union (driver planning
+    dominated the gate wall in job traces).  count/decimal-sum are
+    exactly distributive over files, so the fused totals are
+    bit-identical.  Versions that don't qualify (empty snapshots, or
+    a schema-evolution boundary) keep the per-version path and are
+    unioned after.
 
-    DV-AWARE FUSION (r13 session 4 — the "designed but
-    unimplemented" item from the session-3 log): versions with live
-    deletion vectors fuse too.  The scan LEFT-joins the sidecars'
-    (file, pos) rows, so every row lands in a partial-aggregate
-    group keyed by (file, deleting-sidecar-or-live); a version's
-    total is then the SUM of the groups live at it — its files'
-    live groups, plus the groups of sidecars NOT live at it (their
-    rows were still visible then).  Pure addition of disjoint
-    partials: co-live sidecars are position-disjoint by the MOR
-    writer contract (re-deletes are anti-joined out before a
-    sidecar is written), and all arithmetic stays in the JVM
-    decimal path, so the result is bit-identical to the
-    per-version anti-join read.
+    Versions with live deletion vectors fuse too.  The scan
+    LEFT-joins the sidecars' (file, pos) rows, so every row lands in
+    a partial-aggregate group keyed by (file, deleting-sidecar-or-
+    live); a version's total is then the SUM of the groups live at it
+    — its files' live groups, plus the groups of sidecars NOT live at
+    it (their rows were still visible then).  Pure addition of
+    disjoint partials: co-live sidecars are position-disjoint by the
+    MOR writer contract (re-deletes are anti-joined out before a
+    sidecar is written), and all arithmetic stays in the JVM decimal
+    path, so the result is bit-identical to the per-version
+    anti-join read.
 
     Fire threshold, measured not asserted: >4 qualifying versions,
     with or without DVs.  AQE executes independent per-version
@@ -1425,25 +1342,21 @@ def snapshot_summary(
     fused shape is a serialized chain — fusing the DML gate's
     3-version summary regressed ~1.5 s, fusing the 4-version MOR
     gate regressed ~1.0 s in both the join-shaped and
-    collect-shaped variants (stash-paired, r13 session 4), and
-    fusing the 10-probe time-travel gate cut it 3.6 → 1.8 s
-    (join-shaped, session 3) and a further −20% (collect-shaped,
-    session 4)."""
+    collect-shaped variants (paired runs), and fusing the 10-probe
+    time-travel gate cut it 3.6 → 1.8 s (join-shaped) and a further
+    −20% (collect-shaped).
+
+    Each version is read from ONE :func:`table_state`."""
     from ..functions.localrel import local_rows_df
 
-    infos = []
-    for v in versions:
-        files = snapshot_files(table_dir, v)
-        dvs = snapshot_dvs(table_dir, v)
-        sch = table_schema(table_dir, v)
-        infos.append((int(v), files, dvs, sch))
+    states = [table_state(table_dir, v) for v in versions]
     qualifying = [
-        (v, files, dvs)
-        for v, files, dvs, sch in infos
-        if files
-        and sch == infos[0][3]
-        and all(os.sep not in f for f in files)
-        and all(os.sep not in s for s in dvs)
+        (st.version, sorted(st.active), st.dvs)
+        for st in states
+        if st.active
+        and st.schema == states[0].schema
+        and all(os.sep not in f for f in st.active)
+        and all(os.sep not in s for s in st.dvs)
     ]
     fused = qualifying if len(qualifying) > 4 else []
     out = None
@@ -1463,10 +1376,7 @@ def snapshot_summary(
             for f in cov
             if f in file_set
         )
-        reader = spark.read
-        if infos[0][3]:
-            reader = reader.schema(_schema_ddl(infos[0][3]))
-        scan = reader.parquet(
+        scan = table_reader(spark, states[0]).parquet(
             *[os.path.join(table_dir, f) for f in all_files]
         )
         rows = scan.select(
@@ -1475,51 +1385,22 @@ def snapshot_summary(
             F.col("_metadata.row_index").alias("_p"),
         )
         if pairs:
-            sidecars = sorted({s for s, _ in pairs})
-            # LOUD on a torn/foreign sidecar — same contract as
-            # strip_deleted_rows: serving NULL positions would leave
-            # deleted rows in the live group silently.  Driver-side,
-            # sidecar-count bounded.
-            import pyarrow.parquet as _pq
-
-            for s in sidecars:
-                try:
-                    footer = _pq.ParquetFile(
-                        os.path.join(table_dir, s)
-                    ).schema_arrow
-                except Exception as exc:
-                    raise ValueError(
-                        f"unreadable deletion-vector sidecar {s!r}:"
-                        f" {exc}"
-                    ) from exc
-                if not {"file", "pos"} <= set(footer.names):
-                    raise ValueError(
-                        f"deletion-vector sidecar {s!r} lacks"
-                        " (file, pos) columns — refusing a summary"
-                        " that would silently resurrect deleted rows"
-                    )
-            total = sum(
-                os.path.getsize(os.path.join(table_dir, s))
-                for s in sidecars
+            dv, small = _dv_sidecars(
+                spark, table_dir, sorted({s for s, _ in pairs})
             )
             # pair-level filter (not file-level): a sidecar can hold
             # positions for a file whose coverage it lost at every
             # fused version; those rows must stay in the live group
-            dv = (
-                spark.read.schema("file string, pos long")
-                .parquet(*[os.path.join(table_dir, s) for s in sidecars])
-                .select(
-                    F.col("file").alias("_df"),
-                    F.col("pos").alias("_dp"),
-                    F.col("_metadata.file_name").alias("_ds"),
-                )
-                .where(
-                    F.concat_ws("/", F.col("_ds"), F.col("_df")).isin(
-                        [f"{s}/{f}" for s, f in pairs]
-                    )
+            dv = dv.select(
+                F.col("file").alias("_df"),
+                F.col("pos").alias("_dp"),
+                F.col("_metadata.file_name").alias("_ds"),
+            ).where(
+                F.concat_ws("/", F.col("_ds"), F.col("_df")).isin(
+                    [f"{s}/{f}" for s, f in pairs]
                 )
             )
-            if total <= 64 << 20:
+            if small:
                 dv = F.broadcast(dv)
             rows = rows.join(
                 dv,
@@ -1575,17 +1456,19 @@ def snapshot_summary(
             F.col("total").cast("double").alias("total"),
         )
     fused_vs = {v for v, _, _ in fused}
-    for v, files, dvs, sch in infos:
-        if v in fused_vs:
+    for st in states:
+        if st.version in fused_vs:
             continue
-        s = read_snapshot(spark, table_dir, v).agg(
+        s = _scan(spark, st).agg(
             F.count(F.lit(1)).cast("long").alias("n_rows"),
             F.coalesce(
                 F.sum(F.col(agg_col).cast("decimal(18,2)")), F.lit(0)
             )
             .cast("double")
             .alias("total"),
-        ).select(F.lit(v).cast("int").alias("version"), "n_rows", "total")
+        ).select(
+            F.lit(st.version).cast("int").alias("version"), "n_rows", "total"
+        )
         out = s if out is None else out.unionByName(s)
     return out
 
@@ -1610,8 +1493,8 @@ def compact_snapshot(
     optimal (the no-op makes repeated maintenance idempotent)."""
     from .compaction import compaction_plan
 
-    planned = plan_head(table_dir)
-    active = snapshot_files(table_dir)
+    state = table_state(table_dir)
+    active = sorted(state.active)
     manifest = local_rows_df(
         spark,
         [
@@ -1626,8 +1509,8 @@ def compact_snapshot(
         bins.setdefault(int(r["bin"]), []).append(r["file"])
     # schema-aware: compacting pre-widening files must carry the
     # evolved columns (as NULL), not freeze the narrow footer
-    reader = table_reader(spark, table_dir)
-    dvs = snapshot_dvs(table_dir)
+    reader = table_reader(spark, state)
+    dvs = state.dvs
     with Landing(table_dir) as landing:
         adds: list[str] = []
         removes: list[str] = []
@@ -1642,7 +1525,7 @@ def compact_snapshot(
                 # live deletion vectors would RESURRECT deleted rows
                 # into the compacted file; applying them here also
                 # PURGES the bin's DVs (the remove prunes their
-                # coverage — see snapshot_dvs), exactly Delta's
+                # coverage — see _apply_entry), exactly Delta's
                 # OPTIMIZE-over-DVs move.  Single-file bins keep their
                 # file AND its coverage.
                 merged = strip_deleted_rows(
@@ -1672,7 +1555,7 @@ def compact_snapshot(
             adds,
             removes=removes,
             stats_cols=stats_cols,
-            planned_version=planned,
+            planned_version=state.version,
             # layout-only: logical content identical to the parent
             # (DVs applied above were already logically deleted), so
             # change-feed readers skip this commit
@@ -1691,12 +1574,10 @@ def checkpoint_snapshot(table_dir: str) -> dict:
     ``_last_checkpoint`` move, without giving up any history: the
     full replayed state (active files, per-file stats/blooms, live
     deletion-vector coverage, evolved schema) lands as ONE
-    ``_sps_log/ckpt-v{N}.json``, and every reader
-    (:func:`snapshot_files`, :func:`file_stats`,
-    :func:`snapshot_dvs`, :func:`table_schema`, and everything built
-    on them) seeds its replay from the newest checkpoint ≤ the
-    requested version, paying O(commits since checkpoint) instead of
-    O(all commits).
+    ``_sps_log/ckpt-v{N}.json``, and every :func:`table_state` — so
+    every reader and writer — seeds its replay from the newest
+    checkpoint ≤ the requested version, paying O(commits since
+    checkpoint) instead of O(all commits).
 
     Why this matters at 100 TB: a standing ingestion stream commits
     a version per micro-batch — thousands of entries per day — and
@@ -1714,57 +1595,14 @@ def checkpoint_snapshot(table_dir: str) -> dict:
     gone.  Run it from maintenance (``expire_snapshots`` writes one
     at the surviving head automatically) or every N commits on hot
     tables.  Returns ``{"version", "n_active", "n_dvs"}``."""
-    versions = log_versions(table_dir)
-    if not versions:
-        raise ValueError(f"no snapshot log under {table_dir!r}")
-    head = versions[-1]
-    # ONE walk accumulates all four state facets (the four public
-    # readers each pay their own walk; a checkpoint on the streaming
-    # hot path should not pay it four times — review r11)
-    active: set[str] = set()
-    stats: dict[str, dict] = {}
-    cov: dict[str, set[str]] = {}
-    schema: list[list[str]] | None = None
-    start = 0
-    prior = _latest_ckpt(table_dir, head, versions)
-    if prior:
-        active = set(prior["active"])
-        stats = {f: dict(st) for f, st in prior.get("stats", {}).items()}
-        cov = {s: set(c) for s, c in prior.get("dvs", {}).items()}
-        schema = (
-            [list(c) for c in prior["schema"]]
-            if prior.get("schema")
-            else None
-        )
-        start = prior["version"]
-    for n in versions:
-        if n <= start:
-            continue
-        with open(_entry_path(table_dir, n)) as f:
-            e = json.load(f)
-        active |= set(e["adds"])
-        active -= set(e["removes"])
-        for name in e["adds"]:
-            stats[name] = {}
-        for name, st in (e.get("stats") or {}).items():
-            stats[name] = st
-        for name in e["removes"]:
-            stats.pop(name, None)
-        for s, files in (e.get("dv_adds") or {}).items():
-            cov[s] = set(files)
-        for name in e["removes"]:
-            for s in list(cov):
-                cov[s].discard(name)
-                if not cov[s]:
-                    del cov[s]
-        if e.get("schema"):
-            schema = [list(c) for c in e["schema"]]
+    state = table_state(table_dir)
+    head = state.version
     ck = {
         "version": head,
-        "active": sorted(active),
-        "stats": {f: stats.get(f, {}) for f in sorted(active)},
-        "dvs": {s: sorted(c) for s, c in cov.items()},
-        "schema": schema,
+        "active": sorted(state.active),
+        "stats": state.stats,
+        "dvs": state.dvs,
+        "schema": state.schema,
     }
     import uuid as _uuid
 
@@ -1776,8 +1614,8 @@ def checkpoint_snapshot(table_dir: str) -> dict:
     os.replace(tmp, _ckpt_path(table_dir, head))
     return {
         "version": head,
-        "n_active": len(active),
-        "n_dvs": len(ck["dvs"]),
+        "n_active": len(state.active),
+        "n_dvs": len(state.dvs),
     }
 
 
@@ -1831,28 +1669,26 @@ def expire_snapshots(table_dir: str, keep_last: int = 7) -> dict:
         }
     cut = versions[-keep_last]
     expired = [v for v in versions if v < cut]
-    # active set + carried stats at the cut, and every file the
-    # expired prefix ever added (candidates for deletion)
-    active_at_cut, _, _ = _replay(table_dir, cut)
-    stats_at_cut = file_stats(table_dir, cut)
-    dv_at_cut = snapshot_dvs(table_dir, cut)
+    # the table at the cut (active set, stats, DVs, schema ride the
+    # baseline) and just before it, plus every file the expired
+    # prefix ever added (candidates for deletion)
+    at_cut = _state_at(table_dir, versions, cut)
+    before_cut = _state_at(table_dir, versions, expired[-1])
     ever_pre_cut: set[str] = set()
     dv_pre_cut: set[str] = set()
     for v in expired + [cut]:
-        with open(_entry_path(table_dir, v)) as f:
-            e = json.load(f)
+        e = _load_entry(table_dir, v)
         ever_pre_cut |= set(e["adds"])
         dv_pre_cut |= set(e.get("dv_adds") or {})
     # files still referenced by ANY retained version: active at cut,
     # or (re)added by a retained entry after the cut.  DV sidecars
     # live at the cut ride the baseline; ones referenced by a
     # retained entry stay for time travel; the rest are dead weight.
-    referenced = set(active_at_cut)
-    dv_referenced = set(dv_at_cut)
+    referenced = set(at_cut.active)
+    dv_referenced = set(at_cut.dvs)
     for v in versions:
         if v > cut:
-            with open(_entry_path(table_dir, v)) as f:
-                e = json.load(f)
+            e = _load_entry(table_dir, v)
             referenced |= set(e["adds"])
             dv_referenced |= set(e.get("dv_adds") or {})
     doomed = sorted(
@@ -1869,40 +1705,35 @@ def expire_snapshots(table_dir: str, keep_last: int = 7) -> dict:
     # active(cut) after the prefix is deleted (replay subtracts
     # without validating, so removes of already-absent names are
     # harmless there).
-    active_before_cut, _, _ = _replay(table_dir, expired[-1])
     baseline = {
         "version": cut,
-        "adds": sorted(active_at_cut),
-        "removes": sorted(active_before_cut - active_at_cut),
+        "adds": sorted(at_cut.active),
+        "removes": sorted(before_cut.active - at_cut.active),
         "baseline": True,
     }
     # the cut version's ORIGINAL commit time must survive the
     # baseline rewrite, or TIMESTAMP AS OF resolution shifts under
     # maintenance
-    with open(_entry_path(table_dir, cut)) as f:
-        _cut_ts = json.load(f).get("ts")
+    _cut_ts = _load_entry(table_dir, cut).get("ts")
     if _cut_ts is not None:
         baseline["ts"] = _cut_ts
-    carried = {
-        f: st for f, st in stats_at_cut.items() if st
-    }
+    carried = {f: st for f, st in at_cut.stats.items() if st}
     if carried:
         baseline["stats"] = carried
     # the evolved schema must survive expiry exactly like stats do —
     # dropping the schema-carrying entry would silently revert every
     # later read to footer schemas (pre-widening files would then
     # resolve WITHOUT the new columns)
-    schema_at_cut = table_schema(table_dir, cut)
-    if schema_at_cut:
-        baseline["schema"] = schema_at_cut
+    if at_cut.schema:
+        baseline["schema"] = at_cut.schema
     # deletion vectors live at the cut must survive expiry exactly
     # like stats and schema — dropping their entries would RESURRECT
     # the deleted rows at the baseline version.  Replay semantics
     # make the crash window safe: dv_adds ASSIGNS coverage (last
     # entry wins), so prefix+baseline and baseline-alone replays
     # agree on the live set.
-    if dv_at_cut:
-        baseline["dv_adds"] = dv_at_cut
+    if at_cut.dvs:
+        baseline["dv_adds"] = at_cut.dvs
     tmp = _entry_path(table_dir, cut) + ".tmp"
     with open(tmp, "w") as f:
         json.dump(baseline, f)
@@ -1967,8 +1798,7 @@ def vacuum_orphans(
 
     ever: set[str] = set()
     for n in log_versions(table_dir):
-        with open(_entry_path(table_dir, n)) as f:
-            e = json.load(f)
+        e = _load_entry(table_dir, n)
         # deletion-vector sidecars are committed files too — eating
         # one would resurrect its deleted rows on every MOR read
         ever |= set(e["adds"]) | set(e.get("dv_adds") or {})
@@ -2037,14 +1867,14 @@ def zorder_snapshot(
 
     if n_files < 1:
         raise ValueError(f"n_files must be >= 1, got {n_files}")
-    planned = plan_head(table_dir)
-    active = snapshot_files(table_dir)
+    state = table_state(table_dir)
+    active = sorted(state.active)
     if not active:
         raise ValueError(f"snapshot at {table_dir!r} has no active files")
-    # read_snapshot applies the logged evolved schema when one exists,
-    # so a layout rewrite never drops post-widening columns from
-    # pre-widening files
-    base = read_snapshot(spark, table_dir)
+    # the snapshot read applies the logged evolved schema when one
+    # exists, so a layout rewrite never drops post-widening columns
+    # from pre-widening files
+    base = _scan(spark, state)
     with Landing(table_dir) as landing:
         # n_files above the populated z-range bins (or a fully-DV-
         # deleted table) stages empty parts; the landing drops them
@@ -2061,10 +1891,10 @@ def zorder_snapshot(
             stats_cols=stats_cols or [col_a, col_b],
             # layout-only commit; reading through read_snapshot above
             # already applied any live deletion vectors, and removing
-            # every active file retires them (snapshot_dvs prunes) —
+            # every active file retires them (_apply_entry prunes) —
             # z-order doubles as a full DV purge
             data_change=False,
-            planned_version=planned,
+            planned_version=state.version,
         )
     return {"version": version, "n_rewritten": len(active), "adds": adds}
 

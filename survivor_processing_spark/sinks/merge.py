@@ -300,12 +300,13 @@ def _bloom_words(b) -> np.ndarray | None:
 
 
 def plan_key_merge(
-    table_dir: str, source: DataFrame, key_col: str, cast: str
+    state, source: DataFrame, key_col: str, cast: str
 ) -> tuple[int, list[str]]:
     """The driver-side plan of a keyed snapshot merge, shared by the
     copy-on-write :func:`merge_into_snapshot` and the merge-on-read
     ``operators/mor.py`` ``upsert_into_snapshot_mor``: returns
-    ``(n_src, affected files)``.
+    ``(n_src, affected files)`` of the writer's table ``state``
+    (``operators/snapshot.py`` ``table_state``).
 
     ONE Spark action, ``source.select(key_col).toArrow()``, brings the
     key column to the driver; everything else is decided there.
@@ -314,7 +315,7 @@ def plan_key_merge(
       left_anti row, so the same row re-inserts on every run), a
       duplicate key raises naming one (``source wins per key`` would be
       ambiguous), and an empty source returns ``(0, [])`` without
-      reading the log.  Duplicates follow Spark's grouping: -0.0 equals
+      planning files.  Duplicates follow Spark's grouping: -0.0 equals
       0.0 and every NaN is one key.
     - Affected files: the log-first zone-map rows, ordering-guarded
       like ``prune_files``, are checked against the sorted keys with
@@ -339,7 +340,6 @@ def plan_key_merge(
 
     from ..operators.bloom import _positions_np
     from ..operators.snapshot import (
-        file_stats,
         guard_zonemap_ordering,
         snapshot_zonemap_rows,
     )
@@ -389,8 +389,7 @@ def plan_key_merge(
     # the per-file key blooms exist for signed-integer and date keys
     # only (operators/snapshot.py file_key_blooms)
     hashable = pa.types.is_integer(t) or pa.types.is_date32(t)
-    rec = file_stats(table_dir)
-    zrows = snapshot_zonemap_rows(table_dir, [key_col], recorded=rec)
+    zrows = snapshot_zonemap_rows(state, [key_col])
     guard_zonemap_ordering(zrows, key_col, cast, required, "merge")
     positions: dict[int, np.ndarray] = {}
     affected = []
@@ -405,7 +404,7 @@ def plan_key_merge(
             if lo >= hi:
                 continue
         words = (
-            _bloom_words(rec.get(fname, {}).get(key_col, {}).get("bloom"))
+            _bloom_words(state.stats[fname].get(key_col, {}).get("bloom"))
             if hashable
             else None
         )
@@ -467,18 +466,15 @@ def _merge_into_snapshot_impl(
     from ..operators.snapshot import (
         Landing,
         head_schema,
-        plan_head,
-        snapshot_dvs,
-        snapshot_files,
         strip_deleted_rows,
         table_reader,
+        table_state,
     )
 
-    # the planned version is read BEFORE the log replay the plan makes,
-    # so the commit's read-set is never newer than what was planned
-    planned = plan_head(table_dir)
-    active = snapshot_files(table_dir)
-    n_src, affected = plan_key_merge(table_dir, source, key_col, cast)
+    # one table state plans the whole merge; its version is the
+    # commit's read-set
+    state = table_state(table_dir)
+    n_src, affected = plan_key_merge(state, source, key_col, cast)
     # the key collect just materialized the persisted source at its
     # arrival width (the 32-way scan floor for a small batch); every
     # later consumer — the left_anti and the union write — would
@@ -492,13 +488,11 @@ def _merge_into_snapshot_impl(
         return {
             "version": None,
             "n_affected": 0,
-            "n_untouched": len(active),
+            "n_untouched": len(state.active),
             "adds": [],
         }
-    table = head_schema(spark, table_dir)
+    table = head_schema(spark, state)
     extra = check_source_schema(table, source, allow_evolution)
-    hit = set(affected)
-    untouched = [f for f in active if f not in hit]
     # the schema the merge WRITES: the table head, widened by the
     # extra source columns when evolving (stable order: table columns
     # first, then the new ones sorted) — and recorded in the commit
@@ -508,16 +502,17 @@ def _merge_into_snapshot_impl(
         # read the affected files WITH the table's logged schema: a
         # pre-widening file read raw would lack the new columns and
         # the union would silently drop them from the source rows
-        base = table_reader(spark, table_dir).parquet(
+        base = table_reader(spark, state).parquet(
             *[os.path.join(table_dir, f) for f in affected]
         )
         # merge-on-read interplay: rewriting a DV-covered file from
         # its raw bytes would RESURRECT the deleted rows; applying
         # the live DVs here also retires them for the rewritten
-        # files (the remove prunes their coverage — snapshot_dvs)
-        dvs = snapshot_dvs(table_dir)
-        if dvs:
-            base = strip_deleted_rows(spark, base, table_dir, dvs, affected)
+        # files (the remove prunes their coverage on replay)
+        if state.dvs:
+            base = strip_deleted_rows(
+                spark, base, table_dir, state.dvs, affected
+            )
         keep = base.join(
             source.select(key_col), on=key_col, how="left_anti"
         )
@@ -553,12 +548,12 @@ def _merge_into_snapshot_impl(
                 if extra
                 else None
             ),
-            planned_version=planned,
+            planned_version=state.version,
         )
     return {
         "version": version,
         "n_affected": len(affected),
-        "n_untouched": len(untouched),
+        "n_untouched": len(state.active) - len(affected),
         "adds": adds,
     }
 
@@ -601,27 +596,20 @@ def delete_from_snapshot(
     clean no-op (version None), never an empty commit."""
     from ..operators.snapshot import (
         Landing,
-        file_stats,
-        plan_head,
         range_candidate_files,
-        snapshot_dvs,
-        snapshot_files,
         strip_deleted_rows,
         table_reader,
+        table_state,
     )
 
-    planned = plan_head(table_dir)
-    active = snapshot_files(table_dir)
-    rec = file_stats(table_dir)
-    candidates = range_candidate_files(
-        table_dir, key_col, lo, hi, cast, recorded=rec
-    )
+    state = table_state(table_dir)
+    candidates = range_candidate_files(state, key_col, lo, hi, cast)
     noop = {
         "version": None,
         "n_deleted": 0,
         "n_rewritten": 0,
         "n_removed": 0,
-        "n_untouched": len(active),
+        "n_untouched": len(state.active),
         "adds": [],
     }
     if not candidates:
@@ -629,7 +617,7 @@ def delete_from_snapshot(
     pred = (F.col(key_col) >= F.lit(lo)) & (F.col(key_col) <= F.lit(hi))
     # schema-aware read: rewriting a pre-widening file must carry the
     # evolved columns (as NULL), not silently drop them
-    reader = table_reader(spark, table_dir)
+    reader = table_reader(spark, state)
     base = reader.parquet(*[os.path.join(table_dir, f) for f in candidates])
     # merge-on-read interplay: rows a live deletion vector already
     # removed must neither count as deleted again nor resurrect in
@@ -637,7 +625,7 @@ def delete_from_snapshot(
     # The DV path names files via the _metadata tag it already
     # carries (input_file_name() is per-scan-task and unreliable
     # after the anti-join); the bare path keeps the original plan.
-    dvs = snapshot_dvs(table_dir)
+    dvs = state.dvs
     if dvs:
         counted = strip_deleted_rows(
             spark, base, table_dir, dvs, candidates, keep_tags=True
@@ -682,14 +670,14 @@ def delete_from_snapshot(
             stats_cols=[key_col],
             bloom_key=key_col,
             bloom_bits=bloom_bits,
-            planned_version=planned,
+            planned_version=state.version,
         )
     return {
         "version": version,
         "n_deleted": sum(matches.values()),
         "n_rewritten": len(adds),
         "n_removed": len(affected),
-        "n_untouched": len(active) - len(affected),
+        "n_untouched": len(state.active) - len(affected),
         "adds": adds,
     }
 

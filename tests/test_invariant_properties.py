@@ -89,7 +89,7 @@ def test_mad_partition_and_order_invariance(spark, rows, data):
     )
 
 
-# --- r8 additions: snapshot replay, SQ8 determinism, join shift ------------
+# --- snapshot replay, SQ8 determinism, join shift ----------------------------
 
 
 @seed(20260814)
@@ -97,9 +97,13 @@ def test_mad_partition_and_order_invariance(spark, rows, data):
 @given(n_files=st.integers(min_value=1, max_value=6), data=st.data())
 def test_snapshot_replay_matches_reference(spark, n_files, data):
     """Any valid commit sequence (several adds and removes per commit,
-    log checkpoints anywhere) replays to exactly the reference active
-    set at EVERY version, and the per-version Spark summary equals the
-    DuckDB oracle over the same replayed file lists."""
+    stats on some adds, deletion vectors over active files, schema
+    changes, log checkpoints anywhere, and a removed name re-added
+    with new stats) replays to exactly a reference model's active
+    set, per-file stats, DV coverage and schema at EVERY version; on
+    DV-free draws the per-version Spark summary also equals the
+    DuckDB oracle over the same replayed file lists (the oracle reads
+    files, not deletion vectors)."""
     import os
     import shutil
     import tempfile
@@ -113,8 +117,13 @@ def test_snapshot_replay_matches_reference(spark, n_files, data):
         snapshot_files,
         snapshot_summary,
         snapshot_summary_oracle,
+        table_state,
     )
 
+    schemas = [
+        [["k", "bigint"], ["amt", "double"]],
+        [["k", "bigint"], ["amt", "double"], ["note", "string"]],
+    ]
     d = tempfile.mkdtemp()
     try:
         names = []
@@ -128,8 +137,60 @@ def test_snapshot_replay_matches_reference(spark, n_files, data):
                 os.path.join(d, nm),
             )
             names.append(nm)
+        # the reference model, advanced by the rules in their plainest
+        # form after every commit
         active: set = set()
-        history: dict[int, list[str]] = {}
+        stats: dict = {}
+        dvs: dict = {}
+        schema = None
+        history: dict[int, tuple] = {}
+        n_dv = 0
+
+        def new_stats(name):
+            lo = data.draw(st.integers(0, 99))
+            return {
+                "k": {
+                    "n_rows": data.draw(st.integers(1, 19)),
+                    "vmin": str(lo),
+                    "vmax": str(lo + data.draw(st.integers(0, 9))),
+                    "ord": "numeric",
+                }
+            }
+
+        def commit(adds, removes, entry_stats, dv_adds, sch):
+            nonlocal schema
+            v = commit_version(
+                d,
+                adds=adds,
+                removes=removes,
+                stats=entry_stats or None,
+                dv_adds=dv_adds or None,
+                schema=sch,
+            )
+            active.update(adds)
+            active.difference_update(removes)
+            for a in adds:
+                stats[a] = entry_stats.get(a, {})
+            for r in removes:
+                del stats[r]
+            for s, cov in dv_adds.items():
+                dvs[s] = set(cov)
+            for r in removes:
+                for s in list(dvs):
+                    dvs[s].discard(r)
+                    if not dvs[s]:
+                        del dvs[s]
+            if sch:
+                schema = sch
+            history[v] = (
+                sorted(active),
+                {f: stats[f] for f in sorted(active)},
+                {s: sorted(c) for s, c in dvs.items()},
+                schema,
+            )
+            if data.draw(st.booleans()):  # invisible to every replay
+                checkpoint_snapshot(d)
+
         for _ in range(data.draw(st.integers(1, 8))):
             inactive = sorted(set(names) - active)
             adds = data.draw(
@@ -142,17 +203,36 @@ def test_snapshot_replay_matches_reference(spark, n_files, data):
                 if active
                 else st.just([])
             )
-            if not adds and not removes:
+            kept = sorted(active - set(removes))
+            dv_adds = {}
+            if kept and data.draw(st.booleans()):
+                n_dv += 1
+                dv_adds[f"dv{n_dv}.parquet"] = data.draw(
+                    st.lists(st.sampled_from(kept), min_size=1, unique=True)
+                )
+            if not adds and not removes and not dv_adds:
                 continue
-            v = commit_version(d, adds=adds, removes=removes)
-            active |= set(adds)
-            active -= set(removes)
-            history[v] = sorted(active)
-            if data.draw(st.booleans()):  # invisible to every replay
-                checkpoint_snapshot(d)
-        for v, want in history.items():
-            assert snapshot_files(d, v) == want
-        if history:
+            entry_stats = {
+                a: new_stats(a) for a in adds if data.draw(st.booleans())
+            }
+            sch = data.draw(st.sampled_from([None] + schemas))
+            commit(adds, removes, entry_stats, dv_adds, sch)
+        # a file leaves — a DV-covered one when a DV is live, so the
+        # remove must prune that coverage — and comes back with new
+        # stats: it must carry the new envelope, not the dead add's,
+        # and none of its old DVs
+        covered = sorted(f for c in dvs.values() for f in c)
+        back = (covered or sorted(active) or names)[0]
+        if back in active:
+            commit([], [back], {}, {}, None)
+        commit([back], [], {back: new_stats(back)}, {}, None)
+        for v, (files, want_stats, want_dvs, want_schema) in history.items():
+            state = table_state(d, v)
+            assert snapshot_files(d, v) == files
+            assert state.stats == want_stats, v
+            assert state.dvs == want_dvs, v
+            assert state.schema == want_schema, v
+        if not n_dv:
             versions = sorted(history)
             got = sorted(
                 tuple(r)

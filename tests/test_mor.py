@@ -1,5 +1,5 @@
-"""Merge-on-read deletion vectors + change data feed (r10,
-operators/mor.py): sidecar-only DELETE commits, DV-aware reads at
+"""Merge-on-read deletion vectors + change data feed
+(operators/mor.py): sidecar-only DELETE commits, DV-aware reads at
 every version, purge/compaction/zorder/COW interplay (a rewrite must
 never resurrect DV-deleted rows and retires the coverage it folds),
 lifecycle safety (vacuum/expire treat sidecars as referenced), and
@@ -31,8 +31,8 @@ from survivor_processing_spark.operators.snapshot import (
     compact_snapshot,
     expire_snapshots,
     read_snapshot,
-    snapshot_dvs,
     snapshot_files,
+    table_state,
     vacuum_orphans,
     zorder_snapshot,
 )
@@ -113,7 +113,7 @@ def test_mor_redelete_is_noop_and_overlap_counts_live_only(spark, tbl):
     # a no-op leaves no sidecar behind
     assert not [
         f for f in os.listdir(tbl)
-        if f.startswith("dv-") and f not in snapshot_dvs(tbl)
+        if f.startswith("dv-") and f not in table_state(tbl).dvs
     ]
     assert len(_keys(spark, tbl)) == 151 - 31
 
@@ -124,7 +124,7 @@ def test_mor_delete_prunes_by_envelope(spark, tbl):
     out = delete_from_snapshot_mor(spark, tbl, "k", 120, 130)
     assert out["n_files_covered"] == 1
     assert out["n_untouched"] == 2
-    assert snapshot_dvs(tbl) == {out["dv"]: ["f2.parquet"]}
+    assert table_state(tbl).dvs == {out["dv"]: ["f2.parquet"]}
 
 
 def test_purge_rewrites_only_covered_files(spark, tbl):
@@ -132,7 +132,7 @@ def test_purge_rewrites_only_covered_files(spark, tbl):
     pre = _keys(spark, tbl)
     out = purge_dvs(spark, tbl, stats_cols=["k"])
     assert out["n_rewritten"] == 2 and out["n_untouched"] == 1
-    assert snapshot_dvs(tbl) == {}
+    assert table_state(tbl).dvs == {}
     # physical content identical to the MOR view, before and after
     assert _keys(spark, tbl) == pre
     # untouched file survives by NAME; covered files are gone
@@ -161,7 +161,7 @@ def test_zorder_applies_and_retires_dvs(spark, tbl):
     delete_from_snapshot_mor(spark, tbl, "k", 0, 9)
     pre = _keys(spark, tbl)
     zorder_snapshot(spark, tbl, "k", "amt", n_files=2)
-    assert snapshot_dvs(tbl) == {}
+    assert table_state(tbl).dvs == {}
     assert _keys(spark, tbl) == pre  # no resurrection
 
 
@@ -180,7 +180,7 @@ def test_compaction_applies_dvs_and_keeps_lone_coverage(spark, tbl):
     assert _keys(spark, tbl) == pre
     # whichever files were binned together lost their coverage; the
     # replay can only retain coverage for files still active
-    for cov in snapshot_dvs(tbl).values():
+    for cov in table_state(tbl).dvs.values():
         assert set(cov) <= set(snapshot_files(tbl))
 
 
@@ -219,7 +219,7 @@ def test_vacuum_and_expire_keep_referenced_sidecars(spark, tbl):
     out = expire_snapshots(tbl, keep_last=1)
     assert out["cut_version"] == 2
     assert _keys(spark, tbl) == pre
-    assert snapshot_dvs(tbl) == {dv: ["f0.parquet", "f1.parquet"]}
+    assert table_state(tbl).dvs == {dv: ["f0.parquet", "f1.parquet"]}
     assert os.path.exists(os.path.join(tbl, dv))
 
 
@@ -234,7 +234,7 @@ def test_expire_collects_dead_sidecars_after_purge(spark, tbl):
     gone = expire_snapshots(tbl, keep_last=1)
     assert dv in gone["deleted_files"]
     assert not os.path.exists(os.path.join(tbl, dv))
-    assert snapshot_dvs(tbl) == {}
+    assert table_state(tbl).dvs == {}
 
 
 def test_commit_validation_rejects_bad_dvs(tbl):
@@ -267,7 +267,7 @@ def test_readd_of_removed_name_sheds_old_coverage(spark, tbl):
         os.path.join(tbl, "f0b.parquet"), os.path.join(tbl, "f0.parquet")
     )
     commit_version(tbl, adds=["f0.parquet"])
-    assert snapshot_dvs(tbl) == {}
+    assert table_state(tbl).dvs == {}
     ks = _keys(spark, tbl)
     assert 200 in ks and len([k for k in ks if k is not None]) == 110
 
@@ -378,7 +378,7 @@ def test_stream_ingest_composes_with_mor_delete(spark, tmp_path):
     assert read_snapshot(spark, tbl).count() == 100
     # maintenance between batches: MOR-delete a key range
     out = delete_from_snapshot_mor(spark, tbl, "k", 10, 29)
-    assert out["n_deleted"] == 20 and snapshot_dvs(tbl)
+    assert out["n_deleted"] == 20 and table_state(tbl).dvs
     # a later batch upserts SOME deleted keys (20..24) and new ones
     upd = spark.range(20, 30).select(
         F.col("id").alias("k"), F.lit(-5.0).alias("amt")
@@ -415,7 +415,7 @@ def test_stream_ingest_composes_with_mor_delete(spark, tmp_path):
     # the merge rewrote the covered file(s): coverage retired
     assert all(
         set(cov) <= set(snapshot_files(tbl))
-        for cov in snapshot_dvs(tbl).values()
+        for cov in table_state(tbl).dvs.values()
     )
 
 
@@ -424,18 +424,30 @@ def test_torn_sidecar_refuses_instead_of_resurrecting(spark, tbl):
     with the explicit (file, pos) schema it would serve NULL
     positions, match nothing in the anti-join, and silently
     resurrect every deleted row — the one failure mode a deletion
-    vector can never have."""
-    out = delete_from_snapshot_mor(spark, tbl, "k", 40, 60)
+    vector can never have.  Both readers of sidecars refuse: the
+    snapshot read and the fused (more than 4 versions) summary."""
+    from survivor_processing_spark.operators.snapshot import (
+        snapshot_summary,
+    )
+
+    out = delete_from_snapshot_mor(spark, tbl, "k", 40, 60)  # v2
+    for i in range(3):  # v3..v5, the DV live throughout
+        commit_version(tbl, adds=[_write(tbl, f"g{i}.parquet", [200 + i])])
     dv_path = os.path.join(tbl, out["dv"])
-    # foreign schema: same name, wrong columns
-    pq.write_table(pa.table({"x": [1, 2]}), dv_path)
-    with pytest.raises(Exception, match="sidecar"):
-        read_snapshot(spark, tbl).count()
-    # torn bytes: not parquet at all
-    with open(dv_path, "wb") as f:
-        f.write(b"PAR1garbage")
-    with pytest.raises(Exception, match="sidecar"):
-        read_snapshot(spark, tbl).count()
+
+    def foreign():  # same name, wrong columns
+        pq.write_table(pa.table({"x": [1, 2]}), dv_path)
+
+    def torn():  # not parquet at all
+        with open(dv_path, "wb") as f:
+            f.write(b"PAR1garbage")
+
+    for corrupt in (foreign, torn):
+        corrupt()
+        with pytest.raises(Exception, match="sidecar"):
+            read_snapshot(spark, tbl).count()
+        with pytest.raises(Exception, match="sidecar"):
+            snapshot_summary(spark, tbl, [1, 2, 3, 4, 5], "amt").collect()
 
 
 def _rows(spark, d, version=None):
@@ -516,7 +528,7 @@ def test_mor_upsert_envelope_minimality(spark, tbl):
     src = spark.createDataFrame([(120, -1.0), (130, -2.0)], "k long, amt double")
     out = upsert_into_snapshot_mor(spark, tbl, src, "k")
     assert out["n_files_covered"] == 1
-    assert snapshot_dvs(tbl)[out["dv"]] == ["f2.parquet"]
+    assert table_state(tbl).dvs[out["dv"]] == ["f2.parquet"]
 
 
 def test_mor_upsert_cdf_emits_exact_update_images(spark, tbl):
@@ -628,7 +640,7 @@ def test_mor_upsert_then_purge_folds_everything(spark, tbl):
     upsert_into_snapshot_mor(spark, tbl, src, "k")
     pre = _rows(spark, tbl)
     purge_dvs(spark, tbl, stats_cols=["k"])
-    assert snapshot_dvs(tbl) == {}
+    assert table_state(tbl).dvs == {}
     assert _rows(spark, tbl) == pre
 
 
@@ -684,14 +696,14 @@ def test_mor_delete_and_read_on_evolved_table(spark, tbl):
     from survivor_processing_spark.operators.mor import (
         upsert_into_snapshot_mor,
     )
-    from survivor_processing_spark.operators.snapshot import table_schema
+    from survivor_processing_spark.operators.snapshot import table_state
     from survivor_processing_spark.sinks.merge import merge_into_snapshot
 
     widened = spark.createDataFrame(
         [(500, 5.0, "new")], "k long, amt double, tag string"
     )
     merge_into_snapshot(spark, tbl, widened, "k", allow_evolution=True)
-    assert table_schema(tbl) is not None
+    assert table_state(tbl).schema is not None
     out = delete_from_snapshot_mor(spark, tbl, "k", 40, 60)
     assert out["n_deleted"] == 21
     head = read_snapshot(spark, tbl)
@@ -784,7 +796,7 @@ def test_dv_aware_fused_summary_matches_per_version_reads(spark, tbl):
     delete_from_snapshot_mor(spark, tbl, "k", 0, 4)  # v5: 2nd DV on f0
     purge_dvs(spark, tbl)  # v6: rewrite, retires every DV
     versions = [1, 2, 3, 4, 5, 6]
-    assert snapshot_dvs(tbl, 5) and not snapshot_dvs(tbl, 6)
+    assert table_state(tbl, 5).dvs and not table_state(tbl, 6).dvs
     got = sorted(
         tuple(r)
         for r in snapshot_summary(spark, tbl, versions, "amt").collect()
@@ -885,17 +897,17 @@ def test_random_dml_interleavings_match_model(spark, seed, tmp_path):
             history[out["version"]] = logical
         elif kind == "purge":
             ops.append("purge")
-            had = bool(snapshot_dvs(d))
+            had = bool(table_state(d).dvs)
             out = purge_dvs(spark, d, stats_cols=["k"])
             assert had == (out["version"] is not None), drawn
             if out["version"] is not None:
                 history[out["version"]] = logical
-            assert not snapshot_dvs(d), drawn
+            assert not table_state(d).dvs, drawn
         elif kind == "zorder":
             ops.append("zorder")
             out = zorder_snapshot(spark, d, "k", "amt", n_files=2)
             history[out["version"]] = logical
-            assert not snapshot_dvs(d), drawn
+            assert not table_state(d).dvs, drawn
         elif kind == "compact":
             ops.append("compact")
             out = compact_snapshot(spark, d, target_bytes=1 << 20, stats_cols=["k"])
@@ -910,7 +922,7 @@ def test_random_dml_interleavings_match_model(spark, seed, tmp_path):
                 }
     drawn = (seed, bounds, ops)
     active = set(snapshot_files(d))
-    for cov in snapshot_dvs(d).values():
+    for cov in table_state(d).dvs.values():
         assert set(cov) <= active, drawn
     for v, want in sorted(history.items()):
         assert _rows(spark, d, v) == want, (drawn, v)

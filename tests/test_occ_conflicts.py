@@ -40,8 +40,8 @@ from survivor_processing_spark.operators.snapshot import (
     SnapshotConflictError,
     commit_version,
     read_snapshot,
-    snapshot_dvs,
     snapshot_files,
+    table_state,
 )
 
 
@@ -192,7 +192,7 @@ def test_purge_loses_to_concurrent_mor_delete(spark, tbl, monkeypatch):
     # retry from the new head converges: DVs folded, rows stay gone
     out = purge_dvs(spark, tbl)
     assert out["version"] == 4
-    assert snapshot_dvs(tbl) == {}
+    assert table_state(tbl).dvs == {}
     ks = _keys(spark, tbl)
     assert len(ks) == 151 - 22
     assert all(not (10 <= k <= 20) and not (30 <= k <= 40)
@@ -249,7 +249,7 @@ def test_sharded_mor_delete_roundtrip(spark, tbl):
     assert out["dv"] is None and len(out["dvs"]) >= 2
     # disjoint coverage, union == the three candidate files
     seen: set[str] = set()
-    dvs = snapshot_dvs(tbl)
+    dvs = table_state(tbl).dvs
     assert sorted(dvs) == out["dvs"]
     for cov in dvs.values():
         assert not (seen & set(cov))
@@ -266,7 +266,7 @@ def test_sharded_mor_delete_roundtrip(spark, tbl):
     # purge folds every shard's coverage
     p = purge_dvs(spark, tbl)
     assert p["n_rewritten"] == 3
-    assert snapshot_dvs(tbl) == {}
+    assert table_state(tbl).dvs == {}
     assert len(_keys(spark, tbl)) == 151 - 101
 
 

@@ -555,9 +555,9 @@ def test_stream_snapshot_ingest_scan_is_log_driven(spark, tmp_path):
     import pyspark.sql.functions as F
 
     from survivor_processing_spark.operators.snapshot import (
-        file_stats,
         read_snapshot,
         snapshot_files,
+        table_state,
     )
     from survivor_processing_spark.streaming.lakehouse import (
         stream_into_snapshot,
@@ -598,7 +598,8 @@ def test_stream_snapshot_ingest_scan_is_log_driven(spark, tmp_path):
     files = sorted(f.rsplit("/", 1)[-1] for f in df.inputFiles())
     assert files == snapshot_files(tbl)  # log-driven, glob-free
     assert all(
-        v.get("event_id", {}).get("bloom") for v in file_stats(tbl).values()
+        v.get("event_id", {}).get("bloom")
+        for v in table_state(tbl).stats.values()
     )
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters: [" in plan
@@ -679,9 +680,9 @@ def test_mor_upsert_appends_without_rewrites(spark, tmp_path):
     from survivor_processing_spark.operators.snapshot import (
         commit_version,
         read_snapshot,
-        snapshot_dvs,
         snapshot_files,
         stats_for_files,
+        table_state,
     )
 
     pq.write_table(
@@ -706,7 +707,7 @@ def test_mor_upsert_appends_without_rewrites(spark, tmp_path):
     # zero rewrites; the batch appended; only a's envelope matched
     assert {"a.parquet", "b.parquet"} <= active
     assert set(out["adds"]) <= active
-    assert snapshot_dvs(d)[out["dv"]] == ["a.parquet"]
+    assert table_state(d).dvs[out["dv"]] == ["a.parquet"]
     df = read_snapshot(spark, d).filter("k >= 5")
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan

@@ -512,7 +512,7 @@ def test_writer_failure_leaves_table_unchanged(
             return (
                 sorted(os.listdir(d)),
                 snapshot_files(d),
-                snap.snapshot_dvs(d),
+                snap.table_state(d).dvs,
             )
 
         before = state()
@@ -637,8 +637,8 @@ def test_vacuum_orphans_removes_only_uncommitted(spark, table_dir):
 
 def test_commit_stats_replay_and_guard(spark, table_dir):
     from survivor_processing_spark.operators.snapshot import (
-        file_stats,
         stats_for_files,
+        table_state,
     )
 
     _write(table_dir, "a.parquet", [1, 2, 3])
@@ -653,13 +653,14 @@ def test_commit_stats_replay_and_guard(spark, table_dir):
             table_dir, adds=["b.parquet"], stats=st
         )
     commit_version(table_dir, adds=["a.parquet", "b.parquet"], stats=st)
-    rec = file_stats(table_dir)
+    rec = table_state(table_dir).stats
     assert rec["a.parquet"]["k"]["vmax"] == "3"
     assert rec["b.parquet"] == {}  # add without stats: envelope-less
     # removes drop the file's stats from the replay
     commit_version(table_dir, removes=["a.parquet"])
-    assert "a.parquet" not in file_stats(table_dir)
-    assert "a.parquet" in file_stats(table_dir, 1)  # time travel keeps it
+    assert "a.parquet" not in table_state(table_dir).stats
+    # time travel keeps it
+    assert "a.parquet" in table_state(table_dir, 1).stats
 
 
 def test_snapshot_zonemap_log_first_no_footer_reads(spark, table_dir):
@@ -670,6 +671,7 @@ def test_snapshot_zonemap_log_first_no_footer_reads(spark, table_dir):
     from survivor_processing_spark.operators.snapshot import (
         snapshot_zonemap_rows,
         stats_for_files,
+        table_state,
     )
     from survivor_processing_spark.operators.zonemap import (
         build_zonemap,
@@ -688,7 +690,7 @@ def test_snapshot_zonemap_log_first_no_footer_reads(spark, table_dir):
             table_dir, ["s0.parquet", "s1.parquet"], ["k"]
         ),
     )
-    zm = snapshot_zonemap_rows(table_dir, ["k"])
+    zm = snapshot_zonemap_rows(table_state(table_dir), ["k"])
     assert sorted(zm) == footer
     assert prune_file_rows(zm, "k", 0, 10) == ["s0.parquet"]
     # fast-path proof: truncate a data file's footer; the log-first
@@ -696,7 +698,8 @@ def test_snapshot_zonemap_log_first_no_footer_reads(spark, table_dir):
     p = os.path.join(table_dir, "s1.parquet")
     with open(p, "r+b") as f:
         f.truncate(8)
-    assert sorted(snapshot_zonemap_rows(table_dir, ["k"])) == footer
+    zm = snapshot_zonemap_rows(table_state(table_dir), ["k"])
+    assert sorted(zm) == footer
     with pytest.raises(Exception):
         build_zonemap(spark, table_dir, ["k"], files=["s1.parquet"]).collect()
 
@@ -705,6 +708,7 @@ def test_snapshot_zonemap_mixed_log_falls_back(spark, table_dir):
     from survivor_processing_spark.operators.snapshot import (
         snapshot_zonemap_rows,
         stats_for_files,
+        table_state,
     )
     from survivor_processing_spark.operators.zonemap import build_zonemap
 
@@ -716,7 +720,7 @@ def test_snapshot_zonemap_mixed_log_falls_back(spark, table_dir):
         adds=["new.parquet"],
         stats=stats_for_files(table_dir, ["new.parquet"], ["k"]),
     )
-    got = sorted(snapshot_zonemap_rows(table_dir, ["k"]))
+    got = sorted(snapshot_zonemap_rows(table_state(table_dir), ["k"]))
     want = sorted(
         map(tuple, build_zonemap(spark, table_dir, ["k"]).collect())
     )
@@ -724,13 +728,13 @@ def test_snapshot_zonemap_mixed_log_falls_back(spark, table_dir):
 
 
 def test_merge_records_stats_for_its_adds(spark, table_dir):
-    from survivor_processing_spark.operators.snapshot import file_stats
+    from survivor_processing_spark.operators.snapshot import table_state
     from survivor_processing_spark.sinks.merge import merge_into_snapshot
 
     _seed_table(spark, table_dir, [(0, 50), (50, 100)])
     src = spark.createDataFrame([(10, -1.0)], "k long, amt double")
     out = merge_into_snapshot(spark, table_dir, src, "k")
-    rec = file_stats(table_dir)
+    rec = table_state(table_dir).stats
     for name in out["adds"]:
         assert rec[name]["k"]["ord"] == "numeric"
         assert int(rec[name]["k"]["vmin"]) >= 0
@@ -749,7 +753,7 @@ def test_merge_records_stats_for_its_adds(spark, table_dir):
 def test_compact_snapshot_records_stats(spark, table_dir):
     from survivor_processing_spark.operators.snapshot import (
         compact_snapshot,
-        file_stats,
+        table_state,
     )
 
     for i in range(3):
@@ -759,7 +763,7 @@ def test_compact_snapshot_records_stats(spark, table_dir):
         spark, table_dir, target_bytes=10**9, stats_cols=["k"]
     )
     assert out["n_rewritten"] == 3
-    rec = file_stats(table_dir)
+    rec = table_state(table_dir).stats
     (name,) = out["adds"]
     assert rec[name]["k"]["vmin"] == "0" and rec[name]["k"]["vmax"] == "24"
 
@@ -868,8 +872,8 @@ def test_bloom_build_probe_agree_no_false_negatives(spark, table_dir):
 def test_expire_snapshots_retention_and_reclaim(spark, table_dir):
     from survivor_processing_spark.operators.snapshot import (
         expire_snapshots,
-        file_stats,
         stats_for_files,
+        table_state,
     )
 
     # v1: a+b (with stats for a), v2: +c -a, v3: +d, v4: -b
@@ -908,13 +912,13 @@ def test_expire_snapshots_retention_and_reclaim(spark, table_dir):
     _write(table_dir, "e.parquet", [9])
     assert commit_version(table_dir, adds=["e.parquet"]) == 5
     # carried stats: b had none, the baseline must not invent any
-    assert file_stats(table_dir, 3)["b.parquet"] == {}
+    assert table_state(table_dir, 3).stats["b.parquet"] == {}
 
 
 def test_expire_snapshots_carries_stats_and_blooms(spark, table_dir):
     from survivor_processing_spark.operators.snapshot import (
         expire_snapshots,
-        file_stats,
+        table_state,
     )
     from survivor_processing_spark.sinks.merge import merge_into_snapshot
 
@@ -927,7 +931,7 @@ def test_expire_snapshots_carries_stats_and_blooms(spark, table_dir):
     )  # v3
     out = expire_snapshots(table_dir, keep_last=1)
     assert out["cut_version"] == 3
-    rec = file_stats(table_dir)
+    rec = table_state(table_dir).stats
     merged = [f for f in snapshot_files(table_dir) if f.startswith("merge-")]
     assert merged
     for f in merged:
@@ -958,7 +962,7 @@ def test_bloom_auto_sizing_scales_with_rows(spark, table_dir):
     """auto sizing: ~10 bits/key clamped to [2^13, 2^17], chosen per
     FILE from the just-measured stats; mixed sizes coexist because
     the probe reads m per row."""
-    from survivor_processing_spark.operators.snapshot import file_stats
+    from survivor_processing_spark.operators.snapshot import table_state
     from survivor_processing_spark.sinks.merge import merge_into_snapshot
 
     _seed_table(spark, table_dir, [(0, 10)])
@@ -969,7 +973,7 @@ def test_bloom_auto_sizing_scales_with_rows(spark, table_dir):
         [(1000 + i, float(i)) for i in range(5000)], "k long, amt double"
     )
     out = merge_into_snapshot(spark, table_dir, src, "k")
-    rec = file_stats(table_dir)
+    rec = table_state(table_dir).stats
     for f in out["adds"]:
         st = rec[f]["k"]
         m = st["bloom"]["m"]
@@ -981,7 +985,7 @@ def test_bloom_auto_sizing_scales_with_rows(spark, table_dir):
         spark, table_dir,
         spark.createDataFrame([(5, -1.0)], "k long, amt double"), "k",
     )
-    rec2 = file_stats(table_dir)
+    rec2 = table_state(table_dir).stats
     assert all(rec2[f]["k"]["bloom"]["m"] == 1 << 13 for f in out2["adds"])
     # correctness unchanged
     rows = {r["k"]: r["amt"] for r in read_snapshot(spark, table_dir).collect()}
@@ -991,8 +995,8 @@ def test_bloom_auto_sizing_scales_with_rows(spark, table_dir):
 def test_bloom_guards_reject_ragged_and_ignore_corrupt(spark, table_dir):
     from survivor_processing_spark.operators.snapshot import (
         file_key_blooms,
-        file_stats,
         stats_for_files,
+        table_state,
     )
     from survivor_processing_spark.sinks.merge import merge_into_snapshot
 
@@ -1014,7 +1018,7 @@ def test_bloom_guards_reject_ragged_and_ignore_corrupt(spark, table_dir):
     rows = {r["k"]: r["amt"] for r in read_snapshot(spark, table_dir).collect()}
     assert rows[2] == -1.0 and len(rows) == 3
     # the rewrite re-recorded a HEALTHY bloom for its new file
-    rec = file_stats(table_dir)
+    rec = table_state(table_dir).stats
     for f in out["adds"]:
         b = rec[f]["k"]["bloom"]
         assert len(b["b64"]) > 0 and b["m"] % 64 == 0
@@ -1191,8 +1195,8 @@ def test_unsupported_key_types_merge_by_envelope(
         upsert_into_snapshot_mor,
     )
     from survivor_processing_spark.operators.snapshot import (
-        file_stats,
         init_snapshot,
+        table_state,
     )
     from survivor_processing_spark.sinks.merge import merge_into_snapshot
 
@@ -1225,7 +1229,7 @@ def test_unsupported_key_types_merge_by_envelope(
     apply(merge_into_snapshot, list(range(10, 60, 2)) + [401, 403], 1000)
     apply(upsert_into_snapshot_mor, list(range(20, 80, 4)) + [405], 2000)
     apply(merge_into_snapshot, [10, 20, 401, 405, 407], 3000)
-    rec = file_stats(table_dir)
+    rec = table_state(table_dir).stats
     assert rec and all(
         "n_rows" in st["k"] and "bloom" not in st["k"] for st in rec.values()
     )
@@ -1249,14 +1253,15 @@ def _spark_key_probe(spark, table_dir, source, key_col, cast):
     from survivor_processing_spark.functions.localrel import local_rows_df
     from survivor_processing_spark.operators.bloom import _positions, _powers
     from survivor_processing_spark.operators.snapshot import (
-        file_stats,
         snapshot_zonemap_rows,
+        table_state,
     )
 
-    rec = file_stats(table_dir)
+    state = table_state(table_dir)
+    rec = state.stats
     zm = local_rows_df(
         spark,
-        snapshot_zonemap_rows(table_dir, [key_col], recorded=rec),
+        snapshot_zonemap_rows(state, [key_col]),
         "file string, col string, n_rows long, "
         "vmin string, vmax string, ord string",
     )
@@ -1378,6 +1383,7 @@ def _plan_table(table_dir, sql_type, rng, n_files=6):
 def _plan_cases(spark, table_dir, sql_type, cases, cast=None):
     """``(driver plan, Spark probe)`` affected files per source in
     ``cases`` (lists of int ids, keyed as ``sql_type``)."""
+    from survivor_processing_spark.operators.snapshot import table_state
     from survivor_processing_spark.sinks.merge import plan_key_merge
 
     atype, base, key_of = _PLAN_KEY_TYPES[sql_type]
@@ -1404,7 +1410,7 @@ def _plan_cases(spark, table_dir, sql_type, cases, cast=None):
     out = []
     for c, ids in enumerate(cases):
         src = frame({"k": pa.array([key_of(i) for i in ids], type=atype)})
-        n, got = plan_key_merge(table_dir, src, "k", cast)
+        n, got = plan_key_merge(table_state(table_dir), src, "k", cast)
         assert n == len(ids)
         out.append((got, want.get(c, [])))
     return out
@@ -1448,11 +1454,14 @@ def test_plan_key_merge_matches_spark_probe(spark, sql_type):
         try:
             _plan_table(d, sql_type, rng)
             src = spark.createDataFrame([(float("nan"),), (1.0,)], "k double")
+            from survivor_processing_spark.operators.snapshot import (
+                table_state,
+            )
             from survivor_processing_spark.sinks.merge import plan_key_merge
 
-            assert plan_key_merge(d, src, "k", "double")[1] == sorted(
-                snapshot_files(d)
-            )
+            assert plan_key_merge(
+                table_state(d), src, "k", "double"
+            )[1] == sorted(snapshot_files(d))
         finally:
             shutil.rmtree(d, ignore_errors=True)
 
@@ -1533,7 +1542,7 @@ def test_commit_conflict_two_writers_never_clobber(table_dir):
     O_EXCL claim turns a silent last-write-win into a retry."""
     import threading
 
-    from survivor_processing_spark.operators.snapshot import file_stats
+    from survivor_processing_spark.operators.snapshot import table_state
 
     _write(table_dir, "a.parquet", [1])
     _write(table_dir, "b.parquet", [2])
@@ -1563,7 +1572,7 @@ def test_commit_conflict_two_writers_never_clobber(table_dir):
     assert log_versions(table_dir) == [1, 2, 3]
     assert snapshot_files(table_dir) == ["a.parquet", "b.parquet", "c.parquet"]
     # both entries are intact (neither clobbered the other's payload)
-    assert set(file_stats(table_dir)) == {
+    assert set(table_state(table_dir).stats) == {
         "a.parquet", "b.parquet", "c.parquet"
     }
 
@@ -1598,7 +1607,7 @@ def test_file_stats_reset_on_remove_and_readd(table_dir):
     re-added with different content and NO new stats must NOT inherit
     the dead add's envelope — stale stats would let a prune skip a
     file that matches."""
-    from survivor_processing_spark.operators.snapshot import file_stats
+    from survivor_processing_spark.operators.snapshot import table_state
 
     _write(table_dir, "a.parquet", [1, 2])
     st = {
@@ -1611,9 +1620,9 @@ def test_file_stats_reset_on_remove_and_readd(table_dir):
     # same NAME, new content (9..10), re-added without stats
     _write(table_dir, "a.parquet", [9, 10])
     commit_version(table_dir, adds=["a.parquet"])                # v3
-    assert file_stats(table_dir) == {"a.parquet": {}}  # envelope gone
+    assert table_state(table_dir).stats == {"a.parquet": {}}  # envelope gone
     # time travel still sees the original stats at v1
-    assert file_stats(table_dir, 1) == st
+    assert table_state(table_dir, 1).stats == st
 
 
 def test_vacuum_grace_window_spares_fresh_files(table_dir):

@@ -210,6 +210,7 @@ def test_delete_failed_commit_rolls_back_files(spark, table_dir, monkeypatch):
 def test_zorder_snapshot_tightens_pruning(spark, table_dir):
     from survivor_processing_spark.operators.snapshot import (
         snapshot_zonemap_rows,
+        table_state,
     )
     from survivor_processing_spark.operators.zonemap import prune_file_rows
 
@@ -232,7 +233,7 @@ def test_zorder_snapshot_tightens_pruning(spark, table_dir):
             os.path.join(table_dir, f"rr{i}.parquet"),
         )
     commit_version(table_dir, adds=[f"rr{i}.parquet" for i in range(files)])
-    zm_before = snapshot_zonemap_rows(table_dir, ["a"])
+    zm_before = snapshot_zonemap_rows(table_state(table_dir), ["a"])
     kept_before = prune_file_rows(zm_before, "a", 0, n // 8)
     assert len(kept_before) == files  # round-robin defeats pruning
 
@@ -251,12 +252,12 @@ def test_zorder_snapshot_tightens_pruning(spark, table_dir):
     assert after == before
     # the SAME range predicate now schedules strictly fewer files,
     # planned log-first from the stats the commit recorded
-    zm_after = snapshot_zonemap_rows(table_dir, ["a"])
+    zm_after = snapshot_zonemap_rows(table_state(table_dir), ["a"])
     kept_after = prune_file_rows(zm_after, "a", 0, n // 8)
     assert len(kept_after) < files
     # and the b dimension is ALSO tighter than round-robin (z-curve
     # property: both interleaved dimensions localize)
-    zb = snapshot_zonemap_rows(table_dir, ["b"])
+    zb = snapshot_zonemap_rows(table_state(table_dir), ["b"])
     assert len(prune_file_rows(zb, "b", 0, n // 8)) < files
     # time travel keeps serving the pre-optimize layout
     assert snapshot_files(table_dir, 1) == sorted(
@@ -387,7 +388,7 @@ def test_merge_schema_evolution_widens_and_time_travels(spark, table_dir):
     widening — recorded in the log, pre-widening files read the new
     column as NULL, time travel serves the narrow schema, and the
     default path still rejects."""
-    from survivor_processing_spark.operators.snapshot import table_schema
+    from survivor_processing_spark.operators.snapshot import table_state
     from survivor_processing_spark.sinks.merge import merge_into_snapshot
 
     _write(table_dir, "a.parquet", [1, 2, 3])
@@ -405,7 +406,7 @@ def test_merge_schema_evolution_widens_and_time_travels(spark, table_dir):
         spark, table_dir, wide, "k", allow_evolution=True
     )
     assert out["version"] == 2
-    assert table_schema(table_dir) == [
+    assert table_state(table_dir).schema == [
         ["k", "bigint"], ["amt", "double"], ["tag", "string"]
     ]
     got = {
@@ -469,7 +470,7 @@ def test_evolved_table_survives_later_dml_and_compaction(spark, table_dir):
 def test_evolution_schema_survives_expiry(spark, table_dir):
     from survivor_processing_spark.operators.snapshot import (
         expire_snapshots,
-        table_schema,
+        table_state,
     )
     from survivor_processing_spark.sinks.merge import merge_into_snapshot
 
@@ -488,7 +489,7 @@ def test_evolution_schema_survives_expiry(spark, table_dir):
     out = expire_snapshots(table_dir, keep_last=2)
     # the schema-carrying v2 entry expired: the baseline carries it
     assert out["cut_version"] == 3
-    assert table_schema(table_dir) == [
+    assert table_state(table_dir).schema == [
         ["k", "bigint"], ["amt", "double"], ["tag", "string"]
     ]
     df = read_snapshot(spark, table_dir)
@@ -502,6 +503,7 @@ def test_dml_on_evolved_column_tolerates_prewidening_files(spark, table_dir):
     are NULL on the evolved column, match nothing, and survive."""
     from survivor_processing_spark.operators.snapshot import (
         snapshot_zonemap_rows,
+        table_state,
     )
     from survivor_processing_spark.sinks.merge import merge_into_snapshot
 
@@ -513,7 +515,7 @@ def test_dml_on_evolved_column_tolerates_prewidening_files(spark, table_dir):
     merge_into_snapshot(spark, table_dir, wide, "k", allow_evolution=True)
     # manifest on the EVOLVED column: the pre-widening file shows a
     # NULL-stat (unprunable) row instead of raising
-    zm = snapshot_zonemap_rows(table_dir, ["tag"])
+    zm = snapshot_zonemap_rows(table_state(table_dir), ["tag"])
     stats = {r[0]: r[3] for r in zm}
     assert any(v is None for v in stats.values())
     # delete on the evolved column: only the row that HAS tag=100

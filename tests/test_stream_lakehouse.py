@@ -15,10 +15,10 @@ import pyspark.sql.functions as F
 import pytest
 
 from survivor_processing_spark.operators.snapshot import (
-    file_stats,
     log_versions,
     read_snapshot,
     snapshot_history,
+    table_state,
 )
 from survivor_processing_spark.streaming.lakehouse import (
     stream_into_snapshot,
@@ -92,7 +92,7 @@ def test_stream_bootstraps_commits_per_batch_and_replays(spark, dirs):
         versions = log_versions(table_dir)
         assert len(versions) == 3
         # bootstrap recorded stats AND blooms from commit 1
-        st = file_stats(table_dir, 1)
+        st = table_state(table_dir, 1).stats
         assert st and all(
             "bloom" in v["event_id"] and v["event_id"]["vmin"] is not None
             for v in st.values()
