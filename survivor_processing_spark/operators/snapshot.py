@@ -153,7 +153,8 @@ def _latest_ckpt(
                 continue  # torn/foreign checkpoint: fall back
             if ck.get("version") == c:
                 # READ-ONLY: the returned object IS the cached parsed
-                # state; _state_at copies what it seeds from it
+                # state; _state_at copies its containers, table_state
+                # the per-file stats
                 return ck
     return None
 
@@ -225,18 +226,18 @@ def _apply_entry(state: TableState, e: dict) -> None:
 def _state_at(table_dir: str, versions: list[int], v: int) -> TableState:
     """Replay the listing ``versions`` up to ``v`` (0 = the empty table
     before v1): seeded from the newest checkpoint ≤ v, then one
-    :func:`_apply_entry` per later entry, each opened once."""
+    :func:`_apply_entry` per later entry, each opened once.  The
+    per-file stats dicts may be the cached checkpoint's own: internal
+    callers only read them, and :func:`table_state` copies them before
+    they reach anyone else."""
     state = TableState(table_dir, versions=versions)
     start = 0
     ck = _latest_ckpt(table_dir, v, versions)
     if ck:
-        # copy on seed: ck is the cached parsed checkpoint, and a
-        # state's containers reach callers who may mutate them
+        # ck is the cached parsed checkpoint: _apply_entry rebinds
+        # keys of these containers, so each gets its own
         state.active = set(ck["active"])
-        state.stats = {
-            f: {c: dict(s) for c, s in st.items()}
-            for f, st in ck.get("stats", {}).items()
-        }
+        state.stats = dict(ck.get("stats", {}))
         state.dvs = {s: list(c) for s, c in ck.get("dvs", {}).items()}
         if ck.get("schema"):
             state.schema = [list(c) for c in ck["schema"]]
@@ -262,7 +263,13 @@ def table_state(table_dir: str, version: int | None = None) -> TableState:
     v = head if version is None else int(version)
     if v not in versions:
         raise ValueError(f"version {v} not in log (head {head})")
-    return _state_at(table_dir, versions, v)
+    state = _state_at(table_dir, versions, v)
+    # callers may mutate what they get: never the cached checkpoint
+    state.stats = {
+        f: {c: dict(s) for c, s in st.items()}
+        for f, st in state.stats.items()
+    }
+    return state
 
 
 def commit_version(
@@ -400,7 +407,7 @@ def commit_version(
             )
     import uuid
 
-    def entry(n: int) -> dict:
+    def read_entry(n: int) -> dict:
         try:
             return _load_entry(table_dir, n)
         except FileNotFoundError:
@@ -445,7 +452,7 @@ def commit_version(
             for n in versions:
                 if n <= scanned_up_to:
                     continue
-                e = entry(n)
+                e = read_entry(n)
                 their_removes = set(e["removes"])
                 their_covered = {
                     f
@@ -516,7 +523,7 @@ def commit_version(
             for n in versions:
                 if n <= names_scanned_up_to:
                     continue
-                e = entry(n)
+                e = read_entry(n)
                 used_names |= set(e["adds"]) | set(e.get("dv_adds") or {})
                 names_scanned_up_to = n
             stale = sorted(set(dv_names) & used_names)

@@ -1577,6 +1577,46 @@ def test_commit_conflict_two_writers_never_clobber(table_dir):
     }
 
 
+def test_lost_claim_with_read_set_recommits_at_next_version(
+    table_dir, monkeypatch
+):
+    """A writer that declares its read set (``planned_version``) and
+    attaches deletion vectors loses the ``os.link`` claim to a
+    disjoint commit: it must re-scan the new entry, find no conflict
+    and land at the next version — not crash on the retry."""
+    import os as _os
+
+    from survivor_processing_spark.operators.snapshot import table_state
+
+    for n, ks in [("a", [1]), ("b", [2]), ("c", [3]), ("d", [4])]:
+        _write(table_dir, f"{n}.parquet", ks)
+    commit_version(table_dir, adds=["a.parquet", "b.parquet"])  # v1
+    real_link = _os.link
+    raced: list[int] = []
+    armed = [True]
+
+    def link_losing_once(src, dst):
+        if not armed:
+            return real_link(src, dst)
+        # a disjoint writer claims the version first
+        armed.clear()
+        raced.append(commit_version(table_dir, adds=["d.parquet"]))
+        raise FileExistsError(dst)
+
+    monkeypatch.setattr(_os, "link", link_losing_once)
+    v = commit_version(
+        table_dir,
+        adds=["c.parquet"],
+        dv_adds={"dv-x.parquet": ["a.parquet"]},
+        planned_version=1,
+    )
+    assert raced == [2] and v == 3
+    st = table_state(table_dir)
+    assert st.version == 3
+    assert st.active == {"a.parquet", "b.parquet", "c.parquet", "d.parquet"}
+    assert st.dvs == {"dv-x.parquet": ["a.parquet"]}
+
+
 def test_commit_conflict_claim_is_exclusive(table_dir):
     """The claim primitive itself: a pre-existing version file makes
     the commit retry PAST it (never overwrite), and a semantic
